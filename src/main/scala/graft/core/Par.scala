@@ -66,8 +66,17 @@ object Par {
     * enough for the measured capstone wins (3-5-way store fan-outs),
     * narrow enough that nested sites cannot stack 10-20 concurrent
     * jobs. */
-  private val cap: Int =
-    sys.env.get("SPARK_GRAFT_PAR_CAP").map(_.toInt).getOrElse(4)
+  private val cap: Int = parseCap(sys.env.get("SPARK_GRAFT_PAR_CAP"))
+
+  /** `SPARK_GRAFT_PAR_CAP` as a non-negative worker count, 4 when unset;
+    * anything else refuses naming the variable and the value (instead of
+    * a bare `NumberFormatException` out of this object's initializer). */
+  private[graft] def parseCap(raw: Option[String]): Int = raw match {
+    case None => 4
+    case Some(s) => s.toIntOption.filter(_ >= 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_PAR_CAP must be a non-negative integer, got '$s'"))
+  }
   private val permits = new Semaphore(cap)
 
   /** Run the thunks concurrently (bounded — see object doc), wait for

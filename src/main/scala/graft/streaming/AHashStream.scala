@@ -37,6 +37,13 @@ import graft.multimodal.Multimodal
   * deterministic overwrite on redelivery, lineage-fork guard. */
 object AHashStream {
 
+  /** (media_id, ahash) rows unique across deltas ⇒ the identity fold.
+    * No probe-key clustering: the probe bands the 64-bit hashes IN-SCAN
+    * into 28 chunk-pair keys and pushes no stored-column predicate, so no
+    * sort order of (media_id, ahash) can gain it row-group pruning — the
+    * standing scan is inherently full (and 16 bytes/image cheap). */
+  private val spec = Versions.StoreSpec("hash index", Some("media_id"))
+
   /** Hash the standing corpus's media and write `root/v0`
     * (live-root-guarded: [[Versions.guardStandingWrite]]). `hasher` maps
     * a (id, payload) frame to (media_id, 64-bit hash) — the image aHash
@@ -46,11 +53,8 @@ object AHashStream {
   def writeStanding(spark: SparkSession, root: String, images: DataFrame,
       idCol: String = "media_id", payloadCol: String = "payload",
       hasher: (DataFrame, String, String) => DataFrame =
-        Multimodal.aHash64Bytes): Unit = {
-    Versions.guardStandingWrite(spark, root)
-    hasher(images, idCol, payloadCol)
-      .write.mode("overwrite").parquet(s"$root/v0")
-  }
+        Multimodal.aHash64Bytes): Unit =
+    spec.writeStanding(spark, root, hasher(images, idCol, payloadCol))
 
   /** The assembled hash index: every delta `<= upTo`, a plain scan union
     * (rows unique across deltas by construction — each image arrives in
@@ -58,20 +62,15 @@ object AHashStream {
     * ([[Versions.maskTombstones]] — broadcast anti-join; the plan is
     * untouched when no takedown ever happened). */
   def readIndex(spark: SparkSession, root: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, root).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no index versions at $root")
-    Versions.maskTombstones(spark, root,
-      Versions.read(spark, root, versions.map(_._2.toString)), "media_id",
-      upTo)
-  }
+      upTo: Long = Long.MaxValue): DataFrame =
+    spec.read(spark, root, upTo)
 
   /** Retract ids from the hash index ([[Versions.tombstone]] contract):
     * probes from marker batch `batchId` on stop pairing against their
     * hashes; [[compactStore]] drops the rows physically. */
   def tombstone(spark: SparkSession, root: String, ids: Seq[Long],
       batchId: Long): Unit =
-    Versions.tombstone(spark, root, ids, batchId)
+    spec.tombstone(spark, root, ids, batchId)
 
   /** The `foreachBatch` callback: hash batch `batchId`'s images, emit its
     * near-dup pairs (in-batch + against everything earlier) to
@@ -104,11 +103,7 @@ object AHashStream {
       s"maxHamming $maxHamming exceeds the 28-band chunk-pair guarantee " +
         "(Hamming <= 6 by pigeonhole); beyond it candidates are incomplete " +
         "and streamed pairs would not replay")
-    Versions.guardAppend(spark, root, "hash index", batchId,
-      "writeStanding before starting the stream")
-    autoCompactVersions.foreach(k =>
-      Versions.autoCompact(spark, root, batchId, k,
-        tombstoneIdCol = Some("media_id")))
+    spec.beginAppend(spark, root, batchId, autoCompactVersions)
     val bh = hasher(batch, idCol, payloadCol)
       .localCheckpoint(true)
     // maxBucketSize = unbounded: the oracle replays UNCAPPED exact pairs,
@@ -152,13 +147,8 @@ object AHashStream {
     pairs
   }
 
-  /** Fold deltas `v0..v<upTo>` into a new base (rows unique across
-    * deltas ⇒ the identity fold is read-equivalent), physically dropping
-    * tombstoned ids (markers consumed — [[Versions.compact]]). No probe-
-    * key clustering: the probe bands the 64-bit hashes IN-SCAN into 28
-    * chunk-pair keys and pushes no stored-column predicate, so no sort
-    * order of (media_id, ahash) can gain it row-group pruning — the
-    * standing scan is inherently full (and 16 bytes/image cheap). */
+  /** Fold deltas `v0..v<upTo>` into a new base, physically dropping
+    * tombstoned ids (markers consumed — [[Versions.compact]]). */
   def compactStore(spark: SparkSession, root: String, upTo: Long): Unit =
-    Versions.compact(spark, root, upTo, tombstoneIdCol = Some("media_id"))
+    spec.compact(spark, root, upTo)
 }

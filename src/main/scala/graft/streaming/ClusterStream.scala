@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.SteadyLit
 
@@ -58,6 +57,24 @@ object ClusterStream {
   private def assignRoot(root: String) = s"$root/assign"
   private def canonRoot(root: String) = s"$root/canon"
   private def pairsRoot(root: String) = s"$root/pairs"
+
+  private val standingHint = "ClusterStream.writeStanding first"
+
+  /** Assignments compact back to one row per id (newest wins), tombstoned
+    * docs dropped physically, the base CLUSTERED by `cid` (the fold's
+    * membership reads prune by a pushed cid predicate). */
+  private val assignSpec = Versions.StoreSpec("cluster assignments",
+    Some("id"), Versions.newestPerKey("id"), Seq("cid"), standingHint)
+
+  /** Canonicals compact to one LIVE row per cid. */
+  private val canonSpec = Versions.StoreSpec("cluster canonicals", None,
+    df => Versions.newestPerKey("cid")(df).filter(col("n_members") > 0),
+    Seq("cid"), standingHint)
+
+  /** Pair reads mask tombstoned ids on `id_a` here and on `id_b` at the
+    * call site; compaction drops both (see [[compactStore]]). */
+  private val pairsSpec = Versions.StoreSpec("cluster pairs", Some("id_a"),
+    missingHint = standingHint)
 
   /** Bootstrap: batch-solve the standing corpus with the batch kernels and
     * write the three `v0`s. `standingDocs` is (idCol, scoreCol); every doc
@@ -130,70 +147,53 @@ object ClusterStream {
     * (caught by ClusterStreamSpec's idempotence gate). */
   private def readAssignmentsMasked(spark: SparkSession, root: String,
       upTo: Long, maskUpTo: Long): DataFrame = {
-    val ar = assignRoot(root)
-    val versions = Versions.list(spark, ar).filter(_._1 <= upTo)
-    require(versions.exists(_._1 == 0L), s"no assignment base at $ar/v0")
     requireRepairedRevives(spark, root)
-    val base = Versions.read(spark, ar,
-      versions.filter(_._1 == 0L).map(_._2.toString))
-    val deltaDirs = versions.filter(_._1 > 0L).map(_._2.toString)
-    val current =
-      if (deltaDirs.isEmpty) base
-      else {
-        val w = Window.partitionBy(col("id")).orderBy(col("__v").desc)
-        val newest = Versions.read(spark, ar, deltaDirs)
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-          .localCheckpoint(true)
-        base.join(broadcast(newest.select(col("id"))), Seq("id"),
-            "left_anti")
-          .unionByName(newest)
-      }
+    val ar = assignRoot(root)
     Versions.maskTombstones(spark, ar,
-      current.select(col("id"), col("cid"), col("score"), col("__v")),
+      baseOverNewest(spark, ar, "id", upTo)
+        .select(col("id"), col("cid"), col("score"), col("__v")),
       "id", maskUpTo)
   }
 
-  /** Current elections: newest row per cid, dead labels (n_members = 0)
-    * dropped. Same read posture as [[readAssignments]]: the base holds
-    * one row per cid (writeStanding/compact invariant), so the
-    * newest-per-cid window runs over the DELTAS only and the base joins
-    * back through a broadcast anti-join — never a store-wide window. */
-  def readCanonicals(spark: SparkSession, root: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val cr = canonRoot(root)
-    val versions = Versions.list(spark, cr).filter(_._1 <= upTo)
-    require(versions.exists(_._1 == 0L), s"no canonical base at $cr/v0")
-    val base = Versions.read(spark, cr,
+  /** A base-plus-deltas root read: `v0` (one row per `key`, the
+    * writeStanding/compact invariant) superseded by the newest delta row
+    * per key. The newest-per-key window runs over the DELTAS only —
+    * recent-batch-sized until compaction folds them into the base — and
+    * the base joins back through a broadcast anti-join, never a
+    * store-wide window. */
+  private def baseOverNewest(spark: SparkSession, root: String, key: String,
+      upTo: Long): DataFrame = {
+    val versions = Versions.list(spark, root).filter(_._1 <= upTo)
+    require(versions.exists(_._1 == 0L), s"no base at $root/v0")
+    val base = Versions.read(spark, root,
       versions.filter(_._1 == 0L).map(_._2.toString))
     val deltaDirs = versions.filter(_._1 > 0L).map(_._2.toString)
-    val current =
-      if (deltaDirs.isEmpty) base
-      else {
-        val w = Window.partitionBy(col("cid")).orderBy(col("__v").desc)
-        val newest = Versions.read(spark, cr, deltaDirs)
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-          .localCheckpoint(true)
-        base.join(broadcast(newest.select(col("cid"))), Seq("cid"),
-            "left_anti")
-          .unionByName(newest)
-      }
-    current.filter(col("n_members") > 0)
-      .select(col("cid"), col("keep_id"), col("score"), col("n_members"))
+    if (deltaDirs.isEmpty) base
+    else {
+      val newest = Versions.newestPerKey(key)(
+          Versions.read(spark, root, deltaDirs))
+        .localCheckpoint(true)
+      base.join(broadcast(newest.select(col(key))), Seq(key), "left_anti")
+        .unionByName(newest)
+    }
   }
+
+  /** Current elections: newest row per cid, dead labels (n_members = 0)
+    * dropped. Same read posture as [[readAssignments]]. */
+  def readCanonicals(spark: SparkSession, root: String,
+      upTo: Long = Long.MaxValue): DataFrame =
+    baseOverNewest(spark, canonRoot(root), "cid", upTo)
+      .filter(col("n_members") > 0)
+      .select(col("cid"), col("keep_id"), col("score"), col("n_members"))
 
   /** The folded pair relation, pairs touching a tombstoned id masked on
     * BOTH endpoints. */
   def readPairs(spark: SparkSession, root: String,
       upTo: Long = Long.MaxValue): DataFrame = {
-    val pr = pairsRoot(root)
-    val versions = Versions.list(spark, pr).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no pair versions at $pr")
     requireRepairedRevives(spark, root)
-    val raw = Versions.read(spark, pr, versions.map(_._2.toString))
-    Versions.maskTombstones(spark, pr,
-      Versions.maskTombstones(spark, pr, raw, "id_a", upTo), "id_b", upTo)
+    val pr = pairsRoot(root)
+    Versions.maskTombstones(spark, pr, pairsSpec.read(spark, pr, upTo),
+      "id_b", upTo)
   }
 
   /** This store's takedown/revive verbs pair their markers with
@@ -253,11 +253,9 @@ object ClusterStream {
       batchDocs: DataFrame, batchPairs: DataFrame, batchId: Long): Unit = {
     val ar = assignRoot(root); val cr = canonRoot(root)
     val pr = pairsRoot(root)
-    Versions.guardAppend(spark, ar, "cluster assignments", batchId,
-      "ClusterStream.writeStanding before starting the stream", lease)
-    Versions.guardAppend(spark, cr, "cluster canonicals", batchId,
-      lease = lease)
-    Versions.guardAppend(spark, pr, "cluster pairs", batchId, lease = lease)
+    assignSpec.guardAppend(spark, ar, batchId, lease)
+    canonSpec.guardAppend(spark, cr, batchId, lease)
+    pairsSpec.guardAppend(spark, pr, batchId, lease)
     // pairs touching a tombstoned id are masked on BOTH endpoints
     // (broadcast, takedown-sized) — an upstream pair generator that has
     // not seen the takedown yet could otherwise make a deleted doc look
@@ -405,12 +403,9 @@ object ClusterStream {
     val v = batchId + 1
     // same lineage guards as the fold: a fresh checkpoint replaying an
     // old batch over newer deltas would fork the repair's lineage
-    Versions.guardAppend(spark, ar, "cluster assignments", batchId,
-      "ClusterStream.writeStanding before retracting", lease)
-    Versions.guardAppend(spark, cr, "cluster canonicals", batchId,
-      lease = lease)
-    val del = ids.toDF("id").select(col("id").cast("long").as("id"))
-      .filter(col("id").isNotNull).distinct().localCheckpoint(true)
+    assignSpec.guardAppend(spark, ar, batchId, lease)
+    canonSpec.guardAppend(spark, cr, batchId, lease)
+    val del = Versions.idRelation(ids).localCheckpoint(true)
     // affected components: the deleted docs' rows must stay visible to
     // THIS resolution even on redelivery (this batch's own marker may
     // already exist), so the mask stops strictly before batchId
@@ -460,12 +455,9 @@ object ClusterStream {
       batchId: Long, pushCidLimit: Int = 1024,
       lease: Option[Versions.Lease] = None): Unit = {
     val ar = assignRoot(root); val pr = pairsRoot(root)
-    Versions.guardAppend(spark, ar, "cluster assignments", batchId,
-      "ClusterStream.writeStanding before reviving", lease)
-    Versions.guardAppend(spark, canonRoot(root), "cluster canonicals",
-      batchId, lease = lease)
-    val rel = ids.toDF("id").select(col("id").cast("long").as("id"))
-      .filter(col("id").isNotNull).distinct().localCheckpoint(true)
+    assignSpec.guardAppend(spark, ar, batchId, lease)
+    canonSpec.guardAppend(spark, canonRoot(root), batchId, lease)
+    val rel = Versions.idRelation(ids).localCheckpoint(true)
     // independent marker roots — overlap the two revive-marker writes
     // (guide §2.6); the repair below reads both post-marker views
     graft.core.Par.run(
@@ -537,25 +529,12 @@ object ClusterStream {
         .write.mode("overwrite").parquet(s"$cr/v$v"))
   }
 
-  /** Fold all three roots' deltas into fresh bases: assignments back to
-    * one row per id (newest wins), tombstoned docs dropped physically and
-    * the base CLUSTERED by `cid` (the fold's membership reads prune by a
-    * pushed cid predicate); canonicals to one live row per cid; pairs with
-    * both-endpoint tombstone drops (the marker set is applied to BOTH
-    * columns before the id_a-keyed consumption — a one-column drop would
-    * resurrect the id_b rows once the markers are consumed). */
+  /** Fold all three roots' deltas into fresh bases (each root's spec);
+    * pairs with both-endpoint tombstone drops (the marker set is applied
+    * to BOTH columns before the id_a-keyed consumption — a one-column
+    * drop would resurrect the id_b rows once the markers are consumed). */
   def compactStore(spark: SparkSession, root: String, upTo: Long,
       lease: Option[Versions.Lease] = None): Unit = {
-    val newestPerId: DataFrame => DataFrame = { df =>
-      val w = Window.partitionBy(col("id")).orderBy(col("__v").desc)
-      df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-    }
-    val newestPerCid: DataFrame => DataFrame = { df =>
-      val w = Window.partitionBy(col("cid")).orderBy(col("__v").desc)
-      df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1 && col("n_members") > 0).drop("__rn")
-    }
     val pr = pairsRoot(root)
     // allowSingle on all three roots: a marker-only history (retract/
     // revive with no interleaved folds) leaves one version + markers to
@@ -564,11 +543,10 @@ object ClusterStream {
     // The three per-root rewrites are independent (crash recovery is
     // already "re-run converges per root") — overlap them (guide §2.6).
     graft.core.Par.run(
-      () => Versions.compact(spark, assignRoot(root), upTo, newestPerId,
-        tombstoneIdCol = Some("id"), clusterBy = Seq("cid"),
-        allowSingle = true, lease = lease),
-      () => Versions.compact(spark, canonRoot(root), upTo, newestPerCid,
-        clusterBy = Seq("cid"), allowSingle = true, lease = lease),
+      () => assignSpec.compact(spark, assignRoot(root), upTo,
+        allowSingle = true, lease),
+      () => canonSpec.compact(spark, canonRoot(root), upTo,
+        allowSingle = true, lease),
       () => {
         // deadSet, not the raw marker union: a revived id's pair rows must
         // survive the physical fold (newest-verb-wins, the

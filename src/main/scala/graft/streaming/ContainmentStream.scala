@@ -35,6 +35,14 @@ import graft.operators.Dedup
   * redelivery, lineage-fork guard ([[Versions.guardAppend]]). */
 object ContainmentStream {
 
+  /** Exploded (id, n, g) rows unique across deltas ⇒ the identity fold;
+    * the base CLUSTERS by the probe key `g` so a small batch's pushed
+    * gram predicate skips most row groups of the standing scan the probe
+    * pays every trigger (VERDICT r13 #2 — the §6-documented linear
+    * term's layout lever). */
+  private val spec = Versions.StoreSpec("set index", Some("id"),
+    clusterBy = Seq("g"))
+
   private def explodeSets(sets: DataFrame): DataFrame =
     sets.select(col("id"), size(col("sh")).as("n"),
       explode(col("sh")).as("g"))
@@ -45,12 +53,9 @@ object ContainmentStream {
     * with empty sets are dropped (the [[Dedup.jaccardShingleSets]]
     * family contract — an empty probe set has no defined containment). */
   def writeStanding(spark: SparkSession, root: String, standing: DataFrame,
-      setsOf: DataFrame => DataFrame): Unit = {
-    Versions.guardStandingWrite(spark, root)
-    explodeSets(setsOf(standing).toDF("id", "sh")
-        .filter(size(col("sh")) > 0))
-      .write.mode("overwrite").parquet(s"$root/v0")
-  }
+      setsOf: DataFrame => DataFrame): Unit =
+    spec.writeStanding(spark, root, explodeSets(setsOf(standing)
+      .toDF("id", "sh").filter(size(col("sh")) > 0)))
 
   /** The assembled set relation: every delta `<= upTo`, a plain scan
     * union (rows unique across deltas — each item arrives in exactly one
@@ -58,19 +63,15 @@ object ContainmentStream {
     * broadcast anti-join; the plan is untouched when no takedown ever
     * happened). */
   def readIndex(spark: SparkSession, root: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, root).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no index versions at $root")
-    Versions.maskTombstones(spark, root,
-      Versions.read(spark, root, versions.map(_._2.toString)), "id", upTo)
-  }
+      upTo: Long = Long.MaxValue): DataFrame =
+    spec.read(spark, root, upTo)
 
   /** Retract ids from the set index ([[Versions.tombstone]] contract):
     * every read and probe from marker batch `batchId` on stops seeing
     * their sets; [[compactStore]] drops the rows physically. */
   def tombstone(spark: SparkSession, root: String, ids: Seq[Long],
       batchId: Long): Unit =
-    Versions.tombstone(spark, root, ids, batchId)
+    spec.tombstone(spark, root, ids, batchId)
 
   /** The `foreachBatch` callback: profile batch `batchId`'s media, emit
     * its directed containment pairs (in-batch + against everything
@@ -102,11 +103,7 @@ object ContainmentStream {
       materializePairs: Boolean = false,
       pushGramLimit: Int = 1024)(
       batch: DataFrame, batchId: Long): DataFrame = {
-    Versions.guardAppend(spark, root, "set index", batchId,
-      "writeStanding before starting the stream")
-    autoCompactVersions.foreach(k =>
-      Versions.autoCompact(spark, root, batchId, k,
-        tombstoneIdCol = Some("id"), clusterBy = Seq("g")))
+    spec.beginAppend(spark, root, batchId, autoCompactVersions)
     val bsets = setsOf(batch).toDF("id", "sh")
       .filter(size(col("sh")) > 0)
       .localCheckpoint(true)
@@ -136,14 +133,8 @@ object ContainmentStream {
     pairs
   }
 
-  /** Fold deltas `v0..v<upTo>` into a new base (rows unique across
-    * deltas ⇒ the identity fold is read-equivalent), physically dropping
-    * tombstoned ids (markers consumed — [[Versions.compact]]), and
-    * CLUSTERING the base by the probe key `g` so a small batch's pushed
-    * gram predicate skips most row groups of the standing scan the probe
-    * pays every trigger (VERDICT r13 #2 — the §6-documented linear
-    * term's layout lever). */
+  /** Fold deltas `v0..v<upTo>` into a new g-clustered base, physically
+    * dropping tombstoned ids (markers consumed — [[Versions.compact]]). */
   def compactStore(spark: SparkSession, root: String, upTo: Long): Unit =
-    Versions.compact(spark, root, upTo, tombstoneIdCol = Some("id"),
-      clusterBy = Seq("g"))
+    spec.compact(spark, root, upTo)
 }

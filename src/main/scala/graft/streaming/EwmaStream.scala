@@ -29,6 +29,13 @@ import graft.operators.TimeSeries
   * registry row's oracle proves it per batch). */
 object EwmaStream {
 
+  /** Compaction keeps each key's newest state row, like
+    * [[FunnelStream]]'s. */
+  private def spec(keyCol: String) = Versions.StoreSpec("state", None,
+    Versions.newestPerKey(keyCol),
+    missingHint = "write it (empty for a cold start) before starting the " +
+      "stream")
+
   /** The `foreachBatch` callback: fold batch `batchId`'s values into each
     * key's carried EWMA, emit updated keys to `outRoot/b<batchId>`,
     * append the state delta as `stateRoot/v<batchId + 1>`. */
@@ -36,22 +43,9 @@ object EwmaStream {
       keyCol: String, tsCol: String, tieCol: String, valCol: String,
       alpha: Double, autoCompactVersions: Option[Int] = None)(
       batch: DataFrame, batchId: Long): Unit = {
-    val versions = Versions.guardAppend(spark, stateRoot, "state", batchId,
-      "write it (empty for a cold start) before starting the stream")
-    val current = autoCompactVersions match {
-      case Some(k) => Versions.autoCompact(spark, stateRoot, batchId, k, df =>
-        df.withColumn("__rn", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy(keyCol)
-              .orderBy(col("__v").desc)))
-          .filter(col("__rn") === 1).drop("__rn"))
-      case None => versions
-    }
-    val prior = Versions.read(spark, stateRoot,
-        current.filter(_._1 <= batchId).map(_._2.toString))
-      .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(keyCol)
-          .orderBy(col("__v").desc)))
-      .filter(col("__rn") === 1)
+    val state = spec(keyCol)
+    state.beginAppend(spark, stateRoot, batchId, autoCompactVersions)
+    val prior = state.fold(state.read(spark, stateRoot, upTo = batchId))
       .select(col(keyCol), col("n_events").as("__pn"),
         col("ewma").as("__pe"))
     val updated = batch
@@ -87,13 +81,8 @@ object EwmaStream {
 
   /** Merge state deltas `v0..v<upTo>` into a new base snapshot (see
     * [[Versions.compact]] for the lineage-guard and safety contract),
-    * pruning superseded per-key rows exactly like
-    * [[FunnelStream.compactState]]. */
+    * pruning superseded per-key rows. */
   def compactState(spark: SparkSession, stateRoot: String, keyCol: String,
       upTo: Long): Unit =
-    Versions.compact(spark, stateRoot, upTo, df =>
-      df.withColumn("__rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(keyCol)
-            .orderBy(col("__v").desc)))
-        .filter(col("__rn") === 1).drop("__rn"))
+    spec(keyCol).compact(spark, stateRoot, upTo)
 }

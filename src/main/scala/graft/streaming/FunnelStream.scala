@@ -26,6 +26,15 @@ import graft.operators.TimeSeries
   * batches partition the stream in time order. */
 object FunnelStream {
 
+  /** The prior-state read keeps only each key's highest-`__v` row, so
+    * compaction prunes every superseded stage row — the base shrinks to
+    * one row per key, keeping original `__v` values so later reads rank
+    * identically against post-compaction deltas. */
+  private def spec(keyCol: String) = Versions.StoreSpec("state", None,
+    Versions.newestPerKey(keyCol),
+    missingHint = "write it (empty for a cold start) before starting the " +
+      "stream")
+
   /** The `foreachBatch` callback: advance stages through batch
     * `batchId`'s events, emit changed users to `outRoot/b<batchId>`,
     * append the state delta as `stateRoot/v<batchId + 1>`. */
@@ -33,22 +42,9 @@ object FunnelStream {
       keyCol: String, tsCol: String, tieCol: String, typeCol: String,
       steps: Seq[String], autoCompactVersions: Option[Int] = None)(
       batch: DataFrame, batchId: Long): Unit = {
-    val versions = Versions.guardAppend(spark, stateRoot, "state", batchId,
-      "write it (empty for a cold start) before starting the stream")
-    val current = autoCompactVersions match {
-      case Some(k) => Versions.autoCompact(spark, stateRoot, batchId, k, df =>
-        df.withColumn("__rn", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy(keyCol)
-              .orderBy(col("__v").desc)))
-          .filter(col("__rn") === 1).drop("__rn"))
-      case None => versions
-    }
-    val prior = Versions.read(spark, stateRoot,
-        current.filter(_._1 <= batchId).map(_._2.toString))
-      .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(keyCol)
-          .orderBy(col("__v").desc)))
-      .filter(col("__rn") === 1)
+    val state = spec(keyCol)
+    state.beginAppend(spark, stateRoot, batchId, autoCompactVersions)
+    val prior = state.fold(state.read(spark, stateRoot, upTo = batchId))
       .select(col(keyCol), col("stage").as("__prior"))
     val advanced = batch
       .filter(col(keyCol).isNotNull)
@@ -78,16 +74,8 @@ object FunnelStream {
   }
 
   /** Merge state deltas `v0..v<upTo>` into a new base snapshot (see
-    * [[Versions.compact]] for the lineage-guard and safety contract).
-    * The prior-state read keeps only each key's highest-`__v` row, so
-    * compaction prunes every superseded stage row — the base shrinks to
-    * one row per key, keeping original `__v` values so later reads rank
-    * identically against post-compaction deltas. */
+    * [[Versions.compact]] for the lineage-guard and safety contract). */
   def compactState(spark: SparkSession, stateRoot: String, keyCol: String,
       upTo: Long): Unit =
-    Versions.compact(spark, stateRoot, upTo, df =>
-      df.withColumn("__rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(keyCol)
-            .orderBy(col("__v").desc)))
-        .filter(col("__rn") === 1).drop("__rn"))
+    spec(keyCol).compact(spark, stateRoot, upTo)
 }

@@ -48,6 +48,13 @@ import graft.operators.IvfRelational
   * standing index has grown. */
 object IvfStream {
 
+  /** (neighbor_id, cell, v) rows unique across deltas ⇒ the identity
+    * fold; tombstoned vectors drop physically and the base CLUSTERS by
+    * the probe key `cell` — probes that push their shortlisted cell ids
+    * into the standing scan then skip non-shortlist row groups. */
+  private val spec = Versions.StoreSpec("index", Some("neighbor_id"),
+    clusterBy = Seq("cell"))
+
   // ---- bank-identity pinning ----------------------------------------------
   // An index is bound to the CONTENT of the bank it was assigned under,
   // not merely to "a root holding exactly v0": point a stream (or a
@@ -83,27 +90,14 @@ object IvfStream {
     (row.getLong(0), row.getLong(1))
   }
 
-  private def writeBankPin(spark: SparkSession, indexRoot: String,
-      fp: (Long, Long)): Unit = {
-    import spark.implicits._
-    Seq(("bank_fp", fp._1), ("bank_n", fp._2)).toDF("k", "v")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexRoot/_params")
-  }
-
   /** Fail loud unless the bank at `bankRoot/v0` hashes to the fingerprint
     * pinned when `indexRoot` was built — the [[SketchStream]]
     * `checkParams` pattern for a relation-valued model. */
   def checkBank(spark: SparkSession, bankRoot: String,
       indexRoot: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexRoot/_params")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p),
-      s"$indexRoot/_params missing — writeStanding (which pins the " +
-        "fingerprint of the bank the index was assigned under) before " +
-        "appending or probing")
-    val pinRows = Versions.read(spark, s"$indexRoot/_params",
-      Seq(s"$indexRoot/_params"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val pinRows = Versions.readPin(spark, indexRoot,
+      "writeStanding (which pins the fingerprint of the bank the index " +
+        "was assigned under) before appending or probing")
     // a pin written by the pre-r12 single-row format carries only bank_fp;
     // comparing it against today's (fp, n) would fail EVERY bank — even a
     // byte-identical one — with a misleading "does not match" message, so
@@ -138,7 +132,8 @@ object IvfStream {
     Versions.guardStandingWrite(spark, indexRoot)
     bank.write.mode("overwrite").parquet(s"$bankRoot/v0")
     val frozen = Versions.read(spark, bankRoot, Seq(s"$bankRoot/v0"))
-    writeBankPin(spark, indexRoot, bankFingerprint(frozen))
+    val (fp, n) = bankFingerprint(frozen)
+    Versions.writePin(spark, indexRoot, Seq("bank_fp" -> fp, "bank_n" -> n))
     IvfRelational.assign(standing, frozen, idCol, vecCol)
       .select(col("id").as("neighbor_id"), col("cell"), col("v"))
       .write.mode("overwrite").parquet(s"$indexRoot/v0")
@@ -153,14 +148,10 @@ object IvfStream {
       outRoot: String, idCol: String, vecCol: String,
       autoCompactVersions: Option[Int] = None)(
       batch: DataFrame, batchId: Long): Unit = {
-    val bankVersions = Versions.list(spark, bankRoot)
-    require(bankVersions.map(_._1) == Seq(0L),
-      s"bank at $bankRoot must be exactly v0 (found " +
-        s"${bankVersions.map("v" + _._1).mkString(", ")}) — an index is " +
-        "bound to the bank it was built under; retrain into a NEW root " +
-        "and rebuild, never mutate a live bank")
-    Versions.guardAppend(spark, indexRoot, "index", batchId,
-      "writeStanding before starting the stream")
+    Versions.requireFrozen(spark, bankRoot, "bank", "an index is bound to " +
+      "the bank it was built under; retrain into a NEW root and rebuild, " +
+      "never mutate a live bank")
+    spec.guardAppend(spark, indexRoot, batchId)
     // identity, not just shape: the v0-only guard above catches a MUTATED
     // bank root, this catches the WRONG one (or a same-named retrain) —
     // one model-sized fold per batch. r18: the guard chain (checkBank's
@@ -172,13 +163,7 @@ object IvfStream {
     val staged = graft.core.Par.eval(Seq[() => AnyRef](
       () => {
         checkBank(spark, bankRoot, indexRoot)
-        // same fold parameters as compactStore: tombstoned vectors drop
-        // physically and the base stays cell-clustered — an auto-compacted
-        // root must not silently lose the pruning layout or pay the marker
-        // mask forever
-        autoCompactVersions.foreach(k =>
-          Versions.autoCompact(spark, indexRoot, batchId, k,
-            tombstoneIdCol = Some("neighbor_id"), clusterBy = Seq("cell")))
+        spec.autoCompact(spark, indexRoot, batchId, autoCompactVersions)
         null
       },
       () => {
@@ -206,13 +191,8 @@ object IvfStream {
     * (plan-gated in PlanSpec) — the [[graft.operators.Similarity
     * .writeIvfIndex]] probe discipline. */
   def readIndex(spark: SparkSession, indexRoot: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, indexRoot).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no index versions at $indexRoot")
-    Versions.maskTombstones(spark, indexRoot,
-      Versions.read(spark, indexRoot, versions.map(_._2.toString)),
-      "neighbor_id", upTo)
-  }
+      upTo: Long = Long.MaxValue): DataFrame =
+    spec.read(spark, indexRoot, upTo)
 
   /** Retract vector ids from the assignment index
     * ([[Versions.tombstone]] contract): probes stop returning the
@@ -222,7 +202,7 @@ object IvfStream {
     * remaining corpus when drift says so). */
   def tombstone(spark: SparkSession, indexRoot: String, ids: Seq[Long],
       batchId: Long): Unit =
-    Versions.tombstone(spark, indexRoot, ids, batchId)
+    spec.tombstone(spark, indexRoot, ids, batchId)
 
   /** The probe-session entry point: [[readIndex]] AFTER verifying that
     * the bank the probe intends to use is the one the index was assigned
@@ -255,12 +235,7 @@ object IvfStream {
   def rebuildIndex(spark: SparkSession, indexRoot: String,
       newBankRoot: String, newIndexRoot: String, nCells: Int,
       iters: Int = 3, stride: Int = 50, trainFraction: Double = 1.0): Unit = {
-    require(Versions.list(spark, newBankRoot).isEmpty,
-      s"rebuild target $newBankRoot already holds versions — rebuild " +
-        "writes a NEW root and readers swap; never rebuild into a live root")
-    require(Versions.list(spark, newIndexRoot).isEmpty,
-      s"rebuild target $newIndexRoot already holds versions — rebuild " +
-        "writes a NEW root and readers swap; never rebuild into a live root")
+    Versions.requireFreshRoots(spark, newBankRoot, newIndexRoot)
     val corpus = readIndex(spark, indexRoot)
       .select(col("neighbor_id").as("vec_id"), col("v").as("embedding"))
     val train =
@@ -271,13 +246,9 @@ object IvfStream {
     writeStanding(spark, newBankRoot, newIndexRoot, corpus, bank)
   }
 
-  /** Fold index deltas `v0..v<upTo>` into a new base (see
-    * [[Versions.compact]] safety contract); rows unique across deltas ⇒
-    * the identity fold is read-equivalent. Tombstoned vectors drop
-    * physically (markers consumed) and the base CLUSTERS by the probe
-    * key `cell` — probes that push their shortlisted cell ids into the
-    * standing scan then skip non-shortlist row groups. */
+  /** Fold index deltas `v0..v<upTo>` into a new cell-clustered base (see
+    * [[Versions.compact]] safety contract), dropping tombstoned vectors
+    * physically (markers consumed). */
   def compactStore(spark: SparkSession, indexRoot: String, upTo: Long): Unit =
-    Versions.compact(spark, indexRoot, upTo,
-      tombstoneIdCol = Some("neighbor_id"), clusterBy = Seq("cell"))
+    spec.compact(spark, indexRoot, upTo)
 }

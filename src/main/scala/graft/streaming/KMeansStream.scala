@@ -46,6 +46,11 @@ object KMeansStream {
     StructField("n", LongType, nullable = false),
     StructField("__v", LongType, nullable = false)))
 
+  /** Current state is the newest row per (cell, pos); compaction prunes
+    * the superseded ones. */
+  private val spec = Versions.StoreSpec("state", None,
+    Versions.newestPerKey("cell", "pos"), missingHint = "writeSeedState first")
+
   private val outSchema = StructType(Seq(
     StructField("batch", LongType, nullable = false),
     StructField("cell", IntegerType, nullable = false),
@@ -77,23 +82,9 @@ object KMeansStream {
       idCol: String, vecCol: String, autoCompactVersions: Option[Int] = None)(
       batch: DataFrame, batchId: Long): Unit = {
     import graft.functions.VectorExpressions.nearestCentroids
-    val versions = Versions.guardAppend(spark, stateRoot, "state", batchId,
-      "writeSeedState first")
-    val current = autoCompactVersions match {
-      case Some(k) => Versions.autoCompact(spark, stateRoot, batchId, k, df =>
-        df.withColumn("__rn", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy("cell", "pos")
-              .orderBy(col("__v").desc)))
-          .filter(col("__rn") === 1).drop("__rn"))
-      case None => versions
-    }
+    spec.beginAppend(spark, stateRoot, batchId, autoCompactVersions)
     // Carried state: newest row per (cell, pos) across versions <= batchId.
-    val prior = Versions.read(spark, stateRoot,
-        current.filter(_._1 <= batchId).map(_._2.toString))
-      .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("cell", "pos")
-          .orderBy(col("__v").desc)))
-      .filter(col("__rn") === 1)
+    val prior = spec.fold(spec.read(spark, stateRoot, upTo = batchId))
       .select(col("cell"), col("pos"), col("s"), col("n"))
       .collect()
     val sums = scala.collection.mutable.Map.empty[(Int, Int), BigDecimal]
@@ -166,9 +157,5 @@ object KMeansStream {
   /** Merge state deltas `v0..v<upTo>` into a new base (see
     * [[Versions.compact]]), pruning superseded per-(cell, pos) rows. */
   def compactState(spark: SparkSession, stateRoot: String, upTo: Long): Unit =
-    Versions.compact(spark, stateRoot, upTo, df =>
-      df.withColumn("__rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("cell", "pos")
-            .orderBy(col("__v").desc)))
-        .filter(col("__rn") === 1).drop("__rn"))
+    spec.compact(spark, stateRoot, upTo)
 }

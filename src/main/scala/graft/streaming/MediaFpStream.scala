@@ -32,17 +32,20 @@ import graft.functions.SteadyLit
   * overwrite on redelivery, lineage-fork guard. */
 object MediaFpStream {
 
+  /** (media_id, fp) rows unique across deltas ⇒ the identity fold; the
+    * base clusters by the probe key `fp`, so a small batch's fingerprint
+    * set pushed into the standing scan skips most row groups. */
+  private val spec = Versions.StoreSpec("fingerprint index",
+    Some("media_id"), clusterBy = Seq("fp"))
+
   /** Fingerprint the standing corpus and write `root/v0`
     * (live-root-guarded). `profiler` maps a (idCol, payload...) frame to
     * (media_id, fp) — decode + fold, scan-shaped. */
   def writeStanding(spark: SparkSession, root: String, standing: DataFrame,
-      profiler: DataFrame => DataFrame): Unit = {
-    Versions.guardStandingWrite(spark, root)
+      profiler: DataFrame => DataFrame): Unit =
     // store columns normalized to (media_id, fp) regardless of the
     // profiler's fingerprint column name — appendBatch joins on `fp`
-    profiler(standing).toDF("media_id", "fp")
-      .write.mode("overwrite").parquet(s"$root/v0")
-  }
+    spec.writeStanding(spark, root, profiler(standing).toDF("media_id", "fp"))
 
   /** The assembled fingerprint index: every delta `<= upTo`, a plain
     * scan union (rows unique across deltas — each item arrives in
@@ -50,13 +53,8 @@ object MediaFpStream {
     * ([[Versions.maskTombstones]] — broadcast anti-join; the plan is
     * untouched when no takedown ever happened). */
   def readIndex(spark: SparkSession, root: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, root).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no index versions at $root")
-    Versions.maskTombstones(spark, root,
-      Versions.read(spark, root, versions.map(_._2.toString)), "media_id",
-      upTo)
-  }
+      upTo: Long = Long.MaxValue): DataFrame =
+    spec.read(spark, root, upTo)
 
   /** Retract ids from the fingerprint index ([[Versions.tombstone]]
     * contract): probes from marker batch `batchId` on stop pairing
@@ -64,7 +62,7 @@ object MediaFpStream {
     * physically. */
   def tombstone(spark: SparkSession, root: String, ids: Seq[Long],
       batchId: Long): Unit =
-    Versions.tombstone(spark, root, ids, batchId)
+    spec.tombstone(spark, root, ids, batchId)
 
   /** The `foreachBatch` callback: fingerprint batch `batchId`'s media,
     * emit its exact-dup pairs (in-batch + against everything earlier) to
@@ -100,11 +98,7 @@ object MediaFpStream {
       materializePairs: Boolean = false,
       pushFpLimit: Int = 1024)(
       batch: DataFrame, batchId: Long): DataFrame = {
-    Versions.guardAppend(spark, root, "fingerprint index", batchId,
-      "writeStanding before starting the stream")
-    autoCompactVersions.foreach(k =>
-      Versions.autoCompact(spark, root, batchId, k,
-        tombstoneIdCol = Some("media_id"), clusterBy = Seq("fp")))
+    spec.beginAppend(spark, root, batchId, autoCompactVersions)
     val bf = profiler(batch).toDF("media_id", "fp").localCheckpoint(true)
     // in-batch: exact-fp SELF-JOIN — a heavily re-crawled identical
     // payload (the exact scenario this index targets) can form a k-copy
@@ -148,12 +142,8 @@ object MediaFpStream {
     pairs
   }
 
-  /** Fold deltas `v0..v<upTo>` into a new base (rows unique across
-    * deltas ⇒ the identity fold is read-equivalent), physically dropping
-    * tombstoned ids (markers consumed) and CLUSTERING the base by the
-    * probe key `fp` ([[Versions.compact]] — a small batch's fingerprint
-    * set pushed into the standing scan then skips most row groups). */
+  /** Fold deltas `v0..v<upTo>` into a new fp-clustered base, physically
+    * dropping tombstoned ids (markers consumed — [[Versions.compact]]). */
   def compactStore(spark: SparkSession, root: String, upTo: Long): Unit =
-    Versions.compact(spark, root, upTo, tombstoneIdCol = Some("media_id"),
-      clusterBy = Seq("fp"))
+    spec.compact(spark, root, upTo)
 }

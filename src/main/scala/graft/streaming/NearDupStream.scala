@@ -28,6 +28,20 @@ import graft.operators.Dedup
   */
 object NearDupStream {
 
+  /** Band rows (id, band, bucket) are unique across deltas — each doc
+    * lands in exactly one batch — so `distinct` is read-equivalent while
+    * also collapsing any rows a crashed, re-run batch left behind; the
+    * base CLUSTERS by the probe key (band, bucket) so a small batch's
+    * pushed band predicate can skip standing row groups. */
+  private val bandSpec = Versions.StoreSpec("band index", Some("id"),
+    _.distinct(), Seq("band", "bucket"),
+    missingHint = "write it before starting the stream")
+
+  /** The docs store compacts by plain union (ids are unique per batch and
+    * the verify semi-join re-reads by id). */
+  private def docsSpec(idCol: String) = Versions.StoreSpec("docs store",
+    Some(idCol), missingHint = "write it before starting the stream")
+
   /** The `foreachBatch` callback: emit batch `batchId`'s near-dup pairs
     * (in-batch + against everything earlier) to `outRoot/b<batchId>`,
     * then append the batch's band and doc deltas as `v<batchId+1>`.
@@ -66,29 +80,11 @@ object NearDupStream {
       materializePairs: Boolean = false,
       pushBucketLimit: Int = 1024)(
       batch: DataFrame, batchId: Long): DataFrame = {
-    def deltasOf(root: String, what: String, tombstoneIdCol: String,
-        compactTransform: DataFrame => DataFrame,
-        clusterBy: Seq[String]): Seq[String] = {
-      val versions = Versions.guardAppend(spark, root, what, batchId)
-      val current = autoCompactVersions match {
-        case Some(k) =>
-          Versions.autoCompact(spark, root, batchId, k, compactTransform,
-            Some(tombstoneIdCol), clusterBy)
-        case None => versions
-      }
-      current.filter(_._1 <= batchId).map(_._2.toString)
-    }
-    // same per-store transforms as compactStores (band rows distinct,
-    // docs plain union); both reads mask tombstoned ids
-    // (Versions.maskTombstones — no-op plan when no takedown happened)
-    val idx = Versions.maskTombstones(spark, indexRoot,
-      Versions.read(spark, indexRoot,
-        deltasOf(indexRoot, "band index", "id", _.distinct(),
-          Seq("band", "bucket"))), "id", batchId)
-    val existingDocs = Versions.maskTombstones(spark, docsRoot,
-      Versions.read(spark, docsRoot,
-        deltasOf(docsRoot, "docs store", idCol, identity, Nil)),
-      idCol, batchId)
+    bandSpec.beginAppend(spark, indexRoot, batchId, autoCompactVersions)
+    val idx = bandSpec.read(spark, indexRoot, upTo = batchId)
+    val docs = docsSpec(idCol)
+    docs.beginAppend(spark, docsRoot, batchId, autoCompactVersions)
+    val existingDocs = docs.read(spark, docsRoot, upTo = batchId)
     val bBands = Dedup.minhashBandIndex(batch, idCol, textCol, numHashes,
       bands, shingleSize, seed).localCheckpoint(true)
     val restricted =
@@ -126,26 +122,17 @@ object NearDupStream {
       ids: Seq[Long], batchId: Long): Unit =
     // independent marker roots — overlap the two writes (guide §2.6)
     graft.core.Par.run(
-      () => Versions.tombstone(spark, indexRoot, ids, batchId),
-      () => Versions.tombstone(spark, docsRoot, ids, batchId))
+      () => bandSpec.tombstone(spark, indexRoot, ids, batchId),
+      () => docsSpec("doc_id").tombstone(spark, docsRoot, ids, batchId))
 
   /** Merge both delta stores' `v0..v<upTo>` into new base snapshots (see
     * [[Versions.compact]] for the lineage-guard and safety contract),
-    * physically dropping tombstoned docs (markers consumed) and
-    * CLUSTERING the band base by its probe key (band, bucket) so a small
-    * batch's pushed band predicate can skip standing row groups.
-    * Band rows (id, band, bucket) are unique across deltas — each doc
-    * lands in exactly one batch — so `distinct` is read-equivalent while
-    * also collapsing any rows a crashed, re-run batch left behind; the
-    * docs store compacts by plain union (ids are unique per batch and the
-    * verify semi-join re-reads by id). */
+    * physically dropping tombstoned docs (markers consumed). */
   def compactStores(spark: SparkSession, indexRoot: String, docsRoot: String,
       upTo: Long, docIdCol: String = "doc_id"): Unit =
     // independent per-root rewrites (crash recovery is already "re-run
     // converges per root") — overlap them (guide §2.6)
     graft.core.Par.run(
-      () => Versions.compact(spark, indexRoot, upTo, _.distinct(),
-        tombstoneIdCol = Some("id"), clusterBy = Seq("band", "bucket")),
-      () => Versions.compact(spark, docsRoot, upTo,
-        tombstoneIdCol = Some(docIdCol)))
+      () => bandSpec.compact(spark, indexRoot, upTo),
+      () => docsSpec(docIdCol).compact(spark, docsRoot, upTo))
 }

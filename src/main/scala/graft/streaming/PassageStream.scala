@@ -35,6 +35,18 @@ import graft.operators.Dedup
   */
 object PassageStream {
 
+  /** The fingerprint store is probed by semi-join only, so cross-delta
+    * duplicate fps collapse via `distinct` — the compacted base is
+    * strictly smaller and read-equivalent. The index is MONOTONE: see
+    * [[tombstone]]. */
+  private val spec = Versions.StoreSpec("index", None, _.distinct(),
+    missingHint = "write Dedup.passageWindowIndex(corpus) there before " +
+      "starting the stream",
+    rebuildHint = "the passage-fp index stores id-free fingerprints " +
+      "shared across docs — one doc's windows cannot be retracted. " +
+      "Rebuild Dedup.passageWindowIndex over the retained corpus into a " +
+      "NEW root and swap readers")
+
   /** Takedown refusal — the fingerprint index is ID-FREE (distinct window
     * fps, no doc provenance) and fps are SHARED across docs: dropping one
     * doc's fps would also forget every other doc holding the same
@@ -46,12 +58,7 @@ object PassageStream {
     * monotone-store contract). */
   def tombstone(spark: SparkSession, indexRoot: String, ids: Seq[Long],
       batchId: Long): Unit =
-    throw new UnsupportedOperationException(
-      s"tombstone($indexRoot, ${ids.size} ids, batch $batchId) refused: " +
-        "the passage-fp index stores id-free fingerprints shared across " +
-        "docs — one doc's windows cannot be retracted. Rebuild " +
-        "Dedup.passageWindowIndex over the retained corpus into a NEW " +
-        "root and swap readers")
+    spec.tombstone(spark, indexRoot, ids, batchId)
 
   /** The `foreachBatch` callback: score one micro-batch against the
     * index-as-of-this-batch, write its stats to `outRoot/b<batchId>`, and
@@ -67,16 +74,8 @@ object PassageStream {
       idCol: String, textCol: String, windowTokens: Int = 8,
       autoCompactVersions: Option[Int] = None)(
       batch: DataFrame, batchId: Long): Unit = {
-    val versions = Versions.guardAppend(spark, indexRoot, "index", batchId,
-      "write Dedup.passageWindowIndex(corpus) there before starting the " +
-        "stream")
-    val current = autoCompactVersions match {
-      case Some(k) =>
-        Versions.autoCompact(spark, indexRoot, batchId, k, _.distinct())
-      case None => versions
-    }
-    val deltas = current.filter(_._1 <= batchId).map(_._2.toString)
-    val idx = Versions.read(spark, indexRoot, deltas)
+    spec.beginAppend(spark, indexRoot, batchId, autoCompactVersions)
+    val idx = spec.read(spark, indexRoot, upTo = batchId)
     // independent per-trigger writes (distinct batch-id-named paths, any
     // completion subset redelivery-recoverable) — overlap them (guide §2.6)
     graft.core.Par.run(
@@ -90,10 +89,7 @@ object PassageStream {
 
   /** Merge index deltas `v0..v<upTo>` into a new base snapshot (see
     * [[Versions.compact]] for the lineage-guard and safety contract —
-    * `upTo` at most the checkpoint's last committed batch + 1). The
-    * fingerprint store is probed by semi-join only, so cross-delta
-    * duplicate fps collapse via `distinct` — the compacted base is
-    * strictly smaller and read-equivalent. */
+    * `upTo` at most the checkpoint's last committed batch + 1). */
   def compactIndex(spark: SparkSession, indexRoot: String, upTo: Long): Unit =
-    Versions.compact(spark, indexRoot, upTo, _.distinct())
+    spec.compact(spark, indexRoot, upTo)
 }

@@ -41,14 +41,13 @@ object PcaStream {
         sum(col("cnt")).as("cnt"))
       .select(momentCols.map(col): _*)
 
+  private val spec = Versions.StoreSpec("moments store", None, foldMoments)
+
   /** Write the standing corpus's moments as `root/v0` (live-root-guarded:
     * [[Versions.guardStandingWrite]]). */
   def writeStanding(spark: SparkSession, root: String, standing: DataFrame,
-      vecCol: String = "embedding"): Unit = {
-    Versions.guardStandingWrite(spark, root)
-    Decomp.moments(standing, vecCol)
-      .write.mode("overwrite").parquet(s"$root/v0")
-  }
+      vecCol: String = "embedding"): Unit =
+    spec.writeStanding(spark, root, Decomp.moments(standing, vecCol))
 
   /** The `foreachBatch` callback: batch moments → `root/v{batchId+1}`,
     * under the family's standing-store + lineage-fork guards. An empty
@@ -57,10 +56,7 @@ object PcaStream {
       vecCol: String = "embedding",
       autoCompactVersions: Option[Int] = None)(
       batch: DataFrame, batchId: Long): Unit = {
-    Versions.guardAppend(spark, root, "moments store", batchId,
-      "writeStanding before starting the stream")
-    autoCompactVersions.foreach(k =>
-      Versions.autoCompact(spark, root, batchId, k, foldMoments))
+    spec.beginAppend(spark, root, batchId, autoCompactVersions)
     Decomp.moments(batch, vecCol)
       .write.mode("overwrite").parquet(s"$root/v${batchId + 1}")
   }
@@ -68,11 +64,8 @@ object PcaStream {
   /** The folded moments relation over every delta `<= upTo` — model-sized
     * (d(d+3)/2 rows), exact by decimal associativity. */
   def readMoments(spark: SparkSession, root: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, root).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no moment versions at $root")
-    foldMoments(Versions.read(spark, root, versions.map(_._2.toString)))
-  }
+      upTo: Long = Long.MaxValue): DataFrame =
+    foldMoments(spec.read(spark, root, upTo))
 
   /** The current model: fold deltas, solve on the driver — bit-identical
     * to `Decomp.pcaFit` over the corresponding corpus union. */
@@ -87,5 +80,5 @@ object PcaStream {
     * [[Versions.compact]]); the decimal fold is read-equivalent by
     * associativity. */
   def compactStore(spark: SparkSession, root: String, upTo: Long): Unit =
-    Versions.compact(spark, root, upTo, foldMoments)
+    spec.compact(spark, root, upTo)
 }

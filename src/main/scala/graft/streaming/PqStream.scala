@@ -39,6 +39,10 @@ import graft.operators.Similarity
   * in-flight readers; rollback is "don't swap". */
 object PqStream {
 
+  /** (neighbor_id, codes) rows unique across deltas ⇒ the identity fold;
+    * tombstoned vectors drop physically (markers consumed). */
+  private val spec = Versions.StoreSpec("codes store", Some("neighbor_id"))
+
   /** The codebook relation (j, code, cv) of a driver-side bank array —
     * model-sized (m × nCodes rows). */
   def bookRelation(spark: SparkSession,
@@ -86,26 +90,13 @@ object PqStream {
     (row.getLong(0), row.getLong(1))
   }
 
-  private def writeBookPin(spark: SparkSession, codesRoot: String,
-      fp: (Long, Long)): Unit = {
-    import spark.implicits._
-    Seq(("book_fp", fp._1), ("book_n", fp._2)).toDF("k", "v")
-      .coalesce(1).write.mode("overwrite").parquet(s"$codesRoot/_params")
-  }
-
   /** Fail loud unless the codebook at `bookRoot/v0` hashes to the
     * fingerprint pinned when `codesRoot` was built. */
   def checkBook(spark: SparkSession, bookRoot: String,
       codesRoot: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$codesRoot/_params")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p),
-      s"$codesRoot/_params missing — writeStanding (which pins the " +
-        "fingerprint of the codebook the codes were encoded under) " +
-        "before appending or probing")
-    val pinRows = Versions.read(spark, s"$codesRoot/_params",
-      Seq(s"$codesRoot/_params"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val pinRows = Versions.readPin(spark, codesRoot,
+      "writeStanding (which pins the fingerprint of the codebook the " +
+        "codes were encoded under) before appending or probing")
     val pinned = (pinRows("book_fp"), pinRows("book_n"))
     val actual = bookFingerprint(Versions.read(spark, bookRoot,
       Seq(s"$bookRoot/v0")))
@@ -128,8 +119,9 @@ object PqStream {
     bookRelation(spark, banks)
       .write.mode("overwrite").parquet(s"$bookRoot/v0")
     val frozen = banksOf(spark, bookRoot)
-    writeBookPin(spark, codesRoot,
-      bookFingerprint(Versions.read(spark, bookRoot, Seq(s"$bookRoot/v0"))))
+    val (fp, n) =
+      bookFingerprint(Versions.read(spark, bookRoot, Seq(s"$bookRoot/v0")))
+    Versions.writePin(spark, codesRoot, Seq("book_fp" -> fp, "book_n" -> n))
     Similarity.pqEncode(standing, frozen, idCol, vecCol)
       .write.mode("overwrite").parquet(s"$codesRoot/v0")
   }
@@ -147,14 +139,10 @@ object PqStream {
       outRoot: String, idCol: String, vecCol: String,
       autoCompactVersions: Option[Int] = None)(
       batch: DataFrame, batchId: Long): Unit = {
-    val bookVersions = Versions.list(spark, bookRoot)
-    require(bookVersions.map(_._1) == Seq(0L),
-      s"codebook at $bookRoot must be exactly v0 (found " +
-        s"${bookVersions.map("v" + _._1).mkString(", ")}) — a codes store " +
-        "is bound to the codebook it was encoded under; retrain into a " +
-        "NEW root and rebuild, never mutate a live codebook")
-    Versions.guardAppend(spark, codesRoot, "codes store", batchId,
-      "writeStanding before starting the stream")
+    Versions.requireFrozen(spark, bookRoot, "codebook", "a codes store is " +
+      "bound to the codebook it was encoded under; retrain into a NEW root " +
+      "and rebuild, never mutate a live codebook")
+    spec.guardAppend(spark, codesRoot, batchId)
     // r18: the guard chain (checkBook's two model-sized actions, then
     // compaction) and the batch's encode STAGING are independent —
     // overlap them (guide §2.6, the IvfStream.appendBatch shape). A
@@ -163,11 +151,7 @@ object PqStream {
     val staged = graft.core.Par.eval(Seq[() => AnyRef](
       () => {
         checkBook(spark, bookRoot, codesRoot)
-        // same fold parameters as compactStore: tombstoned codes drop
-        // physically and the markers are consumed
-        autoCompactVersions.foreach(k =>
-          Versions.autoCompact(spark, codesRoot, batchId, k,
-            tombstoneIdCol = Some("neighbor_id")))
+        spec.autoCompact(spark, codesRoot, batchId, autoCompactVersions)
         null
       },
       () => {
@@ -197,13 +181,8 @@ object PqStream {
     * union (rows unique across deltas — each vector arrives in exactly
     * one batch). */
   def readCodes(spark: SparkSession, codesRoot: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, codesRoot).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no codes versions at $codesRoot")
-    Versions.maskTombstones(spark, codesRoot,
-      Versions.read(spark, codesRoot, versions.map(_._2.toString)),
-      "neighbor_id", upTo)
-  }
+      upTo: Long = Long.MaxValue): DataFrame =
+    spec.read(spark, codesRoot, upTo)
 
   /** Retract vector ids from the codes store ([[Versions.tombstone]]
     * contract): reads stop returning the retracted codes; compaction
@@ -211,7 +190,7 @@ object PqStream {
     * never retracted, only rebuilt ([[rebuild]]). */
   def tombstone(spark: SparkSession, codesRoot: String, ids: Seq[Long],
       batchId: Long): Unit =
-    Versions.tombstone(spark, codesRoot, ids, batchId)
+    spec.tombstone(spark, codesRoot, ids, batchId)
 
   /** The rebuild half of the reader-swap lifecycle the drift profiles
     * signal: retrain codebooks over the CURRENT source corpus (the codes
@@ -224,21 +203,14 @@ object PqStream {
   def rebuild(spark: SparkSession, corpus: DataFrame, newBookRoot: String,
       newCodesRoot: String, m: Int, nCodes: Int, iters: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    require(Versions.list(spark, newBookRoot).isEmpty,
-      s"rebuild target $newBookRoot already holds versions — rebuild " +
-        "writes a NEW root and readers swap; never rebuild into a live root")
-    require(Versions.list(spark, newCodesRoot).isEmpty,
-      s"rebuild target $newCodesRoot already holds versions — rebuild " +
-        "writes a NEW root and readers swap; never rebuild into a live root")
+    Versions.requireFreshRoots(spark, newBookRoot, newCodesRoot)
     val banks = Similarity.pqTrain(corpus, m, nCodes, iters, idCol, vecCol)
     writeStanding(spark, newBookRoot, newCodesRoot, corpus, banks,
       idCol, vecCol)
   }
 
-  /** Fold codes deltas `v0..v<upTo>` into a new base (rows unique across
-    * deltas ⇒ the identity fold is read-equivalent); tombstoned vectors
-    * drop physically (markers consumed). */
+  /** Fold codes deltas `v0..v<upTo>` into a new base ([[Versions.compact]]
+    * with the store's spec). */
   def compactStore(spark: SparkSession, codesRoot: String, upTo: Long): Unit =
-    Versions.compact(spark, codesRoot, upTo,
-      tombstoneIdCol = Some("neighbor_id"))
+    spec.compact(spark, codesRoot, upTo)
 }

@@ -41,6 +41,15 @@ import graft.operators.Profiling
   * model-sized read. */
 object QuantileStream {
 
+  private def foldCounts(df: DataFrame): DataFrame =
+    df.groupBy(col("__bin")).agg(sum(col("__nb")).as("__nb"))
+
+  /** Bin counts fold by sum-merge (read-equivalent by associativity). */
+  private val countSpec = Versions.StoreSpec("count store", None, foldCounts,
+    rebuildHint = "the bin-count store holds per-bin sums with no " +
+      "per-item provenance. Rebuild from the retained corpus into NEW " +
+      "roots and swap readers (rebuildStore — the p120 lifecycle)")
+
   /** Takedown refusal — the bin-count store keeps per-bin sums with no
     * per-item provenance: one item's bin contribution cannot be located,
     * so retraction is the REBUILD lifecycle ([[rebuildStore]] over the
@@ -49,21 +58,14 @@ object QuantileStream {
     * contract). */
   def tombstone(spark: SparkSession, root: String, ids: Seq[Long],
       batchId: Long): Unit =
-    throw new UnsupportedOperationException(
-      s"tombstone($root, ${ids.size} ids, batch $batchId) refused: the " +
-        "bin-count store holds per-bin sums with no per-item provenance. " +
-        "Rebuild from the retained corpus into NEW roots and swap readers " +
-        "(rebuildStore — the p120 lifecycle)")
+    countSpec.tombstone(spark, root, ids, batchId)
 
   /** The frozen bounds at `boundsRoot/v0`: (mn, mx, bins), one row. */
   def readBounds(spark: SparkSession, boundsRoot: String)
       : (Double, Double, Int) = {
-    val versions = Versions.list(spark, boundsRoot)
-    require(versions.map(_._1) == Seq(0L),
-      s"bounds at $boundsRoot must be exactly v0 (found " +
-        s"${versions.map("v" + _._1).mkString(", ")}) — a count store is " +
-        "bound to the bounds it was binned under; re-derive bounds into a " +
-        "NEW root and rebuild, never mutate live bounds")
+    Versions.requireFrozen(spark, boundsRoot, "bounds", "a count store is " +
+      "bound to the bounds it was binned under; re-derive bounds into a NEW " +
+      "root and rebuild, never mutate live bounds")
     val row: Row = Versions.read(spark, boundsRoot,
       Seq(s"$boundsRoot/v0")).head()
     (row.getAs[Double]("mn"), row.getAs[Double]("mx"), row.getAs[Int]("bins"))
@@ -99,10 +101,7 @@ object QuantileStream {
       autoCompactVersions: Option[Int] = None)(
       batch: DataFrame, batchId: Long): Unit = {
     val (mn, mx, bins) = readBounds(spark, boundsRoot)
-    Versions.guardAppend(spark, countRoot, "store", batchId,
-      "writeStanding before starting the stream")
-    autoCompactVersions.foreach(k =>
-      Versions.autoCompact(spark, countRoot, batchId, k, foldCounts))
+    countSpec.beginAppend(spark, countRoot, batchId, autoCompactVersions)
     // one batch-sized source scan feeds both writes (the family's
     // two-write convention — RetrievalStream/IvfStream checkpoint too)
     val b = batch.localCheckpoint(true)
@@ -113,21 +112,11 @@ object QuantileStream {
       .write.mode("overwrite").parquet(s"$profileRoot/b$batchId")
   }
 
-  private def foldCounts(df: DataFrame): DataFrame =
-    df.groupBy(col("__bin")).agg(sum(col("__nb")).as("__nb"))
-
-  private def rawUnion(spark: SparkSession, countRoot: String,
-      upTo: Long): DataFrame = {
-    val versions = Versions.list(spark, countRoot).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no count versions at $countRoot")
-    Versions.read(spark, countRoot, versions.map(_._2.toString))
-  }
-
   /** The folded bin-count relation over every delta `<= upTo` —
     * model-sized, exact by integer-sum associativity. */
   def readCounts(spark: SparkSession, countRoot: String,
       upTo: Long = Long.MaxValue): DataFrame =
-    foldCounts(rawUnion(spark, countRoot, upTo))
+    foldCounts(countSpec.read(spark, countRoot, upTo))
 
   /** Live quantile estimates — bit-identical to the one-shot
     * [[Profiling.quantilesFromCounts]] ∘ [[Profiling.boundedBinCounts]]
@@ -139,13 +128,13 @@ object QuantileStream {
       qs: Seq[Double], upTo: Long = Long.MaxValue): DataFrame = {
     val (mn, mx, bins) = readBounds(spark, boundsRoot)
     Profiling.quantilesFromCounts(
-      rawUnion(spark, countRoot, upTo), bins, mn, mx, qs)
+      countSpec.read(spark, countRoot, upTo), bins, mn, mx, qs)
   }
 
   /** Fold count deltas `v0..v<upTo>` into a new base (sum-merge —
     * read-equivalent by associativity; see [[Versions.compact]]). */
   def compactStore(spark: SparkSession, countRoot: String, upTo: Long): Unit =
-    Versions.compact(spark, countRoot, upTo, foldCounts)
+    countSpec.compact(spark, countRoot, upTo)
 
   /** The reader-SWAP rebuild the drift profiles signal (the
     * [[IvfStream.rebuildIndex]] contract for this store): when
@@ -165,12 +154,7 @@ object QuantileStream {
   def rebuildStore(spark: SparkSession, corpus: DataFrame,
       newBoundsRoot: String, newCountRoot: String, colName: String,
       bins: Int): Unit = {
-    require(Versions.list(spark, newBoundsRoot).isEmpty,
-      s"rebuild target $newBoundsRoot already holds versions — rebuild " +
-        "writes a NEW root and readers swap; never rebuild into a live root")
-    require(Versions.list(spark, newCountRoot).isEmpty,
-      s"rebuild target $newCountRoot already holds versions — rebuild " +
-        "writes a NEW root and readers swap; never rebuild into a live root")
+    Versions.requireFreshRoots(spark, newBoundsRoot, newCountRoot)
     writeStanding(spark, newBoundsRoot, newCountRoot, corpus, colName, bins)
   }
 }

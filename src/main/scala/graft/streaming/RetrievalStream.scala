@@ -44,6 +44,14 @@ object RetrievalStream {
   private def statsRoot(root: String) = s"$root/stats"
   private def dlenRoot(root: String) = s"$root/dlen"
 
+  /** Postings are disjoint across deltas ⇒ the identity fold; the base
+    * CLUSTERS by the probe key `term` (the probe's query-vocabulary
+    * filter pushes into the parquet scan, so a sorted base prunes
+    * standing row groups per probe — VERDICT r13 #2). Takedown is the
+    * store's own paired verb ([[tombstoneFrom]]), not the spec's. */
+  private val postSpec = Versions.StoreSpec("postings", Some("doc_id"),
+    clusterBy = Seq("term"))
+
   /** Write the standing corpus's postings + stats + per-doc lengths as
     * the three `v0`s (all roots live-root-guarded:
     * [[Versions.guardStandingWrite]]). The doclen relation
@@ -79,8 +87,7 @@ object RetrievalStream {
       autoCompactVersions: Option[Int] = None,
       lease: Option[Versions.Lease] = None)(
       batch: DataFrame, batchId: Long): Unit = {
-    Versions.guardAppend(spark, postRoot(root), "postings", batchId,
-      "writeStanding before starting the stream", lease)
+    postSpec.guardAppend(spark, postRoot(root), batchId, lease)
     // BOTH standing roots, like every other two-root store: a
     // writeStanding that crashed between the postings and stats writes
     // would otherwise stream over stats that exclude the standing corpus
@@ -176,9 +183,7 @@ object RetrievalStream {
     require(Versions.list(spark, postRoot(root)).exists(_._1 == 0L),
       s"tombstone refused: ${postRoot(root)}/v0 missing — the store must " +
         "exist before ids can be retracted from it")
-    val rel = ids.toDF("id").select(col("id").cast("long").as("id"))
-      .filter(col("id").isNotNull)
-      .distinct().localCheckpoint(true)
+    val rel = Versions.idRelation(ids).localCheckpoint(true)
     require(rel.limit(1).count() > 0, "tombstone of an empty id set")
     val dlen = Versions.list(spark, dlenRoot(root))
     require(dlen.nonEmpty,
@@ -233,9 +238,7 @@ object RetrievalStream {
     require(ids.schema.fields.length == 1,
       s"revive takes a single id column, got ${ids.schema.fieldNames
         .mkString(", ")}")
-    val rel = ids.toDF("id").select(col("id").cast("long").as("id"))
-      .filter(col("id").isNotNull)
-      .distinct().localCheckpoint(true)
+    val rel = Versions.idRelation(ids).localCheckpoint(true)
     require(rel.limit(1).count() > 0, "revive of an empty id set")
     // the dead-as-of-(batchId-1) check runs HERE, before the correction
     // write (Versions.revive re-checks before its marker write): a
@@ -267,17 +270,12 @@ object RetrievalStream {
     * ([[Versions.maskTombstones]] — broadcast anti-join; plan untouched
     * when no takedown ever happened). */
   def readPostings(spark: SparkSession, root: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, postRoot(root)).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no posting versions at ${postRoot(root)}")
+      upTo: Long = Long.MaxValue): DataFrame =
     // revive markers are legal here since the store grew its own paired
     // revive verb ([[revive]] — positive stats correction + r marker);
     // [[readStats]]' orphan check still fails loud on an r marker with
     // no correction (a generic Versions.revive bypassing the verb)
-    Versions.maskTombstones(spark, postRoot(root),
-      Versions.read(spark, postRoot(root), versions.map(_._2.toString)),
-      "doc_id", upTo)
-  }
+    postSpec.read(spark, postRoot(root), upTo)
 
   /** The assembled 1-row stats: exact integer fold of the version deltas
     * AND the in-band takedown corrections (`c*` rows, [[tombstoneFrom]] —
@@ -346,10 +344,7 @@ object RetrievalStream {
     * versions AND in-band corrections; doclens by identity), making any
     * takedown PHYSICAL: deleted docs' doclen and posting rows drop, the
     * consumed markers and corrections are deleted — reads before and
-    * after are identical. The posting base CLUSTERS by its probe key
-    * `term` (the probe's query-vocabulary filter pushes into the parquet
-    * scan, so a sorted base prunes standing row groups per probe —
-    * VERDICT r13 #2).
+    * after are identical.
     *
     * Idempotent across partial completion (ADVICE r15 #1): each root's
     * rewrite is independently read-equivalent — the stats fold never
@@ -398,9 +393,7 @@ object RetrievalStream {
       df => delIds.fold(df)(ids =>
         df.join(broadcast(ids), Seq("doc_id"), "left_anti")),
       allowSingle = true, lease = lease)
-    Versions.compact(spark, postRoot(root), upTo,
-      tombstoneIdCol = Some("doc_id"), clusterBy = Seq("term"),
-      allowSingle = true, lease = lease)
+    postSpec.compact(spark, postRoot(root), upTo, allowSingle = true, lease)
     Versions.compact(spark, statsRoot(root), upTo, foldStats,
       allowSingle = true,
       extraDirs = Versions.listPrefixed(spark, statsRoot(root), 'c')

@@ -41,16 +41,22 @@ object SketchStream {
     * over the retained corpus — the p115/p120/p121 reader-swap shape). */
   def tombstone(spark: SparkSession, root: String, ids: Seq[Long],
       batchId: Long): Unit =
-    throw new UnsupportedOperationException(
-      s"tombstone($root, ${ids.size} ids, batch $batchId) refused: sketch " +
-        "stores are monotone (HLL register max / count-min sums / bloom " +
-        "OR-ed bits cannot un-absorb an item). Rebuild from the retained " +
-        "corpus into a NEW root and swap readers — rebuildBloomStore for " +
-        "bloom; writeStanding/writeStandingCm for HLL/count-min")
+    cmSpec.tombstone(spark, root, ids, batchId)
+
+  private val rebuildHint = "sketch stores are monotone (HLL register max " +
+    "/ count-min sums / bloom OR-ed bits cannot un-absorb an item). " +
+    "Rebuild from the retained corpus into a NEW root and swap readers — " +
+    "rebuildBloomStore for bloom; writeStanding/writeStandingCm for " +
+    "HLL/count-min"
 
   private def foldRegisters(groupCols: Seq[String])(df: DataFrame): DataFrame =
     df.groupBy((groupCols.map(col) :+ col("__idx")): _*)
       .agg(max(col("__M")).as("__M"))
+
+  /** Registers fold by (group, idx)-wise max — read-equivalent by
+    * associativity, and idempotent besides. */
+  private def hllSpec(groupCols: Seq[String]) = Versions.StoreSpec(
+    "register store", None, foldRegisters(groupCols), rebuildHint = rebuildHint)
 
   // ---- sketch-parameter pinning ------------------------------------------
   // A register/counter store is bound to the sketch parameters it was
@@ -62,29 +68,23 @@ object SketchStream {
   // (ignored by Versions.list's v\d+ filter and by compaction); every
   // parameter-taking read/append fails loud on a mismatch.
 
-  // Standing writes are live-root-guarded ([[Versions.guardStandingWrite]]
-  // — now the family-wide convention): a fresh v0 + _params over live
-  // deltas would silently mix sketch parameters on read.
-  private def guardStandingWrite(spark: SparkSession, root: String): Unit =
-    Versions.guardStandingWrite(spark, root)
-
-  private def writeParams(spark: SparkSession, root: String,
-      params: Map[String, Int]): Unit = {
-    import spark.implicits._
-    params.toSeq.sortBy(_._1).toDF("k", "v")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/_params")
-  }
+  // Standing writes are live-root-guarded (the spec's writeStanding): a
+  // fresh v0 + _params over live deltas would silently mix sketch
+  // parameters on read.
+  private def writePinned(spark: SparkSession, spec: Versions.StoreSpec,
+      root: String, params: Map[String, Int], rows: => DataFrame): Unit =
+    spec.writeStanding(spark, root, {
+      // the pin lands after the guard, before v0
+      Versions.writePin(spark, root,
+        params.toSeq.sortBy(_._1).map { case (k, v) => k -> v.toLong })
+      rows
+    })
 
   private def checkParams(spark: SparkSession, root: String,
       params: Map[String, Int]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/_params")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p),
-      s"$root/_params missing — writeStanding (which pins the sketch " +
-        "parameters the store was built under) before reading or appending")
-    val stored = Versions.read(spark, s"$root/_params",
-      Seq(s"$root/_params"))
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    val stored = Versions.readPin(spark, root, "writeStanding (which pins " +
+      "the sketch parameters the store was built under) before reading or " +
+      "appending").map { case (k, v) => k -> v.toInt }
     require(stored == params,
       s"sketch-parameter mismatch at $root: store built with $stored, " +
         s"caller passed $params — estimates under mismatched parameters " +
@@ -94,12 +94,9 @@ object SketchStream {
 
   /** Write the standing corpus's register relation as `root/v0`. */
   def writeStanding(spark: SparkSession, root: String, standing: DataFrame,
-      groupCols: Seq[String], valueCol: String, p: Int = 8): Unit = {
-    guardStandingWrite(spark, root)
-    writeParams(spark, root, Map("p" -> p))
-    Profiling.hllRegisters(standing, groupCols, valueCol, p)
-      .write.mode("overwrite").parquet(s"$root/v0")
-  }
+      groupCols: Seq[String], valueCol: String, p: Int = 8): Unit =
+    writePinned(spark, hllSpec(groupCols), root, Map("p" -> p),
+      Profiling.hllRegisters(standing, groupCols, valueCol, p))
 
   /** The `foreachBatch` callback: batch registers → `root/v{batchId+1}`,
     * under the family's standing-store + lineage-fork guards. */
@@ -107,10 +104,10 @@ object SketchStream {
       groupCols: Seq[String], valueCol: String, p: Int = 8,
       autoCompactVersions: Option[Int] = None)(
       batch: DataFrame, batchId: Long): Unit = {
-    guardStore(spark, root, batchId)
+    val spec = hllSpec(groupCols)
+    spec.guardAppend(spark, root, batchId)
     checkParams(spark, root, Map("p" -> p))
-    autoCompactVersions.foreach(k =>
-      Versions.autoCompact(spark, root, batchId, k, foldRegisters(groupCols)))
+    spec.autoCompact(spark, root, batchId, autoCompactVersions)
     Profiling.hllRegisters(batch, groupCols, valueCol, p)
       .write.mode("overwrite").parquet(s"$root/v${batchId + 1}")
   }
@@ -118,12 +115,8 @@ object SketchStream {
   /** The folded register relation over every delta `<= upTo` —
     * model-sized, exact by max-merge associativity. */
   def readRegisters(spark: SparkSession, root: String,
-      groupCols: Seq[String], upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, root).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no register versions at $root")
-    foldRegisters(groupCols)(
-      Versions.read(spark, root, versions.map(_._2.toString)))
-  }
+      groupCols: Seq[String], upTo: Long = Long.MaxValue): DataFrame =
+    foldRegisters(groupCols)(hllSpec(groupCols).read(spark, root, upTo))
 
   /** The live cardinality estimate — bit-identical to
     * [[Profiling.hllDistinct]] over the corresponding corpus union. */
@@ -135,11 +128,10 @@ object SketchStream {
   }
 
   /** Fold register deltas `v0..v<upTo>` into a new base (see
-    * [[Versions.compact]]); the max-merge is read-equivalent by
-    * associativity (and idempotent besides). */
+    * [[Versions.compact]]). */
   def compactStore(spark: SparkSession, root: String,
       groupCols: Seq[String], upTo: Long): Unit =
-    Versions.compact(spark, root, upTo, foldRegisters(groupCols))
+    hllSpec(groupCols).compact(spark, root, upTo)
 
   // ---- count-min (frequency) ---------------------------------------------
   // The COUNTING sibling: per-batch counter deltas (d×w rows, model-sized)
@@ -154,30 +146,22 @@ object SketchStream {
     df.groupBy(col("j"), col("bucket"))
       .agg(sum(col("cnt")).cast("long").as("cnt"))
 
-  private def guardStore(spark: SparkSession, root: String,
-      batchId: Long): Unit = {
-    Versions.guardAppend(spark, root, "store", batchId,
-      "writeStanding before starting the stream")
-    ()
-  }
+  private val cmSpec = Versions.StoreSpec("counter store", None, foldCounters,
+    rebuildHint = rebuildHint)
 
   /** Write the standing corpus's count-min counters as `root/v0`. */
   def writeStandingCm(spark: SparkSession, root: String, standing: DataFrame,
-      keyCol: String, d: Int = 4, w: Int = 1024): Unit = {
-    guardStandingWrite(spark, root)
-    writeParams(spark, root, Map("d" -> d, "w" -> w))
-    Profiling.countMinSketch(standing, keyCol, d, w)
-      .write.mode("overwrite").parquet(s"$root/v0")
-  }
+      keyCol: String, d: Int = 4, w: Int = 1024): Unit =
+    writePinned(spark, cmSpec, root, Map("d" -> d, "w" -> w),
+      Profiling.countMinSketch(standing, keyCol, d, w))
 
   /** The `foreachBatch` callback for the counter store. */
   def advanceBatchCm(spark: SparkSession, root: String, keyCol: String,
       d: Int = 4, w: Int = 1024, autoCompactVersions: Option[Int] = None)(
       batch: DataFrame, batchId: Long): Unit = {
-    guardStore(spark, root, batchId)
+    cmSpec.guardAppend(spark, root, batchId)
     checkParams(spark, root, Map("d" -> d, "w" -> w))
-    autoCompactVersions.foreach(k =>
-      Versions.autoCompact(spark, root, batchId, k, foldCounters))
+    cmSpec.autoCompact(spark, root, batchId, autoCompactVersions)
     Profiling.countMinSketch(batch, keyCol, d, w)
       .write.mode("overwrite").parquet(s"$root/v${batchId + 1}")
   }
@@ -185,11 +169,8 @@ object SketchStream {
   /** The folded counter table over every delta `<= upTo` — model-sized
     * (≤ d·w rows), exact by integer-sum associativity. */
   def readCounters(spark: SparkSession, root: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, root).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no counter versions at $root")
-    foldCounters(Versions.read(spark, root, versions.map(_._2.toString)))
-  }
+      upTo: Long = Long.MaxValue): DataFrame =
+    foldCounters(cmSpec.read(spark, root, upTo))
 
   /** Live point estimates — bit-identical to [[Profiling.countMinLookup]]
     * against a one-shot sketch of the corpus union (structural
@@ -205,7 +186,7 @@ object SketchStream {
   /** Fold counter deltas `v0..v<upTo>` into a new base (sum-merge —
     * read-equivalent by associativity). */
   def compactStoreCm(spark: SparkSession, root: String, upTo: Long): Unit =
-    Versions.compact(spark, root, upTo, foldCounters)
+    cmSpec.compact(spark, root, upTo)
 
   // ---- bloom (membership) -------------------------------------------------
   // The MEMBERSHIP sibling — the growing-blocklist store a streaming
@@ -222,15 +203,15 @@ object SketchStream {
 
   private def foldBits(df: DataFrame): DataFrame = df.distinct()
 
+  private val bloomSpec = Versions.StoreSpec("bloom store", None, foldBits,
+    rebuildHint = rebuildHint)
+
   /** Write the standing blocklist's set-bit relation as `root/v0`. */
   def writeStandingBloom(spark: SparkSession, root: String,
       standing: DataFrame, keyCol: String, k: Int = 4,
-      m: Int = 1 << 16): Unit = {
-    guardStandingWrite(spark, root)
-    writeParams(spark, root, Map("k" -> k, "m" -> m))
-    Profiling.bloomBits(standing, keyCol, k, m)
-      .write.mode("overwrite").parquet(s"$root/v0")
-  }
+      m: Int = 1 << 16): Unit =
+    writePinned(spark, bloomSpec, root, Map("k" -> k, "m" -> m),
+      Profiling.bloomBits(standing, keyCol, k, m))
 
   /** The `foreachBatch` callback for the bloom store: the batch's new
     * set bits → `root/v{batchId+1}`, under the family's guards. */
@@ -238,10 +219,9 @@ object SketchStream {
       k: Int = 4, m: Int = 1 << 16,
       autoCompactVersions: Option[Int] = None)(
       batch: DataFrame, batchId: Long): Unit = {
-    guardStore(spark, root, batchId)
+    bloomSpec.guardAppend(spark, root, batchId)
     checkParams(spark, root, Map("k" -> k, "m" -> m))
-    autoCompactVersions.foreach(n =>
-      Versions.autoCompact(spark, root, batchId, n, foldBits))
+    bloomSpec.autoCompact(spark, root, batchId, autoCompactVersions)
     Profiling.bloomBits(batch, keyCol, k, m)
       .write.mode("overwrite").parquet(s"$root/v${batchId + 1}")
   }
@@ -249,11 +229,8 @@ object SketchStream {
   /** The folded set-bit relation over every delta `<= upTo` — model-sized,
     * exact by set-union associativity (and idempotent besides). */
   def readBloomBits(spark: SparkSession, root: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, root).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no bloom versions at $root")
-    foldBits(Versions.read(spark, root, versions.map(_._2.toString)))
-  }
+      upTo: Long = Long.MaxValue): DataFrame =
+    foldBits(bloomSpec.read(spark, root, upTo))
 
   /** Live prefilter: rows of `probes` whose `keyCol` MIGHT be in the
     * maintained set (no false negatives — a true member always passes).
@@ -271,7 +248,7 @@ object SketchStream {
   /** Fold bit deltas `v0..v<upTo>` into a new base (distinct-union —
     * read-identical by idempotent set semantics). */
   def compactStoreBloom(spark: SparkSession, root: String, upTo: Long): Unit =
-    Versions.compact(spark, root, upTo, foldBits)
+    bloomSpec.compact(spark, root, upTo)
 
   /** Saturation signal — the bloom's drift metric, as bounds drift is the
     * quantile store's and per-cell growth the IVF index's: per hash row,
@@ -317,9 +294,7 @@ object SketchStream {
   def rebuildBloomStore(spark: SparkSession, newRoot: String,
       standing: DataFrame, keyCol: String, k: Int = 4,
       m: Int = 1 << 20): Unit = {
-    require(Versions.list(spark, newRoot).isEmpty,
-      s"rebuild target $newRoot already holds versions — rebuild writes " +
-        "a NEW root and readers swap; never rebuild into a live root")
+    Versions.requireFreshRoots(spark, newRoot)
     writeStandingBloom(spark, newRoot, standing, keyCol, k, m)
   }
 }

@@ -150,10 +150,8 @@ object Takedown {
         .map(_.withColumn("__root", lit(root)))
     }
     if (deads.nonEmpty) {
-      val keys = ids.toDF("id").select(col("id").cast("long").as("id"))
-        .filter(col("id").isNotNull).distinct()
-      val hit = keys.join(deads.reduce(_ unionByName _), Seq("id"),
-          "inner")
+      val hit = Versions.idRelation(ids)
+        .join(deads.reduce(_ unionByName _), Seq("id"), "inner")
         .limit(5).collect().map(r => (r.getLong(0), r.getString(1)))
       require(hit.isEmpty,
         s"re-ingest refused: ids ${hit.map(_._1).mkString(", ")} are " +
@@ -275,9 +273,7 @@ object Takedown {
         // written footer (metadata-sized). An empty sweep deletes its
         // torn journal dir before refusing, so nothing is journaled
         // post-refusal (`incomplete` stays empty).
-        sweep.toDF("id").select(col("id").cast("long").as("id"))
-          .filter(col("id").isNotNull)
-          .distinct()
+        Versions.idRelation(sweep)
           .coalesce(1).write.mode("overwrite").parquet(idsPath.toString)
         if (Versions.read(spark, s"$journalRoot#ids",
             Seq(idsPath.toString)).isEmpty) {

@@ -2,7 +2,10 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, lit, max}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{broadcast, col, lit, max, row_number}
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 
 /** Listing and maintenance for `root/v<N>` versioned-parquet layouts — the
   * shared convention of the streaming maintenance loops
@@ -42,7 +45,19 @@ import org.apache.spark.sql.functions.{broadcast, col, lit, max}
   * construction (one `foreachBatch` body, maintenance between
   * triggers), which is how every single-stream registry query runs.
   * Reads never check the lease: every read is a consistent fold of
-  * whatever committed versions it lists. */
+  * whatever committed versions it lists.
+  *
+  * ==Adding a store==
+  *
+  * Declare one [[StoreSpec]] per versioned root — the store's name for
+  * messages, its id column (`None` for a monotone store, whose
+  * `tombstone` then refuses with the store's rebuild hint), its
+  * compaction fold and its `clusterBy` probe key — and call the spec's
+  * verbs: `writeStanding`, `beginAppend` (lineage guard, then threshold
+  * auto-compaction with the same fold [[compact]] uses), `read`,
+  * `tombstone` and `compact`. The store's file keeps only its kernel
+  * (hash, assign, encode, fold, repair). A model pin lives at
+  * `root/_params` and goes through [[writePin]]/[[readPin]]. */
 object Versions {
 
   // --- the single-writer lease protocol ------------------------------------
@@ -202,6 +217,27 @@ object Versions {
         "compact or start a NEW root (the rebuild contract)")
   }
 
+  /** Refuse a rebuild into a root that already holds versions: a rebuild
+    * writes NEW roots and readers swap — rebuilding into a live root is
+    * the in-place mutation the model guards exist to prevent. */
+  def requireFreshRoots(spark: SparkSession, roots: String*): Unit =
+    roots.foreach { r =>
+      require(list(spark, r).isEmpty,
+        s"rebuild target $r already holds versions — rebuild writes a NEW " +
+          "root and readers swap; never rebuild into a live root")
+    }
+
+  /** Refuse unless the model root `root` holds exactly `v0`: the bank,
+    * codebook or bounds a store was built under is frozen for the store's
+    * life. `hint` says what is bound to it and how to move on. */
+  def requireFrozen(spark: SparkSession, root: String, what: String,
+      hint: String): Unit = {
+    val versions = list(spark, root).map(_._1)
+    require(versions == Seq(0L),
+      s"$what at $root must be exactly v0 (found " +
+        s"${versions.map("v" + _).mkString(", ")}) — $hint")
+  }
+
   /** The shared append-path lineage guard every `foreachBatch` store runs
     * before touching its versioned root (VERDICT r12 wrong #2: the same
     * two-require block was hand-copied across ~12 stores — the contract
@@ -210,12 +246,10 @@ object Versions {
     * (`missingHint` names the store's bootstrap entry point); (2) the
     * newest delta must be `<= batchId + 1` — anything newer means a fresh
     * checkpoint is replaying an OLD batch over deltas a different stream
-    * lineage wrote, and appending would fork that lineage. Returns the
-    * version list so callers don't re-list. */
-  def guardAppend(spark: SparkSession, root: String, what: String,
-      batchId: Long,
-      missingHint: String = "write it before starting the stream",
-      lease: Option[Lease] = None): Seq[(Long, Path)] = {
+    * lineage wrote, and appending would fork that lineage. */
+  private[streaming] def guardAppend(spark: SparkSession, root: String,
+      what: String, batchId: Long, missingHint: String,
+      lease: Option[Lease]): Unit = {
     checkWriter(spark, root, lease)
     val versions = list(spark, root)
     require(versions.exists(_._1 == 0L),
@@ -227,7 +261,6 @@ object Versions {
           "deltas would fork their lineage; resume from the original " +
           "checkpoint or start new roots")
     }
-    versions
   }
 
   // --- schema-cached parquet reads (r18, guide §1.2: per-action cost) ----
@@ -256,6 +289,37 @@ object Versions {
       schemaCache.put(cacheKey, df.schema)
       df
     }
+  }
+
+  // --- model pins (`root/_params`) ----------------------------------------
+
+  /** The one pin layout: (k, v) rows, a name and a long. Pins are read
+    * with THIS schema, never through [[read]]'s cache — a pin file is
+    * rewritten in place (a rebuild, a format change), so a schema
+    * cached under its path could go stale and turn the pin check into
+    * a parquet conversion error instead of the check's own refusal. */
+  private val PinSchema = StructType(Seq(
+    StructField("k", StringType), StructField("v", LongType)))
+
+  /** Pin a store's model parameters (sketch sizes, a bank's content
+    * fingerprint) at `root/_params` — outside the `v*` namespace, so
+    * [[list]] and [[compact]] never see it. */
+  def writePin(spark: SparkSession, root: String,
+      pin: Seq[(String, Long)]): Unit = {
+    import spark.implicits._
+    pin.toDF("k", "v").coalesce(1)
+      .write.mode("overwrite").parquet(s"$root/_params")
+  }
+
+  /** The pin at `root/_params` (see [[writePin]]); refuses with
+    * `missingHint` when the root has none. */
+  def readPin(spark: SparkSession, root: String,
+      missingHint: String): Map[String, Long] = {
+    val p = new Path(s"$root/_params")
+    require(p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p),
+      s"$root/_params missing — $missingHint")
+    spark.read.schema(PinSchema).parquet(p.toString)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
   }
 
   def list(spark: SparkSession, root: String): Seq[(Long, Path)] =
@@ -357,9 +421,7 @@ object Versions {
     // (NOT Dataset.observe: instantiating the session's ObservationManager
     // makes every later closure that captures the SparkSession
     // unserializable — it poisoned Similarity's typed top-k aggregator.)
-    val rel = ids.toDF("id").select(col("id").cast("long").as("id"))
-      .filter(col("id").isNotNull)
-      .distinct()
+    val rel = idRelation(ids)
     val dir = s"$root/d$batchId"
     rel.coalesce(1).write.mode("overwrite").parquet(dir)
     if (read(spark, s"$root#d", Seq(dir)).isEmpty) {
@@ -369,6 +431,14 @@ object Versions {
         "requirement failed: tombstone of an empty id set")
     }
   }
+
+  /** A single-column id relation as marker rows: cast to long, nulls
+    * dropped, deduplicated — the id hygiene every takedown, revive and
+    * sweep shares. */
+  def idRelation(ids: DataFrame): DataFrame =
+    ids.toDF("id").select(col("id").cast("long").as("id"))
+      .filter(col("id").isNotNull)
+      .distinct()
 
   /** Marker deltas under `root` (`d<batchId>` dirs), sorted by batch. */
   def listTombstones(spark: SparkSession, root: String): Seq[(Long, Path)] =
@@ -414,9 +484,7 @@ object Versions {
     require(ids.schema.fields.length == 1,
       s"revive takes a single id column, got ${ids.schema.fieldNames
         .mkString(", ")}")
-    val rel = ids.toDF("id").select(col("id").cast("long").as("id"))
-      .filter(col("id").isNotNull)
-      .distinct().localCheckpoint(true)
+    val rel = idRelation(ids).localCheckpoint(true)
     require(rel.limit(1).count() > 0, "revive of an empty id set")
     val dead = deadSet(spark, root, upTo = batchId - 1)
     require(dead.isDefined,
@@ -475,6 +543,28 @@ object Versions {
           Seq(idCol), "left_anti")
     }
 
+  /** Version-count-threshold auto-compaction for `foreachBatch` bodies
+    * (VERDICT r7 #6: [[compact]] existed but nothing called it
+    * automatically, so a long-lived stream's per-batch read fan-in grew
+    * with stream lifetime): when more than `threshold` versions are
+    * visible to the executing batch (ids <= `batchId`), fold them into
+    * the base with `transform`, bounding every batch's read at
+    * `threshold + 1` version roots regardless of how long the stream has
+    * run. Call it AFTER the store's lineage guard, at batch start —
+    * `upTo = batchId` is then within [[compact]]'s safety bound (the
+    * executing batch is uncommitted, so every committed batch is
+    * < `batchId`). A redelivered batch that already compacted sees a
+    * single base below threshold and skips; reads are version-set
+    * invariant either way, so outputs stay byte-identical. */
+  private[streaming] def autoCompact(spark: SparkSession, root: String,
+      batchId: Long, threshold: Int, transform: DataFrame => DataFrame,
+      tombstoneIdCol: Option[String], clusterBy: Seq[String]): Unit = {
+    require(threshold >= 1, s"autoCompact threshold must be >= 1: $threshold")
+    val visible = list(spark, root).filter(_._1 <= batchId)
+    if (visible.size > threshold)
+      compact(spark, root, batchId, transform, tombstoneIdCol, clusterBy)
+  }
+
   /** Merge deltas `v0..v<upTo>` into one new base snapshot named `v0`,
     * leaving newer deltas untouched — the maintenance operation that keeps
     * a long-running stream's per-batch read from growing linearly with
@@ -516,36 +606,9 @@ object Versions {
     * fingerprint stores may `distinct`). It must be read-equivalent: for
     * every batch `b >= upTo`, reading {transform(union v0..v<upTo>)} ∪
     * {later deltas} must produce the same operator results as the
-    * uncompacted union. */
-  /** Version-count-threshold auto-compaction for `foreachBatch` bodies
-    * (VERDICT r7 #6: [[compact]] existed but nothing called it
-    * automatically, so a long-lived stream's per-batch read fan-in grew
-    * with stream lifetime): when more than `threshold` versions are
-    * visible to the executing batch (ids <= `batchId`), fold them into
-    * the base with `transform`, bounding every batch's read at
-    * `threshold + 1` version roots regardless of how long the stream has
-    * run. Call it AFTER the store's lineage guard, at batch start —
-    * `upTo = batchId` is then within [[compact]]'s safety bound (the
-    * executing batch is uncommitted, so every committed batch is
-    * < `batchId`). A redelivered batch that already compacted sees a
-    * single base below threshold and skips; reads are version-set
-    * invariant either way, so outputs stay byte-identical. Returns the
-    * refreshed version list. */
-  def autoCompact(spark: SparkSession, root: String, batchId: Long,
-      threshold: Int, transform: DataFrame => DataFrame = identity,
-      tombstoneIdCol: Option[String] = None,
-      clusterBy: Seq[String] = Nil,
-      lease: Option[Lease] = None): Seq[(Long, Path)] = {
-    require(threshold >= 1, s"autoCompact threshold must be >= 1: $threshold")
-    val visible = list(spark, root).filter(_._1 <= batchId)
-    if (visible.size > threshold)
-      compact(spark, root, batchId, transform, tombstoneIdCol, clusterBy,
-        lease = lease)
-    list(spark, root)
-  }
-
-  /** (See the contract scaladoc above [[autoCompact]].) Two maintenance
-    * extensions beyond the plain fold:
+    * uncompacted union.
+    *
+    * Two maintenance extensions beyond the plain fold:
     *
     *   - `tombstoneIdCol`: delete-aware compaction (VERDICT r13 #1) —
     *     tombstoned ids (markers `<= upTo`, see [[tombstone]]) are
@@ -635,5 +698,89 @@ object Versions {
       (listTombstones(spark, root) ++ listRevives(spark, root))
         .filter(_._1 <= upTo)
         .foreach { case (_, p) => fs.delete(p, true) }
+  }
+
+  // --- one spec per versioned root ------------------------------------------
+
+  /** Newest row per `keys` by the `__v` version column — the carried-
+    * state read and compaction fold of every keyed state store. */
+  def newestPerKey(keys: String*)(df: DataFrame): DataFrame =
+    df.withColumn("__rn", row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(col("__v").desc)))
+      .filter(col("__rn") === 1).drop("__rn")
+
+  /** One versioned root's lifecycle, declared once per store:
+    *
+    *   - `what` names the store in every guard and refusal message;
+    *   - `idCol` is the item-id column reads mask and compaction drops
+    *     tombstoned ids on, or `None` for a MONOTONE store (no per-item
+    *     provenance), whose [[StoreSpec.tombstone]] refuses with
+    *     `rebuildHint`;
+    *   - `fold` is the read-equivalent compaction transform (see
+    *     [[compact]]), used by auto-compaction on the append path and by
+    *     [[StoreSpec.compact]] alike, so the two can never drift apart;
+    *   - `clusterBy` is the probe key the folded base sorts by;
+    *   - `missingHint` names the store's bootstrap entry point. */
+  final case class StoreSpec(what: String, idCol: Option[String],
+      fold: DataFrame => DataFrame = identity,
+      clusterBy: Seq[String] = Nil,
+      missingHint: String = "writeStanding before starting the stream",
+      rebuildHint: String = "the store keeps no per-item ids. Rebuild it " +
+        "from the retained input into a NEW root and swap readers") {
+
+    /** Live-root-guarded standing write of `rows` as `root/v0`
+      * ([[guardStandingWrite]]; `rows` is built only after the guard). */
+    def writeStanding(spark: SparkSession, root: String,
+        rows: => DataFrame): Unit = {
+      guardStandingWrite(spark, root)
+      rows.write.mode("overwrite").parquet(s"$root/v0")
+    }
+
+    /** The append path's lineage guard ([[Versions.guardAppend]]). */
+    def guardAppend(spark: SparkSession, root: String, batchId: Long,
+        lease: Option[Lease] = None): Unit =
+      Versions.guardAppend(spark, root, what, batchId, missingHint, lease)
+
+    /** Threshold auto-compaction with this store's own fold
+      * ([[Versions.autoCompact]]); `None` never compacts. */
+    def autoCompact(spark: SparkSession, root: String, batchId: Long,
+        threshold: Option[Int]): Unit =
+      threshold.foreach(k => Versions.autoCompact(spark, root, batchId, k,
+        fold, idCol, clusterBy))
+
+    /** The append prologue every `foreachBatch` body runs before touching
+      * the root: lineage guard, then threshold auto-compaction. */
+    def beginAppend(spark: SparkSession, root: String, batchId: Long,
+        threshold: Option[Int]): Unit = {
+      guardAppend(spark, root, batchId)
+      autoCompact(spark, root, batchId, threshold)
+    }
+
+    /** Every version `<= upTo` as a plain scan union (rows unique across
+      * deltas, or merged by the caller's own fold), tombstoned ids masked
+      * on `idCol` ([[maskTombstones]] — the plan is untouched when no
+      * takedown happened). */
+    def read(spark: SparkSession, root: String, upTo: Long): DataFrame = {
+      val versions = list(spark, root).filter(_._1 <= upTo)
+      require(versions.nonEmpty, s"no $what versions at $root")
+      val df = Versions.read(spark, root, versions.map(_._2.toString))
+      idCol.fold(df)(maskTombstones(spark, root, df, _, upTo))
+    }
+
+    /** [[Versions.tombstone]] on a store with ids; a monotone store
+      * refuses and points at its rebuild lifecycle. */
+    def tombstone(spark: SparkSession, root: String, ids: Seq[Long],
+        batchId: Long): Unit =
+      if (idCol.isDefined) Versions.tombstone(spark, root, ids, batchId)
+      else throw new UnsupportedOperationException(
+        s"tombstone($root, ${ids.size} ids, batch $batchId) refused: " +
+          rebuildHint)
+
+    /** [[Versions.compact]] with this store's fold, tombstone drop and
+      * clustering. */
+    def compact(spark: SparkSession, root: String, upTo: Long,
+        allowSingle: Boolean = false, lease: Option[Lease] = None): Unit =
+      Versions.compact(spark, root, upTo, fold, idCol, clusterBy,
+        allowSingle, lease = lease)
   }
 }

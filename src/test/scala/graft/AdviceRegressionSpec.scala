@@ -241,6 +241,146 @@ class AdviceRegressionSpec extends SparkSpec {
     Versions.guardStandingWrite(spark, pcaRoot.stripSuffix("/m") + "/m2")
   }
 
+  test("spec lifecycle across the id stores: the read after compactStore " +
+      "equals the read before it, a tombstoned id absent from both") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.DataFrame
+    import graft.streaming.{AHashStream, IvfStream, MediaFpStream,
+      NearDupStream, PqStream, Versions}
+    import graft.operators.{Dedup, IvfRelational, Similarity}
+    // one standing write + one appended batch (two versions to fold),
+    // then a takedown of a standing id at batch 1 and compactStore(1);
+    // every read leads with the store's id column
+    final case class Store(name: String, reads: Seq[() => DataFrame],
+        victim: Long, tombstone: () => Unit, compact: () => Unit)
+    def dir(p: String) = Files.createTempDirectory(p).toString
+    def masked(root: String, idCol: String): DataFrame =
+      Versions.maskTombstones(spark, root, spark.read.parquet(
+        Versions.list(spark, root).map(_._2.toString): _*), idCol)
+    val media = (0L until 30L).map(i => (i, s"payload-${i % 25}".getBytes))
+      .toDF("media_id", "payload")
+    val hash = (df: DataFrame, id: String, payload: String) =>
+      df.select(col(id).as("media_id"), xxhash64(col(payload)).as("ahash"))
+    val ahRoot = dir("spec_ah_")
+    AHashStream.writeStanding(spark, ahRoot,
+      media.filter(col("media_id") < 20), hasher = hash)
+    AHashStream.appendBatch(spark, ahRoot, s"$ahRoot.out", "media_id",
+      "payload", hasher = hash)(media.filter(col("media_id") >= 20), 0L)
+    val fp = (df: DataFrame) =>
+      df.select(col("media_id"), xxhash64(col("payload")).as("fp"))
+    val fpRoot = dir("spec_fp_")
+    MediaFpStream.writeStanding(spark, fpRoot,
+      media.filter(col("media_id") < 20), fp)
+    MediaFpStream.appendBatch(spark, fpRoot, s"$fpRoot.out", fp)(
+      media.filter(col("media_id") >= 20), 0L)
+    val emb = (0L until 48L).map(i =>
+      (i, Array.tabulate(8)(d => ((i * 7 + d * 3) % 11).toFloat)))
+      .toDF("vec_id", "embedding")
+    val standing = emb.filter(col("vec_id") < 40)
+    val batch = emb.filter(col("vec_id") >= 40)
+    val ivf = dir("spec_ivf_")
+    IvfStream.writeStanding(spark, s"$ivf/bank", s"$ivf/idx", standing,
+      IvfRelational.trainBank(standing, nCells = 2, iters = 1, stride = 10))
+    IvfStream.appendBatch(spark, s"$ivf/bank", s"$ivf/idx", s"$ivf/out",
+      "vec_id", "embedding")(batch, 0L)
+    val pq = dir("spec_pq_")
+    PqStream.writeStanding(spark, s"$pq/book", s"$pq/codes", standing,
+      Similarity.pqTrain(standing, m = 2, nCodes = 4, iters = 1))
+    PqStream.appendBatch(spark, s"$pq/book", s"$pq/codes", s"$pq/out",
+      "vec_id", "embedding")(batch, 0L)
+    val texts = (0L until 36L).map(i =>
+      (i, s"shared words about topic ${i % 9} and more words ${i % 5}"))
+      .toDF("doc_id", "text")
+    val nd = dir("spec_nd_")
+    Dedup.minhashBandIndex(texts.filter(col("doc_id") < 30), "doc_id",
+      "text").write.parquet(s"$nd/idx/v0")
+    texts.filter(col("doc_id") < 30).write.parquet(s"$nd/docs/v0")
+    NearDupStream.filterBatch(spark, s"$nd/idx", s"$nd/docs", s"$nd/out",
+      "doc_id", "text")(texts.filter(col("doc_id") >= 30), 0L)
+    val stores = Seq(
+      Store("aHash", Seq(() => AHashStream.readIndex(spark, ahRoot)), 3L,
+        () => AHashStream.tombstone(spark, ahRoot, Seq(3L), 1L),
+        () => AHashStream.compactStore(spark, ahRoot, 1L)),
+      Store("media-fp", Seq(() => MediaFpStream.readIndex(spark, fpRoot)),
+        3L, () => MediaFpStream.tombstone(spark, fpRoot, Seq(3L), 1L),
+        () => MediaFpStream.compactStore(spark, fpRoot, 1L)),
+      Store("IVF", Seq(() => IvfStream.readIndex(spark, s"$ivf/idx")), 5L,
+        () => IvfStream.tombstone(spark, s"$ivf/idx", Seq(5L), 1L),
+        () => IvfStream.compactStore(spark, s"$ivf/idx", 1L)),
+      Store("PQ", Seq(() => PqStream.readCodes(spark, s"$pq/codes")), 5L,
+        () => PqStream.tombstone(spark, s"$pq/codes", Seq(5L), 1L),
+        () => PqStream.compactStore(spark, s"$pq/codes", 1L)),
+      Store("near-dup", Seq(() => masked(s"$nd/idx", "id"),
+          () => masked(s"$nd/docs", "doc_id")), 4L,
+        () => NearDupStream.tombstone(spark, s"$nd/idx", s"$nd/docs",
+          Seq(4L), 1L),
+        () => NearDupStream.compactStores(spark, s"$nd/idx", s"$nd/docs",
+          1L)))
+    def rows(df: DataFrame): Set[Seq[Any]] =
+      df.collect().map(_.toSeq.map {
+        case a: scala.collection.Seq[_] => a.toList
+        case v => v
+      }).toSet
+    stores.foreach { s =>
+      val live = s.reads.map(r => rows(r()))
+      assert(live.forall(_.exists(_.head == s.victim)),
+        s"${s.name}: fixture lacks the id")
+      s.tombstone()
+      val before = s.reads.map(r => rows(r()))
+      s.compact()
+      val after = s.reads.map(r => rows(r()))
+      assert(after === before, s"${s.name}: compaction changed the read")
+      assert(before.forall(!_.exists(_.head == s.victim)),
+        s"${s.name}: tombstoned id still read")
+      assert(before.zip(live).forall { case (b, l) => b.size < l.size },
+        s"${s.name}: the takedown masked nothing")
+    }
+  }
+
+  test("a rewritten _params pin is re-read, not served through a stale " +
+      "cached schema: the next check refuses by name") {
+    import org.apache.spark.sql.DataFrame
+    import graft.streaming.SketchStream
+    val root = java.nio.file.Files.createTempDirectory("pin_").toString
+    val vals = (0 until 200).map(i => ("g", s"v$i")).toDF("grp", "val")
+    SketchStream.writeStanding(spark, root, vals, Seq("grp"), "val", p = 8)
+    // the check runs once in this JVM, caching whatever it caches
+    assert(SketchStream.distinctAt(spark, root, Seq("grp"), p = 8)
+      .count() === 1L)
+    def repin(rows: DataFrame): Unit =
+      rows.coalesce(1).write.mode("overwrite").parquet(s"$root/_params")
+    // rewrite the pin under a long-valued schema, then an int-valued one:
+    // each next check must read the NEW file and refuse by name
+    repin(Seq(("p", 10L)).toDF("k", "v"))
+    val eLong = intercept[IllegalArgumentException] {
+      SketchStream.distinctAt(spark, root, Seq("grp"), p = 8)
+    }
+    assert(eLong.getMessage.contains("mismatch") &&
+      eLong.getMessage.contains("p -> 10"), eLong.getMessage)
+    repin(Seq(("p", 12)).toDF("k", "v"))
+    val eInt = intercept[IllegalArgumentException] {
+      SketchStream.distinctAt(spark, root, Seq("grp"), p = 8)
+    }
+    assert(eInt.getMessage.contains("mismatch") &&
+      eInt.getMessage.contains("p -> 12"), eInt.getMessage)
+  }
+
+  test("isolated re-run selection: an empty prior adds no entries; with a " +
+      "prior, unnamed queries over 2 s join under the 25-entry cap") {
+    val meds = (0 until 40).map(i => (s"q$i", 3.0 + i)) :+ ("p1" -> 9.0)
+    assert(Bench.isolatedReruns(meds, Map.empty) === Seq.empty)
+    val sel = Bench.isolatedReruns(meds :+ ("p2" -> 1.0),
+      Map("p1" -> 3.0, "p2" -> 1.0))
+    // p1 read 3x its prior: mandatory, first; then the unnamed q*, slowest
+    // first, up to the cap
+    assert(sel.size === 25)
+    assert(sel.head === (("p1", 9.0, 3.0)))
+    assert(sel.tail.map(_._1) === (39 to 16 by -1).map(i => s"q$i"))
+    assert(!sel.exists(_._1 == "p2"))
+    assert(Bench.isolatedReruns(Seq("q" -> 2.5, "r" -> 1.5),
+      Map("p" -> 1.0)).map(_._1) === Seq("q"))
+  }
+
   test("bloomBits/bloomMasks agree that m below 64 is out of contract") {
     // a power of two in {2..32} used to pass bloomBits' check and then
     // allocate ZERO mask words (m/64 = 0) in bloomMasks -> AIOOBE

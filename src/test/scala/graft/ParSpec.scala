@@ -148,4 +148,16 @@ class ParSpec extends SparkSpec {
     assert(rows(s"$base/par_a") === rows(s"$base/seq_a"))
     assert(rows(s"$base/par_b") === rows(s"$base/seq_b"))
   }
+
+  test("SPARK_GRAFT_PAR_CAP parses to a non-negative worker count (4 when " +
+      "unset) and refuses anything else by name") {
+    assert(Par.parseCap(None) === 4)
+    assert(Par.parseCap(Some("6")) === 6)
+    assert(Par.parseCap(Some("0")) === 0)
+    Seq("", "abc", "-1").foreach { bad =>
+      val e = intercept[IllegalArgumentException](Par.parseCap(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_PAR_CAP") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
 }
