@@ -60,7 +60,8 @@ final class CovBuffer(var d: Int, var sums: Array[JBigDecimal],
   * matrix; partials merge by exact addition. Output: one
   * array<struct<i,j,s,cnt>> row — the same (group, decimal sum, non-null
   * term count) relation as the explode → groupBy formulation it
-  * replaces, BIT-IDENTICALLY (`tools/CovProfile` verified 0/2,144 group
+  * replaces, BIT-IDENTICALLY (the covariance profile — SURVEY §8
+  * "Round-9 deltas", probe last at `dc914e8` — verified 0/2,144 group
   * mismatches and measured ~2.7×: 5.6 s → 2.1 s at sf0.1), because each
   * term stages through the identical `Double.toString` decimal cast and
   * decimal addition is exact under any grouping or order.

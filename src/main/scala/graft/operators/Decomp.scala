@@ -83,8 +83,8 @@ object Decomp {
     // loud instead of corrupting the model. Bit-identical to the
     // equivalent explode → groupBy formulation (same Double.toString
     // decimal staging, exact addition) and ~2.7× faster
-    // (tools/CovProfile, which also re-verifies the 0/2,144-group exact
-    // equality)
+    // (SURVEY §8 "Round-9 deltas"; the profile, last at `dc914e8`, also
+    // re-verified the 0/2,144-group exact equality)
     fitFromMoments(moments(corpus, vecCol).collect().map(r =>
       (r.getInt(0), r.getInt(1), r.getDecimal(2), r.getLong(3))), k, iters)
   }

@@ -147,11 +147,11 @@ object Dedup {
       Seq("band", "bucket"), maxBucketSize)
 
   /** The raw banded (id, band, bucket) rows of the LSH stage, BEFORE the
-    * `maxBucketSize` cap — exposed so bucket-occupancy diagnostics
-    * (tools/ZipfRecallProbe) can measure exactly what the cap drops on a
-    * given corpus, with the same signature/band arithmetic the candidate
-    * path uses. */
-  private[graft] def minhashBandedRows(shingleTable: DataFrame,
+    * `maxBucketSize` cap — the rows on which bucket-occupancy diagnostics
+    * measured exactly what the cap drops on a given corpus (SURVEY §6
+    * "Zipf recall audit"; the probe is last at `dc914e8`), with the same
+    * signature/band arithmetic the candidate path uses. */
+  private def minhashBandedRows(shingleTable: DataFrame,
       numHashes: Int, bands: Int, seed: Long): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rowsPerBand = numHashes / bands
@@ -692,32 +692,7 @@ object Dedup {
     * its maxIter-hop ball, not its component min), so the failure must be
     * loud. Raise `maxIter` to bound the diameter explicitly, or use
     * [[connectedComponentsStar]] when components may be long chains. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame =
-    propagationWithRounds(pairs, maxIter)._1
-
-  /** Run `body` with `spark.sql.shuffle.partitions` scaled to the edge-set
-    * size, restoring the session value afterwards. Iterative CC rounds run
-    * dozens of tiny stages over an already-contracted edge set; full-width
-    * stages (one task per configured shuffle partition) turn each round into
-    * pure scheduling overhead when the edges fit in a handful of partitions.
-    * AQE would coalesce individual jobs, but each round is materialized
-    * eagerly via `localCheckpoint`, which pins the pre-coalesce partitioning
-    * — so the loop sets an explicit width: ~4M edge rows per partition
-    * (two longs each), clamped to the session's configured width so a
-    * 100 TB edge set still uses every configured partition. */
-  private[operators] def withLoopParallelism[A](df: DataFrame, edgeRows: Long)(body: => A): A = {
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.shuffle.partitions"
-    val before = conf.get(key)
-    val target = math.min(before.toLong, edgeRows / 4000000L + 1).max(1L)
-    conf.set(key, target.toString)
-    try body finally conf.set(key, before)
-  }
-
-  /** [[connectedComponents]] plus the number of rounds it took — the round
-    * count is the scalability observable (diameter-bounded), so tests pin it. */
-  private[graft] def propagationWithRounds(
-      pairs: DataFrame, maxIter: Int): (DataFrame, Int) = {
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // materialize the pair set once — everything downstream (the symmetric
     // edge set, the node set) derives from it, and an unmaterialized plan
     // would re-derive the (possibly expensive) pair pipeline upstream of it
@@ -752,8 +727,27 @@ object Dedup {
       s"connectedComponents did not converge in $maxIter rounds: labels are " +
         "partial (min of each node's ball, not its component). Raise maxIter " +
         "or use connectedComponentsStar for long-chain graphs.")
-    (labels, iter)
+    labels
     }
+  }
+
+  /** Run `body` with `spark.sql.shuffle.partitions` scaled to the edge-set
+    * size, restoring the session value afterwards. Iterative CC rounds run
+    * dozens of tiny stages over an already-contracted edge set; full-width
+    * stages (one task per configured shuffle partition) turn each round into
+    * pure scheduling overhead when the edges fit in a handful of partitions.
+    * AQE would coalesce individual jobs, but each round is materialized
+    * eagerly via `localCheckpoint`, which pins the pre-coalesce partitioning
+    * — so the loop sets an explicit width: ~4M edge rows per partition
+    * (two longs each), clamped to the session's configured width so a
+    * 100 TB edge set still uses every configured partition. */
+  private[operators] def withLoopParallelism[A](df: DataFrame, edgeRows: Long)(body: => A): A = {
+    val conf = df.sparkSession.conf
+    val key = "spark.sql.shuffle.partitions"
+    val before = conf.get(key)
+    val target = math.min(before.toLong, edgeRows / 4000000L + 1).max(1L)
+    conf.set(key, target.toString)
+    try body finally conf.set(key, before)
   }
 
   /** Connected components by alternating large-star/small-star contraction
@@ -1282,20 +1276,12 @@ object Dedup {
     eqPairs.unionAll(crossPairs)
   }
 
-  /** The raw (id, sh64, chunk, ckey) band rows of [[simhashPairs]]'
-    * chunk-pair index, BEFORE the `maxBucketSize` cap — the SimHash
-    * sibling of [[minhashBandedRows]], for the same bucket-occupancy
-    * diagnostics. */
-  private[graft] def simhashBandedRows(docs: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    chunkPairRows(docs.select(col(idCol).as("id"),
-      HashFunctions.simhash64(TextFunctions.tokens(col(textCol))).as("sh64")))
-
   /** The raw (id, sh64, chunk, ckey) band rows of the chunk-pair index
     * over `hashed(id, sh64)`, BEFORE the `maxBucketSize` cap — shared by
     * [[hammingPairs64]], the streaming image-hash index's cross-arm probe
-    * ([[graft.streaming.AHashStream]]), and the bucket-occupancy
-    * diagnostics (tools/ZipfRecallProbe). */
+    * ([[graft.streaming.AHashStream]]), and, until `dc914e8`, the
+    * bucket-occupancy diagnostics (results in SURVEY §6 "Zipf recall
+    * audit"). */
   private[graft] def chunkPairRows(hashed: DataFrame): DataFrame = {
     def byteOf(c: Int) =
       shiftrightunsigned(col("sh64"), c * 8).bitwiseAND(lit(0xffL))

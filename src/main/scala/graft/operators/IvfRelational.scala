@@ -17,10 +17,11 @@ import org.apache.spark.sql.types.DecimalType
   * round's task closures. Model-sized banks (128×64) don't notice; the
   * scale-correct policy does. The r8 sf1 probe measured why cells must
   * grow: pinned at 128 while the corpus grows 10× means 10× occupancy,
-  * and the pinned nProbe=48's recall rots 0.98 → 0.84 (`tools/IvfSweep`:
-  * 96 probes restore 1.00). Cells ∝ corpus keeps occupancy constant —
-  * but at 100 TB that is 10⁵–10⁶ cells, where per-round driver pulls and
-  * per-task closure shipping of a multi-GB bank are the bottleneck, so
+  * and the pinned nProbe=48's recall rots 0.98 → 0.84 (SURVEY §6 "sf1
+  * scale probes", probe last at `dc914e8`: 96 probes restore 1.00).
+  * Cells ∝ corpus keeps occupancy constant — but at 100 TB that is
+  * 10⁵–10⁶ cells, where per-round driver pulls and per-task closure
+  * shipping of a multi-GB bank are the bottleneck, so
   * the bank must be data end to end, not a driver array.
   *
   * Everything here is plain DataFrame algebra: assignment is a broadcast

@@ -4900,7 +4900,8 @@ object Pipeline {
   // instead of a driver-held array. This is the unbounded-cell-count
   // scale path the r8 sf1 probe demanded: cells pinned at 128 while the
   // corpus grows 10× means 10× occupancy and recall rot 0.98 → 0.84
-  // (IvfSweep); the fix is cells ∝ corpus, which at 100 TB means 10⁵–10⁶
+  // (SURVEY §6 "sf1 scale probes"; probe last at `dc914e8`); the fix is
+  // cells ∝ corpus, which at 100 TB means 10⁵–10⁶
   // cells — past what per-Lloyd-round driver collect()s and per-task
   // closure shipping of the bank can carry, so the bank must stay
   // distributed. Training is the same decimal-staged Lloyd update, so the
@@ -5083,8 +5084,9 @@ object Pipeline {
   // p106 — SAMPLE-trained relation-bank IVF: the prescribed 100 TB
   // training configuration under the oracle gate. Full-corpus training is
   // n·cells distance folds per Lloyd round — quadratic in n once cells ∝
-  // corpus — so at scale the bank trains on a SAMPLE (IvfCellSweep
-  // measured it recall-equivalent at ~3.4× less cost, SURVEY §6; r9
+  // corpus — so at scale the bank trains on a SAMPLE (the sf1 cell sweep
+  // measured it recall-equivalent at ~3.4× less cost, SURVEY §6 "sf1
+  // scale probes", probe last at `dc914e8`; r9
   // VERDICT missing #1: "sample-training IS the trainable configuration
   // at scale, and it currently has no CORRECTNESS row"). Membership is
   // the deterministic Curation.sampleUniform bucket (no RNG, partition-
@@ -5102,7 +5104,8 @@ object Pipeline {
   // cells), so training cost is ~cells·budget·cells — a function of the
   // MODEL, independent of corpus size. A corpus-proportional fraction
   // would merely shrink the quadratic's constant; the budget removes the
-  // n entirely, and IvfCellSweep's sf1 sweep showed recall stays in the
+  // n entirely, and the sf1 cell sweep (SURVEY §6 "sf1 scale probes";
+  // probe last at `dc914e8`) showed recall stays in the
   // full-trained band down to ~10 vectors/cell (a flat 25% of sf0.1's
   // 2k corpus = 3.9/cell measured 0.86 vs 0.98 — starvation, not a
   // machinery defect; the budget keeps the gate out of that regime).
@@ -5114,7 +5117,8 @@ object Pipeline {
   // ONLY in the training set. nProbe is 64 (vs p103's 48): the probe
   // separated seeding from sampling — at IDENTICAL (stride 3, nProbe)
   // config, full-trained and budget-sampled recall are EQUAL (0.84 vs
-  // 0.84 at np=48, 0.94 vs 0.94 at np=64, sf0.1; tools/P106Probe), i.e.
+  // 0.84 at np=48, 0.94 vs 0.94 at np=64, sf0.1; SURVEY §6 "Sampled-
+  // training separation probe", probe last at `dc914e8`), i.e.
   // sampling is recall-FREE and the stride-3 seed just wants a few more
   // probes. 64 probes put the row at 0.94, one ground-truth quantum off
   // p103's 0.98.

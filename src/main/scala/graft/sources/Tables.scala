@@ -34,7 +34,8 @@ object Tables {
     *    TIMESTAMP_NTZ; cast to TIMESTAMP under the session's UTC zone —
     *    the identical wall-clock instants DuckDB reads natively. */
   // r18 (guide §1.2, per-action cost): footer-based schema inference is
-  // ~60 ms of driver work per read call (tools/PlanTax), and a bench/
+  // ~60 ms of driver work per read call (OPTIMIZATION_r18.md "What PlanTax
+  // measured"; probe last at `dc914e8`), and a bench/
   // verify session re-reads the SAME immutable testdata files hundreds of
   // times. Cache the inferred schema per (dir, table) — metadata only,
   // every call still plans and scans the parquet files themselves. The

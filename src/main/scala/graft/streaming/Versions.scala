@@ -270,12 +270,13 @@ object Versions {
 
   /** `spark.read.parquet(paths)` with the schema CACHED per `cacheKey`
     * after the first read: footer-based schema inference is ~60 ms of
-    * driver-side work PER READ (measured by `tools/PlanTax` — 103 vs
-    * 39 ms/action), and the lifecycle stores read their roots hundreds
-    * of times per query under a schema that is FIXED for the store's
-    * lifetime (every version/marker of a root shares it — the versioned-
-    * layout contract; compaction transforms are read-equivalent and
-    * schema-preserving). This caches METADATA only, never rows: each
+    * driver-side work PER READ (OPTIMIZATION_r18.md "What PlanTax
+    * measured", probe last at `dc914e8` — 103 vs 39 ms/action), and the
+    * lifecycle stores read their roots hundreds of times per query under
+    * a schema that is FIXED for the store's lifetime (every version/
+    * marker of a root shares it — the versioned-layout contract;
+    * compaction transforms are read-equivalent and schema-preserving).
+    * This caches METADATA only, never rows: each
     * action still lists, scans and computes from the parquet files at
     * hand. Key by the store root (markers under `<root>#d`), never by a
     * path that can be rewritten with a different schema. */

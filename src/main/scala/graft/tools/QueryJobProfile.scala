@@ -1,6 +1,7 @@
 package graft.tools
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
@@ -15,9 +16,6 @@ import org.apache.spark.sql.SparkSession
   * sites by summed job wall-clock. Job wall sums exceed query wall when
   * jobs overlap; the ranking is what matters. */
 object QueryJobProfile {
-  private case class Job(id: Int, site: String, t0: Long,
-      var tEnd: Long = 0L, var tasks: Int = 0)
-
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.lift(1).map(_.split(",").map(_.trim).toSeq)
@@ -31,43 +29,22 @@ object QueryJobProfile {
       .appName("queryjobprofile").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val jobs = new ConcurrentLinkedQueue[Job]()
-    @volatile var live = Map.empty[Int, Job]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val site = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
-          .getOrElse("?")
-        val j = Job(e.jobId, site, System.nanoTime())
-        live += e.jobId -> j
-        jobs.add(j)
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        live.get(e.jobId).foreach { j => j.tEnd = System.nanoTime() }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val sid = e.stageInfo.stageId
-        // attribute tasks to the newest live job (approximation; fine for
-        // the sequential-action streaming bodies this tool profiles)
-        live.values.toSeq.sortBy(-_.t0).headOption
-          .foreach(_.tasks += e.stageInfo.numTasks)
-        val _ = sid
-      }
-    })
+    val attribution = new JobAttribution
+    spark.sparkContext.addSparkListener(attribution)
 
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       // warmup
       fn(spark, dir).write.format("noop").mode("overwrite").save()
       var best = Double.MaxValue
-      var bestJobs: Seq[Job] = Seq.empty
+      var bestJobs: Seq[JobAttribution.Job] = Seq.empty
       for (_ <- 1 to passes) {
-        jobs.clear(); live = Map.empty
+        attribution.clear()
         System.gc(); Thread.sleep(100)
         val t0 = System.nanoTime()
         fn(spark, dir).write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
-        import scala.jdk.CollectionConverters._
-        val js = jobs.asScala.toSeq
+        val js = attribution.jobs
         if (wall < best) { best = wall; bestJobs = js }
         println(f"[profile] $name pass: $wall%.2f s, ${js.size} jobs")
       }
@@ -85,4 +62,38 @@ object QueryJobProfile {
     }
     spark.stop()
   }
+}
+
+/** The listener behind [[QueryJobProfile]]: one [[JobAttribution.Job]] per
+  * started job, keyed to its `callSite.short`. Each completed stage's tasks
+  * go to the job whose `SparkListenerJobStart.stageIds` listed it first, so
+  * jobs that overlap (store verbs run theirs through `Par`) keep their own
+  * tasks; a stage a later job reuses stays with the job that ran it. */
+private[graft] class JobAttribution extends SparkListener {
+  import JobAttribution.Job
+  private val byJob = new ConcurrentHashMap[Int, Job]()
+  private val byStage = new ConcurrentHashMap[Int, Job]()
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = {
+    val site = Option(e.properties)
+      .flatMap(p => Option(p.getProperty("callSite.short")))
+      .getOrElse("?")
+    val j = Job(e.jobId, site, System.nanoTime())
+    byJob.put(e.jobId, j)
+    e.stageIds.foreach(byStage.putIfAbsent(_, j))
+  }
+  override def onJobEnd(e: SparkListenerJobEnd): Unit =
+    Option(byJob.get(e.jobId)).foreach(_.tEnd = System.nanoTime())
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+    Option(byStage.get(e.stageInfo.stageId))
+      .foreach(_.tasks += e.stageInfo.numTasks)
+
+  /** The jobs started since the last [[clear]], in start (= id) order. */
+  def jobs: Seq[Job] = byJob.values.asScala.toSeq.sortBy(_.id)
+  def clear(): Unit = { byJob.clear(); byStage.clear() }
+}
+
+private[graft] object JobAttribution {
+  final case class Job(id: Int, site: String, t0: Long,
+      var tEnd: Long = 0L, var tasks: Int = 0)
 }
