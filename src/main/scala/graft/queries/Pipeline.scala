@@ -2933,38 +2933,48 @@ object Pipeline {
   // is asserted in StreamingSpec (redelivery idempotence + checkpoint
   // resume).
   // =========================================================================
-  /** One file per "daily" batch (batch = doc_id mod `nBatches`), mtimes
-    * stamped ascending so the file stream source's oldest-first listing
-    * replays batches in exactly the oracle's order. Shared by the
-    * streaming registry queries (p75/p79). */
-  private def writeDailyFiles(incoming: DataFrame, in: String,
-      nBatches: Int): Unit =
-    writeDailyFilesRange(incoming, in, nBatches, 0 until nBatches)
-
-  /** [[writeDailyFiles]] for a sub-range of the batches — stages files in
-    * phases (p89 drains, compacts, then stages the rest). Pre-existing
-    * files are never re-stamped, so earlier phases keep their mtime
-    * order. */
-  private def writeDailyFilesRange(incoming: DataFrame, in: String,
-      nBatches: Int, batches: Seq[Int]): Unit = {
-    // one materialization for the per-batch filter passes (see
-    // writeDailyFilesBy — same recompute-per-batch-file trap)
+  /** Stages the input of a replayed stream: the rows of each batch `b` in
+    * `batches` (`batchOf` names a row's batch) become one file under
+    * `root/in`, stamped with an mtime that rises with `b`, so the file
+    * source's oldest-first listing replays the batches in exactly the
+    * oracle's order. Files already in `root/in` keep their stamps, so a
+    * root can be staged in phases (p89 drains, compacts, then stages the
+    * rest). Shared by every streaming registry query. */
+  private[graft] def stage(incoming: DataFrame, batchOf: Column, root: String,
+      batches: Seq[Int]): Unit = {
+    // one materialization: each per-batch filter pass below would otherwise
+    // re-run the whole upstream pipeline (for the media fixtures that is a
+    // full corpus synthesis per batch file)
     val inc = incoming.localCheckpoint(true)
+    val in = new java.io.File(s"$root/in")
     val stamped = scala.collection.mutable.Set.empty[java.io.File]
-    Option(new java.io.File(in).listFiles())
-      .foreach(_.foreach(stamped += _))
+    Option(in.listFiles()).foreach(stamped ++= _)
     batches.foreach { b =>
-      inc.filter(pmod(col("doc_id"), lit(nBatches)) === b).coalesce(1)
-        .write.mode("append").parquet(in)
-      new java.io.File(in).listFiles()
+      inc.filter(batchOf === b).coalesce(1)
+        .write.mode("append").parquet(in.getPath)
+      in.listFiles()
         .filter(f => f.getName.startsWith("part-") && !stamped.contains(f))
         .foreach { f =>
           f.setLastModified(1600000000000L + b * 60000L); stamped += f }
     }
   }
 
+  /** Drains what [[stage]] put under `root/in`, one file per trigger, into
+    * `body` (checkpointed at `root/ckpt`), and returns once every staged
+    * file is consumed. Resuming from the same root replays only files the
+    * checkpoint has not seen. */
+  private[graft] def replay(spark: SparkSession, root: String,
+      schema: StructType)(body: (DataFrame, Long) => Unit): Unit =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(s"$root/in")
+      .writeStream.foreachBatch(body)
+      .option("checkpointLocation", s"$root/ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+
   /** The (existing, incoming) corpus split with planted cross-corpus and
-    * cross-batch dups — shared by p75 and its compacted twin p89. */
+    * cross-batch dups — shared by p75, its compacted twin p89 and the
+    * near-dup sibling p79. */
   private def passageStreamCorpus(spark: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
@@ -2981,23 +2991,14 @@ object Pipeline {
     import java.nio.file.Files
     val (existing, incoming) = passageStreamCorpus(spark, dir)
     val root = Files.createTempDirectory("p75_").toString
-    val in = s"$root/in"; val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
+    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => Dedup.passageWindowIndex(existing, "doc_id", "text")
         .write.parquet(s"$idxRoot/v0"),
-      () => writeDailyFiles(incoming, in, 3))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch(graft.streaming.PassageStream
-        .filterBatch(spark, idxRoot, outRoot, "doc_id", "text") _)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("doc_id"), lit(3)), root, 0 until 3))
+    replay(spark, root, incoming.schema)(graft.streaming.PassageStream
+      .filterBatch(spark, idxRoot, outRoot, "doc_id", "text"))
     spark.read.parquet(s"$outRoot/b*")
       .select(col("doc_id"), col("batch"), col("n_windows"),
         col("n_dup_windows"), col("dup_ratio"),
@@ -3305,15 +3306,9 @@ object Pipeline {
   // =========================================================================
   def p79StreamNearDupFilter(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.Files
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val existing = docs.filter(col("doc_id") < 250)
-    val incoming = docs.filter(col("doc_id") >= 250)
-      .unionAll(docs.filter(col("doc_id") < 10)
-        .select((col("doc_id") + 10000000).as("doc_id"), col("text")))
-      .unionAll(docs.filter(col("doc_id").between(250, 254))
-        .select((col("doc_id") + 20000000).as("doc_id"), col("text")))
+    val (existing, incoming) = passageStreamCorpus(spark, dir)
     val root = Files.createTempDirectory("p79_").toString
-    val in = s"$root/in"; val idxRoot = s"$root/idx"
+    val idxRoot = s"$root/idx"
     val docsRoot = s"$root/docs"; val outRoot = s"$root/out"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
@@ -3321,22 +3316,12 @@ object Pipeline {
           numHashes = 64, bands = 16, shingleSize = 3, seed = 42L)
         .write.parquet(s"$idxRoot/v0"),
       () => existing.write.parquet(s"$docsRoot/v0"),
-      () => writeDailyFiles(incoming, in, 3))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        graft.streaming.NearDupStream
-          .filterBatch(spark, idxRoot, docsRoot, outRoot, "doc_id", "text",
-            threshold = 0.4)(b, id)
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("doc_id"), lit(3)), root, 0 until 3))
+    replay(spark, root, incoming.schema) { (b, id) =>
+      graft.streaming.NearDupStream
+        .filterBatch(spark, idxRoot, docsRoot, outRoot, "doc_id", "text",
+          threshold = 0.4)(b, id)
+    }
     spark.read.parquet(s"$outRoot/b*")
       .select(col("id_a"), col("id_b"), col("jaccard"), col("batch"))
       .orderBy("id_a", "id_b")
@@ -3736,25 +3721,6 @@ object Pipeline {
       .drop("__pid", "__rn", "__off")
   }
 
-  /** writeDailyFiles for an explicit batch-assignment column. */
-  private def writeDailyFilesBy(incoming: DataFrame, batchCol: String,
-      in: String, nBatches: Int): Unit = {
-    // one materialization: the per-batch filter passes below would each
-    // re-run the whole upstream pipeline (for the media fixtures that is a
-    // full corpus synthesis per batch file — the dominant setup cost of
-    // every media streaming query)
-    val inc = incoming.localCheckpoint(true)
-    val stamped = scala.collection.mutable.Set.empty[java.io.File]
-    (0 until nBatches).foreach { b =>
-      inc.filter(col(batchCol) === b).coalesce(1)
-        .write.mode("append").parquet(in)
-      new java.io.File(in).listFiles()
-        .filter(f => f.getName.startsWith("part-") && !stamped.contains(f))
-        .foreach { f =>
-          f.setLastModified(1600000000000L + b * 60000L); stamped += f }
-    }
-  }
-
   def p86StreamFunnel(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.Files
     val ev = rankBatches(Tables.events(spark, dir)
@@ -3762,27 +3728,16 @@ object Pipeline {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type")),
       3, Seq(col("ts"), col("event_id")))
     val root = Files.createTempDirectory("p86_").toString
-    val in = s"$root/in"; val stateRoot = s"$root/state"
-    val outRoot = s"$root/out"
+    val stateRoot = s"$root/state"; val outRoot = s"$root/out"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => spark.range(0, 50).select(col("id").as("user_id"),
           lit(1).as("stage"), lit(0L).as("__v"))
         .write.parquet(s"$stateRoot/v0"),
-      () => writeDailyFilesBy(ev, "batch", in, 3))
-    val schema = StructType(Seq(StructField("event_id", LongType),
-      StructField("ts", TimestampType), StructField("user_id", LongType),
-      StructField("event_type", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch(graft.streaming.FunnelStream
-        .advanceBatch(spark, stateRoot, outRoot, "user_id", "ts",
-          "event_id", "event_type", Seq("view", "click", "purchase")) _)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(ev, col("batch"), root, 0 until 3))
+    replay(spark, root, ev.drop("batch").schema)(graft.streaming.FunnelStream
+      .advanceBatch(spark, stateRoot, outRoot, "user_id", "ts",
+        "event_id", "event_type", Seq("view", "click", "purchase")))
     spark.read.parquet(s"$outRoot/b*")
       .select(col("user_id"), col("stage"), col("batch"))
       .orderBy("user_id", "batch")
@@ -3979,27 +3934,16 @@ object Pipeline {
       .select(col("event_id"), col("ts"), col("user_id"), col("value")),
       3, Seq(col("ts"), col("event_id")))
     val root = Files.createTempDirectory("p88_").toString
-    val in = s"$root/in"; val stateRoot = s"$root/state"
-    val outRoot = s"$root/out"
+    val stateRoot = s"$root/state"; val outRoot = s"$root/out"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => spark.range(0).select(col("id").as("user_id"),
           lit(0L).as("n_events"), lit(0.0).as("ewma"), lit(0L).as("__v"))
         .write.parquet(s"$stateRoot/v0"),
-      () => writeDailyFilesBy(ev, "batch", in, 3))
-    val schema = StructType(Seq(StructField("event_id", LongType),
-      StructField("ts", TimestampType), StructField("user_id", LongType),
-      StructField("value", DoubleType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch(graft.streaming.EwmaStream
-        .advanceBatch(spark, stateRoot, outRoot, "user_id", "ts",
-          "event_id", "value", alpha = 0.125) _)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(ev, col("batch"), root, 0 until 3))
+    replay(spark, root, ev.drop("batch").schema)(graft.streaming.EwmaStream
+      .advanceBatch(spark, stateRoot, outRoot, "user_id", "ts",
+        "event_id", "value", alpha = 0.125))
     spark.read.parquet(s"$outRoot/b*")
       .select(col("user_id"), col("n_events"), col("ewma"), col("batch"))
       .orderBy("user_id", "batch")
@@ -4050,26 +3994,17 @@ object Pipeline {
     import java.nio.file.Files
     val (existing, incoming) = passageStreamCorpus(spark, dir)
     val root = Files.createTempDirectory("p89_").toString
-    val in = s"$root/in"; val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
+    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
     Dedup.passageWindowIndex(existing, "doc_id", "text")
       .write.parquet(s"$idxRoot/v0")
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    def drain(): Unit = {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-        .writeStream
-        .foreachBatch(graft.streaming.PassageStream
-          .filterBatch(spark, idxRoot, outRoot, "doc_id", "text") _)
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    writeDailyFilesRange(incoming, in, 3, Seq(0, 1))
+    val batchOf = pmod(col("doc_id"), lit(3))
+    def drain(): Unit = replay(spark, root, incoming.schema)(
+      graft.streaming.PassageStream
+        .filterBatch(spark, idxRoot, outRoot, "doc_id", "text"))
+    stage(incoming, batchOf, root, Seq(0, 1))
     drain()
     graft.streaming.PassageStream.compactIndex(spark, idxRoot, upTo = 2L)
-    writeDailyFilesRange(incoming, in, 3, Seq(2))
+    stage(incoming, batchOf, root, Seq(2))
     drain()
     spark.read.parquet(s"$outRoot/b*")
       .select(col("doc_id"), col("batch"), col("n_windows"),
@@ -4257,26 +4192,16 @@ object Pipeline {
     import java.nio.file.Files
     val emb = Tables.embeddings(spark, dir)
     val seed = Similarity.ivfCentroids(emb, nCells = 8)
+    val vecs = emb.select(col("vec_id"), col("embedding"))
     val root = Files.createTempDirectory("p93_").toString
-    val in = s"$root/in"; val stateRoot = s"$root/state"
-    val outRoot = s"$root/out"
+    val stateRoot = s"$root/state"; val outRoot = s"$root/out"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => graft.streaming.KMeansStream.writeSeedState(spark, stateRoot,
         seed),
-      () => writeDailyFilesBy(emb.select(col("vec_id"), col("embedding"))
-        .withColumn("batch", pmod(col("vec_id"), lit(3))), "batch", in, 3))
-    val schema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch(graft.streaming.KMeansStream
-        .advanceBatch(spark, stateRoot, outRoot, "vec_id", "embedding") _)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(vecs, pmod(col("vec_id"), lit(3)), root, 0 until 3))
+    replay(spark, root, vecs.schema)(graft.streaming.KMeansStream
+      .advanceBatch(spark, stateRoot, outRoot, "vec_id", "embedding"))
     spark.read.parquet(s"$outRoot/b*")
       .select(col("batch"), col("cell"), col("n_points"), col("pos"),
         col("val"))
@@ -5032,9 +4957,8 @@ object Pipeline {
     val standing = emb.filter(col("vec_id") < 250)
     val incoming = emb.filter(col("vec_id") >= 250)
       .select(col("vec_id"), col("embedding"))
-      .withColumn("batch", pmod(col("vec_id"), lit(2)))
     val root = Files.createTempDirectory("p105_").toString
-    val in = s"$root/in"; val bankRoot = s"$root/bank"
+    val bankRoot = s"$root/bank"
     val indexRoot = s"$root/index"; val outRoot = s"$root/out"
     val bank = IvfRelational.trainBank(standing, nCells = 16, iters = 3,
       stride = 15)
@@ -5042,18 +4966,10 @@ object Pipeline {
     graft.core.Par.run(
       () => graft.streaming.IvfStream.writeStanding(spark, bankRoot,
         indexRoot, standing, bank),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch(graft.streaming.IvfStream.appendBatch(spark, bankRoot,
-        indexRoot, outRoot, "vec_id", "embedding") _)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("vec_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema)(
+      graft.streaming.IvfStream.appendBatch(spark, bankRoot, indexRoot, outRoot,
+        "vec_id", "embedding"))
     graft.streaming.Versions.list(spark, indexRoot)
       .map { case (vid, p) =>
         spark.read.parquet(p.toString)
@@ -5198,23 +5114,13 @@ object Pipeline {
     val standing = emb.filter(col("vec_id") < 250)
     val incoming = emb.filter(col("vec_id") >= 250)
       .select(col("vec_id"), col("embedding"))
-      .withColumn("batch", pmod(col("vec_id"), lit(2)))
     val root = Files.createTempDirectory("p107_").toString
-    val in = s"$root/in"; val momRoot = s"$root/moments"
+    val momRoot = s"$root/moments"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => PcaStream.writeStanding(spark, momRoot, standing),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch(PcaStream.advanceBatch(spark, momRoot) _)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("vec_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema)(PcaStream.advanceBatch(spark, momRoot))
     val model = PcaStream.modelAt(spark, momRoot, k = 2, iters = p100Iters)
     import spark.implicits._
     val rows =
@@ -5270,23 +5176,14 @@ object Pipeline {
     val standing = docs.filter(col("doc_id") < 250)
     val incoming = docs.filter(col("doc_id") >= 250)
       .select(col("doc_id"), col("text"))
-      .withColumn("batch", pmod(col("doc_id"), lit(2)))
     val root = Files.createTempDirectory("p108_").toString
-    val in = s"$root/in"; val idxRoot = s"$root/idx"
+    val idxRoot = s"$root/idx"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => RetrievalStream.writeStanding(spark, idxRoot, standing),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch(RetrievalStream.appendBatch(spark, idxRoot) _)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema)(
+      RetrievalStream.appendBatch(spark, idxRoot))
     RetrievalStream.bm25TopK(spark, idxRoot, p108Terms, k = 40)
   }
 
@@ -5318,25 +5215,15 @@ object Pipeline {
     val standing = docs.filter(col("doc_id") < 250)
     val incoming = docs.filter(col("doc_id") >= 250)
       .select(col("doc_id"), col("lang"), col("text"))
-      .withColumn("batch", pmod(col("doc_id"), lit(2)))
     val root = Files.createTempDirectory("p109_").toString
-    val in = s"$root/in"; val regRoot = s"$root/reg"
+    val regRoot = s"$root/reg"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => SketchStream.writeStanding(spark, regRoot, standing,
         Seq("lang"), "text"),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("lang", StringType), StructField("text", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch(SketchStream.advanceBatch(spark, regRoot,
-        Seq("lang"), "text") _)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema)(
+      SketchStream.advanceBatch(spark, regRoot, Seq("lang"), "text"))
     val hll = SketchStream.distinctAt(spark, regRoot, Seq("lang"))
     val exact = docs.groupBy(col("lang"))
       .agg(countDistinct(col("text")).as("n_exact"))
@@ -5386,26 +5273,16 @@ object Pipeline {
     val standing = docs.filter(col("doc_id") < 250)
     val incoming = docs.filter(col("doc_id") >= 250)
       .select(col("doc_id"), col("text"))
-      .withColumn("batch", pmod(col("doc_id"), lit(2)))
     val root = Files.createTempDirectory("p110_").toString
-    val in = s"$root/in"; val cmRoot = s"$root/cm"
+    val cmRoot = s"$root/cm"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => SketchStream.writeStandingCm(spark, cmRoot, toTokens(standing),
         "token"),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        SketchStream.advanceBatchCm(spark, cmRoot, "token")(toTokens(b), id)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema) { (b, id) =>
+      SketchStream.advanceBatchCm(spark, cmRoot, "token")(toTokens(b), id)
+    }
     import spark.implicits._
     val probes = p110Keys.toDF("token")
     val exact = toTokens(docs).filter(col("token").isInCollection(p110Keys))
@@ -5474,26 +5351,17 @@ object Pipeline {
     val standing = docs.filter(col("doc_id") < 250)
     val incoming = docs.filter(col("doc_id") >= 250)
       .select(col("doc_id"), col("n_chars"))
-      .withColumn("batch", pmod(col("doc_id"), lit(2)))
     val root = Files.createTempDirectory("p111_").toString
-    val in = s"$root/in"; val boundsRoot = s"$root/bounds"
+    val boundsRoot = s"$root/bounds"
     val countRoot = s"$root/counts"; val profRoot = s"$root/prof"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => QuantileStream.writeStanding(spark, boundsRoot, countRoot,
         standing, "n_chars", 128),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("n_chars", LongType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch(QuantileStream.advanceBatch(spark, boundsRoot,
-        countRoot, profRoot, "n_chars") _)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema)(
+      QuantileStream.advanceBatch(spark, boundsRoot, countRoot, profRoot,
+        "n_chars"))
     val est = QuantileStream.quantilesAt(spark, boundsRoot, countRoot,
       Seq(0.5, 0.9, 0.99))
     val exact = Profiling.histogramQuantiles(docs, "n_chars", 128,
@@ -5599,26 +5467,16 @@ object Pipeline {
     val standing = bench.filter(pmod(col("doc_id"), lit(4)) < 2)
     val incoming = bench.filter(pmod(col("doc_id"), lit(4)) >= 2)
       .select(col("doc_id"), col("text"))
-      .withColumn("batch", pmod(col("doc_id"), lit(4)) - 2)
     val root = Files.createTempDirectory("p112_").toString
-    val in = s"$root/in"; val bloomRoot = s"$root/bloom"
+    val bloomRoot = s"$root/bloom"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => SketchStream.writeStandingBloom(spark, bloomRoot,
         grams(standing), "gram"),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        SketchStream.advanceBatchBloom(spark, bloomRoot, "gram")(grams(b), id)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("doc_id"), lit(4)) - 2, root, 0 until 2))
+    replay(spark, root, incoming.schema) { (b, id) =>
+      SketchStream.advanceBatchBloom(spark, bloomRoot, "gram")(grams(b), id)
+    }
     // folded == one-shot, engine-computed bit-for-bit; oracle asserts
     // TRUE. Rides into the result as a broadcast 1-row cross join (the
     // bank_matches pattern) — the whole query stays ONE plan, no
@@ -5722,11 +5580,9 @@ object Pipeline {
         .select(col("doc_id"), explode(col("sh")).as("gram"))
     val bench = docs.filter(col("source") === "src0")
     val root = Files.createTempDirectory("p113_").toString
-    val in = s"$root/in"; val bloomRoot = s"$root/bloom"
-    val outRoot = s"$root/out"
+    val bloomRoot = s"$root/bloom"; val outRoot = s"$root/out"
     val incoming = docs.filter(col("source") =!= "src0")
       .select(col("doc_id"), col("text"))
-      .withColumn("batch", pmod(col("doc_id"), lit(2)))
     // frozen per-epoch probe artifacts (the bloom → literal-mask chain,
     // the standing benchmark gram relation) and the input staging are
     // independent setup chains — overlap them (guide §2.6)
@@ -5739,32 +5595,22 @@ object Pipeline {
       },
       () => grams(bench).select(col("gram")).distinct()
         .localCheckpoint(true),
-      () => writeDailyFilesBy(incoming, "batch", in, 2)))
+      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2)))
     val masks = setupOut(0).asInstanceOf[Array[Array[Long]]]
     val benchGrams = setupOut(1).asInstanceOf[DataFrame]
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        val g = grams(b)
-        val cand = g.filter(
-          Profiling.bloomMightContain(col("gram"), masks, 1 << 16))
-        val nCand = cand.groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_candidate_grams"))
-        cand.join(broadcast(benchGrams), "gram")
-          .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared_grams"))
-          .filter(col("n_shared_grams") >= 3)
-          .join(nCand, "doc_id")
-          .withColumn("batch", graft.functions.SteadyLit.steadyLong(id))
-          .write.mode("overwrite").parquet(s"$outRoot/b$id")
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    replay(spark, root, incoming.schema) { (b, id) =>
+      val g = grams(b)
+      val cand = g.filter(
+        Profiling.bloomMightContain(col("gram"), masks, 1 << 16))
+      val nCand = cand.groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_candidate_grams"))
+      cand.join(broadcast(benchGrams), "gram")
+        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared_grams"))
+        .filter(col("n_shared_grams") >= 3)
+        .join(nCand, "doc_id")
+        .withColumn("batch", graft.functions.SteadyLit.steadyLong(id))
+        .write.mode("overwrite").parquet(s"$outRoot/b$id")
+    }
     spark.read.parquet(s"$outRoot/b*")
       .select(col("doc_id"), col("batch"), col("n_candidate_grams"),
         col("n_shared_grams"))
@@ -5886,9 +5732,8 @@ object Pipeline {
       .select(col("doc_id"), col("text"))
       .unionAll(corpus.filter(col("doc_id") < 10)
         .select((col("doc_id") + 10000000).as("doc_id"), col("text")))
-      .withColumn("batch", pmod(col("doc_id"), lit(2)))
     val root = Files.createTempDirectory("p114_").toString
-    val in = s"$root/in"; val bloomRoot = s"$root/bloom"
+    val bloomRoot = s"$root/bloom"
     val idxRoot = s"$root/idx"; val docsRoot = s"$root/docs"
     val pairsRoot = s"$root/pairs"; val outRoot = s"$root/out"
     // frozen per-epoch artifacts: blocklist bloom → literal masks, the
@@ -5909,20 +5754,12 @@ object Pipeline {
           numHashes = 64, bands = 16, shingleSize = 3, seed = 42L)
         .write.parquet(s"$idxRoot/v0"),
       () => standing.write.parquet(s"$docsRoot/v0"),
-      () => writeDailyFilesBy(incoming, "batch", in, 2)))
+      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2)))
     val masks = setupOut(0).asInstanceOf[Array[Array[Long]]]
     val benchGrams = setupOut(1).asInstanceOf[DataFrame]
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch(ingestCapstoneBatch(spark, masks, benchGrams,
-        idxRoot, docsRoot, pairsRoot, outRoot) _)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    replay(spark, root, incoming.schema)(
+      ingestCapstoneBatch(spark, masks, benchGrams, idxRoot, docsRoot,
+        pairsRoot, outRoot))
     spark.read.parquet(s"$outRoot/b*")
       .select(col("doc_id"), col("batch"), col("contaminated"),
         col("quality_keep"), col("near_dup"), col("keep"))
@@ -6004,9 +5841,7 @@ object Pipeline {
     val standing = emb.filter(col("vec_id") < 150)
     val incoming = emb.filter(col("vec_id") >= 150 && col("vec_id") < 250)
       .select(col("vec_id"), col("embedding"))
-      .withColumn("batch", pmod(col("vec_id"), lit(2)))
     val root = Files.createTempDirectory("p115_").toString
-    val in = s"$root/in"
     val bank1 = s"$root/bank1"; val idx1 = s"$root/idx1"
     val bank2 = s"$root/bank2"; val idx2 = s"$root/idx2"
     // independent setup chains — overlap them (guide §2.6)
@@ -6014,18 +5849,10 @@ object Pipeline {
       () => IvfStream.writeStanding(spark, bank1, idx1, standing,
         IvfRelational.trainBank(standing, nCells = 8, iters = 3,
           stride = 15)),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch(IvfStream.appendBatch(spark, bank1, idx1,
-        s"$root/out1", "vec_id", "embedding") _)
-      .option("checkpointLocation", s"$root/ckpt1")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("vec_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema)(
+      IvfStream.appendBatch(spark, bank1, idx1, s"$root/out1", "vec_id",
+        "embedding"))
     // the growth signal: 100 appended over 150 standing under 8 cells —
     // retrain with cells doubled, on the deterministic half sample
     IvfStream.rebuildIndex(spark, idx1, bank2, idx2, nCells = 16,
@@ -6191,25 +6018,14 @@ object Pipeline {
     val incoming = images.filter(_.media_id >= 250).toDF()
       .select(col("media_id"), col("payload"))
       .unionAll(plants.toDF().select(col("media_id"), col("payload")))
-      .withColumn("batch", pmod(col("media_id"), lit(2)))
     val root = Files.createTempDirectory("p117_").toString
-    val in = s"$root/in"; val idxRoot = s"$root/idx"
-    val outRoot = s"$root/out"
+    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => AHashStream.writeStanding(spark, idxRoot, standing),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("media_id", LongType),
-      StructField("payload", BinaryType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch(AHashStream.appendBatch(spark, idxRoot, outRoot,
-        "media_id", "payload") _)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("media_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema)(
+      AHashStream.appendBatch(spark, idxRoot, outRoot, "media_id", "payload"))
     spark.read.parquet(s"$outRoot/b*")
       .select(col("id_a"), col("id_b"), col("hamming"), col("batch"))
       .orderBy("id_a", "id_b")
@@ -6486,27 +6302,16 @@ object Pipeline {
     val standing = docs.filter(col("doc_id") < 250)
     val inc1 = docs.filter(col("doc_id") >= 250 && col("doc_id") < 375)
       .select(col("doc_id"), col("n_chars"))
-      .withColumn("batch", pmod(col("doc_id"), lit(2)))
     val root = Files.createTempDirectory("p120_").toString
-    val in = s"$root/in"
     val bounds1 = s"$root/bounds1"; val counts1 = s"$root/counts1"
     val bounds2 = s"$root/bounds2"; val counts2 = s"$root/counts2"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => QuantileStream.writeStanding(spark, bounds1, counts1, standing,
         "n_chars", 128),
-      () => writeDailyFilesBy(inc1, "batch", in, 2))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("n_chars", LongType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch(QuantileStream.advanceBatch(spark, bounds1,
-        counts1, s"$root/prof1", "n_chars") _)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(inc1, pmod(col("doc_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, inc1.schema)(QuantileStream.advanceBatch(spark, bounds1,
+      counts1, s"$root/prof1", "n_chars"))
     // the rebuild signal: clamped mass under the OLD bounds
     val drift1 = spark.read.parquet(s"$root/prof1/b*")
       .agg(coalesce(sum(col("n_below")), lit(0L)).as("old_below"),
@@ -6601,29 +6406,18 @@ object Pipeline {
     val standing = bench.filter(pmod(col("doc_id"), lit(8)) < 4)
     val inc1 = bench.filter(pmod(col("doc_id"), lit(8)).isin(4, 5))
       .select(col("doc_id"), col("text"))
-      .withColumn("batch", pmod(col("doc_id"), lit(2)))
     val root = Files.createTempDirectory("p121_").toString
-    val in = s"$root/in"
     val bloom1 = s"$root/bloom1"; val bloom2 = s"$root/bloom2"
     val mOld = 1 << 10; val mNew = 1 << 16
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => SketchStream.writeStandingBloom(spark, bloom1, grams(standing),
         "gram", 4, mOld),
-      () => writeDailyFilesBy(inc1, "batch", in, 2))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        SketchStream.advanceBatchBloom(spark, bloom1, "gram", 4, mOld)(
-          grams(b), id)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(inc1, pmod(col("doc_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, inc1.schema) { (b, id) =>
+      SketchStream.advanceBatchBloom(spark, bloom1, "gram", 4, mOld)(
+        grams(b), id)
+    }
     // saturation evidence: the folded old store's distinct set-bit count
     // (the integer numerator of bloomFillAt — ≤ 4×1024 at this m)
     val oldBits = SketchStream.readBloomBits(spark, bloom1)
@@ -6731,27 +6525,16 @@ object Pipeline {
     val incoming = clips.filter(_.media_id >= 250).toDF()
       .select(col("media_id"), col("payload"))
       .unionAll(plants.toDF().select(col("media_id"), col("payload")))
-      .withColumn("batch", pmod(col("media_id"), lit(2)))
     val root = Files.createTempDirectory("p122_").toString
-    val in = s"$root/in"; val idxRoot = s"$root/idx"
-    val outRoot = s"$root/out"
+    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
     val profiler = (df: DataFrame) =>
       Multimodal.audioFpBytes(df, "media_id", "payload")
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => MediaFpStream.writeStanding(spark, idxRoot, standing, profiler),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("media_id", LongType),
-      StructField("payload", BinaryType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch(MediaFpStream.appendBatch(spark, idxRoot, outRoot,
-        profiler) _)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("media_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema)(
+      MediaFpStream.appendBatch(spark, idxRoot, outRoot, profiler))
     spark.read.parquet(s"$outRoot/b*")
       .select(col("id_a"), col("id_b"), col("batch"))
       .orderBy("id_a", "id_b")
@@ -6796,27 +6579,16 @@ object Pipeline {
     val incoming = vids.filter(_.media_id >= 250).toDF()
       .select(col("media_id"), col("payload"))
       .unionAll(plants.toDF().select(col("media_id"), col("payload")))
-      .withColumn("batch", pmod(col("media_id"), lit(2)))
     val root = Files.createTempDirectory("p123_").toString
-    val in = s"$root/in"; val idxRoot = s"$root/idx"
-    val outRoot = s"$root/out"
+    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
     val profiler = (df: DataFrame) =>
       Multimodal.videoFpBytes(df, "media_id", "payload")
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => MediaFpStream.writeStanding(spark, idxRoot, standing, profiler),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("media_id", LongType),
-      StructField("payload", BinaryType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch(MediaFpStream.appendBatch(spark, idxRoot, outRoot,
-        profiler) _)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("media_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema)(
+      MediaFpStream.appendBatch(spark, idxRoot, outRoot, profiler))
     spark.read.parquet(s"$outRoot/b*")
       .select(col("id_a"), col("id_b"), col("batch"))
       .orderBy("id_a", "id_b")
@@ -6996,27 +6768,16 @@ object Pipeline {
     val incoming = clips.filter(_.media_id >= 250).toDF()
       .select(col("media_id"), col("payload"))
       .unionAll(plants.toDF().select(col("media_id"), col("payload")))
-      .withColumn("batch", pmod(col("media_id"), lit(2)))
     val root = Files.createTempDirectory("p126_").toString
-    val in = s"$root/in"; val idxRoot = s"$root/idx"
-    val outRoot = s"$root/out"
+    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => AHashStream.writeStanding(spark, idxRoot, standing,
         hasher = Multimodal.audioAHash64Bytes),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("media_id", LongType),
-      StructField("payload", BinaryType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch(AHashStream.appendBatch(spark, idxRoot, outRoot,
-        "media_id", "payload",
-        hasher = Multimodal.audioAHash64Bytes) _)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("media_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema)(
+      AHashStream.appendBatch(spark, idxRoot, outRoot, "media_id", "payload",
+        hasher = Multimodal.audioAHash64Bytes))
     spark.read.parquet(s"$outRoot/b*")
       .select(col("id_a"), col("id_b"), col("hamming"), col("batch"))
       .orderBy("id_a", "id_b")
@@ -7100,31 +6861,19 @@ object Pipeline {
     val incoming = vids.filter(_.media_id >= 250).toDF()
       .select(col("media_id"), col("payload"))
       .unionAll(plants.toDF().select(col("media_id"), col("payload")))
-      .withColumn("batch", pmod(col("media_id"), lit(2)))
     val root = Files.createTempDirectory("p127_").toString
-    val in = s"$root/in"; val idxRoot = s"$root/idx"
-    val outRoot = s"$root/out"
+    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
     val setsOf = (df: DataFrame) =>
       Multimodal.videoFrameSetBytes(df, "media_id", "payload")
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => ContainmentStream.writeStanding(spark, idxRoot, standing,
         setsOf),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("media_id", LongType),
-      StructField("payload", BinaryType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        ContainmentStream.filterBatch(spark, idxRoot, outRoot, setsOf,
-          threshold = 0.9)(b, id)
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("media_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema) { (b, id) =>
+      ContainmentStream.filterBatch(spark, idxRoot, outRoot, setsOf,
+        threshold = 0.9)(b, id)
+    }
     spark.read.parquet(s"$outRoot/b*")
       .select(col("id_a"), col("id_b"), col("containment"), col("batch"))
       .orderBy("id_a", "id_b")
@@ -7279,9 +7028,7 @@ object Pipeline {
       .unionAll(exactPlants.toDF().select(col("media_id"), col("payload")))
       .unionAll(wobblePlants.toDF().select(col("media_id"), col("payload")))
       .unionAll(clipPlants.toDF().select(col("media_id"), col("payload")))
-      .withColumn("batch", pmod(col("media_id"), lit(2)))
     val root = Files.createTempDirectory("p128_").toString
-    val in = s"$root/in"
     val fpIdx = s"$root/fpidx"; val ahIdx = s"$root/ahidx"
     val ctIdx = s"$root/ctidx"; val outRoot = s"$root/out"
     // one decode for the three standing stores too (the per-batch
@@ -7298,18 +7045,10 @@ object Pipeline {
         hasher = (_, _, _) => Multimodal.audioAHash64FromSamples(ssamples)),
       () => ContainmentStream.writeStanding(spark, ctIdx, standing,
         _ => Multimodal.audioWindowHashSetsFromSamples(ssamples)),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("media_id", LongType),
-      StructField("payload", BinaryType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch(mediaCapstoneBatch(spark, fpIdx, ahIdx, ctIdx,
-        s"$root/fpout", s"$root/ahout", s"$root/ctout", outRoot) _)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("media_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema)(
+      mediaCapstoneBatch(spark, fpIdx, ahIdx, ctIdx, s"$root/fpout",
+        s"$root/ahout", s"$root/ctout", outRoot))
     spark.read.parquet(s"$outRoot/b*")
       .select(col("media_id"), col("batch"), col("exact_dup"),
         col("percep_dup"), col("contained"), col("keep"))
@@ -7440,27 +7179,17 @@ object Pipeline {
     val standing = emb.filter(col("vec_id") < 300)
     val incoming = emb.filter(col("vec_id") >= 300 && col("vec_id") < 400)
       .select(col("vec_id"), col("embedding"))
-      .withColumn("batch", pmod(col("vec_id"), lit(2)))
     val root = Files.createTempDirectory("p129_").toString
-    val in = s"$root/in"
     val book1 = s"$root/book1"; val codes1 = s"$root/codes1"
     val book2 = s"$root/book2"; val codes2 = s"$root/codes2"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => PqStream.writeStanding(spark, book1, codes1, standing,
         Similarity.pqTrain(standing, m = 16, nCodes = 6)),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch(PqStream.appendBatch(spark, book1, codes1,
-        s"$root/out1", "vec_id", "embedding") _)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("vec_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema)(
+      PqStream.appendBatch(spark, book1, codes1, s"$root/out1", "vec_id",
+        "embedding"))
     // the drift signal says the gen-1 books stopped fitting — retrain
     // over the CURRENT corpus at higher resolution into NEW roots
     PqStream.rebuild(spark, emb.filter(col("vec_id") < 400), book2, codes2,
@@ -7634,31 +7363,19 @@ object Pipeline {
       .select((col("doc_id") + 100000).as("doc_id"),
         array_join(slice(TF.tokens(col("text")), 1, 12), " ").as("text"))
     val incoming = docs.filter(col("doc_id") >= 400).unionAll(planted)
-      .withColumn("batch", pmod(col("doc_id"), lit(2)))
     val root = Files.createTempDirectory("p131_").toString
-    val in = s"$root/in"; val idxRoot = s"$root/idx"
-    val outRoot = s"$root/out"
+    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
     val setsOf = (df: DataFrame) =>
       Dedup.jaccardShingleSets(df, "doc_id", "text")
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => ContainmentStream.writeStanding(spark, idxRoot, standing,
         setsOf),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        ContainmentStream.filterBatch(spark, idxRoot, outRoot, setsOf,
-          threshold = 0.6)(b, id)
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema) { (b, id) =>
+      ContainmentStream.filterBatch(spark, idxRoot, outRoot, setsOf,
+        threshold = 0.6)(b, id)
+    }
     spark.read.parquet(s"$outRoot/b*")
       .select(col("id_a"), col("id_b"), col("containment"), col("batch"))
       .orderBy("id_a", "id_b")
@@ -7727,7 +7444,7 @@ object Pipeline {
       .unionAll(docs.filter(col("doc_id").between(250, 254))
         .select((col("doc_id") + 20000).as("doc_id"), col("text")))
     val root = Files.createTempDirectory("p132_").toString
-    val in = s"$root/in"; val idxRoot = s"$root/idx"
+    val idxRoot = s"$root/idx"
     val docsRoot = s"$root/docs"; val outRoot = s"$root/out"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
@@ -7735,29 +7452,19 @@ object Pipeline {
           numHashes = 64, bands = 16, shingleSize = 3, seed = 42L)
         .write.parquet(s"$idxRoot/v0"),
       () => existing.write.parquet(s"$docsRoot/v0"),
-      () => writeDailyFiles(incoming, in, 3))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        // the takedown lands before batch 1's probe: docs 0-9 (standing —
-        // strictly earlier than the marker's batch, per the tombstone
-        // contract) disappear from both stores from here on; a
-        // redelivered batch 1 re-issues the marker deterministically
-        if (id == 1L)
-          graft.streaming.NearDupStream.tombstone(spark, idxRoot, docsRoot,
-            0L until 10L, id)
-        graft.streaming.NearDupStream
-          .filterBatch(spark, idxRoot, docsRoot, outRoot, "doc_id", "text",
-            threshold = 0.4)(b, id)
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("doc_id"), lit(3)), root, 0 until 3))
+    replay(spark, root, incoming.schema) { (b, id) =>
+      // the takedown lands before batch 1's probe: docs 0-9 (standing —
+      // strictly earlier than the marker's batch, per the tombstone
+      // contract) disappear from both stores from here on; a
+      // redelivered batch 1 re-issues the marker deterministically
+      if (id == 1L)
+        graft.streaming.NearDupStream.tombstone(spark, idxRoot, docsRoot,
+          0L until 10L, id)
+      graft.streaming.NearDupStream
+        .filterBatch(spark, idxRoot, docsRoot, outRoot, "doc_id", "text",
+          threshold = 0.4)(b, id)
+    }
     spark.read.parquet(s"$outRoot/b*")
       .select(col("id_a"), col("id_b"), col("jaccard"), col("batch"))
       .orderBy("id_a", "id_b")
@@ -7843,28 +7550,18 @@ object Pipeline {
     val standing = docs.filter(col("doc_id") < 250)
     val incoming = docs.filter(col("doc_id") >= 250)
       .select(col("doc_id"), col("text"))
-      .withColumn("batch", pmod(col("doc_id"), lit(2)))
     val root = Files.createTempDirectory("p133_").toString
-    val in = s"$root/in"; val idxRoot = s"$root/idx"
+    val idxRoot = s"$root/idx"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => RetrievalStream.writeStanding(spark, idxRoot, standing),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (id == 1L)
-          RetrievalStream.tombstone(spark, idxRoot,
-            (0L until 120L) ++ (250L until 290L by 2), id)
-        RetrievalStream.appendBatch(spark, idxRoot)(b, id)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema) { (b, id) =>
+      if (id == 1L)
+        RetrievalStream.tombstone(spark, idxRoot,
+          (0L until 120L) ++ (250L until 290L by 2), id)
+      RetrievalStream.appendBatch(spark, idxRoot)(b, id)
+    }
     RetrievalStream.bm25TopK(spark, idxRoot, qTerms, k = 40)
   }
 
@@ -7906,33 +7603,21 @@ object Pipeline {
       .select((col("doc_id") + 100000).as("doc_id"),
         array_join(slice(TF.tokens(col("text")), 1, 12), " ").as("text"))
     val incoming = docs.filter(col("doc_id") >= 400).unionAll(planted)
-      .withColumn("batch", pmod(col("doc_id"), lit(2)))
     val root = Files.createTempDirectory("p134_").toString
-    val in = s"$root/in"; val idxRoot = s"$root/idx"
-    val outRoot = s"$root/out"
+    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
     val setsOf = (df: DataFrame) =>
       Dedup.jaccardShingleSets(df, "doc_id", "text")
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => ContainmentStream.writeStanding(spark, idxRoot, standing,
         setsOf),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (id == 1L)
-          ContainmentStream.tombstone(spark, idxRoot, 0L until 50L, id)
-        ContainmentStream.filterBatch(spark, idxRoot, outRoot, setsOf,
-          threshold = 0.6)(b, id)
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema) { (b, id) =>
+      if (id == 1L)
+        ContainmentStream.tombstone(spark, idxRoot, 0L until 50L, id)
+      ContainmentStream.filterBatch(spark, idxRoot, outRoot, setsOf,
+        threshold = 0.6)(b, id)
+    }
     spark.read.parquet(s"$outRoot/b*")
       .select(col("id_a"), col("id_b"), col("containment"), col("batch"))
       .orderBy("id_a", "id_b")
@@ -8007,9 +7692,8 @@ object Pipeline {
     val incoming = emb.filter(col("vec_id") >= 250 && col("vec_id") < 2250)
       .select(col("vec_id"), col("embedding"))
       .unionAll(plants)
-      .withColumn("batch", pmod(col("vec_id"), lit(2)))
     val root = Files.createTempDirectory("p135_").toString
-    val in = s"$root/in"; val bankRoot = s"$root/bank"
+    val bankRoot = s"$root/bank"
     val indexRoot = s"$root/index"; val outRoot = s"$root/out"
     val bank = IvfRelational.trainBank(standing, nCells = 16, iters = 3,
       stride = 15)
@@ -8017,26 +7701,17 @@ object Pipeline {
     graft.core.Par.run(
       () => graft.streaming.IvfStream.writeStanding(spark, bankRoot,
         indexRoot, standing, bank),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        // originals 0-9 are standing (v0) — strictly earlier than the
-        // marker's batch, per the tombstone contract; a redelivered
-        // batch 1 re-issues the marker deterministically
-        if (id == 1L)
-          graft.streaming.IvfStream.tombstone(spark, indexRoot,
-            0L until 10L, id)
-        graft.streaming.IvfStream.appendBatch(spark, bankRoot, indexRoot,
-          outRoot, "vec_id", "embedding")(b, id)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("vec_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema) { (b, id) =>
+      // originals 0-9 are standing (v0) — strictly earlier than the
+      // marker's batch, per the tombstone contract; a redelivered
+      // batch 1 re-issues the marker deterministically
+      if (id == 1L)
+        graft.streaming.IvfStream.tombstone(spark, indexRoot,
+          0L until 10L, id)
+      graft.streaming.IvfStream.appendBatch(spark, bankRoot, indexRoot,
+        outRoot, "vec_id", "embedding")(b, id)
+    }
     val idx = graft.streaming.IvfStream.readIndexFor(spark, indexRoot,
       bankRoot)
     val frozen = spark.read.parquet(s"$bankRoot/v0")
@@ -8115,33 +7790,23 @@ object Pipeline {
       .select(col("doc_id"), col("text")).unionAll(plant)
     val incoming = docs.filter(col("doc_id") >= 250)
       .select(col("doc_id"), col("text"))
-      .withColumn("batch", pmod(col("doc_id"), lit(2)))
     val root = Files.createTempDirectory("p136_").toString
-    val in = s"$root/in"; val idxRoot = s"$root/idx"
+    val idxRoot = s"$root/idx"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => RetrievalStream.writeStanding(spark, idxRoot, standing),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (id == 1L) {
-          val sweep = standing
-            .select(col("doc_id"), TF.qualityScoreFromTokens(col("text"),
-              TF.tokens(col("text"))).as("q"))
-            .filter(col("q") < 0.6)
-            .select(col("doc_id"))
-          RetrievalStream.tombstoneFrom(spark, idxRoot, sweep, id)
-        }
-        RetrievalStream.appendBatch(spark, idxRoot)(b, id)
+      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema) { (b, id) =>
+      if (id == 1L) {
+        val sweep = standing
+          .select(col("doc_id"), TF.qualityScoreFromTokens(col("text"),
+            TF.tokens(col("text"))).as("q"))
+          .filter(col("q") < 0.6)
+          .select(col("doc_id"))
+        RetrievalStream.tombstoneFrom(spark, idxRoot, sweep, id)
       }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      RetrievalStream.appendBatch(spark, idxRoot)(b, id)
+    }
     // corpus-drawn query vocabulary (p133's rule — doc 251 is incoming,
     // never swept): a literal list is vacuous at the zipf spot-gates
     val qTerms = docs.filter(col("doc_id") === 251)
@@ -8202,30 +7867,19 @@ object Pipeline {
     val incoming = images.filter(_.media_id >= 250).toDF()
       .select(col("media_id"), col("payload"))
       .unionAll(plants.toDF().select(col("media_id"), col("payload")))
-      .withColumn("batch", pmod(col("media_id"), lit(2)))
     val root = Files.createTempDirectory("p137_").toString
-    val in = s"$root/in"; val idxRoot = s"$root/idx"
-    val outRoot = s"$root/out"
+    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => AHashStream.writeStanding(spark, idxRoot, standing),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("media_id", LongType),
-      StructField("payload", BinaryType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (id == 1L)
-          graft.streaming.Versions.tombstoneFrom(spark, idxRoot,
-            standing.filter(col("media_id") < 30).select("media_id"), id)
-        AHashStream.appendBatch(spark, idxRoot, outRoot,
-          "media_id", "payload")(b, id)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("media_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema) { (b, id) =>
+      if (id == 1L)
+        graft.streaming.Versions.tombstoneFrom(spark, idxRoot,
+          standing.filter(col("media_id") < 30).select("media_id"), id)
+      AHashStream.appendBatch(spark, idxRoot, outRoot,
+        "media_id", "payload")(b, id)
+    }
     spark.read.parquet(s"$outRoot/b*")
       .select(col("id_a"), col("id_b"), col("hamming"), col("batch"))
       .orderBy("id_a", "id_b")
@@ -8271,34 +7925,23 @@ object Pipeline {
     val incoming = clips.filter(_.media_id >= 250).toDF()
       .select(col("media_id"), col("payload"))
       .unionAll(plants.toDF().select(col("media_id"), col("payload")))
-      .withColumn("batch", pmod(col("media_id"), lit(2)))
     val root = Files.createTempDirectory("p138_").toString
-    val in = s"$root/in"; val idxRoot = s"$root/idx"
-    val outRoot = s"$root/out"
+    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
     val profiler = (df: DataFrame) =>
       Multimodal.audioFpBytes(df, "media_id", "payload")
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => MediaFpStream.writeStanding(spark, idxRoot, standing, profiler),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("media_id", LongType),
-      StructField("payload", BinaryType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        // the relation form keeps the marker set to ids the store
-        // actually holds (audio ids < 30 — the 0..29 range also spans
-        // image/video ids this store never saw)
-        if (id == 1L)
-          graft.streaming.Versions.tombstoneFrom(spark, idxRoot,
-            standing.filter(col("media_id") < 30).select("media_id"), id)
-        MediaFpStream.appendBatch(spark, idxRoot, outRoot, profiler)(b, id)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, pmod(col("media_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema) { (b, id) =>
+      // the relation form keeps the marker set to ids the store
+      // actually holds (audio ids < 30 — the 0..29 range also spans
+      // image/video ids this store never saw)
+      if (id == 1L)
+        graft.streaming.Versions.tombstoneFrom(spark, idxRoot,
+          standing.filter(col("media_id") < 30).select("media_id"), id)
+      MediaFpStream.appendBatch(spark, idxRoot, outRoot, profiler)(b, id)
+    }
     spark.read.parquet(s"$outRoot/b*")
       .select(col("id_a"), col("id_b"), col("batch"))
       .orderBy("id_a", "id_b")
@@ -8375,9 +8018,7 @@ object Pipeline {
         array_join(slice(TF.tokens(col("text")), 1, 12), " ").as("text"))
     val incoming = docs.filter(col("doc_id") >= 250 && col("doc_id") < 2250)
       .unionAll(copies).unionAll(excerpts)
-      .withColumn("batch", pmod(col("doc_id"), lit(2)))
     val root = Files.createTempDirectory("p139_").toString
-    val in = s"$root/in"
     val ndIdx = s"$root/nd_idx"; val ndDocs = s"$root/nd_docs"
     val ndOut = s"$root/nd_out"; val bmRoot = s"$root/bm"
     val ctRoot = s"$root/ct"; val ctOut = s"$root/ct_out"
@@ -8401,52 +8042,43 @@ object Pipeline {
         IvfRelational.trainBank(standingVecs, nCells = 16, iters = 3,
           stride = 15)),
       () => standing.write.parquet(s"$corpusRoot/v0"),
-      () => writeDailyFilesBy(incoming, "batch", in, 2))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (id == 1L) {
-          // the ONE sweep: a distributed quality scan over standing data
-          // (strictly earlier than the marker's batch) ∪ a licensing id
-          // list — resolved once by takedownAll, fanned out from the
-          // journal to all five stores + the corpus under batch id 1
-          val sweep = standing.unionAll(qPlant)
-            .select(col("doc_id"), TF.qualityScoreFromTokens(col("text"),
-              TF.tokens(col("text"))).as("q"))
-            .filter(col("q") < 0.6).select(col("doc_id"))
-            .unionAll(spark.range(10).select(col("id").as("doc_id")))
-          Takedown.takedownAll(spark, s"$root/journal", sweep, id,
-            targets = Seq(
-              Takedown.Target("band index", ndIdx),
-              Takedown.Target("docs store", ndDocs),
-              Takedown.Target("bm25 postings",
-                (s: SparkSession, ids: DataFrame, b: Long) =>
-                  RetrievalStream.tombstoneFrom(s, bmRoot, ids, b)),
-              Takedown.Target("containment sets", ctRoot),
-              Takedown.Target("ivf assignments", ivfIdx)),
-            corpus = Some((corpusRoot, "doc_id")))
-          ()
-        }
-        // the four stores are independent (disjoint roots, one shared
-        // batch input) — overlap their per-trigger bodies (guide §2.6)
-        graft.core.Par.run(
-          () => { NearDupStream.filterBatch(spark, ndIdx, ndDocs, ndOut,
-            "doc_id", "text", threshold = 0.4)(b, id); () },
-          () => RetrievalStream.appendBatch(spark, bmRoot)(b, id),
-          () => { ContainmentStream.filterBatch(spark, ctRoot, ctOut,
-            setsOf, threshold = 0.6)(b, id); () },
-          () => IvfStream.appendBatch(spark, bankRoot, ivfIdx, ivfOut,
-            "vec_id", "embedding")(
-            emb.join(broadcast(b.select(col("doc_id").as("vec_id"))),
-              "vec_id"), id))
+      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2))
+    replay(spark, root, incoming.schema) { (b, id) =>
+      if (id == 1L) {
+        // the ONE sweep: a distributed quality scan over standing data
+        // (strictly earlier than the marker's batch) ∪ a licensing id
+        // list — resolved once by takedownAll, fanned out from the
+        // journal to all five stores + the corpus under batch id 1
+        val sweep = standing.unionAll(qPlant)
+          .select(col("doc_id"), TF.qualityScoreFromTokens(col("text"),
+            TF.tokens(col("text"))).as("q"))
+          .filter(col("q") < 0.6).select(col("doc_id"))
+          .unionAll(spark.range(10).select(col("id").as("doc_id")))
+        Takedown.takedownAll(spark, s"$root/journal", sweep, id,
+          targets = Seq(
+            Takedown.Target("band index", ndIdx),
+            Takedown.Target("docs store", ndDocs),
+            Takedown.Target("bm25 postings",
+              (s: SparkSession, ids: DataFrame, b: Long) =>
+                RetrievalStream.tombstoneFrom(s, bmRoot, ids, b)),
+            Takedown.Target("containment sets", ctRoot),
+            Takedown.Target("ivf assignments", ivfIdx)),
+          corpus = Some((corpusRoot, "doc_id")))
+        ()
       }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      // the four stores are independent (disjoint roots, one shared
+      // batch input) — overlap their per-trigger bodies (guide §2.6)
+      graft.core.Par.run(
+        () => { NearDupStream.filterBatch(spark, ndIdx, ndDocs, ndOut,
+          "doc_id", "text", threshold = 0.4)(b, id); () },
+        () => RetrievalStream.appendBatch(spark, bmRoot)(b, id),
+        () => { ContainmentStream.filterBatch(spark, ctRoot, ctOut,
+          setsOf, threshold = 0.6)(b, id); () },
+        () => IvfStream.appendBatch(spark, bankRoot, ivfIdx, ivfOut,
+          "vec_id", "embedding")(
+          emb.join(broadcast(b.select(col("doc_id").as("vec_id"))),
+            "vec_id"), id))
+    }
     val qTerms = docs.filter(col("doc_id") === 251)
       .select(explode(TF.tokens(col("text"))).as("term"))
       .distinct().orderBy("term").limit(4)
@@ -8665,37 +8297,27 @@ object Pipeline {
       .select(col("doc_id").as("id"),
         TF.qualityScoreFromTokens(col("text"),
           TF.tokens(col("text"))).as("score"))
+    val incoming = allDocs.filter(col("arr") >= 0)
+      .select(col("doc_id"), col("text"), col("arr").as("batch"))
     val root = Files.createTempDirectory("p140_").toString
-    val in = s"$root/in"
     // independent setup chains over the checkpointed fixture — overlap
     // them (guide §2.6)
     graft.core.Par.run(
       () => ClusterStream.writeStanding(spark, s"$root/cs",
         scored(allDocs.filter(col("arr") === -1)),
         pairsAll.filter(col("pb") === -1)),
-      () => writeDailyFilesBy(allDocs.filter(col("arr") >= 0)
-        .select(col("doc_id"), col("text"), col("arr").as("batch")),
-        "batch", in, 4))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (id == 2L)
-          // the takedown's own maintenance trigger (batch 2 stages an
-          // empty file): markers + component-local split/re-election
-          // repair occupy the v3 slot alone
-          ClusterStream.retract(spark, s"$root/cs", del.toDF("id"), id)
-        else
-          ClusterStream.foldBatch(spark, s"$root/cs")(scored(b),
-            pairsAll.filter(col("pb") === id)
-              .select(col("id_a"), col("id_b")), id)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, col("batch"), root, 0 until 4))
+    replay(spark, root, incoming.drop("batch").schema) { (b, id) =>
+      if (id == 2L)
+        // the takedown's own maintenance trigger (batch 2 stages an
+        // empty file): markers + component-local split/re-election
+        // repair occupy the v3 slot alone
+        ClusterStream.retract(spark, s"$root/cs", del.toDF("id"), id)
+      else
+        ClusterStream.foldBatch(spark, s"$root/cs")(scored(b),
+          pairsAll.filter(col("pb") === id)
+            .select(col("id_a"), col("id_b")), id)
+    }
     ClusterStream.readAssignments(spark, s"$root/cs")
       .select(lit("assign").as("part"), col("id").as("a"),
         col("cid").as("b"), lit(-1L).as("n"), lit(0.0).as("v"))
@@ -9114,31 +8736,21 @@ object Pipeline {
       .unionAll(plants.toDF().select(col("media_id"), col("payload"))
         .withColumn("batch", pmod(col("media_id"), lit(2)) * 2))
     val root = Files.createTempDirectory("p144_").toString
-    val in = s"$root/in"; val idxRoot = s"$root/idx"
-    val outRoot = s"$root/out"
+    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
       () => AHashStream.writeStanding(spark, idxRoot, standing),
-      () => writeDailyFilesBy(incoming, "batch", in, 3))
-    val schema = StructType(Seq(StructField("media_id", LongType),
-      StructField("payload", BinaryType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (id == 1L)
-          graft.streaming.Versions.tombstoneFrom(spark, idxRoot,
-            standing.filter(col("media_id") < 30).select("media_id"), id)
-        if (id == 2L)
-          graft.streaming.Versions.revive(spark, idxRoot,
-            standing.filter(col("media_id") < 15).select("media_id"), id)
-        AHashStream.appendBatch(spark, idxRoot, outRoot,
-          "media_id", "payload")(b, id)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      () => stage(incoming, col("batch"), root, 0 until 3))
+    replay(spark, root, incoming.drop("batch").schema) { (b, id) =>
+      if (id == 1L)
+        graft.streaming.Versions.tombstoneFrom(spark, idxRoot,
+          standing.filter(col("media_id") < 30).select("media_id"), id)
+      if (id == 2L)
+        graft.streaming.Versions.revive(spark, idxRoot,
+          standing.filter(col("media_id") < 15).select("media_id"), id)
+      AHashStream.appendBatch(spark, idxRoot, outRoot,
+        "media_id", "payload")(b, id)
+    }
     spark.read.parquet(s"$outRoot/b*")
       .select(col("id_a"), col("id_b"), col("hamming"), col("batch"))
       .orderBy("id_a", "id_b")
@@ -9208,7 +8820,7 @@ object Pipeline {
         TF.qualityScoreFromTokens(col("text"),
           TF.tokens(col("text"))).as("score"))
     val root = Files.createTempDirectory("p145_").toString
-    val in = s"$root/in"; val ndIdx = s"$root/ndidx"
+    val ndIdx = s"$root/ndidx"
     val ndDocs = s"$root/nddocs"; val ndOut = s"$root/ndout"
     val csRoot = s"$root/cs"; val outRoot = s"$root/out"
     // independent setup writes over the checkpointed standing corpus —
@@ -9220,68 +8832,59 @@ object Pipeline {
       () => standing.write.parquet(s"$ndDocs/v0"),
       () => ClusterStream.writeStanding(spark, csRoot, scored(standing),
         Dedup.minhashPairs(standing, "doc_id", "text", threshold = 0.4)),
-      () => writeDailyFilesBy(incoming, "batch", in, 4))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (id == 2L) {
-          // the takedown's own maintenance trigger: ONE journaled sweep
-          // fans to both near-dup stores AND the cluster store's
-          // component-local repair verb, all under batch id 2
-          Takedown.takedownAll(spark, s"$root/journal", del.toDF("id"), id,
-            targets = Seq(
-              Target("band index", ndIdx),
-              Target("docs store", ndDocs),
-              Target("cluster store",
-                (s: SparkSession, ids: DataFrame, bi: Long) =>
-                  ClusterStream.retract(s, csRoot, ids, bi))))
-          ()
-        } else {
-          // the re-ingest guard at the loop's front door (VERDICT r16
-          // next #4): a post-takedown batch carrying a dead id refuses
-          // loud — revive or a fresh ingest id, never a silent re-ingest
-          Takedown.guardReingest(spark,
-            Seq(ndIdx, ndDocs, s"$csRoot/assign"), b.select(col("doc_id")))
-          val pairs = NearDupStream.filterBatch(spark, ndIdx, ndDocs,
-            ndOut, "doc_id", "text", threshold = 0.4,
-            materializePairs = true)(
-            b.select(col("doc_id"), col("text")), id)
-          ClusterStream.foldBatch(spark, csRoot)(scored(b),
-            pairs.select(col("id_a"), col("id_b")), id)
-          // the verdict: keep iff the doc IS its cluster's canonical at
-          // fold time.
-          // r18: the verdict resolves from the fold's JUST-WRITTEN deltas
-          // instead of the full-store reads (each a window fold + eager
-          // checkpoint per trigger) — result-identical because the fold
-          // guarantees every batch doc an assign row in v{id+1}
-          // (newInPairs ∪ newSingles = the whole batch; the empty-pairs
-          // path writes all of it too) and every such doc's cid a live
-          // election row there (electCanon runs over ALL touched labels'
-          // full membership, new singletons included), and v{id+1} is by
-          // construction the newest version for exactly those ids/cids.
-          graft.streaming.Versions.read(spark, s"$csRoot/assign",
-              Seq(s"$csRoot/assign/v${id + 1}"))
-            .join(broadcast(b.select(col("doc_id").as("id"))), Seq("id"),
-              "left_semi")
-            .join(graft.streaming.Versions.read(spark, s"$csRoot/canon",
-                Seq(s"$csRoot/canon/v${id + 1}"))
-              .filter(col("n_members") > 0)
-              .select(col("cid"), col("keep_id")),
-              Seq("cid"))
-            .select(col("id").as("doc_id"), col("keep_id"),
-              graft.functions.SteadyLit.steadyLong(id).as("batch"),
-              when(col("keep_id") === col("id"), 1.0).otherwise(0.0)
-                .as("keep"))
-            .write.mode("overwrite").parquet(s"$outRoot/b$id")
-        }
+      () => stage(incoming, col("batch"), root, 0 until 4))
+    replay(spark, root, incoming.drop("batch").schema) { (b, id) =>
+      if (id == 2L) {
+        // the takedown's own maintenance trigger: ONE journaled sweep
+        // fans to both near-dup stores AND the cluster store's
+        // component-local repair verb, all under batch id 2
+        Takedown.takedownAll(spark, s"$root/journal", del.toDF("id"), id,
+          targets = Seq(
+            Target("band index", ndIdx),
+            Target("docs store", ndDocs),
+            Target("cluster store",
+              (s: SparkSession, ids: DataFrame, bi: Long) =>
+                ClusterStream.retract(s, csRoot, ids, bi))))
+        ()
+      } else {
+        // the re-ingest guard at the loop's front door (VERDICT r16
+        // next #4): a post-takedown batch carrying a dead id refuses
+        // loud — revive or a fresh ingest id, never a silent re-ingest
+        Takedown.guardReingest(spark,
+          Seq(ndIdx, ndDocs, s"$csRoot/assign"), b.select(col("doc_id")))
+        val pairs = NearDupStream.filterBatch(spark, ndIdx, ndDocs,
+          ndOut, "doc_id", "text", threshold = 0.4,
+          materializePairs = true)(
+          b.select(col("doc_id"), col("text")), id)
+        ClusterStream.foldBatch(spark, csRoot)(scored(b),
+          pairs.select(col("id_a"), col("id_b")), id)
+        // the verdict: keep iff the doc IS its cluster's canonical at
+        // fold time.
+        // r18: the verdict resolves from the fold's JUST-WRITTEN deltas
+        // instead of the full-store reads (each a window fold + eager
+        // checkpoint per trigger) — result-identical because the fold
+        // guarantees every batch doc an assign row in v{id+1}
+        // (newInPairs ∪ newSingles = the whole batch; the empty-pairs
+        // path writes all of it too) and every such doc's cid a live
+        // election row there (electCanon runs over ALL touched labels'
+        // full membership, new singletons included), and v{id+1} is by
+        // construction the newest version for exactly those ids/cids.
+        graft.streaming.Versions.read(spark, s"$csRoot/assign",
+            Seq(s"$csRoot/assign/v${id + 1}"))
+          .join(broadcast(b.select(col("doc_id").as("id"))), Seq("id"),
+            "left_semi")
+          .join(graft.streaming.Versions.read(spark, s"$csRoot/canon",
+              Seq(s"$csRoot/canon/v${id + 1}"))
+            .filter(col("n_members") > 0)
+            .select(col("cid"), col("keep_id")),
+            Seq("cid"))
+          .select(col("id").as("doc_id"), col("keep_id"),
+            graft.functions.SteadyLit.steadyLong(id).as("batch"),
+            when(col("keep_id") === col("id"), 1.0).otherwise(0.0)
+              .as("keep"))
+          .write.mode("overwrite").parquet(s"$outRoot/b$id")
       }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     spark.read.parquet(s"$outRoot/b*")
       .select(lit("v").as("part"), col("doc_id").as("a"),
         col("keep_id").as("b"), col("batch").cast("long").as("n"),
@@ -9418,7 +9021,7 @@ object Pipeline {
         .select((col("doc_id") + 10000000L).as("doc_id"), col("text"),
           pmod(col("doc_id"), lit(3)).as("batch")))
     val root = Files.createTempDirectory("p146_").toString
-    val in = s"$root/in"; val idxRoot = s"$root/idx"
+    val idxRoot = s"$root/idx"
     val docsRoot = s"$root/docs"; val outRoot = s"$root/out"
     // independent setup chains — overlap them (guide §2.6)
     graft.core.Par.run(
@@ -9426,35 +9029,25 @@ object Pipeline {
           numHashes = 64, bands = 16, shingleSize = 3, seed = 42L)
         .write.parquet(s"$idxRoot/v0"),
       () => existing.write.parquet(s"$docsRoot/v0"),
-      () => writeDailyFilesBy(incoming, "batch", in, 3))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (id == 1L)
-          graft.streaming.NearDupStream.tombstone(spark, idxRoot, docsRoot,
-            0L until 10L, id)
-        if (id == 2L) {
-          // the claim is withdrawn for 0-4: the generic verb suffices on
-          // mask-only stores — the retained rows come back into every
-          // read, no repair needed (the p144 aHash precedent, on text)
-          val rv = spark.range(5).select(col("id"))
-          // independent marker roots — overlap the two revives (§2.6)
-          graft.core.Par.run(
-            () => graft.streaming.Versions.revive(spark, idxRoot, rv, id),
-            () => graft.streaming.Versions.revive(spark, docsRoot, rv, id))
-        }
-        graft.streaming.NearDupStream
-          .filterBatch(spark, idxRoot, docsRoot, outRoot, "doc_id", "text",
-            threshold = 0.4)(b, id)
-        ()
+      () => stage(incoming, col("batch"), root, 0 until 3))
+    replay(spark, root, incoming.drop("batch").schema) { (b, id) =>
+      if (id == 1L)
+        graft.streaming.NearDupStream.tombstone(spark, idxRoot, docsRoot,
+          0L until 10L, id)
+      if (id == 2L) {
+        // the claim is withdrawn for 0-4: the generic verb suffices on
+        // mask-only stores — the retained rows come back into every
+        // read, no repair needed (the p144 aHash precedent, on text)
+        val rv = spark.range(5).select(col("id"))
+        // independent marker roots — overlap the two revives (§2.6)
+        graft.core.Par.run(
+          () => graft.streaming.Versions.revive(spark, idxRoot, rv, id),
+          () => graft.streaming.Versions.revive(spark, docsRoot, rv, id))
       }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      graft.streaming.NearDupStream
+        .filterBatch(spark, idxRoot, docsRoot, outRoot, "doc_id", "text",
+          threshold = 0.4)(b, id)
+    }
     spark.read.parquet(s"$outRoot/b*")
       .select(col("id_a"), col("id_b"), col("jaccard"), col("batch"))
       .orderBy("id_a", "id_b")
@@ -9556,7 +9149,7 @@ object Pipeline {
         TF.qualityScoreFromTokens(col("text"),
           TF.tokens(col("text"))).as("score"))
     val root = Files.createTempDirectory("p147_").toString
-    val in = s"$root/in"; val ndIdx = s"$root/ndidx"
+    val ndIdx = s"$root/ndidx"
     val ndDocs = s"$root/nddocs"; val ndOut = s"$root/ndout"
     val csRoot = s"$root/cs"; val outRoot = s"$root/out"
     // independent setup writes over the checkpointed standing corpus —
@@ -9567,79 +9160,70 @@ object Pipeline {
       () => standing.write.parquet(s"$ndDocs/v0"),
       () => ClusterStream.writeStanding(spark, csRoot, scored(standing),
         Dedup.minhashPairs(standing, "doc_id", "text", threshold = 0.4)),
-      () => writeDailyFilesBy(incoming, "batch", in, 5))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (id == 2L) {
-          Takedown.takedownAll(spark, s"$root/journal", del.toDF("id"), id,
-            targets = Seq(
-              Target("band index", ndIdx),
-              Target("docs store", ndDocs),
-              Target("cluster store",
-                (s: SparkSession, ids: DataFrame, bi: Long) =>
-                  ClusterStream.retract(s, csRoot, ids, bi))))
-          ()
-        } else if (id == 4L) {
-          // re-license: ONE journaled revive fanned to every store the
-          // takedown hit (Takedown.reviveAll — the same write-ahead
-          // intent-log protocol as the takedown direction): generic
-          // markers on the mask-only roots, the paired merge-repair
-          // verb on the cluster store. Sharing the journal root also
-          // exercises the vacuum cadence — the committed t2 journal is
-          // dropped on the way in.
-          Takedown.reviveAll(spark, s"$root/journal", rv.toDF("id"), id,
-            targets = Seq(
-              Target.revive("band index", ndIdx),
-              Target.revive("docs store", ndDocs),
-              Target("cluster store",
-                (s: SparkSession, ids: DataFrame, bi: Long) =>
-                  ClusterStream.revive(s, csRoot, ids, bi))))
-          ()
-        } else {
-          // the re-ingest guard at the loop's front door: a batch
-          // carrying a taken-down id refuses loud (revive or fresh id —
-          // never a silent same-id re-ingest)
-          Takedown.guardReingest(spark,
-            Seq(ndIdx, ndDocs, s"$csRoot/assign"), b.select(col("doc_id")))
-          val pairs = NearDupStream.filterBatch(spark, ndIdx, ndDocs,
-            ndOut, "doc_id", "text", threshold = 0.4,
-            materializePairs = true)(
-            b.select(col("doc_id"), col("text")), id)
-          ClusterStream.foldBatch(spark, csRoot)(scored(b),
-            pairs.select(col("id_a"), col("id_b")), id)
-          // r18: the verdict resolves from the fold's JUST-WRITTEN deltas
-          // instead of the full-store reads (each a window fold + eager
-          // checkpoint per trigger) — result-identical because the fold
-          // guarantees every batch doc an assign row in v{id+1}
-          // (newInPairs ∪ newSingles = the whole batch; the empty-pairs
-          // path writes all of it too) and every such doc's cid a live
-          // election row there (electCanon runs over ALL touched labels'
-          // full membership, new singletons included), and v{id+1} is by
-          // construction the newest version for exactly those ids/cids.
-          graft.streaming.Versions.read(spark, s"$csRoot/assign",
-              Seq(s"$csRoot/assign/v${id + 1}"))
-            .join(broadcast(b.select(col("doc_id").as("id"))), Seq("id"),
-              "left_semi")
-            .join(graft.streaming.Versions.read(spark, s"$csRoot/canon",
-                Seq(s"$csRoot/canon/v${id + 1}"))
-              .filter(col("n_members") > 0)
-              .select(col("cid"), col("keep_id")),
-              Seq("cid"))
-            .select(col("id").as("doc_id"), col("keep_id"),
-              graft.functions.SteadyLit.steadyLong(id).as("batch"),
-              when(col("keep_id") === col("id"), 1.0).otherwise(0.0)
-                .as("keep"))
-            .write.mode("overwrite").parquet(s"$outRoot/b$id")
-        }
+      () => stage(incoming, col("batch"), root, 0 until 5))
+    replay(spark, root, incoming.drop("batch").schema) { (b, id) =>
+      if (id == 2L) {
+        Takedown.takedownAll(spark, s"$root/journal", del.toDF("id"), id,
+          targets = Seq(
+            Target("band index", ndIdx),
+            Target("docs store", ndDocs),
+            Target("cluster store",
+              (s: SparkSession, ids: DataFrame, bi: Long) =>
+                ClusterStream.retract(s, csRoot, ids, bi))))
+        ()
+      } else if (id == 4L) {
+        // re-license: ONE journaled revive fanned to every store the
+        // takedown hit (Takedown.reviveAll — the same write-ahead
+        // intent-log protocol as the takedown direction): generic
+        // markers on the mask-only roots, the paired merge-repair
+        // verb on the cluster store. Sharing the journal root also
+        // exercises the vacuum cadence — the committed t2 journal is
+        // dropped on the way in.
+        Takedown.reviveAll(spark, s"$root/journal", rv.toDF("id"), id,
+          targets = Seq(
+            Target.revive("band index", ndIdx),
+            Target.revive("docs store", ndDocs),
+            Target("cluster store",
+              (s: SparkSession, ids: DataFrame, bi: Long) =>
+                ClusterStream.revive(s, csRoot, ids, bi))))
+        ()
+      } else {
+        // the re-ingest guard at the loop's front door: a batch
+        // carrying a taken-down id refuses loud (revive or fresh id —
+        // never a silent same-id re-ingest)
+        Takedown.guardReingest(spark,
+          Seq(ndIdx, ndDocs, s"$csRoot/assign"), b.select(col("doc_id")))
+        val pairs = NearDupStream.filterBatch(spark, ndIdx, ndDocs,
+          ndOut, "doc_id", "text", threshold = 0.4,
+          materializePairs = true)(
+          b.select(col("doc_id"), col("text")), id)
+        ClusterStream.foldBatch(spark, csRoot)(scored(b),
+          pairs.select(col("id_a"), col("id_b")), id)
+        // r18: the verdict resolves from the fold's JUST-WRITTEN deltas
+        // instead of the full-store reads (each a window fold + eager
+        // checkpoint per trigger) — result-identical because the fold
+        // guarantees every batch doc an assign row in v{id+1}
+        // (newInPairs ∪ newSingles = the whole batch; the empty-pairs
+        // path writes all of it too) and every such doc's cid a live
+        // election row there (electCanon runs over ALL touched labels'
+        // full membership, new singletons included), and v{id+1} is by
+        // construction the newest version for exactly those ids/cids.
+        graft.streaming.Versions.read(spark, s"$csRoot/assign",
+            Seq(s"$csRoot/assign/v${id + 1}"))
+          .join(broadcast(b.select(col("doc_id").as("id"))), Seq("id"),
+            "left_semi")
+          .join(graft.streaming.Versions.read(spark, s"$csRoot/canon",
+              Seq(s"$csRoot/canon/v${id + 1}"))
+            .filter(col("n_members") > 0)
+            .select(col("cid"), col("keep_id")),
+            Seq("cid"))
+          .select(col("id").as("doc_id"), col("keep_id"),
+            graft.functions.SteadyLit.steadyLong(id).as("batch"),
+            when(col("keep_id") === col("id"), 1.0).otherwise(0.0)
+              .as("keep"))
+          .write.mode("overwrite").parquet(s"$outRoot/b$id")
       }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     spark.read.parquet(s"$outRoot/b*")
       .select(lit("v").as("part"), col("doc_id").as("a"),
         col("keep_id").as("b"), col("batch").cast("long").as("n"),

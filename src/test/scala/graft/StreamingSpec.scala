@@ -71,6 +71,44 @@ class StreamingSpec extends SparkSpec {
     assert(sink.toSeq === want.toSeq)
   }
 
+  test("stage + replay: a root staged in two phases replays each batch " +
+      "once, in batch order, and never re-stamps earlier files") {
+    // The registry's streaming harness (p89 drains, compacts, then stages
+    // the rest): a second stage() into the same root must leave the first
+    // phase's mtimes alone, and replay() resumes from the same checkpoint.
+    import java.io.File
+    import java.nio.file.Files
+    import graft.queries.Pipeline.{replay, stage}
+    import spark.implicits._
+    val root = Files.createTempDirectory("replay_").toString
+    // ids stripe across the batches, which hold 4, 4 and 3 rows
+    val rows = (0L until 11L).map(i => (i, s"t$i", (i % 3).toInt))
+    val incoming = rows.toDF("id", "txt", "batch")
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[Long])]
+    def drain(): Unit =
+      replay(spark, root, incoming.drop("batch").schema) { (b, id) =>
+        seen += ((id, b.select("id").as[Long].collect().toSet))
+      }
+    def stamps(): Map[String, Long] = new File(s"$root/in").listFiles()
+      .filter(_.getName.startsWith("part-"))
+      .map(f => f.getName -> f.lastModified()).toMap
+    stage(incoming, col("batch"), root, Seq(0, 1))
+    drain()
+    val first = stamps()
+    stage(incoming, col("batch"), root, Seq(2))
+    drain()
+    val last = stamps()
+
+    assert(seen.map(_._1).toSeq === Seq(0L, 1L, 2L))
+    val want = (0 until 3).map(b => rows.filter(_._3 == b).map(_._1).toSet)
+    assert(seen.map(_._2).toSeq === want)
+    assert(first.size === 2 && last.size === 3)
+    first.foreach { case (name, t) =>
+      assert(last(name) === t, s"$name was re-stamped by the second stage")
+    }
+    assert((last -- first.keys).values.forall(_ > first.values.max))
+  }
+
   test("DSv2 paged stream: one page per micro-batch, drains to EOF bound") {
     import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
