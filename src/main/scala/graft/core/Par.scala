@@ -51,10 +51,12 @@ import scala.util.control.NonFatal
   * which takes precedence — and the remaining failures ride along via
   * `addSuppressed`, so multi-store fan-out diagnostics survive. The join
   * loop is interrupt-safe: an interrupt of the calling thread (stream
-  * stop, test timeout) is remembered and re-asserted AFTER every worker
-  * has been joined — Par never unwinds while a worker write is still in
-  * flight (two live writers on one batch-id-named dir is the one race
-  * the sequential code could not have). Held writer leases
+  * stop, test timeout) is passed on to the workers still running once
+  * they have had [[InterruptGraceMs]] to finish, and re-asserted AFTER
+  * every worker has been joined — Par never unwinds while a worker write
+  * is still in flight (two live writers on one batch-id-named dir is the
+  * one race the sequential code could not have), and a hung worker no
+  * longer makes the caller impossible to stop. Held writer leases
   * ([[graft.streaming.Versions.withLease]]) propagate to the workers:
   * the scope is logically the caller's, whatever thread runs the
   * write. */
@@ -78,6 +80,11 @@ object Par {
         s"SPARK_GRAFT_PAR_CAP must be a non-negative integer, got '$s'"))
   }
   private val permits = new Semaphore(cap)
+
+  /** How long a caller interrupt waits for the workers before it is
+    * passed on to them: long enough for a write that is about to land,
+    * short enough that a stream stop is not held up by a hung worker. */
+  private[graft] val InterruptGraceMs = 2000L
 
   /** Run the thunks concurrently (bounded — see object doc), wait for
     * all, return results in order. Rethrows the first (argument-order)
@@ -111,16 +118,29 @@ object Par {
     val spawnedIdx = spawned.map(_._1).toSet
     attempt(0)
     (1 until thunks.size).foreach(i => if (!spawnedIdx(i)) attempt(i))
-    // interrupt-safe join: remember the interrupt, keep joining every
-    // worker, re-assert it once no write is in flight anymore
-    var interrupted = false
+    // interrupt-safe join: remember the interrupt, give the workers the
+    // grace to finish, then interrupt the ones still running; keep
+    // joining every worker, re-assert the interrupt once no write is in
+    // flight anymore
+    var interruptedAt = Option.empty[Long]
+    var passedOn = false
     spawned.foreach { case (_, th) =>
-      var joined = false
-      while (!joined)
-        try { th.join(); joined = true }
-        catch { case _: InterruptedException => interrupted = true }
+      while (th.isAlive)
+        try interruptedAt match {
+          case Some(t0) if !passedOn =>
+            val left = InterruptGraceMs - (System.nanoTime() - t0) / 1000000L
+            if (left > 0) th.join(left)
+            else {
+              spawned.foreach(_._2.interrupt())
+              passedOn = true
+            }
+          case _ => th.join()
+        } catch {
+          case _: InterruptedException =>
+            if (interruptedAt.isEmpty) interruptedAt = Some(System.nanoTime())
+        }
     }
-    if (interrupted) Thread.currentThread().interrupt()
+    if (interruptedAt.nonEmpty) Thread.currentThread().interrupt()
     val failures = thunks.indices.flatMap(i => Option(err.get(i)))
     if (failures.nonEmpty) {
       val primary = failures.find(e => !NonFatal(e)).getOrElse(failures.head)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.UnionFind
 import graft.functions.{HashFunctions, TextFunctions}
 
 /** Deduplication operators for corpus curation — exact, MinHash-LSH,
@@ -731,6 +732,9 @@ object Dedup {
     }
   }
 
+  /** Edge rows per loop partition — also the one-task path's budget. */
+  private val LoopEdgesPerPartition = 4000000L
+
   /** Run `body` with `spark.sql.shuffle.partitions` scaled to the edge-set
     * size, restoring the session value afterwards. Iterative CC rounds run
     * dozens of tiny stages over an already-contracted edge set; full-width
@@ -745,7 +749,8 @@ object Dedup {
     val conf = df.sparkSession.conf
     val key = "spark.sql.shuffle.partitions"
     val before = conf.get(key)
-    val target = math.min(before.toLong, edgeRows / 4000000L + 1).max(1L)
+    val target = math.min(before.toLong, edgeRows / LoopEdgesPerPartition + 1)
+      .max(1L)
     conf.set(key, target.toString)
     try body finally conf.set(key, before)
   }
@@ -766,7 +771,9 @@ object Dedup {
     * set contracts toward per-component stars rooted at the minimum id.
     * Equality with min-label propagation is asserted across graph shapes in
     * DedupSimilaritySpec. Throws on `maxIter` exhaustion rather than
-    * returning partially-contracted labels. */
+    * returning partially-contracted labels. Long-id edge sets within the
+    * loop's 4M-edge budget skip the rounds: one task labels them with an
+    * in-memory union-find (see [[starWithRounds]]). */
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 30): DataFrame =
     starWithRounds(pairs, maxIter)._1
 
@@ -797,30 +804,42 @@ object Dedup {
       .repartitionByRange(col("_1"), col("_2"))
       .as[(Long, Long)]
       .mapPartitions { it =>
-        val parent = scala.collection.mutable.LongMap.empty[Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          var c = x
-          while (c != r) { val n = parent.getOrElse(c, c); parent.update(c, r); c = n }
-          r
-        }
-        it.foreach { case (a, b) =>
-          parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-          val ra = find(a); val rb = find(b)
-          if (ra < rb) parent.update(rb, ra)
-          else if (rb < ra) parent.update(ra, rb)
-        }
-        parent.keysIterator.toArray.iterator.flatMap { x =>
-          val r = find(x)
-          if (r != x) Iterator((x, r)) else Iterator.empty
-        }
+        val uf = new UnionFind
+        it.foreach { case (a, b) => uf.union(a, b) }
+        uf.labels.filter { case (x, r) => r != x }
       }
       .toDF("src", "dst")
   }
 
+  /** The one-task path of [[starWithRounds]]: every edge of the
+    * checkpointed edge set streams through ONE task (`coalesce(1)`, no
+    * exchange) into the shared min-root union-find, which emits the final
+    * `(id, component)` label of every node — roots label themselves. A
+    * null endpoint is a node of its own exactly as in the loop's node set:
+    * the other endpoint still gets a label, and one `(null, null)` row
+    * stands for the null id. Memory is the union-find's ~16 bytes/node
+    * under the caller's 4M-edge budget. */
+  private def oneTaskLabels(base: DataFrame): DataFrame = {
+    val spark = base.sparkSession
+    import spark.implicits._
+    base.select(col("id_a").as("_1"), col("id_b").as("_2")).coalesce(1)
+      .as[(Option[Long], Option[Long])]
+      .mapPartitions { it =>
+        val uf = new UnionFind
+        var sawNull = false
+        it.foreach {
+          case (Some(a), Some(b)) => uf.union(a, b)
+          case (a, b) => sawNull = true; a.foreach(uf.add); b.foreach(uf.add)
+        }
+        uf.labels.map { case (x, r) => (Option(x), Option(r)) } ++
+          (if (sawNull) Iterator((None, None)) else Iterator.empty)
+      }
+      .toDF("id", "component")
+  }
+
   /** [[connectedComponentsStar]] plus the number of contraction rounds — the
-    * O(log n) bound is the whole point of the variant, so tests assert it. */
+    * O(log n) bound is the whole point of the variant, so tests assert it
+    * (0 on the one-task path). */
   private[graft] def starWithRounds(
       pairs: DataFrame, maxIter: Int,
       localContract: Boolean = true): (DataFrame, Int) = {
@@ -828,12 +847,24 @@ object Dedup {
     // node set, the initial edge set, and every loop round derive from it
     val base = pairs.select(col("id_a"), col("id_b")).localCheckpoint(true)
     val edgeRows = base.count()
+    // LongType edge sets (every graft id) go through the union-find;
+    // other id types enter the loop raw.
+    val preContract = localContract && base.schema.fields.forall(
+      _.dataType == org.apache.spark.sql.types.LongType)
+    // One-task path (guide §1.2 "remove passes"): an edge set within the
+    // loop's own 4M-edges-per-partition budget fits one union-find, whose
+    // labels ARE the loop's fixed point — so the node distinct, the
+    // range-partition sample, the per-round window/checkpoint/checksum
+    // actions and the label join are all skipped, and the session's
+    // shuffle width is never touched (store verbs overlap their jobs
+    // through Par; a session-wide conf write would leak into siblings).
+    // Larger edge sets keep the O(log n) distributed rounds unchanged.
+    if (preContract && edgeRows <= LoopEdgesPerPartition)
+      return (oneTaskLabels(base), 0)
     withLoopParallelism(base, edgeRows) {
-    // eager on purpose: the returned labels frame is consumed several
-    // times by the fold callers (touched resolution + two delta writes),
-    // and each consumer would re-run this distinct at session width if it
-    // were lazy — measured 2 s SLOWER on p147 when r18 tried dropping it
-    // (the r17 readAssignments lazy-fold dead end, repeated)
+    // eager on purpose: the returned labels frame can be consumed several
+    // times, and each consumer would re-run this distinct at session
+    // width if it were lazy
     val nodes = base.select(col("id_a").as("id"))
       .unionAll(base.select(col("id_b").as("id"))).distinct()
       .localCheckpoint(true)
@@ -877,46 +908,23 @@ object Dedup {
         .filter(col("src") =!= col("dst")).distinct()
     }
 
-    // LongType edge sets (every graft id) go through the union-find
-    // pre-pass so the loop below starts from local stars; other id types
-    // enter the loop raw.
-    val preContract = localContract && base.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    // Single-partition fast path (r17, guide §1.2 "remove passes"): when
-    // the edge set is small enough that withLoopParallelism already runs
-    // the loop at ONE shuffle partition, the union-find pre-pass coalesced
-    // to one partition IS the answer — its (x, find(x)) output points every
-    // non-root member at its component's global minimum id, exactly the
-    // loop's fixed point — so the per-round window/checkpoint/checksum
-    // actions (the dominant cost of batch-sized folds: rounds, not rows)
-    // are skipped outright. Bounded by the same 4M-edges-per-partition
-    // budget the loop's own parallelism rule uses; larger edge sets keep
-    // the O(log n) distributed rounds unchanged. The edge-budget check is
-    // asserted IN-PATH (r18, VERDICT r17 #5): the conf string alone would
-    // reroute every consumer through the fast path under a caller-set
-    // global partitions=1 — correct only because the pre-pass fixed point
-    // needs all edges in ONE partition, which the budget is what ensures.
-    val onePartition = preContract && edgeRows <= 4000000L &&
-      base.sparkSession.conf.get("spark.sql.shuffle.partitions") == "1"
     var edges =
       (if (preContract) this.localContract(base)
        else base.select(col("id_a").as("src"), col("id_b").as("dst")))
       .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
     var iter = 0
-    if (!onePartition) {
-      var prev = checksum(edges)
-      var converged = false
-      while (!converged && iter < maxIter) {
-        edges = smallStar(largeStar(edges)).localCheckpoint(true)
-        val cur = checksum(edges)
-        converged = cur == prev
-        prev = cur
-        iter += 1
-      }
-      if (!converged) throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxIter rounds " +
-          "(expected O(log n)); the edge set is still contracting. Raise maxIter.")
+    var prev = checksum(edges)
+    var converged = false
+    while (!converged && iter < maxIter) {
+      edges = smallStar(largeStar(edges)).localCheckpoint(true)
+      val cur = checksum(edges)
+      converged = cur == prev
+      prev = cur
+      iter += 1
     }
+    if (!converged) throw new IllegalStateException(
+      s"connectedComponentsStar did not converge in $maxIter rounds " +
+        "(expected O(log n)); the edge set is still contracting. Raise maxIter.")
     // stars: (child, root); roots and any original singleton-by-dedup nodes
     // label themselves
     (nodes.join(edges, col("id") === col("src"), "left")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.SteadyLit
 
@@ -40,6 +40,13 @@ import graft.operators.Dedup
   *     repair must re-run connectivity INSIDE affected components over the
   *     retained pairs (deletion can SPLIT a component — decremental
   *     connectivity is recomputed component-locally, never corpus-wide).
+  *
+  * Ingest ([[foldBatch]]) solves each batch's CONTRACTED graph — new ids
+  * plus the cids its pairs touch — in memory on the driver with the shared
+  * min-root [[graft.core.UnionFind]]: the pair delta is pulled once, so
+  * driver memory is O(batch pairs), and the only distributed work left
+  * per trigger is the touched clusters' membership read, their relabel
+  * and the election (a touched cluster can be a mega-cluster).
   *
   * Takedown ([[retract]]): markers land on the assign + pairs roots
   * ([[Versions.tombstone]] contract — deleted docs vanish from every
@@ -240,17 +247,61 @@ object ClusterStream {
     else assigns.join(broadcast(cids.select(col("cid")).distinct()), "cid")
   }
 
+  /** `df` restricted to rows whose `key` is in `ids`: a pushed `key IN`
+    * literal up to `limit` ids (parquet row-group pruning on a compacted,
+    * cid-clustered base), a broadcast semi-join of the local id relation
+    * beyond. */
+  private def restrictTo(df: DataFrame, key: String, ids: Seq[Long],
+      limit: Int): DataFrame =
+    if (ids.size <= limit) df.filter(col(key).isin(ids: _*))
+    else {
+      val spark = df.sparkSession
+      import spark.implicits._
+      df.join(broadcast(ids.toDF(key)), Seq(key), "left_semi")
+    }
+
+  /** `df` plus `__nl`: the label `labels` maps `key` to, or `key` itself
+    * where it maps nothing. Up to `limit` labels travel as one map literal
+    * (a projection — no join, no broadcast job); beyond, a broadcast left
+    * join of the local label relation. */
+  private def relabel(df: DataFrame, key: String, labels: Seq[(Long, Long)],
+      limit: Int): DataFrame =
+    if (labels.size <= limit)
+      df.withColumn("__nl",
+        coalesce(typedLit(labels.toMap).apply(col(key)), col(key)))
+    else {
+      val spark = df.sparkSession
+      import spark.implicits._
+      df.join(broadcast(labels.toDF(key, "__nl")), Seq(key), "left")
+        .withColumn("__nl", coalesce(col("__nl"), col(key)))
+    }
+
   /** The `foreachBatch` fold: merge one batch of docs (idCol, scoreCol)
     * and its pair delta into the standing state. Per-batch work is
-    * batch-sized plus the touched clusters' membership read: endpoints
-    * resolve to their cids (cid = min member id, so the merged label is
-    * the min over batch ids and touched cids), star contraction runs on
-    * the BATCH-LOCAL contracted graph, and only clusters whose label
-    * changes are rewritten. The standing corpus never re-clusters. */
+    * batch-sized plus the touched clusters' membership read; the standing
+    * corpus never re-clusters.
+    *
+    * The contracted batch graph is solved IN MEMORY on the driver: the
+    * masked pair delta (already checkpointed for its `pairs/v<b+1>` write)
+    * is pulled once, ONE lookup resolves every endpoint to its current cid,
+    * and a [[graft.core.UnionFind]] whose roots are minimum ids merges the
+    * batch's new ids with the touched cids — cid = min member id, so the
+    * root of a touched cid IS the merged cluster's label. Driver memory is
+    * O(batch pairs). The touched labels and the new docs' labels then
+    * travel into the plans as literals (local relations past
+    * `pushCidLimit`), so only the touched clusters' membership read, its
+    * relabel and the election run distributed — a touched cluster can be
+    * a mega-cluster.
+    *
+    * Each doc arrives once: a batch doc id that already has an assignment
+    * at `upTo = batchId` is refused with an `IllegalArgumentException`
+    * naming it (re-ingested content takes a fresh id,
+    * [[Takedown.guardReingest]]). The check rides in the same lookup. */
   def foldBatch(spark: SparkSession, root: String, idCol: String = "id",
       scoreCol: String = "score", pushCidLimit: Int = 1024,
       lease: Option[Versions.Lease] = None)(
       batchDocs: DataFrame, batchPairs: DataFrame, batchId: Long): Unit = {
+    import spark.implicits._
     val ar = assignRoot(root); val cr = canonRoot(root)
     val pr = pairsRoot(root)
     assignSpec.guardAppend(spark, ar, batchId, lease)
@@ -263,31 +314,47 @@ object ClusterStream {
     // two live clusters through a deleted doc (ADVICE r15 #2). The
     // masked fold equals the fold over the retained-pair stream.
     // The two batch-sized materializations are independent — overlap
-    // them (guide §2.6) so the trigger pays one action's wall, not two.
-    // bp's emptiness probe rides INSIDE its own thunk (r18): it is one
-    // more cheap action over the just-checkpointed frame, and running it
-    // under bd's overlapped wall removes a serialized driver action from
-    // every fold trigger.
-    val staged = graft.core.Par.eval(Seq[() => (DataFrame, Boolean)](
-      () => {
-        val d = batchDocs
+    // them (guide §2.6); bp's driver pull rides inside its own thunk, one
+    // cheap action over the just-checkpointed frame under bd's wall.
+    val staged = graft.core.Par.eval(Seq[() => (DataFrame, Array[Row])](
+      () => (batchDocs
           .select(col(idCol).as("id"),
             col(scoreCol).cast("double").as("score"))
-          .localCheckpoint(true)
-        (d, false)
-      },
+          .localCheckpoint(true), Array.empty[Row]),
       () => {
         val d = Versions.maskTombstones(spark, ar,
             Versions.maskTombstones(spark, ar,
               batchPairs.select(col("id_a"), col("id_b")), "id_a", batchId),
             "id_b", batchId)
           .localCheckpoint(true)
-        (d, d.isEmpty)
+        (d, d.collect())
       }))
-    val bd = staged(0)._1
-    val bp = staged(1)._1
+    // batch-sized: every delta row derived from bd lands in ONE file (the
+    // checkpoint above still ran at the batch's own parallelism)
+    val bd = staged(0)._1.coalesce(1)
+    val (bp, pairRows) = staged(1)
     val v = batchId + 1
-    if (staged(1)._2) {
+    val ends = pairRows.flatMap(r =>
+      (0 to 1).filterNot(r.isNullAt).map(r.getLong)).distinct.sorted.toSeq
+    val assigns = readAssignments(spark, root, upTo = batchId)
+    // the one lookup: (id, cid, false) per endpoint with an assignment,
+    // (id, cid, true) per batch doc with one (refused below), and
+    // (id, null, true) per batch doc that is an endpoint
+    val keys = ends.toDF("id").select(col("id"), lit(false).as("__new"))
+      .unionByName(bd.select(col("id"), lit(true).as("__new")))
+    val lookup = assigns.select(col("id"), col("cid"))
+      .join(broadcast(keys), Seq("id"))
+      .unionByName(restrictTo(bd, "id", ends, pushCidLimit).select(col("id"),
+        lit(null).cast("long").as("cid"), lit(true).as("__new")))
+      .collect()
+    val reused = lookup.filter(r => r.getBoolean(2) && !r.isNullAt(1))
+      .map(_.getLong(0)).distinct.sorted
+    if (reused.nonEmpty) throw new IllegalArgumentException(
+      s"ClusterStream.foldBatch: batch $batchId carries doc id(s) " +
+        s"${reused.take(10).mkString(", ")} that already have an " +
+        s"assignment under $root — each doc arrives once; re-ingested " +
+        "content takes a fresh id")
+    if (pairRows.isEmpty) {
       // no connectivity: every batch doc is a fresh singleton. The three
       // delta writes are independent (distinct roots, redelivery
       // overwrites any completion subset) — overlap them (guide §2.6).
@@ -301,87 +368,73 @@ object ClusterStream {
         () => bp.write.mode("overwrite").parquet(s"$pr/v$v"))
       return
     }
-    val assigns = readAssignments(spark, root, upTo = batchId)
-    // old endpoints (not in this batch) resolve to their cluster ids;
-    // a doc the store has never seen (pair against a not-yet-folded
-    // singleton) falls back to labeling itself
-    val pairDocs = bp.select(col("id_a").as("id"))
-      .unionAll(bp.select(col("id_b").as("id"))).distinct()
-    val oldCids = pairDocs
-      .join(bd.select(col("id")), Seq("id"), "left_anti")
-      .join(assigns.select(col("id"), col("cid")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("cid"), col("id")).as("cid"))
-      .localCheckpoint(true)
     // contract the batch graph: new ids stay nodes, old ids become their
-    // cluster's node — the batch-local graph is batch-sized
-    val mapped = bp
-      .join(oldCids.select(col("id").as("id_a"), col("cid").as("__ca")),
-        Seq("id_a"), "left")
-      .join(oldCids.select(col("id").as("id_b"), col("cid").as("__cb")),
-        Seq("id_b"), "left")
-      .select(coalesce(col("__ca"), col("id_a")).as("id_a"),
-        coalesce(col("__cb"), col("id_b")).as("id_b"))
-    // ccStar's result is a cheap join over its own internally-checkpointed
-    // edge/node sets — re-deriving it per consumer costs less than the
-    // extra materialization job an eager checkpoint would add (r17)
-    val comp = Dedup.connectedComponentsStar(mapped)
+    // cluster's node
+    val cidOf = scala.collection.mutable.Map(lookup.filterNot(_.getBoolean(2))
+      .map(r => r.getLong(0) -> r.getLong(1)).toIndexedSeq: _*)
+    val isNew = lookup.filter(_.getBoolean(2)).map(_.getLong(0)).toSet
+    val edges = scala.collection.mutable.ArrayBuffer.from(pairRows.collect {
+      case r if !r.isNullAt(0) && !r.isNullAt(1) => (r.getLong(0), r.getLong(1))
+    })
+    // an endpoint that is neither assigned nor a batch doc has never been
+    // seen as a doc (a pair against a not-yet-folded singleton): it is a
+    // node of the stored pair graph with no stored label, so walk its
+    // stored (masked) pairs out to the first assigned docs — the solve
+    // then sees every cluster and every smaller unseen id its component
+    // holds. Pairs from the near-dup filter never take this path.
+    var frontier = ends.filterNot(x => isNew(x) || cidOf.contains(x))
+    val walked = scala.collection.mutable.Set(frontier: _*)
+    lazy val stored = readPairs(spark, root, upTo = batchId)
+      .filter(col("id_a").isNotNull && col("id_b").isNotNull)
+    while (frontier.nonEmpty) {
+      val hop = restrictTo(stored, "id_a", frontier, pushCidLimit)
+        .unionAll(restrictTo(stored, "id_b", frontier, pushCidLimit))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      edges ++= hop
+      val reached = hop.flatMap(e => Seq(e._1, e._2)).distinct
+        .filterNot(walked).toSeq
+      cidOf ++= restrictTo(assigns, "id", reached, pushCidLimit)
+        .select(col("id"), col("cid")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1))
+      frontier = reached.filterNot(cidOf.contains)
+      walked ++= reached
+    }
+    val uf = new graft.core.UnionFind
+    val node = (x: Long) => cidOf.getOrElse(x, x)
+    ends.foreach(x => uf.add(node(x)))
+    edges.foreach { case (a, b) => uf.union(node(a), node(b)) }
     // touched clusters → their merged label: min over member doc ids ==
-    // min over (batch ids, touched cids) because cid = min member id.
-    // r18 (the fold's critical chain): touched is batch-bounded (one row
-    // per cid a pair endpoint resolves to), so ONE driver pull replaces
-    // the old eager checkpoint PLUS membersOf's separate cid collect —
-    // two serialized actions become one — and every downstream join sees
-    // a LocalRelation (smaller plans, the pushed `cid IN` comes free).
-    // A touched set wider than pushCidLimit keeps the distributed path.
-    val touchedPlan = comp
-      .join(oldCids.select(col("cid").as("id")).distinct(), Seq("id"),
-        "left_semi")
-      .select(col("id").as("cid"), col("component").as("__nl"))
-    val touchedRows = touchedPlan.limit(pushCidLimit + 1).collect()
-    val (touched, touchedMembers) =
-      if (touchedRows.length <= pushCidLimit) {
-        import spark.implicits._
-        val local = touchedRows.map(r => (r.getLong(0), r.getLong(1)))
-          .toSeq.toDF("cid", "__nl")
-        val cids = touchedRows.map(_.getLong(0)).toSeq
-        (local, assigns.filter(col("cid").isin(cids: _*)))
-      } else {
-        val ck = touchedPlan.localCheckpoint(true)
-        (ck, membersOf(assigns, ck, pushCidLimit))
-      }
-    val oldMembers = touchedMembers
-      .join(broadcast(touched), Seq("cid"))
+    // min over (batch ids, touched cids) because cid = min member id
+    val touched = (ends ++ walked).filterNot(isNew).map(node).distinct
+      .map(c => c -> uf.find(c))
+    val newLabels = ends.filter(isNew).map(x => x -> uf.find(x))
+    val oldMembers = relabel(restrictTo(assigns, "cid", touched.map(_._1),
+        pushCidLimit), "cid", touched, pushCidLimit)
       .select(col("id"), col("cid"), col("score"), col("__nl"))
       .localCheckpoint(true)
-    val newInPairs = bd.join(pairDocs, Seq("id"), "left_semi")
-      .join(comp.select(col("id"), col("component").as("__nl")), Seq("id"))
-      .select(col("id"), col("score"), col("__nl"))
-    val newSingles = bd.join(pairDocs, Seq("id"), "left_anti")
-      .select(col("id"), col("score"), col("id").as("__nl"))
-    // single consumer (the election below) — no checkpoint needed
-    val allMembers = oldMembers.select(col("id"), col("score"), col("__nl"))
-      .unionAll(newInPairs).unionAll(newSingles)
+    // batch docs outside every pair keep their own id as label
+    val newDocs = relabel(bd, "id", newLabels, pushCidLimit)
+      .select(col("id"), col("__nl").as("cid"), col("score"))
+    // one partition: the merged-away labels are a handful of driver rows
+    val dead = touched.collect { case (c, nl) if c != nl =>
+        (c, -1L, 0.0, 0L, v) }
+      .toDF("cid", "keep_id", "score", "n_members", "__v").coalesce(1)
     // the three delta writes are independent (distinct roots, redelivery
     // overwrites any completion subset) — overlap them (guide §2.6);
-    // their shared inputs (bd/bp/oldCids/touched/oldMembers) are all
-    // eagerly checkpointed above, so the concurrent plans re-derive only
-    // the cheap final joins
+    // oldMembers is checkpointed above, every other input is bd, bp or
+    // a driver-side literal
     graft.core.Par.run(
       // assignment delta: every new doc + every relabeled old member
       () => oldMembers.filter(col("cid") =!= col("__nl"))
-        .select(col("id"), col("__nl").as("cid"), col("score"),
-          SteadyLit.steadyLong(v).as("__v"))
-        .unionAll(newInPairs.unionAll(newSingles)
-          .select(col("id"), col("__nl").as("cid"), col("score"),
-            SteadyLit.steadyLong(v).as("__v")))
+        .select(col("id"), col("__nl").as("cid"), col("score"))
+        .unionAll(newDocs)
+        .withColumn("__v", SteadyLit.steadyLong(v))
         .write.mode("overwrite").parquet(s"$ar/v$v"),
       // canonical delta: re-elect every touched label, kill merged-away
       // ones
-      () => electCanon(allMembers.select(col("id"), col("__nl").as("cid"),
-          col("score")), v)
-        .unionByName(touched.filter(col("cid") =!= col("__nl"))
-          .select(col("cid"), lit(-1L).as("keep_id"), lit(0.0).as("score"),
-            lit(0L).as("n_members"), SteadyLit.steadyLong(v).as("__v")))
+      () => electCanon(oldMembers.select(col("id"), col("__nl").as("cid"),
+          col("score")).unionAll(newDocs), v)
+        .unionByName(dead)
         .write.mode("overwrite").parquet(s"$cr/v$v"),
       () => bp.write.mode("overwrite").parquet(s"$pr/v$v"))
   }

@@ -2,8 +2,9 @@ package graft.tools
 
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Dev tool (guide §1): run named registry queries with a listener that
   * attributes per-job wall time to the submitting call site, so the
@@ -65,20 +66,35 @@ object QueryJobProfile {
 }
 
 /** The listener behind [[QueryJobProfile]]: one [[JobAttribution.Job]] per
-  * started job, keyed to its `callSite.short`. Each completed stage's tasks
-  * go to the job whose `SparkListenerJobStart.stageIds` listed it first, so
-  * jobs that overlap (store verbs run theirs through `Par`) keep their own
-  * tasks; a stage a later job reuses stays with the job that ran it. */
+  * started job, named by its call site. Each completed stage's tasks go to
+  * the job whose `SparkListenerJobStart.stageIds` listed it first, so jobs
+  * that overlap (store verbs run theirs through `Par`) keep their own
+  * tasks; a stage a later job reuses stays with the job that ran it.
+  *
+  * The call site is the job's `callSite.short` property when a caller set
+  * one, else the name of its final stage (the highest stage id), which
+  * Spark sets to the submitting call site. AQE submits its stage jobs —
+  * and, since the final stage became a query stage too, the action's own
+  * job — from a future, so those are named `… at CompletableFuture.java:…`;
+  * [[jobs]] credits each of them to the job of the same
+  * `spark.sql.execution.id` that carries a real site, or else to the
+  * execution's own description (its call site, from the SQL
+  * execution-start event). */
 private[graft] class JobAttribution extends SparkListener {
   import JobAttribution.Job
   private val byJob = new ConcurrentHashMap[Int, Job]()
   private val byStage = new ConcurrentHashMap[Int, Job]()
+  private val execSite = new ConcurrentHashMap[Long, String]()
 
   override def onJobStart(e: SparkListenerJobStart): Unit = {
-    val site = Option(e.properties)
-      .flatMap(p => Option(p.getProperty("callSite.short")))
+    val props = Option(e.properties)
+    val site = props.flatMap(p => Option(p.getProperty("callSite.short")))
+      .orElse(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
       .getOrElse("?")
-    val j = Job(e.jobId, site, System.nanoTime())
+    val exec = props
+      .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+      .map(_.toLong)
+    val j = Job(e.jobId, site, System.nanoTime(), exec)
     byJob.put(e.jobId, j)
     e.stageIds.foreach(byStage.putIfAbsent(_, j))
   }
@@ -87,13 +103,30 @@ private[graft] class JobAttribution extends SparkListener {
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
     Option(byStage.get(e.stageInfo.stageId))
       .foreach(_.tasks += e.stageInfo.numTasks)
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart =>
+      execSite.put(s.executionId, s.description)
+    case _ => ()
+  }
 
-  /** The jobs started since the last [[clear]], in start (= id) order. */
-  def jobs: Seq[Job] = byJob.values.asScala.toSeq.sortBy(_.id)
-  def clear(): Unit = { byJob.clear(); byStage.clear() }
+  /** The jobs started since the last [[clear]], in start (= id) order,
+    * AQE future-submitted jobs credited to their execution's call site. */
+  def jobs: Seq[Job] = {
+    val all = byJob.values.asScala.toSeq.sortBy(_.id)
+    def fromFuture(j: Job) = j.site.contains(" at CompletableFuture.java:")
+    val actionSite = all.filterNot(fromFuture)
+      .flatMap(j => j.exec.map(_ -> j.site)).reverse.toMap
+    all.map { j =>
+      if (!fromFuture(j)) j
+      else j.exec.flatMap(x => actionSite.get(x)
+          .orElse(Option(execSite.get(x))))
+        .fold(j)(s => j.copy(site = s))
+    }
+  }
+  def clear(): Unit = { byJob.clear(); byStage.clear(); execSite.clear() }
 }
 
 private[graft] object JobAttribution {
   final case class Job(id: Int, site: String, t0: Long,
-      var tEnd: Long = 0L, var tasks: Int = 0)
+      exec: Option[Long] = None, var tEnd: Long = 0L, var tasks: Int = 0)
 }

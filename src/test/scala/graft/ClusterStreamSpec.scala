@@ -387,4 +387,95 @@ class ClusterStreamSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("no repair delta"), e.getMessage)
   }
+
+  test("foldBatch refuses a batch doc id that already has an assignment, " +
+      "naming it, and writes nothing; a redelivered batch is no re-arrival") {
+    val root = java.nio.file.Files.createTempDirectory("cs_once_").toString
+    ClusterStream.writeStanding(spark, root, docsDF(1L to 5L),
+      pairsDF(Seq((1L, 2L))))
+    val standing = readState(root)
+    // a standing cluster member re-arrives next to a new doc it pairs with
+    val e = intercept[IllegalArgumentException] {
+      ClusterStream.foldBatch(spark, root)(docsDF(Seq(6L, 2L)),
+        pairsDF(Seq((6L, 2L))), 0L)
+    }
+    assert(e.getMessage.contains("doc id(s) 2 "), e.getMessage)
+    // a standing singleton re-arrives in a batch with no pairs at all
+    val e2 = intercept[IllegalArgumentException] {
+      ClusterStream.foldBatch(spark, root)(docsDF(Seq(7L, 4L)),
+        pairsDF(Seq.empty), 0L)
+    }
+    assert(e2.getMessage.contains("doc id(s) 4 "), e2.getMessage)
+    assert(!new java.io.File(s"$root/assign/v1").exists &&
+      !new java.io.File(s"$root/canon/v1").exists)
+    assert(readState(root) === standing)
+    // the same batch id delivered twice sees only the versions before it
+    (1 to 2).foreach(_ => ClusterStream.foldBatch(spark, root)(
+      docsDF(Seq(6L)), pairsDF(Seq((6L, 2L))), 0L))
+    assert(readState(root) === batchAnswer(docsDF(1L to 6L),
+      pairsDF(Seq((1L, 2L), (6L, 2L)))))
+  }
+
+  /** At least 20 seeded folds over random pairs, compared with the batch
+    * answer after every fold. Pairs mix in-batch edges, new docs joining
+    * old clusters (a new id below the old label relabels the cluster to
+    * it), bridges between old clusters, pairs to ids that never arrive
+    * and pairs to ids retracted before the sequence (masked). */
+  private def randomFolds(pushCidLimit: Int): Unit = {
+    val rnd = new scala.util.Random(20261018L)
+    var pool = rnd.shuffle((0L until 400L).toVector)
+    def take(n: Int): Seq[Long] = {
+      val (a, b) = pool.splitAt(n); pool = b; a
+    }
+    def pick(xs: Seq[Long]): Long = xs(rnd.nextInt(xs.size))
+    val neverSeen = take(15)
+    val standing = take(40)
+    val standingPairs = Seq.fill(25)((pick(standing), pick(standing)))
+      .filter(p => p._1 != p._2)
+    val root = java.nio.file.Files.createTempDirectory("cs_rand_").toString
+    ClusterStream.writeStanding(spark, root, docsDF(standing),
+      pairsDF(standingPairs))
+    val deleted = standing.take(4)
+    ClusterStream.retract(spark, root, deleted.toDF("id"), 0L,
+      pushCidLimit = pushCidLimit)
+    var live = standing.drop(4)
+    var pairs = standingPairs
+    var before = readState(root)._1.toMap
+    var relabeledDown = 0
+    var bridged = 0
+    for (b <- 1L to 20L) {
+      val docs = take(4 + rnd.nextInt(4))
+      val old = live
+      val ps = Seq.fill(3 + rnd.nextInt(6)) {
+        rnd.nextInt(6) match {
+          case 0 => (pick(docs), pick(docs))
+          case 1 => (pick(docs), pick(old))
+          case 2 => (pick(old), pick(old))
+          case 3 => (pick(docs), pick(neverSeen))
+          case 4 => (pick(old), pick(neverSeen))
+          case _ => (pick(docs ++ old), pick(deleted))
+        }
+      }.filter(p => p._1 != p._2)
+      ClusterStream.foldBatch(spark, root, pushCidLimit = pushCidLimit)(
+        docsDF(docs), pairsDF(ps), b)
+      live ++= docs; pairs ++= ps
+      val state = readState(root)
+      assert(state === batchAnswer(docsDF(live), pairsDF(pairs.filterNot(
+        p => deleted.contains(p._1) || deleted.contains(p._2)))),
+        s"fold $b (pushCidLimit $pushCidLimit) diverged")
+      val after = state._1.toMap
+      if (before.exists { case (id, c) => after(id) < c }) relabeledDown += 1
+      if (before.groupBy(_._2).size >
+          before.map { case (id, _) => after(id) }.toSet.size) bridged += 1
+      before = after
+    }
+    // the sequence really exercised the merge paths (non-vacuous)
+    assert(relabeledDown > 0 && bridged > 0, (relabeledDown, bridged))
+  }
+
+  test("a seeded sequence of 20 folds over random pairs equals the batch " +
+      "answer after every fold, at the default pushCidLimit and at 0") {
+    randomFolds(pushCidLimit = 1024)
+    randomFolds(pushCidLimit = 0)
+  }
 }

@@ -96,23 +96,26 @@ class DedupSimilaritySpec extends SparkSpec {
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
   }
 
-  test("star-contraction components equal min-propagation across graph shapes") {
-    // worst cases for each algorithm: a 60-node chain (diameter 59 — the
-    // propagation worst case), a clique, a star, two cycles, plus three
-    // seeded random graphs
+  // worst cases for each components algorithm: a 60-node chain (diameter
+  // 59 — the propagation worst case), a clique, a star, two cycles
+  private val planted = {
     val chain = (1L until 60L).map(i => (i, i + 1))
     val clique = for (a <- 100L to 107L; b <- (a + 1) to 107L) yield (a, b)
     val star = (201L to 210L).map(i => (200L, i))
     val cycles = Seq((300L, 301L), (301L, 302L), (302L, 300L),
       (400L, 401L), (401L, 402L), (402L, 403L), (403L, 400L))
-    val planted = chain ++ clique ++ star ++ cycles
-    def randomGraph(seed: Long): Seq[(Long, Long)] =
-      (0 until 150).map { i =>
-        val a = 1000L + (graft.functions.Hash64.mix(seed * 31 + i).abs % 100)
-        val b = 1000L + (graft.functions.Hash64.mix(seed * 77 + i).abs % 100)
-        (a, b)
-      }.filter(p => p._1 != p._2)
+    chain ++ clique ++ star ++ cycles
+  }
+  private type E = (Option[Long], Option[Long])
+  private def randomGraph(seed: Long): Seq[(Long, Long)] =
+    (0 until 150).map { i =>
+      val a = 1000L + (graft.functions.Hash64.mix(seed * 31 + i).abs % 100)
+      val b = 1000L + (graft.functions.Hash64.mix(seed * 77 + i).abs % 100)
+      (a, b)
+    }.filter(p => p._1 != p._2)
 
+  test("star-contraction components equal min-propagation across graph shapes") {
+    // the planted worst cases plus three seeded random graphs
     for (edges <- Seq(planted, randomGraph(1), randomGraph(2), randomGraph(3))) {
       val df = edges.toDF("id_a", "id_b")
       val prop = Dedup.connectedComponents(df, maxIter = 100)
@@ -195,6 +198,41 @@ class DedupSimilaritySpec extends SparkSpec {
       raw.orderBy("id").collect().toSeq)
     assert(roundsFast <= roundsRaw,
       s"pre-contraction took $roundsFast rounds vs raw $roundsRaw")
+  }
+
+  test("one-task path: at the session's own partition count the union-find " +
+      "labels equal the distributed loop's, in one partition, and the " +
+      "session's shuffle width is never written") {
+    val key = "spark.sql.shuffle.partitions"
+    val width = spark.conf.get(key)
+    assert(width !== "1", "the suite must run wider than one partition")
+    def some(es: Seq[(Long, Long)]): Seq[E] =
+      es.map { case (a, b) => (Some(a), Some(b)) }
+    val withNulls: Seq[E] = Seq((Some(1L), None), (None, Some(2L)),
+      (None, None), (Some(3L), Some(4L)), (Some(4L), Some(1L)),
+      (Some(5L), Some(5L)))
+    val duplicated = some(planted ++ planted ++ planted.map(_.swap))
+    val graphs = Seq(some(planted), some(randomGraph(1)),
+      some(randomGraph(2)), some(randomGraph(3)), withNulls, duplicated)
+    for (edges <- graphs) {
+      val df = edges.toDF("id_a", "id_b")
+      val (fast, rounds) = Dedup.starWithRounds(df, maxIter = 30)
+      assert(spark.conf.get(key) === width)
+      assert(rounds === 0, "edge sets within the 4M budget take one task")
+      assert(fast.rdd.getNumPartitions === 1)
+      val (loop, _) =
+        Dedup.starWithRounds(df, maxIter = 30, localContract = false)
+      def rows(l: org.apache.spark.sql.DataFrame) =
+        l.select("id", "component").as[E].collect().toSeq
+          .sortBy(_.toString)
+      assert(rows(fast) === rows(loop), s"paths disagree on ${edges.take(5)}")
+      assert(spark.conf.get(key) === width)
+    }
+    // null endpoints: the non-null ends still label, null is one node
+    val (nl, _) = Dedup.starWithRounds(withNulls.toDF("id_a", "id_b"), 30)
+    assert(nl.select("id", "component").as[E].collect().toSet === Set[E](
+      (Some(1L), Some(1L)), (Some(2L), Some(2L)), (Some(3L), Some(1L)),
+      (Some(4L), Some(1L)), (Some(5L), Some(5L)), (None, None)))
   }
 
   test("nearDupKept keeps cluster representatives and untouched rows") {

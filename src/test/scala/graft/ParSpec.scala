@@ -133,6 +133,32 @@ class ParSpec extends SparkSpec {
     assert(sawInterrupt, "the caller's interrupt flag was not re-asserted")
   }
 
+  test("a caller interrupt is passed on to a worker still running after " +
+      "the grace: Par.run ends instead of waiting out a hung worker") {
+    @volatile var workerInterrupted = false
+    @volatile var callerFlag = false
+    @volatile var ended = false
+    val t = new Thread(() => {
+      try Par.run(
+          () => (), // caller-run thunk
+          () => try Thread.sleep(60000) catch {
+            case e: InterruptedException => workerInterrupted = true; throw e
+          })
+      catch { case _: InterruptedException => () }
+      callerFlag = Thread.currentThread().isInterrupted
+      ended = true
+    })
+    val t0 = System.nanoTime()
+    t.start()
+    Thread.sleep(200)
+    t.interrupt()
+    t.join(20000)
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(ended && secs < 10, f"Par.run still blocked after $secs%.1f s")
+    assert(workerInterrupted, "the worker never saw the interrupt")
+    assert(callerFlag, "the caller's interrupt flag was not re-asserted")
+  }
+
   test("overlapped independent writes land byte-identically to the " +
       "sequential order") {
     val base = java.nio.file.Files.createTempDirectory("par_eq_").toString

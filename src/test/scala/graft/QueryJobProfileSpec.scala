@@ -2,14 +2,15 @@ package graft
 
 import java.util.Properties
 import org.apache.spark.scheduler.{JobSucceeded, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions._
 
 import graft.tools.JobAttribution
 
-/** [[graft.tools.QueryJobProfile]]'s per-call-site attribution, driven
-  * with synthetic listener events so the interleaving is fixed rather
-  * than timing-dependent. */
-class QueryJobProfileSpec extends AnyFunSuite {
+/** [[graft.tools.QueryJobProfile]]'s per-call-site attribution: driven
+  * with synthetic listener events where the interleaving must be fixed
+  * rather than timing-dependent, and on the real session where the call
+  * sites must come from Spark itself. */
+class QueryJobProfileSpec extends SparkSpec {
 
   private def stage(id: Int, tasks: Int) = new StageInfo(id, 0, s"stage $id",
     tasks, Seq.empty, Seq.empty, "", resourceProfileId = 0)
@@ -42,5 +43,36 @@ class QueryJobProfileSpec extends AnyFunSuite {
     assert(js.forall(_.tEnd > 0))
     l.clear()
     assert(l.jobs.isEmpty)
+  }
+
+  test("on a real session every job is named by its call site: a " +
+      "localCheckpoint and a shuffled collect, AQE stage jobs included, " +
+      "are credited to this file's lines") {
+    def line: Int = new Throwable().getStackTrace()(1).getLineNumber
+    val l = new JobAttribution
+    spark.sparkContext.addSparkListener(l)
+    val (ckLine, collectLine) =
+      try {
+        val ck = line; spark.range(50).toDF("id").localCheckpoint(true)
+        val co = line; spark.range(100).groupBy(col("id") % 3).count()
+          .collect()
+        // the listener bus is asynchronous: wait for both actions' events
+        val deadline = System.nanoTime() + 20000000000L
+        while (System.nanoTime() < deadline &&
+            !(l.jobs.count(_.tEnd > 0) >= 3 &&
+              l.jobs.exists(_.site.endsWith(s":$co"))))
+          Thread.sleep(50)
+        (ck, co)
+      } finally spark.sparkContext.removeSparkListener(l)
+    val js = l.jobs
+    val sites = js.map(_.site)
+    assert(!sites.contains("?") &&
+      !sites.exists(_.contains("CompletableFuture")), sites)
+    assert(sites.contains(
+      s"localCheckpoint at QueryJobProfileSpec.scala:$ckLine"), sites)
+    // the shuffled collect runs as AQE stage jobs only (map stage, then
+    // the result stage): both carry the collect's own site
+    assert(sites.count(_ == s"collect at QueryJobProfileSpec.scala:" +
+      s"$collectLine") >= 2, sites)
   }
 }
