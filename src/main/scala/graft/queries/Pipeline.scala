@@ -7420,7 +7420,7 @@ object Pipeline {
   // the missing corpus-maintenance verb): p79's fixture with a MID-STREAM
   // tombstone. Batch 0 probes the full standing corpus; before batch 1's
   // probe, standing docs 0-9 are retracted from BOTH stores
-  // (NearDupStream.tombstone — a broadcast anti-join mask over the band
+  // (NearDupStream.tombstone — a driver-resolved dead-id mask over the band
   // index and the docs store), so the +10000 byte-identical plants of
   // those docs arriving in batches 1 and 2 find NOTHING to pair with,
   // while the batch-0 plant's jaccard-1.0 pair (emitted before the
@@ -7520,7 +7520,7 @@ object Pipeline {
   // propagate past the posting rows into the SCORING STATISTICS — a
   // deleted doc leaves n_docs, total_dl (so every idf and every length
   // normalization shifts) and the per-term df counts. The engine masks
-  // postings with a broadcast anti-join and retracts each deleted doc's
+  // postings by the driver-resolved dead ids and retracts each deleted doc's
   // exact (1, dl) from the stats fold via the doclen relation
   // (RetrievalStream.tombstone); the oracle simply runs the UNCHANGED
   // sqlBm25 chain over `documents` minus the deleted set — a green hash
@@ -7666,7 +7666,7 @@ object Pipeline {
   // index). p105's fixture with byte-identical plants: the incoming
   // stream carries +10000 copies of standing vectors 0-9, and before
   // batch 1's append those ORIGINALS are retracted from the assignment
-  // index (IvfStream.tombstone — broadcast anti-join mask on read,
+  // index (IvfStream.tombstone — dead-id mask on read,
   // physically dropped at compaction). The post-stream probe runs the
   // plants' own embeddings through the assembled masked index via
   // IvfRelational.topKIndexed — the probe-session form over the

@@ -26,12 +26,14 @@ import graft.operators.Dedup
   *     RELABELS (cluster merges/splits rewrite whole clusters — the min-id
   *     invariant `cid = min member id` is maintained inductively, which is
   *     what makes merge labels computable from cids alone). Read = base
-  *     minus delta-superseded ids (broadcast anti-join — delta ids are
-  *     recent-batch-sized) plus newest-per-id over the DELTAS only, so the
-  *     per-batch fold never runs a store-wide window; compaction folds
-  *     back to one row per id, clustered by `cid` so the fold's
-  *     cluster-membership reads prune the base scan by a pushed `cid IN`
-  *     (the trickle-probe posture of the other stores).
+  *     minus delta-superseded ids plus the newest row per id over the
+  *     DELTAS only, both resolved on the driver once per listing (delta
+  *     ids are recent-batch-sized: an `IN` literal on the base, the rows
+  *     a local relation), so no read runs a window, a checkpoint or a
+  *     store-wide exchange; compaction folds back to one row per id,
+  *     clustered by `cid` so the fold's cluster-membership reads prune
+  *     the base scan by a pushed `cid IN` (the trickle-probe posture of
+  *     the other stores).
   *   - `root/canon/v*` — (cid, keep_id, score, n_members, __v) election
   *     rows, newest-per-cid; a label that merges away or loses all
   *     retained members gets a DEAD row (n_members = 0) so reads stay
@@ -139,9 +141,9 @@ object ClusterStream {
         col("__b.score").as("score"), col("n_members"), SteadyLit.steadyLong(v).as("__v"))
 
   /** Current assignments: base v0 (one row per id) superseded by the
-    * newest delta row per id, tombstoned ids masked. The newest-per-id
-    * window runs over DELTAS only — recent-batch-sized until compaction
-    * folds them into the base. */
+    * newest delta row per id, tombstoned ids masked. Both small sides —
+    * the delta overlay and the dead set — are resolved on the driver once
+    * per listing ([[baseOverNewest]], [[Versions.maskTombstones]]). */
   def readAssignments(spark: SparkSession, root: String,
       upTo: Long = Long.MaxValue): DataFrame =
     readAssignmentsMasked(spark, root, upTo, upTo)
@@ -164,24 +166,37 @@ object ClusterStream {
 
   /** A base-plus-deltas root read: `v0` (one row per `key`, the
     * writeStanding/compact invariant) superseded by the newest delta row
-    * per key. The newest-per-key window runs over the DELTAS only —
-    * recent-batch-sized until compaction folds them into the base — and
-    * the base joins back through a broadcast anti-join, never a
-    * store-wide window. */
+    * per key. The deltas are recent-batch-sized until compaction folds
+    * them into the base, so their rows are resolved on the driver
+    * ([[Versions.resolveRows]], once per listing) and the newest row per
+    * key is taken there: no window, no checkpoint. The base drops the
+    * superseded keys ([[Versions.withoutIds]]: an `IN` literal, or a
+    * broadcast local relation past its limit) and the newest rows join it
+    * as a local relation — a repeated read of an unchanged version set
+    * runs no action before its own. */
   private def baseOverNewest(spark: SparkSession, root: String, key: String,
       upTo: Long): DataFrame = {
     val versions = Versions.list(spark, root).filter(_._1 <= upTo)
     require(versions.exists(_._1 == 0L), s"no base at $root/v0")
     val base = Versions.read(spark, root,
       versions.filter(_._1 == 0L).map(_._2.toString))
-    val deltaDirs = versions.filter(_._1 > 0L).map(_._2.toString)
-    if (deltaDirs.isEmpty) base
+    val deltas = versions.filter(_._1 > 0L)
+      .map { case (_, p) => Versions.resolveRows(spark, root, p) }
+    if (deltas.isEmpty) base
     else {
-      val newest = Versions.newestPerKey(key)(
-          Versions.read(spark, root, deltaDirs))
-        .localCheckpoint(true)
-      base.join(broadcast(newest.select(col(key))), Seq(key), "left_anti")
-        .unionByName(newest)
+      val schema = deltas.head._1
+      val (k, v) = (schema.fieldIndex(key), schema.fieldIndex("__v"))
+      // ascending batch order: among equal __v the later delta wins
+      val newest = scala.collection.mutable.LinkedHashMap[Any, Row]()
+      for ((_, rows) <- deltas; r <- rows) {
+        val kv = r.get(k)
+        if (newest.get(kv).forall(_.getLong(v) <= r.getLong(v)))
+          newest(kv) = r
+      }
+      val keys = newest.keys.collect { case id: Long => id }.toSeq
+      Versions.withoutIds(base, key, keys).unionByName(
+        spark.createDataFrame(
+          java.util.Arrays.asList(newest.values.toSeq: _*), schema))
     }
   }
 
@@ -233,20 +248,6 @@ object ClusterStream {
     }
   }
 
-  /** Assignment slice for a (takedown/batch-sized) cid set: pushed
-    * `cid IN` literal when the set is small enough for parquet row-group
-    * pruning on a compacted cid-clustered base (the
-    * [[NearDupStream.filterBatch]] pushBucketLimit pattern), broadcast
-    * join fallback otherwise. `cids` must be materialized (it is read up
-    * to `limit + 1` rows). */
-  private def membersOf(assigns: DataFrame, cids: DataFrame,
-      pushCidLimit: Int = 1024): DataFrame = {
-    val some = cids.select(col("cid")).distinct()
-      .limit(pushCidLimit + 1).collect().map(_.getLong(0)).toSeq
-    if (some.size <= pushCidLimit) assigns.filter(col("cid").isin(some: _*))
-    else assigns.join(broadcast(cids.select(col("cid")).distinct()), "cid")
-  }
-
   /** `df` restricted to rows whose `key` is in `ids`: a pushed `key IN`
     * literal up to `limit` ids (parquet row-group pruning on a compacted,
     * cid-clustered base), a broadcast semi-join of the local id relation
@@ -276,6 +277,45 @@ object ClusterStream {
         .withColumn("__nl", coalesce(col("__nl"), col(key)))
     }
 
+  /** The pairs of `stored` with an endpoint in `ids`: one scan with a
+    * pushed `id_a IN … OR id_b IN …` up to `limit` ids, two broadcast
+    * semi-joins of the local id relation beyond (a pair with both ends in
+    * `ids` then comes back twice). */
+  private def pairsTouching(stored: DataFrame, ids: Seq[Long],
+      limit: Int): DataFrame =
+    if (ids.size <= limit)
+      stored.filter(col("id_a").isin(ids: _*) || col("id_b").isin(ids: _*))
+    else restrictTo(stored, "id_a", ids, limit)
+      .unionAll(restrictTo(stored, "id_b", ids, limit))
+
+  /** Walk the stored pair graph out from `frontier`, ids that never
+    * arrived as docs, hop by hop until every reached id is assigned:
+    * returns the walked pairs, the reached ids' cids and every id walked
+    * or reached. One pair read and one assignment read per hop; stores
+    * whose pairs join arrived docs only never take a hop. */
+  private def walkUnseen(stored: DataFrame, assigns: DataFrame,
+      frontier: Seq[Long], limit: Int)
+      : (Seq[(Long, Long)], Map[Long, Long], Set[Long]) = {
+    val edges = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+    val cidOf = scala.collection.mutable.Map[Long, Long]()
+    val walked = scala.collection.mutable.Set(frontier: _*)
+    var next = frontier
+    while (next.nonEmpty) {
+      val hop = pairsTouching(stored, next, limit)
+        .select(col("id_a"), col("id_b"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      edges ++= hop
+      val reached = hop.flatMap(e => Seq(e._1, e._2)).distinct
+        .filterNot(walked).toSeq
+      cidOf ++= restrictTo(assigns, "id", reached, limit)
+        .select(col("id"), col("cid")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1))
+      next = reached.filterNot(cidOf.contains)
+      walked ++= reached
+    }
+    (edges.toSeq, cidOf.toMap, walked.toSet)
+  }
+
   /** The `foreachBatch` fold: merge one batch of docs (idCol, scoreCol)
     * and its pair delta into the standing state. Per-batch work is
     * batch-sized plus the touched clusters' membership read; the standing
@@ -296,7 +336,11 @@ object ClusterStream {
     * Each doc arrives once: a batch doc id that already has an assignment
     * at `upTo = batchId` is refused with an `IllegalArgumentException`
     * naming it (re-ingested content takes a fresh id,
-    * [[Takedown.guardReingest]]). The check rides in the same lookup. */
+    * [[Takedown.guardReingest]]). The check rides in the same lookup, and
+    * so do the stored pairs touching a batch doc: an id first seen only as
+    * a pair endpoint (possibly a cluster's label) is already a node of a
+    * stored component, so when it arrives as a doc it joins that cluster
+    * and the re-election counts every member. */
   def foldBatch(spark: SparkSession, root: String, idCol: String = "id",
       scoreCol: String = "score", pushCidLimit: Int = 1024,
       lease: Option[Versions.Lease] = None)(
@@ -314,13 +358,17 @@ object ClusterStream {
     // two live clusters through a deleted doc (ADVICE r15 #2). The
     // masked fold equals the fold over the retained-pair stream.
     // The two batch-sized materializations are independent — overlap
-    // them (guide §2.6); bp's driver pull rides inside its own thunk, one
-    // cheap action over the just-checkpointed frame under bd's wall.
+    // them (guide §2.6); each driver pull (the batch's ids, its pairs)
+    // rides inside its own thunk, one cheap action over the
+    // just-checkpointed frame.
     val staged = graft.core.Par.eval(Seq[() => (DataFrame, Array[Row])](
-      () => (batchDocs
+      () => {
+        val d = batchDocs
           .select(col(idCol).as("id"),
             col(scoreCol).cast("double").as("score"))
-          .localCheckpoint(true), Array.empty[Row]),
+          .localCheckpoint(true)
+        (d, d.select(col("id")).collect())
+      },
       () => {
         val d = Versions.maskTombstones(spark, ar,
             Versions.maskTombstones(spark, ar,
@@ -332,29 +380,41 @@ object ClusterStream {
     // batch-sized: every delta row derived from bd lands in ONE file (the
     // checkpoint above still ran at the batch's own parallelism)
     val bd = staged(0)._1.coalesce(1)
+    val docIds = staged(0)._2.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSeq
+    val isNew = docIds.toSet
     val (bp, pairRows) = staged(1)
     val v = batchId + 1
     val ends = pairRows.flatMap(r =>
       (0 to 1).filterNot(r.isNullAt).map(r.getLong)).distinct.sorted.toSeq
     val assigns = readAssignments(spark, root, upTo = batchId)
-    // the one lookup: (id, cid, false) per endpoint with an assignment,
-    // (id, cid, true) per batch doc with one (refused below), and
-    // (id, null, true) per batch doc that is an endpoint
-    val keys = ends.toDF("id").select(col("id"), lit(false).as("__new"))
-      .unionByName(bd.select(col("id"), lit(true).as("__new")))
-    val lookup = assigns.select(col("id"), col("cid"))
+    val stored = readPairs(spark, root, upTo = batchId)
+      .filter(col("id_a").isNotNull && col("id_b").isNotNull)
+    // stored pairs touching a batch doc: an id that first appeared only
+    // as a pair endpoint is already a node of a stored component, and
+    // joins that component when it arrives as a doc
+    val touch = pairsTouching(stored, docIds, pushCidLimit)
+    // the one lookup: (id, cid, false) per assigned batch doc (refused
+    // below), batch-pair endpoint or endpoint of a stored pair touching a
+    // batch doc, and (id_a, id_b, true) per stored pair touching a batch
+    // doc
+    val keys = (ends ++ docIds).toDF("id")
+      .unionAll(touch.select(explode(array(col("id_a"), col("id_b")))
+        .as("id")))
+    val (edgeRows, assigned) = assigns.select(col("id"), col("cid"))
       .join(broadcast(keys), Seq("id"))
-      .unionByName(restrictTo(bd, "id", ends, pushCidLimit).select(col("id"),
-        lit(null).cast("long").as("cid"), lit(true).as("__new")))
-      .collect()
-    val reused = lookup.filter(r => r.getBoolean(2) && !r.isNullAt(1))
-      .map(_.getLong(0)).distinct.sorted
+      .withColumn("__e", lit(false))
+      .unionByName(touch.select(col("id_a").as("id"), col("id_b").as("cid"),
+        lit(true).as("__e")))
+      .collect().partition(_.getBoolean(2))
+    val reused = assigned.map(_.getLong(0)).filter(isNew).distinct.sorted
     if (reused.nonEmpty) throw new IllegalArgumentException(
       s"ClusterStream.foldBatch: batch $batchId carries doc id(s) " +
         s"${reused.take(10).mkString(", ")} that already have an " +
         s"assignment under $root — each doc arrives once; re-ingested " +
         "content takes a fresh id")
-    if (pairRows.isEmpty) {
+    val storedEdges = edgeRows.map(r => (r.getLong(0), r.getLong(1)))
+      .distinct.toSeq
+    if (pairRows.isEmpty && storedEdges.isEmpty) {
       // no connectivity: every batch doc is a fresh singleton. The three
       // delta writes are independent (distinct roots, redelivery
       // overwrites any completion subset) — overlap them (guide §2.6).
@@ -370,44 +430,31 @@ object ClusterStream {
     }
     // contract the batch graph: new ids stay nodes, old ids become their
     // cluster's node
-    val cidOf = scala.collection.mutable.Map(lookup.filterNot(_.getBoolean(2))
+    val cidOf = scala.collection.mutable.Map(assigned
       .map(r => r.getLong(0) -> r.getLong(1)).toIndexedSeq: _*)
-    val isNew = lookup.filter(_.getBoolean(2)).map(_.getLong(0)).toSet
     val edges = scala.collection.mutable.ArrayBuffer.from(pairRows.collect {
       case r if !r.isNullAt(0) && !r.isNullAt(1) => (r.getLong(0), r.getLong(1))
-    })
+    }) ++= storedEdges
+    val nodes = (ends ++ storedEdges.flatMap(e => Seq(e._1, e._2))).distinct
     // an endpoint that is neither assigned nor a batch doc has never been
     // seen as a doc (a pair against a not-yet-folded singleton): it is a
     // node of the stored pair graph with no stored label, so walk its
     // stored (masked) pairs out to the first assigned docs — the solve
     // then sees every cluster and every smaller unseen id its component
     // holds. Pairs from the near-dup filter never take this path.
-    var frontier = ends.filterNot(x => isNew(x) || cidOf.contains(x))
-    val walked = scala.collection.mutable.Set(frontier: _*)
-    lazy val stored = readPairs(spark, root, upTo = batchId)
-      .filter(col("id_a").isNotNull && col("id_b").isNotNull)
-    while (frontier.nonEmpty) {
-      val hop = restrictTo(stored, "id_a", frontier, pushCidLimit)
-        .unionAll(restrictTo(stored, "id_b", frontier, pushCidLimit))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      edges ++= hop
-      val reached = hop.flatMap(e => Seq(e._1, e._2)).distinct
-        .filterNot(walked).toSeq
-      cidOf ++= restrictTo(assigns, "id", reached, pushCidLimit)
-        .select(col("id"), col("cid")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1))
-      frontier = reached.filterNot(cidOf.contains)
-      walked ++= reached
-    }
+    val (hops, reached, walked) = walkUnseen(stored, assigns,
+      nodes.filterNot(x => isNew(x) || cidOf.contains(x)), pushCidLimit)
+    edges ++= hops
+    cidOf ++= reached
     val uf = new graft.core.UnionFind
     val node = (x: Long) => cidOf.getOrElse(x, x)
-    ends.foreach(x => uf.add(node(x)))
+    nodes.foreach(x => uf.add(node(x)))
     edges.foreach { case (a, b) => uf.union(node(a), node(b)) }
     // touched clusters → their merged label: min over member doc ids ==
     // min over (batch ids, touched cids) because cid = min member id
-    val touched = (ends ++ walked).filterNot(isNew).map(node).distinct
+    val touched = (nodes ++ walked).filterNot(isNew).map(node).distinct
       .map(c => c -> uf.find(c))
-    val newLabels = ends.filter(isNew).map(x => x -> uf.find(x))
+    val newLabels = nodes.filter(isNew).map(x => x -> uf.find(x))
     val oldMembers = relabel(restrictTo(assigns, "cid", touched.map(_._1),
         pushCidLimit), "cid", touched, pushCidLimit)
       .select(col("id"), col("cid"), col("score"), col("__nl"))
@@ -465,7 +512,7 @@ object ClusterStream {
     val affected = readAssignmentsMasked(spark, root, upTo = batchId,
         maskUpTo = batchId - 1)
       .join(broadcast(del), Seq("id"), "left_semi")
-      .select(col("cid")).distinct().localCheckpoint(true)
+      .select(col("cid")).distinct().collect().map(_.getLong(0)).toSeq
     // independent marker roots (the repair below reads both post-marker
     // views) — overlap the two marker writes (guide §2.6)
     graft.core.Par.run(
@@ -532,34 +579,62 @@ object ClusterStream {
       .unionAll(rel).distinct()
     val affected = readAssignments(spark, root, upTo = batchId)
       .join(broadcast(seeds), Seq("id"), "left_semi")
-      .select(col("cid")).distinct().localCheckpoint(true)
+      .select(col("cid")).distinct().collect().map(_.getLong(0)).toSeq
     repairComponents(spark, root, affected, batchId, pushCidLimit)
   }
 
   /** The shared component-local re-solve behind [[retract]] and
-    * [[revive]]: read the affected cids' members and their retained
-    * intra-member pairs from the post-marker view, re-run star
-    * contraction, rewrite relabeled members as the `batchId + 1` assign
-    * delta, re-elect every surviving label and write dead rows for
-    * labels that no longer exist. */
+    * [[revive]]: read the affected cids' members and every retained pair
+    * with at least one member endpoint from the post-marker view, walk
+    * the endpoints that never arrived as docs out to arrived ones (the
+    * [[foldBatch]] walk — an unseen id can hold a component together),
+    * re-run star contraction, rewrite relabeled members as the
+    * `batchId + 1` assign delta, re-elect every surviving label and write
+    * dead rows for labels that no longer exist. A walk that reaches a
+    * doc of another cluster (a revived doc reconnecting through an
+    * unseen id) re-solves with that cluster added. */
   private def repairComponents(spark: SparkSession, root: String,
-      affected: DataFrame, batchId: Long, pushCidLimit: Int): Unit = {
+      affected: Seq[Long], batchId: Long, pushCidLimit: Int): Unit = {
+    import spark.implicits._
     val ar = assignRoot(root); val cr = canonRoot(root)
     val v = batchId + 1
-    val members = membersOf(readAssignments(spark, root, upTo = batchId),
-        affected, pushCidLimit)
+    val assigns = readAssignments(spark, root, upTo = batchId)
+    val stored = readPairs(spark, root, upTo = batchId)
+      .filter(col("id_a").isNotNull && col("id_b").isNotNull)
+    val members = restrictTo(assigns, "cid", affected, pushCidLimit)
+      .select(col("id"), col("cid"), col("score"))
       .localCheckpoint(true)
     val memberIds = broadcast(members.select(col("id")))
-    val keptPairs = readPairs(spark, root, upTo = batchId)
-      .join(memberIds.withColumnRenamed("id", "id_a"), Seq("id_a"),
-        "left_semi")
-      .join(memberIds.withColumnRenamed("id", "id_b"), Seq("id_b"),
-        "left_semi")
+    def on(c: String) = memberIds.withColumnRenamed("id", c)
+    // each retained pair with a member endpoint, once
+    val keptPairs = stored.join(on("id_a"), Seq("id_a"), "left_semi")
+      .select(col("id_a"), col("id_b"))
+      .unionAll(stored.join(on("id_b"), Seq("id_b"), "left_semi")
+        .join(on("id_a"), Seq("id_a"), "left_anti")
+        .select(col("id_a"), col("id_b")))
       .localCheckpoint(true)
-    val labels =
-      if (keptPairs.isEmpty) spark.emptyDataFrame
-        .select(lit(0L).as("id"), lit(0L).as("component")).limit(0)
-      else Dedup.connectedComponentsStar(keptPairs)
+    // deleted docs' pairs are masked, so an endpoint outside the members
+    // is an id that never arrived — or, on revive, a doc of another
+    // cluster
+    val outside = keptPairs.select(explode(array(col("id_a"), col("id_b")))
+        .as("id"))
+      .join(memberIds, Seq("id"), "left_anti").distinct()
+      .collect().map(_.getLong(0)).toSeq
+    val arrived =
+      if (outside.isEmpty) Map.empty[Long, Long]
+      else restrictTo(assigns, "id", outside, pushCidLimit)
+        .select(col("id"), col("cid")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (hops, reached, _) = walkUnseen(stored, assigns,
+      outside.filterNot(arrived.contains), pushCidLimit)
+    val known = affected.toSet
+    val foreign = (arrived ++ reached).values.filterNot(known).toSeq.distinct
+    if (foreign.nonEmpty)
+      return repairComponents(spark, root, affected ++ foreign, batchId,
+        pushCidLimit)
+    val labels = Dedup.connectedComponentsStar(
+      if (hops.isEmpty) keptPairs
+      else keptPairs.unionAll(hops.distinct.toDF("id_a", "id_b")))
     val resolved = members
       .join(labels, Seq("id"), "left")
       .select(col("id"), col("cid"),
@@ -576,7 +651,8 @@ object ClusterStream {
         .write.mode("overwrite").parquet(s"$ar/v$v"),
       () => electCanon(resolved.select(col("id"), col("__nl").as("cid"),
           col("score")), v)
-        .unionByName(affected.join(newLabels, Seq("cid"), "left_anti")
+        .unionByName(affected.distinct.toDF("cid")
+          .join(newLabels, Seq("cid"), "left_anti")
           .select(col("cid"), lit(-1L).as("keep_id"), lit(0.0).as("score"),
             lit(0L).as("n_members"), SteadyLit.steadyLong(v).as("__v")))
         .write.mode("overwrite").parquet(s"$cr/v$v"))
@@ -601,15 +677,12 @@ object ClusterStream {
       () => canonSpec.compact(spark, canonRoot(root), upTo,
         allowSingle = true, lease),
       () => {
-        // deadSet, not the raw marker union: a revived id's pair rows must
+        // deadIds, not the raw marker union: a revived id's pair rows must
         // survive the physical fold (newest-verb-wins, the
         // RetrievalStream.compactStore discipline)
-        val delIds = Versions.deadSet(spark, pr, upTo)
-          .map(_.localCheckpoint(true))
+        val delIds = Versions.deadIds(spark, pr, upTo)
         Versions.compact(spark, pr, upTo,
-          df => delIds.fold(df)(d =>
-            df.join(broadcast(d.withColumnRenamed("id", "id_b")),
-              Seq("id_b"), "left_anti")),
+          df => delIds.fold(df)(Versions.withoutIds(df, "id_b", _)),
           tombstoneIdCol = Some("id_a"), allowSingle = true, lease = lease)
       })
   }

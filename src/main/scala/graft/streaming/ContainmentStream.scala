@@ -60,8 +60,8 @@ object ContainmentStream {
   /** The assembled set relation: every delta `<= upTo`, a plain scan
     * union (rows unique across deltas — each item arrives in exactly one
     * batch), minus tombstoned ids ([[Versions.maskTombstones]] — a
-    * broadcast anti-join; the plan is untouched when no takedown ever
-    * happened). */
+    * driver-resolved `NOT IN` literal; the plan is untouched when no
+    * takedown ever happened). */
   def readIndex(spark: SparkSession, root: String,
       upTo: Long = Long.MaxValue): DataFrame =
     spec.read(spark, root, upTo)

@@ -50,8 +50,8 @@ object MediaFpStream {
   /** The assembled fingerprint index: every delta `<= upTo`, a plain
     * scan union (rows unique across deltas — each item arrives in
     * exactly one batch), minus tombstoned ids
-    * ([[Versions.maskTombstones]] — broadcast anti-join; the plan is
-    * untouched when no takedown ever happened). */
+    * ([[Versions.maskTombstones]] — a driver-resolved `NOT IN` literal;
+    * the plan is untouched when no takedown ever happened). */
   def readIndex(spark: SparkSession, root: String,
       upTo: Long = Long.MaxValue): DataFrame =
     spec.read(spark, root, upTo)

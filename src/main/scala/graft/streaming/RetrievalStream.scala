@@ -267,8 +267,8 @@ object RetrievalStream {
 
   /** The assembled posting relation: plain union, zero exchanges (rows
     * disjoint across deltas by construction), minus tombstoned docs
-    * ([[Versions.maskTombstones]] — broadcast anti-join; plan untouched
-    * when no takedown ever happened). */
+    * ([[Versions.maskTombstones]] — a driver-resolved `NOT IN` literal;
+    * plan untouched when no takedown ever happened). */
   def readPostings(spark: SparkSession, root: String,
       upTo: Long = Long.MaxValue): DataFrame =
     // revive markers are legal here since the store grew its own paired
@@ -384,14 +384,12 @@ object RetrievalStream {
             "raise upTo past the revive or withdraw it")
       }
     // resolve the deleted ids BEFORE the posting compaction consumes the
-    // markers (eager checkpoint — the relation must survive the delete).
-    // NOTE deadSet resolution: ids dead as of upTo (tombstoned, not since
-    // revived) — a revived id's rows must survive the physical fold
-    val delIds = Versions.deadSet(spark, postRoot(root), upTo)
-      .map(_.select(col("id").as("doc_id")).localCheckpoint(true))
+    // markers (driver-side, so the set survives the delete): ids dead as
+    // of upTo (tombstoned, not since revived) — a revived id's rows must
+    // survive the physical fold
+    val delIds = Versions.deadIds(spark, postRoot(root), upTo)
     Versions.compact(spark, dlenRoot(root), upTo,
-      df => delIds.fold(df)(ids =>
-        df.join(broadcast(ids), Seq("doc_id"), "left_anti")),
+      df => delIds.fold(df)(Versions.withoutIds(df, "doc_id", _)),
       allowSingle = true, lease = lease)
     postSpec.compact(spark, postRoot(root), upTo, allowSingle = true, lease)
     Versions.compact(spark, statsRoot(root), upTo, foldStats,

@@ -135,23 +135,23 @@ object Takedown {
     * any derived store's marker state. The two legitimate paths it
     * points at: [[Versions.revive]] (the content is the retained rows,
     * returning) or a fresh ingest id (the content is new under an old
-    * external key — thread the key mapping app-side). Cost: one
-    * takedown-sized broadcast anti-join per store root. */
+    * external key — thread the key mapping app-side). Cost: one join of
+    * the batch's ids against the roots' driver-resolved dead sets, run
+    * only when some root holds a dead id. */
   def guardReingest(spark: SparkSession, markerRoots: Seq[String],
       ids: DataFrame, upTo: Long = Long.MaxValue): Unit = {
-    import org.apache.spark.sql.functions.lit
+    import spark.implicits._
     // one probe across ALL roots (r17 — this runs per ingest trigger, and
     // a per-root collect made the guard cost scale with store count): the
-    // roots' dead sets union under a root label, so a single takedown-sized
-    // semi-join answers every root at once, and the refusal still names
-    // the store that masks the id
+    // roots' driver-resolved dead sets travel as one local (id, root)
+    // relation, so a single semi-join answers every root at once, and the
+    // refusal still names the store that masks the id
     val deads = markerRoots.flatMap { root =>
-      Versions.deadSet(spark, root, upTo)
-        .map(_.withColumn("__root", lit(root)))
+      Versions.deadIds(spark, root, upTo).toSeq.flatten.map(_ -> root)
     }
     if (deads.nonEmpty) {
       val hit = Versions.idRelation(ids)
-        .join(deads.reduce(_ unionByName _), Seq("id"), "inner")
+        .join(deads.toDF("id", "__root"), Seq("id"), "inner")
         .limit(5).collect().map(r => (r.getLong(0), r.getString(1)))
       require(hit.isEmpty,
         s"re-ingest refused: ids ${hit.map(_._1).mkString(", ")} are " +

@@ -218,10 +218,11 @@ class ClusterStreamSpec extends SparkSpec {
       readState(orch)._1.contains((1L, 1L)))
   }
 
-  test("read posture: newest-per-id resolves over DELTAS only (one " +
-      "Window, never over the base), the base joins back via a " +
-      "broadcast anti-join, and a membership cid IN pushes into the " +
-      "compacted base scan") {
+  test("read posture: newest-per-id resolves over DELTAS only (never a " +
+      "Window over the base), the base drops the delta ids by a pushed " +
+      "NOT IN literal (a broadcast anti-join of a local relation past " +
+      "the limit), and a membership cid IN pushes into the compacted " +
+      "base scan") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     def planOf(df: DataFrame): String = {
       df.collect()
@@ -236,18 +237,35 @@ class ClusterStreamSpec extends SparkSpec {
     ClusterStream.foldBatch(spark, root)(docsDF(Seq(60L, 61L)),
       pairsDF(Seq((60L, 61L))), 0L)
     val plan = planOf(ClusterStream.readAssignments(spark, root))
-    // the newest-per-id window runs inside the DELTA materialization
-    // (batch-sized, localCheckpointed); the assembled read itself must
-    // never window or exchange the store
+    // the newest row per id is resolved over the DELTA rows on the
+    // driver (batch-sized); the assembled read itself must never window
+    // or exchange the store
     assert(!plan.contains("Window"),
       s"no window over the assembled store:\n$plan")
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-      s"the base must anti-join the broadcast delta-id set:\n$plan")
+    val baseScan = plan.substring(plan.indexOf("FileScan parquet"))
+    assert(plan.contains("FileScan parquet") &&
+        baseScan.contains("PushedFilters: [") &&
+        baseScan.contains("Not(In(id, [60,61]))"),
+      s"the base must drop the delta ids by a pushed NOT IN:\n$plan")
     assert(!plan.contains("Exchange hashpartitioning"),
       s"the base read must not shuffle:\n$plan")
+    // past the literal limit the delta ids travel as a broadcast local
+    // relation into a left-anti join
+    val many = 1000L until 1001L + Versions.PushIdLimit
+    ClusterStream.foldBatch(spark, root)(docsDF(many), pairsDF(Seq.empty),
+      1L)
+    val wide = planOf(ClusterStream.readAssignments(spark, root))
+    assert(wide.contains("BroadcastHashJoin") && wide.contains("LeftAnti") &&
+        wide.contains("LocalTableScan"),
+      s"the base must anti-join the broadcast delta-id relation:\n$wide")
+    assert(!wide.contains("Window") &&
+        !wide.contains("Exchange hashpartitioning"),
+      s"no window and no shuffle past the limit either:\n$wide")
+    assert(ClusterStream.readAssignments(spark, root).count() ===
+      52L + many.size)
     // compaction restores one-row-per-id and clusters by cid: a
     // membership restriction must reach the base scan as a pushed IN
-    ClusterStream.compactStore(spark, root, upTo = 1L)
+    ClusterStream.compactStore(spark, root, upTo = 2L)
     val pushed = planOf(ClusterStream.readAssignments(spark, root)
       .filter(col("cid").isin(1L, 5L)))
     val scan = pushed.substring(pushed.indexOf("FileScan parquet"))
@@ -477,5 +495,67 @@ class ClusterStreamSpec extends SparkSpec {
       "answer after every fold, at the default pushCidLimit and at 0") {
     randomFolds(pushCidLimit = 1024)
     randomFolds(pushCidLimit = 0)
+  }
+
+  test("retract keeps a component held together by an id that never " +
+      "arrived as a doc: the repair walks the unseen endpoint") {
+    val root = java.nio.file.Files.createTempDirectory("cs_unseen_").toString
+    ClusterStream.writeStanding(spark, root, docsDF(Seq(10L, 20L, 30L)),
+      pairsDF(Seq((10L, 5L), (5L, 20L), (20L, 30L))))
+    assert(readState(root)._1 === Set((10L, 5L), (20L, 5L), (30L, 5L)))
+    ClusterStream.retract(spark, root, Seq(30L).toDF("id"), 0L)
+    val state = readState(root)
+    assert(state._1 === Set((10L, 5L), (20L, 5L)), state)
+    assert(state === batchAnswer(docsDF(Seq(10L, 20L)),
+      pairsDF(Seq((10L, 5L), (5L, 20L)))))
+  }
+
+  test("an id first seen as a pair endpoint joins its component when it " +
+      "arrives as a doc, and the canonical counts every member") {
+    val root = java.nio.file.Files.createTempDirectory("cs_late_").toString
+    ClusterStream.writeStanding(spark, root, docsDF(Seq(10L, 20L)),
+      pairsDF(Seq((10L, 5L), (5L, 20L))))
+    // 5 is the cluster's label and a stored endpoint, never a doc yet
+    ClusterStream.foldBatch(spark, root)(docsDF(Seq(5L)), pairsDF(Seq.empty),
+      0L)
+    val state = readState(root)
+    assert(state._2.map(c => (c._1, c._4)) === Set((5L, 3L)), state)
+    assert(state === batchAnswer(docsDF(Seq(5L, 10L, 20L)),
+      pairsDF(Seq((10L, 5L), (5L, 20L)))))
+    // an endpoint that is not the label joins the same way
+    val root2 = java.nio.file.Files.createTempDirectory("cs_late2_").toString
+    val pairs2 = Seq((10L, 5L), (5L, 20L), (20L, 3L))
+    ClusterStream.writeStanding(spark, root2, docsDF(Seq(10L, 20L)),
+      pairsDF(pairs2))
+    ClusterStream.foldBatch(spark, root2)(docsDF(Seq(5L)),
+      pairsDF(Seq.empty), 0L)
+    assert(readState(root2) === batchAnswer(docsDF(Seq(5L, 10L, 20L)),
+      pairsDF(pairs2)))
+    ClusterStream.foldBatch(spark, root2)(docsDF(Seq(3L)),
+      pairsDF(Seq.empty), 1L)
+    assert(readState(root2) === batchAnswer(docsDF(Seq(3L, 5L, 10L, 20L)),
+      pairsDF(pairs2)))
+  }
+
+  test("a delta or a marker rewritten in place under the same name is " +
+      "read anew: resolved rows are keyed by the directory's files") {
+    val root = java.nio.file.Files.createTempDirectory("cs_rewrite_").toString
+    ClusterStream.writeStanding(spark, root, docsDF(1L to 5L),
+      pairsDF(Seq((1L, 2L))))
+    ClusterStream.foldBatch(spark, root)(docsDF(Seq(6L)), pairsDF(Seq.empty),
+      0L)
+    def cidOf(id: Long): Seq[Long] = ClusterStream.readAssignments(spark, root)
+      .filter(col("id") === id).select("cid").as[Long].collect().toSeq
+    assert(cidOf(6L) === Seq(6L))
+    Seq((6L, 1L, score(6L), 1L)).toDF("id", "cid", "score", "__v")
+      .write.mode("overwrite").parquet(s"$root/assign/v1")
+    assert(cidOf(6L) === Seq(1L), "a rewritten delta must be read anew")
+    def ids: Set[Long] = ClusterStream.readAssignments(spark, root)
+      .select("id").as[Long].collect().toSet
+    Versions.tombstone(spark, s"$root/assign", Seq(3L), 1L)
+    assert(!ids.contains(3L) && ids.contains(4L))
+    Versions.tombstone(spark, s"$root/assign", Seq(4L), 1L)
+    assert(ids.contains(3L) && !ids.contains(4L),
+      "a rewritten marker must be read anew")
   }
 }

@@ -763,36 +763,49 @@ class PlanSpec extends SparkSpec {
         s"path:\n$candPlan")
   }
 
-  test("tombstone mask: the marker set BROADCASTS into a left-anti join " +
-      "and a pushed gram IN reaches the standing scan — no exchange " +
-      "either way") {
+  test("tombstone mask: the marker set is a NOT IN literal pushed into " +
+      "the standing scan (a broadcast anti-join of a local relation past " +
+      "the limit) and a pushed gram IN reaches the standing scan — no " +
+      "exchange either way") {
     import graft.operators.Dedup
     import graft.sources.Tables
     import graft.streaming.{ContainmentStream, Versions}
     import org.apache.spark.sql.functions.col
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("tsplan_").toString
-    ContainmentStream.writeStanding(spark, root,
-      docs.filter(col("doc_id") < 40),
-      df => Dedup.jaccardShingleSets(df, "doc_id", "text"))
-    Versions.tombstone(spark, root, Seq(1L, 2L), 0L)
+    def masked(ids: Seq[Long]): String = {
+      val root = java.nio.file.Files.createTempDirectory("tsplan_").toString
+      ContainmentStream.writeStanding(spark, root,
+        docs.filter(col("doc_id") < 40),
+        df => Dedup.jaccardShingleSets(df, "doc_id", "text"))
+      Versions.tombstone(spark, root, ids, 0L)
+      root
+    }
+    // up to the limit: the driver-resolved dead ids push into the scan as
+    // a filter — no join, no broadcast, no exchange
+    val root = masked(Seq(1L, 2L))
     val plan = planString(ContainmentStream.readIndex(spark, root))
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-      s"the tombstone mask must be a broadcast anti-join:\n$plan")
-    // the STANDING branch (between the anti-join node and its broadcast
-    // build side) must be a plain scan — the only exchange anywhere is
-    // the marker set's own takedown-sized distinct inside the build
-    val standingBranch = branchBetween(plan,
+    val scan = branchFrom(plan, "FileScan parquet")
+    assert(scan.contains("PushedFilters: [") && scan.contains("Not(In(id") &&
+        !plan.contains("Join") && !plan.contains("Exchange"),
+      s"the tombstone mask must be a pushed NOT IN literal:\n$plan")
+    // past the limit: a broadcast anti-join of the local id relation; the
+    // STANDING branch (between the anti-join node and its broadcast build
+    // side) is a plain scan, and nothing hash-partitions
+    val wide = planString(ContainmentStream.readIndex(spark,
+      masked(1000L to 1000L + Versions.PushIdLimit)))
+    assert(wide.contains("BroadcastHashJoin") && wide.contains("LeftAnti"),
+      s"past the limit the mask must be a broadcast anti-join:\n$wide")
+    val standingBranch = branchBetween(wide,
       "BroadcastHashJoin", "BroadcastQueryStage")
     assert(standingBranch.contains("FileScan parquet") &&
         !standingBranch.contains("Exchange"),
-      s"masking must never shuffle the standing relation:\n$plan")
-    assert("Exchange hashpartitioning".r.findAllIn(plan).length <= 1,
-      s"only the marker-distinct exchange is allowed:\n$plan")
+      s"masking must never shuffle the standing relation:\n$wide")
+    assert(!wide.contains("Exchange hashpartitioning"),
+      s"a local dead-id relation needs no distinct exchange:\n$wide")
     // the trickle-batch gram push: a literal IN on the probe key reaches
-    // the parquet scan THROUGH the mask's anti-join (what row-group
-    // pruning on a compactStore-clustered base keys off)
+    // the parquet scan THROUGH the mask (what row-group pruning on a
+    // compactStore-clustered base keys off)
     val pushed = planString(ContainmentStream.readIndex(spark, root)
       .filter(col("g").isin("a b c", "d e f")))
     val scanPart = branchFrom(pushed, "FileScan parquet")

@@ -1003,4 +1003,20 @@ class TombstoneSpec extends SparkSpec {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$journal/t1")) &&
       !fs.exists(new org.apache.hadoop.fs.Path(s"$journal/r2")))
   }
+
+  test("a masked read keeps null-id rows, as the anti-join does, in both " +
+      "the literal and the broadcast arm") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("tomb_null_").toString
+    Seq[(Option[Long], String)]((Some(1L), "a"), (None, "b"), (Some(2L), "c"))
+      .toDF("id", "v").write.parquet(s"$root/v0")
+    def kept: Seq[String] = Versions.maskTombstones(spark, root,
+        spark.read.parquet(s"$root/v0"), "id")
+      .select("v").as[String].collect().toSeq.sorted
+    Versions.tombstone(spark, root, Seq(2L), 0L)
+    assert(kept === Seq("a", "b"))
+    Versions.tombstone(spark, root, 100L to 100L + Versions.PushIdLimit, 1L)
+    assert(Versions.deadIds(spark, root).get.size > Versions.PushIdLimit)
+    assert(kept === Seq("a", "b"))
+  }
 }
