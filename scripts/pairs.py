@@ -7,11 +7,14 @@ Run from the repository root:
 
 For each seed it runs the benchmark command of BENCHMARK.json
 (`perfbench/run.py --workload <w> --seed <s> --seconds <run_seconds>
---trace 0`) once in an export of `<rev>` and once in the working tree,
-alternating the order: odd seeds run the parent first. The export is made
-with `git archive` into a temporary directory, so the repository's own
-`.git` gains no worktree entry; each side builds its own benchmark
-classpath on its first run. Every run's last output line (the JSON
+--trace 0`) once in an export of `<rev>` and once in a snapshot of the
+working tree, alternating the order: odd seeds run the parent first. Both
+sides are sibling directories of one temporary directory (`parent/` and
+`change/`), so they run from the same location and each builds its own
+benchmark classpath from scratch on its first run: the parent is a
+`git archive` of `<rev>` (the repository's own `.git` gains no worktree
+entry), the change a copy of every tracked and untracked file that git
+does not ignore (no `perfbench/.work`, no `target/`). Every run's last output line (the JSON
 contract line) is kept, and with `--out <file>` appended to that file as
 one JSON object per line.
 
@@ -106,6 +109,21 @@ def export(rev, into):
                    check=True)
 
 
+def snapshot(root, into):
+    """Copy the working tree of the repository at `root` into `into`:
+    every tracked file that exists and every untracked file git does not
+    ignore, so no build output or benchmark scratch comes along."""
+    names = subprocess.run(
+        ["git", "ls-files", "-z", "--cached", "--others", "--exclude-standard"],
+        cwd=root, capture_output=True, check=True).stdout.split(b"\0")
+    for name in sorted({n.decode() for n in names if n}):
+        src = os.path.join(root, name)
+        if os.path.isfile(src):
+            dst = os.path.join(into, name)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            shutil.copy2(src, dst)
+
+
 def report(spec, runs):
     """Print the per-metric table and verdicts; return whether every bound
     holds."""
@@ -147,16 +165,20 @@ def main():
     args = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
-    tmp = tempfile.mkdtemp(prefix="pairs_parent_")
+    tmp = tempfile.mkdtemp(prefix="pairs_")
+    dirs = {side: os.path.join(tmp, side) for side in ("parent", "change")}
     runs = []
     try:
-        export(args.parent, tmp)
+        for d in dirs.values():
+            os.makedirs(d)
+        export(args.parent, dirs["parent"])
+        snapshot(ROOT, dirs["change"])
         for seed in parse_seeds(args.seeds):
             order = ["parent", "change"] if seed % 2 else ["change", "parent"]
             pair = {"seed": seed}
             for side in order:
-                pair[side] = run_once(tmp if side == "parent" else ROOT,
-                                      spec["command"], args.workload, seed,
+                pair[side] = run_once(dirs[side], spec["command"],
+                                      args.workload, seed,
                                       spec["run_seconds"])
             runs.append(pair)
             print(json.dumps(pair), flush=True)

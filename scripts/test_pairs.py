@@ -1,10 +1,12 @@
 """Tests for scripts/pairs.py. Run: python3 -m unittest scripts/test_pairs.py"""
 import os
+import subprocess
 import sys
+import tempfile
 import unittest
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from pairs import parse_seeds, quantile, verdict  # noqa: E402
+from pairs import parse_seeds, quantile, snapshot, verdict  # noqa: E402
 
 PARENT = [0.60, 0.62, 0.64, 0.61, 0.66, 0.63, 0.65, 0.59, 0.67, 0.62]
 
@@ -57,6 +59,34 @@ class HelpersTest(unittest.TestCase):
     def test_seed_ranges_and_lists(self):
         self.assertEqual(parse_seeds("2-5"), [2, 3, 4, 5])
         self.assertEqual(parse_seeds("2,7-8"), [2, 7, 8])
+
+
+class SnapshotTest(unittest.TestCase):
+    def test_a_snapshot_holds_no_ignored_build_or_bench_output(self):
+        with tempfile.TemporaryDirectory() as tmp:
+            repo, into = os.path.join(tmp, "repo"), os.path.join(tmp, "into")
+            files = {
+                ".gitignore": "target/\nperfbench/.work/\n",
+                "src/A.scala": "object A",
+                "perfbench/run.py": "print(1)",
+                "perfbench/.work/cp.txt": "stale classpath",
+                "target/scala-2.13/A.class": "stale class",
+                "notes.md": "untracked, not ignored",
+            }
+            for name, text in files.items():
+                os.makedirs(os.path.dirname(os.path.join(repo, name)),
+                            exist_ok=True)
+                with open(os.path.join(repo, name), "w") as f:
+                    f.write(text)
+            subprocess.run(["git", "init", "-q", repo], check=True)
+            subprocess.run(["git", "add", ".gitignore", "src", "perfbench"],
+                           cwd=repo, check=True)
+            os.makedirs(into)
+            snapshot(repo, into)
+            got = sorted(os.path.relpath(os.path.join(d, f), into)
+                         for d, _, fs in os.walk(into) for f in fs)
+            self.assertEqual(got, [".gitignore", "notes.md",
+                                   "perfbench/run.py", "src/A.scala"])
 
 
 if __name__ == "__main__":

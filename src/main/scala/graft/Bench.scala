@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   * contention noise; r7's q22 read 79.78 s against a 1.22 s isolated truth):
   *   - PHASE SEPARATION: the micro-batch streaming queries
   *     (`SparkEntry.streamingQueries` — state stores, checkpoint dirs,
-  *     `processAllAvailable` drains) warm up and time in a separate FINAL
+  *     `Trigger.AvailableNow` replays) warm up and time in a separate FINAL
   *     phase, so their state-store/temp-dir/GC traffic cannot land mid-pass
   *     on a CPU-bound query's timing.
   *   - CONTAMINATION DETECTION: a triple whose max/median exceeds

@@ -26,7 +26,8 @@ object SparkEntry {
     Relational.oracleSql ++ CoreJobs.oracleSql ++ Pipeline.oracleSql
 
   /** Registry entries that drive a micro-batch stream (checkpoint dirs,
-    * state stores, `processAllAvailable` drains). `Bench` times these in a
+    * state stores, `Trigger.AvailableNow` replays that return once every
+    * staged file is consumed). `Bench` times these in a
     * separate final phase: their state-store/temp-dir/GC I/O landing
     * mid-pass on CPU-bound queries is what made BENCH_r06/r07 noise
     * (VERDICT r7 #1). Register new `*_stream*` queries here too —

@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.{HashFunctions, TextFunctions => TF}
+import graft.multimodal.Multimodal.MediaRecord
 import graft.operators.{Curation, Dedup, IvfRelational, Similarity, Vocab}
 import graft.sources.Tables
 
@@ -25,6 +26,15 @@ object Pipeline {
     * [[graft.functions.TextFunctions.tokens]] exactly. */
   private val sqlToks =
     "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t != '')"
+
+  /** Distinct token 3-shingles of the `toks` list (one shingle of all
+    * tokens below 3) — the Spark side's `jaccardShingleSets`. */
+  private def sqlShingle3List(toks: String): String =
+    s"""list_distinct(
+       |         CASE WHEN len($toks) < 3 THEN [array_to_string($toks, ' ')]
+       |              ELSE list_transform(range(1, len($toks) - 1),
+       |                     i -> $toks[i] || ' ' || $toks[i+1] || ' ' || $toks[i+2])
+       |         END)""".stripMargin
 
   /** Quality-score CTE pair `m$tag, q$tag` over a base CTE exposing `text`,
     * `toks` and the `carry` columns; `q$tag` carries them plus `quality`.
@@ -88,20 +98,22 @@ object Pipeline {
     * log-free idf, scores staged DECIMAL(38,18) in `x$tag.sct`. ONE mirror
     * of [[graft.operators.Retrieval.bm25TopK]]'s arithmetic (p42/p63);
     * callers aggregate `SUM(sct)` and rank/limit themselves. */
-  /** [[sqlBm25Ctes]] over an explicit source relation (the
-    * `pqBankCtes(prefix, src)` parameterization precedent — the default
-    * is byte-identical to the original): p133 replays the takedown path
-    * by pointing the SAME scoring chain at `documents` minus the deleted
-    * set, which is exactly what the engine's masked postings + doclen-
-    * corrected stats must reproduce bit-for-bit. */
   private def sqlBm25Ctes(tag: String, terms: Seq[String]): String =
-    sqlBm25CtesFrom(tag, terms, "documents")
+    sqlBm25CtesWhere(tag, terms.map(t => s"'$t'").mkString(", "), "documents")
 
-  private def sqlBm25CtesFrom(tag: String, terms: Seq[String],
-      src: String): String =
-    sqlBm25CtesWhere(tag, terms.map(t => s"'$t'").mkString(", "), src)
+  /** The top `k` BM25 scores of the chain `ctes` (tagged `tag`). */
+  private def sqlBm25Top(tag: String, ctes: String, k: Int): String =
+    s"""$ctes
+       |SELECT doc_id, CAST(ROUND(SUM(sct), 6) AS DOUBLE) AS score
+       |FROM x$tag GROUP BY doc_id
+       |ORDER BY score DESC, doc_id
+       |LIMIT $k""".stripMargin
 
-  /** [[sqlBm25CtesFrom]] with the query vocabulary as a raw SQL IN-list
+  /** [[sqlBm25Ctes]] over an explicit source relation `src` — p133
+    * replays the takedown path by pointing the SAME scoring chain at
+    * `documents` minus the deleted set, which is exactly what the
+    * engine's masked postings + doclen-corrected stats must reproduce
+    * bit-for-bit — with the query vocabulary as a raw SQL IN-list
     * body — either literal terms or a subquery (`SELECT term FROM qt...`),
     * for queries whose vocabulary is DRAWN FROM THE CORPUS (p133: a
     * literal list can't intersect every spot-gate corpus's vocabulary —
@@ -375,10 +387,7 @@ object Pipeline {
     * the historical names). Requires [[sqlMinhashCoef]] in scope. */
   private def sqlMinhashChain(tag: String, base: String): String = {
     import OracleHash._
-    s"""sh$tag AS (SELECT doc_id AS id, list_distinct(
-       |    CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-       |         ELSE list_transform(range(1, len(toks) - 1),
-       |           i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) END) AS sh
+    s"""sh$tag AS (SELECT doc_id AS id, ${sqlShingle3List("toks")} AS sh
        |  FROM $base),
        |shu$tag AS (SELECT id, unnest(sh) AS s FROM sh$tag),
        |shh$tag AS (SELECT id, ${fnv1a("s")} AS h FROM shu$tag),
@@ -637,16 +646,26 @@ object Pipeline {
     * cells' rows from reconstructions, true vectors only for the k·24
     * refine set — the full billion-scale ANN layout, verified from raw
     * data to final ranks. */
-  val p32Sql: String = {
+  val p32Sql: String =
+    s"""WITH ${sqlIvfPqSurvivorCtes(OracleHash.ivfBankCtes(nCells = 16, iters = 3), 8)},
+       |${sqlRerankTail("sv", 5)}""".stripMargin
+
+  /** The IVF-PQ candidate replay shared by p32 and the scaled gates: the
+    * coarse bank `ivf` (an `ivfBankCtes` pair) assigns every vector
+    * (`ca`) and routes queries 0-9 to `probes` cells (`qa`), the PQ
+    * reconstructions score the probed rows, and the k·24 refine window
+    * survives as `sv(query_id, neighbor_id)`. */
+  private def sqlIvfPqSurvivorCtes(ivf: (String, String), probes: Int)
+      : String = {
     import OracleHash._
-    val (ivfCtes, ivfBankName) = ivfBankCtes(nCells = 16, iters = 3)
+    val (ivfCtes, ivfBankName) = ivf
     val (pqCtes, _) = sqlPqBankAndRv
-    s"""WITH emb AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
+    s"""emb AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
        |$ivfCtes,
        |$pqCtes,
        |${nearestCellCte("ca0", ivfBankName, keep = 1)},
        |ca AS (SELECT id AS neighbor_id, cell FROM ca0),
-       |${nearestCellCte("qa0", ivfBankName, keep = 8, filter = " WHERE e.id < 10")},
+       |${nearestCellCte("qa0", ivfBankName, keep = probes, filter = " WHERE e.id < 10")},
        |qa AS (SELECT id AS query_id, cell FROM qa0),
        |q0 AS (SELECT id AS query_id, v AS qv0 FROM emb WHERE id < 10),
        |apin AS (
@@ -655,8 +674,7 @@ object Pipeline {
        |  JOIN q0 ON qa.query_id = q0.query_id
        |  JOIN rv ON ca.neighbor_id = rv.neighbor_id
        |  WHERE qa.query_id != ca.neighbor_id),
-       |${sqlPqSurvivors("apin", 5 * 24)},
-       |${sqlRerankTail("sv", 5)}""".stripMargin
+       |${sqlPqSurvivors("apin", 5 * 24)}""".stripMargin
   }
 
   /** Embedding-cosine near-duplicate pairs via shared LSH buckets.
@@ -1395,10 +1413,7 @@ object Pipeline {
   val p36Sql: String =
     s"""WITH t AS (SELECT doc_id, $sqlToks AS toks FROM documents),
        |sh AS (SELECT doc_id,
-       |    list_distinct(CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-       |         ELSE list_transform(range(1, len(toks) - 1),
-       |                i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-       |    END) AS sh FROM t),
+       |    ${sqlShingle3List("toks")} AS sh FROM t),
        |exact_text AS (
        |  SELECT DISTINCT least(a.doc_id, b.doc_id) AS id_a,
        |         greatest(a.doc_id, b.doc_id) AS id_b
@@ -1652,13 +1667,7 @@ object Pipeline {
     graft.operators.Retrieval.bm25TopK(
       Tables.documents(spark, dir), "doc_id", "text", p42Terms, 50)
 
-  val p42Sql: String = {
-    s"""WITH ${sqlBm25Ctes("42", p42Terms)}
-       |SELECT doc_id, CAST(ROUND(SUM(sct), 6) AS DOUBLE) AS score
-       |FROM x42 GROUP BY doc_id
-       |ORDER BY score DESC, doc_id
-       |LIMIT 50""".stripMargin
-  }
+  val p42Sql: String = s"WITH ${sqlBm25Top("42", sqlBm25Ctes("42", p42Terms), 50)}"
 
   // =========================================================================
   // p43 — PII scrubbing: redact emails / phone numbers / IPv4s and keep the
@@ -1881,10 +1890,7 @@ object Pipeline {
   val p49Sql: String =
     s"""WITH t AS (SELECT doc_id, $sqlToks AS toks FROM documents),
        |sh AS (SELECT doc_id,
-       |    list_distinct(CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-       |         ELSE list_transform(range(1, len(toks) - 1),
-       |                i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-       |    END) AS sh FROM t),
+       |    ${sqlShingle3List("toks")} AS sh FROM t),
        |e AS (SELECT doc_id, unnest(sh) AS gram FROM sh),
        |w AS (SELECT doc_id, COUNT(*) OVER (PARTITION BY gram) AS df FROM e)
        |SELECT doc_id, COUNT(*) AS n_shingles,
@@ -2972,6 +2978,47 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start().awaitTermination()
 
+  /** The parent of every [[StreamRun]] root this JVM creates. One shutdown
+    * hook deletes it with everything under it: a query's result is a lazy
+    * read of its root, so no root can go earlier. */
+  private[graft] lazy val streamParent: java.nio.file.Path = {
+    val p = java.nio.file.Files.createTempDirectory("graft_streams_")
+    sys.addShutdownHook(deleteTree(p.toFile))
+    p
+  }
+  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** Deletes `f` and everything under it, without following symlinks. */
+  private[graft] def deleteTree(f: java.io.File): Unit = {
+    if (!java.nio.file.Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete()
+  }
+
+  /** The stream runner of the streaming registry queries: one fresh root
+    * under [[streamParent]]. `r("idx")` names a store under the root and
+    * `out` reads the batch outputs a body wrote to `r("out")/b<id>`. */
+  private[graft] final class StreamRun(spark: SparkSession) {
+    val root: String = java.nio.file.Files.createDirectory(
+      streamParent.resolve(s"s${streamSeq.incrementAndGet()}")).toString
+    def apply(sub: String): String = s"$root/$sub"
+    def out: DataFrame = spark.read.parquet(s"$root/out/b*")
+
+    /** Runs the `setup` writes concurrently with [[stage]] of `batches`
+      * (`batchOf` names a row's batch), then [[replay]]s them into `body`
+      * with the staged schema minus any `batch` column. A later call on
+      * the same run stages and replays only its own batches. */
+    def run(incoming: DataFrame, batchOf: Column, batches: Seq[Int])(
+        setup: (() => Unit)*)(body: (DataFrame, Long) => Unit): Unit = {
+      graft.core.Par.run(
+        setup :+ (() => stage(incoming, batchOf, root, batches)): _*)
+      replay(spark, root, incoming.drop("batch").schema)(body)
+    }
+  }
+
+  /** Batch `id mod k` of a streamed fixture: the usual batch split. */
+  private def stripe(id: String, k: Int): Column = pmod(col(id), lit(k))
+
   /** The (existing, incoming) corpus split with planted cross-corpus and
     * cross-batch dups — shared by p75, its compacted twin p89 and the
     * near-dup sibling p79. */
@@ -2987,24 +3034,59 @@ object Pipeline {
     (existing, incoming)
   }
 
-  def p75StreamPassageFilter(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
+  def p75StreamPassageFilter(spark: SparkSession, dir: String): DataFrame =
+    passageFilterStream(spark, dir, compacted = false)
+
+  /** p75's stream; `compacted` (p89) drains batches 0-1, folds the index
+    * into a new base, then resumes the same run with batch 2. */
+  private def passageFilterStream(spark: SparkSession, dir: String,
+      compacted: Boolean): DataFrame = {
+    import graft.streaming.PassageStream
     val (existing, incoming) = passageStreamCorpus(spark, dir)
-    val root = Files.createTempDirectory("p75_").toString
-    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
+    val r = new StreamRun(spark)
+    val body: (DataFrame, Long) => Unit =
+      PassageStream.filterBatch(spark, r("idx"), r("out"), "doc_id", "text")
+    r.run(incoming, stripe("doc_id", 3), if (compacted) 0 until 2 else 0 until 3)(
       () => Dedup.passageWindowIndex(existing, "doc_id", "text")
-        .write.parquet(s"$idxRoot/v0"),
-      () => stage(incoming, pmod(col("doc_id"), lit(3)), root, 0 until 3))
-    replay(spark, root, incoming.schema)(graft.streaming.PassageStream
-      .filterBatch(spark, idxRoot, outRoot, "doc_id", "text"))
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("doc_id"), col("batch"), col("n_windows"),
+        .write.parquet(r("idx/v0")))(body)
+    if (compacted) {
+      PassageStream.compactIndex(spark, r("idx"), upTo = 2L)
+      r.run(incoming, stripe("doc_id", 3), Seq(2))()(body)
+    }
+    r.out.select(col("doc_id"), col("batch"), col("n_windows"),
         col("n_dup_windows"), col("dup_ratio"),
         (col("dup_ratio") < 0.5).as("kept"))
       .orderBy("doc_id")
   }
+
+  /** One CTE fragment per batch 0 until `k`, comma-joined. */
+  private def perBatch(k: Int)(f: Int => String): String =
+    (0 until k).map(f).mkString(",\n")
+
+  /** The oracle side of a streamed text fixture: `ex` (the standing docs
+    * below 250), `inc(doc_id, toks, b)` (the docs matching `incWhere` in
+    * batch `doc_id % k`, then each `plants` arm) and one `i$b` per batch. */
+  private def sqlTextStreamCtes(incWhere: String, plants: Seq[String],
+      k: Int = 3): String =
+    s"""ex AS (SELECT doc_id, $sqlToks AS toks FROM documents
+       |           WHERE doc_id < 250),
+       |inc AS (
+       |  SELECT doc_id, $sqlToks AS toks, doc_id % $k AS b FROM documents
+       |  WHERE $incWhere
+       |  ${plants.map(a => s"UNION ALL $a").mkString("\n  ")}),
+       |${perBatch(k)(b => s"i$b AS (SELECT doc_id, toks FROM inc WHERE b = $b)")}"""
+      .stripMargin
+
+  /** An `inc` arm replaying the `toks` of `from`'s docs matching `where`
+    * as `doc_id + off`, in the new id's batch of `k`. */
+  private def sqlPlantArm(off: Long, where: String, k: Int = 3,
+      toks: String = sqlToks, from: String = "documents"): String =
+    s"SELECT doc_id + $off, $toks, (doc_id + $off) % $k FROM $from " +
+      s"WHERE $where"
+
+  /** [[passageStreamCorpus]]'s planted replays, oracle side. */
+  private val sqlPassagePlants = Seq(sqlPlantArm(10000000, "doc_id < 10"),
+    sqlPlantArm(20000000, "doc_id BETWEEN 250 AND 254"))
 
   val p75Sql: String = {
     // per-batch stats CTE: in-batch repeats ∪ fingerprints already in the
@@ -3027,27 +3109,10 @@ object Pipeline {
          |             JOIN dup$b USING (fp) GROUP BY doc_id) nd
          |    ON nw.doc_id = nd.doc_id)""".stripMargin
     }
-    s"""WITH ex AS (SELECT doc_id, $sqlToks AS toks FROM documents
-       |           WHERE doc_id < 250),
-       |inc AS (
-       |  SELECT doc_id, $sqlToks AS toks, doc_id % 3 AS b FROM documents
-       |  WHERE doc_id >= 250
-       |  UNION ALL
-       |  SELECT doc_id + 10000000, $sqlToks, (doc_id + 10000000) % 3
-       |  FROM documents WHERE doc_id < 10
-       |  UNION ALL
-       |  SELECT doc_id + 20000000, $sqlToks, (doc_id + 20000000) % 3
-       |  FROM documents WHERE doc_id BETWEEN 250 AND 254),
-       |i0 AS (SELECT doc_id, toks FROM inc WHERE b = 0),
-       |i1 AS (SELECT doc_id, toks FROM inc WHERE b = 1),
-       |i2 AS (SELECT doc_id, toks FROM inc WHERE b = 2),
+    s"""WITH ${sqlTextStreamCtes("doc_id >= 250", sqlPassagePlants)},
        |${sqlWindowFpCtes("x", "ex")},
-       |${sqlWindowFpCtes("g0", "i0")},
-       |${sqlWindowFpCtes("g1", "i1")},
-       |${sqlWindowFpCtes("g2", "i2")},
-       |${batchStats(0)},
-       |${batchStats(1)},
-       |${batchStats(2)}
+       |${perBatch(3)(b => sqlWindowFpCtes(s"g$b", s"i$b"))},
+       |${perBatch(3)(batchStats)}
        |SELECT doc_id, batch, n_windows, n_dup_windows, dup_ratio,
        |  dup_ratio < 0.5 AS kept
        |FROM (SELECT * FROM s0 UNION ALL SELECT * FROM s1
@@ -3078,29 +3143,39 @@ object Pipeline {
       Similarity.ivfCentroidsTrained(Tables.embeddings(spark, dir),
         nCells = 128, stride = 15))
 
-  def p76IvfRecallScaled(spark: SparkSession, dir: String): DataFrame = {
+  def p76IvfRecallScaled(spark: SparkSession, dir: String): DataFrame =
+    scaledIvfGateRow(spark, dir, "ivf_scaled") { (qs, emb, bank) =>
+      // a small corpus seeds fewer than 128 cells (500 rows / stride 15 →
+      // 34); probing min(48, all) is what the oracle's rank ≤ 48 filter does
+      Similarity.ivfTopK(qs, emb, k = 5,
+        nProbe = math.min(48, bank.length), centroids = Some(bank))
+    }
+
+  /** The scale-adaptive gate row of p76 and p87: the recall of `ann`'s
+    * top 5 for queries 0-9 against brute force, plus the balance of the
+    * scaled bank's nonempty cells (exact integer arithmetic: max_cell ·
+    * n_cells ≤ 4 · n_vecs ⇔ max ≤ 4 · mean). */
+  private def scaledIvfGateRow(spark: SparkSession, dir: String,
+      method: String)(
+      ann: (DataFrame, DataFrame, Array[Array[Double]]) => DataFrame)
+      : DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val qs = emb.filter(col("vec_id") < 10)
     val bank = scaledIvfBank(spark, dir)
     val exact = Similarity.bruteForceTopK(qs, emb, k = 5)
       .select("query_id", "neighbor_id")
       .localCheckpoint(true)
-    // a small corpus seeds fewer than 128 cells (500 rows / stride 15 →
-    // 34); probing min(48, all) is what the oracle's rank ≤ 48 filter does
-    val ann = Similarity.ivfTopK(qs, emb, k = 5,
-      nProbe = math.min(48, bank.length), centroids = Some(bank))
-    // nonempty-cell profile of the trained bank: the balance bound is
-    // exact integer arithmetic (max_cell·n_cells ≤ 4·n_vecs ⇔ max ≤ 4·mean)
+    val found = ann(qs, emb, bank)
     val balance = Similarity.ivfAssign(emb, bank)
       .groupBy(col("cell")).agg(count(lit(1)).as("sz"))
       .agg(count(lit(1)).as("n_cells"), max(col("sz")).as("max_cell"),
         sum(col("sz")).as("n_vecs"))
-    ann.select("query_id", "neighbor_id")
+    found.select("query_id", "neighbor_id")
       .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
       .agg(count(lit(1)).as("hits"))
       .crossJoin(exact.agg(count(lit(1)).as("total")))
       .crossJoin(broadcast(balance))
-      .select(lit("ivf_scaled").as("method"), col("hits"), col("total"),
+      .select(lit(method).as("method"), col("hits"), col("total"),
         (col("hits").cast(DoubleType) / col("total").cast(DoubleType))
           .as("recall"),
         col("n_cells"), col("max_cell"),
@@ -3139,28 +3214,35 @@ object Pipeline {
        |  SELECT DISTINCT query_id, neighbor_id
        |  FROM qa JOIN ca USING (cell)
        |  WHERE query_id != neighbor_id),
-       |qv AS (SELECT id AS query_id, v AS qv FROM $full WHERE id < 10),
+       |${sqlIvfGateTail("cand", full, method, extraCols)}""".stripMargin
+  }
+
+  /** The common end of the scale-adaptive gate oracles: the top 5 of the
+    * exact cosine rerank of the `cand(query_id, neighbor_id)` pairs
+    * (`annr`) against brute force over `full`, the balance of the coarse
+    * assignment `ca(neighbor_id, cell)`, and the gate row. */
+  private def sqlIvfGateTail(cand: String, full: String, method: String,
+      extraCols: String): String = {
+    import OracleHash._
+    val cosine = s"""${seqDot("qv", "cv")} AS dt,
+       |    sqrt(${seqDot("qv", "qv")}) AS nq,
+       |    sqrt(${seqDot("cv", "cv")}) AS nc""".stripMargin
+    def top5(name: String, from: String): String =
+      s"""$name AS (SELECT query_id, neighbor_id FROM (
+         |    SELECT query_id, neighbor_id,
+         |      ROW_NUMBER() OVER (PARTITION BY query_id
+         |        ORDER BY ${sqlCosine("dt", "nq", "nc")} DESC, neighbor_id ASC) AS rk
+         |    FROM $from) WHERE rk <= 5)""".stripMargin
+    s"""qv AS (SELECT id AS query_id, v AS qv FROM $full WHERE id < 10),
        |cvx AS (SELECT id AS neighbor_id, v AS cv FROM $full),
        |sx AS (SELECT query_id, neighbor_id,
-       |    ${seqDot("qv", "cv")} AS dt,
-       |    sqrt(${seqDot("qv", "qv")}) AS nq,
-       |    sqrt(${seqDot("cv", "cv")}) AS nc
-       |  FROM cand JOIN qv USING (query_id) JOIN cvx USING (neighbor_id)),
-       |annr AS (SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id
-       |        ORDER BY ${sqlCosine("dt", "nq", "nc")} DESC, neighbor_id ASC) AS rk
-       |    FROM sx) WHERE rk <= 5),
+       |    $cosine
+       |  FROM $cand JOIN qv USING (query_id) JOIN cvx USING (neighbor_id)),
+       |${top5("annr", "sx")},
        |se AS (SELECT query_id, neighbor_id,
-       |    ${seqDot("qv", "cv")} AS dt,
-       |    sqrt(${seqDot("qv", "qv")}) AS nq,
-       |    sqrt(${seqDot("cv", "cv")}) AS nc
+       |    $cosine
        |  FROM cvx CROSS JOIN qv WHERE query_id != neighbor_id),
-       |exact AS (SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id
-       |        ORDER BY ${sqlCosine("dt", "nq", "nc")} DESC, neighbor_id ASC) AS rk
-       |    FROM se) WHERE rk <= 5),
+       |${top5("exact", "se")},
        |sizes AS (SELECT cell, COUNT(*) AS sz FROM ca GROUP BY cell),
        |bal AS (SELECT COUNT(*) AS n_cells, MAX(sz) AS max_cell,
        |        SUM(sz) AS n_vecs FROM sizes),
@@ -3213,27 +3295,12 @@ object Pipeline {
        |  UNION ALL
        |  SELECT doc_id + 10000000, $sqlToks FROM documents WHERE doc_id < 10),
        |$sqlMinhashCoef,
-       |${sqlMinhashChain("i", "inc")},
-       |${sqlMinhashPairCtes("i")},
+       |${sqlMinhashChain("i0", "inc")},
+       |${sqlMinhashPairCtes("i0")},
        |${sqlMinhashChain("x", "ex")},
-       |cross0 AS (
-       |  SELECT i.id AS new_id, x.id AS old_id, i.bd, i.key
-       |  FROM bandsi i JOIN bandsx x ON i.bd = x.bd AND i.key = x.key),
-       |crossn AS (SELECT new_id, old_id,
-       |    COUNT(*) OVER (PARTITION BY bd, key) AS n FROM cross0),
-       |candx AS (SELECT DISTINCT new_id, old_id FROM crossn WHERE n <= 200),
-       |mhx AS (
-       |  SELECT least(new_id, old_id) AS id_a, greatest(new_id, old_id) AS id_b,
-       |    jaccard
-       |  FROM (
-       |    SELECT new_id, old_id,
-       |      CASE WHEN len(list_distinct(list_concat(sa.sh, sb.sh))) = 0 THEN 0.0
-       |           ELSE len(list_intersect(sa.sh, sb.sh)) / len(list_distinct(list_concat(sa.sh, sb.sh)))
-       |      END AS jaccard
-       |    FROM candx JOIN shi sa ON new_id = sa.id JOIN shx sb ON old_id = sb.id)
-       |  WHERE jaccard >= 0.4)
+       |${sqlCrossArmCtes(0, prefix = "i")}
        |SELECT id_a, id_b, jaccard
-       |FROM (SELECT * FROM mhi UNION ALL SELECT * FROM mhx)
+       |FROM (SELECT * FROM mhi0 UNION ALL SELECT * FROM mx0)
        |ORDER BY id_a, id_b""".stripMargin
 
   // =========================================================================
@@ -3262,23 +3329,10 @@ object Pipeline {
       .orderBy("l_partkey")
   }
 
-  val p78Sql: String = {
-    import OracleHash._
+  val p78Sql: String =
     s"""WITH src AS (SELECT CAST(l_partkey AS VARCHAR) AS k FROM lineitem),
-       |sj AS (SELECT k || '#' || CAST(j AS VARCHAR) AS sv, j
-       |       FROM src CROSS JOIN (SELECT unnest(range(4)) AS j) js),
-       |h0 AS (SELECT j, ${fnv1a("sv")} AS h FROM sj),
-       |hf AS (SELECT j, ${mix("h")} AS u FROM h0),
-       |counters AS (SELECT j, CAST(u % 1024 AS INT) AS bucket,
-       |    COUNT(*) AS cnt FROM hf GROUP BY j, bucket),
        |pk AS (SELECT CAST(range AS BIGINT) AS key FROM range(1, 31)),
-       |pj AS (SELECT key, CAST(key AS VARCHAR) || '#' || CAST(j AS VARCHAR) AS sv, j
-       |       FROM pk CROSS JOIN (SELECT unnest(range(4)) AS j) js),
-       |q0 AS (SELECT key, j, ${fnv1a("sv")} AS h FROM pj),
-       |qf AS (SELECT key, j, ${mix("h")} AS u FROM q0),
-       |qb AS (SELECT key, j, CAST(u % 1024 AS INT) AS bucket FROM qf),
-       |est AS (SELECT key, MIN(COALESCE(cnt, 0)) AS n_cms
-       |        FROM qb LEFT JOIN counters USING (j, bucket) GROUP BY key),
+       |${sqlCountMinCtes("CAST(key AS VARCHAR)")},
        |ex AS (SELECT l_partkey AS key, COUNT(*) AS n FROM lineitem
        |       WHERE l_partkey BETWEEN 1 AND 30 GROUP BY 1)
        |SELECT est.key AS l_partkey, CAST(COALESCE(n, 0) AS BIGINT) AS n_exact,
@@ -3286,6 +3340,28 @@ object Pipeline {
        |  CAST(n_cms - COALESCE(n, 0) AS BIGINT) AS overcount
        |FROM est LEFT JOIN ex ON est.key = ex.key
        |ORDER BY l_partkey""".stripMargin
+
+  /** The count-min replay (d = 4 rows × w = 1024, hash fingerprint64(k ||
+    * '#' || j)): the counters `counters(j, bucket, cnt)` over the keys of
+    * `src(k VARCHAR)`, and `est(key, n_cms)`, the estimate of each probe
+    * key of `pk(key)` (`keyStr` renders a key as VARCHAR). Shared by p78
+    * and p110. */
+  private def sqlCountMinCtes(keyStr: String): String = {
+    import OracleHash._
+    s"""sj AS (SELECT k || '#' || CAST(j AS VARCHAR) AS sv, j
+       |       FROM src CROSS JOIN (SELECT unnest(range(4)) AS j) js),
+       |h0 AS (SELECT j, ${fnv1a("sv")} AS h FROM sj),
+       |hf AS (SELECT j, ${mix("h")} AS u FROM h0),
+       |counters AS (SELECT j, CAST(u % 1024 AS INT) AS bucket,
+       |    COUNT(*) AS cnt FROM hf GROUP BY j, bucket),
+       |pj AS (SELECT key, $keyStr || '#' || CAST(j AS VARCHAR) AS sv, j
+       |       FROM pk CROSS JOIN (SELECT unnest(range(4)) AS j) js),
+       |q0 AS (SELECT key, j, ${fnv1a("sv")} AS h FROM pj),
+       |qf AS (SELECT key, j, ${mix("h")} AS u FROM q0),
+       |qb AS (SELECT key, j, CAST(u % 1024 AS INT) AS bucket FROM qf),
+       |est AS (SELECT key, MIN(COALESCE(cnt, 0)) AS n_cms
+       |        FROM qb LEFT JOIN counters USING (j, bucket) GROUP BY key)"""
+      .stripMargin
   }
 
   // =========================================================================
@@ -3305,25 +3381,34 @@ object Pipeline {
   // cap, verified against the cumulative prior shingles.
   // =========================================================================
   def p79StreamNearDupFilter(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     val (existing, incoming) = passageStreamCorpus(spark, dir)
-    val root = Files.createTempDirectory("p79_").toString
-    val idxRoot = s"$root/idx"
-    val docsRoot = s"$root/docs"; val outRoot = s"$root/out"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => Dedup.minhashBandIndex(existing, "doc_id", "text",
-          numHashes = 64, bands = 16, shingleSize = 3, seed = 42L)
-        .write.parquet(s"$idxRoot/v0"),
-      () => existing.write.parquet(s"$docsRoot/v0"),
-      () => stage(incoming, pmod(col("doc_id"), lit(3)), root, 0 until 3))
-    replay(spark, root, incoming.schema) { (b, id) =>
-      graft.streaming.NearDupStream
-        .filterBatch(spark, idxRoot, docsRoot, outRoot, "doc_id", "text",
-          threshold = 0.4)(b, id)
+    nearDupStream(spark, existing, incoming, stripe("doc_id", 3))((_, _) => ())
+  }
+
+  /** Writes the near-dup stores' standing versions: the band index at
+    * `idx/v0` and the docs store at `docs/v0` (the registry's MinHash
+    * parameters). */
+  private def nearDupStanding(existing: DataFrame, idx: String,
+      docs: String): Seq[() => Unit] = Seq(
+    () => Dedup.minhashBandIndex(existing, "doc_id", "text",
+        numHashes = 64, bands = 16, shingleSize = 3, seed = 42L)
+      .write.parquet(s"$idx/v0"),
+    () => existing.write.parquet(s"$docs/v0"))
+
+  /** p79's stream over (`existing`, `incoming`), batch `batchOf` of 3;
+    * `verbs(r, id)` runs before batch `id`'s probe (the takedown and
+    * revive of p132/p146). */
+  private def nearDupStream(spark: SparkSession, existing: DataFrame,
+      incoming: DataFrame, batchOf: Column)(
+      verbs: (StreamRun, Long) => Unit): DataFrame = {
+    val r = new StreamRun(spark)
+    r.run(incoming, batchOf, 0 until 3)(
+        nearDupStanding(existing, r("idx"), r("docs")): _*) { (b, id) =>
+      verbs(r, id)
+      graft.streaming.NearDupStream.filterBatch(spark, r("idx"), r("docs"),
+        r("out"), "doc_id", "text", threshold = 0.4)(b, id)
     }
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("id_a"), col("id_b"), col("jaccard"), col("batch"))
+    r.out.select(col("id_a"), col("id_b"), col("jaccard"), col("batch"))
       .orderBy("id_a", "id_b")
   }
 
@@ -3334,7 +3419,8 @@ object Pipeline {
     * [[graft.operators.Dedup.minhashPairsIncremental]]'s cross-set, CTEs
     * `pb/ps/cr/crn/cx/mx` suffixed with `$b`, emitting `mx$b(id_a, id_b,
     * jaccard)` at threshold 0.4 / cap 200 (the registry parameters).
-    * Shared by p79 and the p114 ingest capstone. */
+    * Shared by p77 (one batch), the p79 family and the p114, p139 and
+    * p145 loops. */
   private def sqlCrossArmCtes(b: Int, standingTag: String = "x",
       prefix: String = "g", excludeOld: Option[String] = None): String = {
     // `excludeOld` replays a takedown visible to this batch (p132): the
@@ -3368,44 +3454,25 @@ object Pipeline {
        |  WHERE jaccard >= 0.4)""".stripMargin
   }
 
-  val p79Sql: String = {
-    def crossArm(b: Int): String = sqlCrossArmCtes(b)
-    s"""WITH ex AS (SELECT doc_id, $sqlToks AS toks FROM documents
-       |           WHERE doc_id < 250),
-       |inc AS (
-       |  SELECT doc_id, $sqlToks AS toks, doc_id % 3 AS b FROM documents
-       |  WHERE doc_id >= 250
-       |  UNION ALL
-       |  SELECT doc_id + 10000000, $sqlToks, (doc_id + 10000000) % 3
-       |  FROM documents WHERE doc_id < 10
-       |  UNION ALL
-       |  SELECT doc_id + 20000000, $sqlToks, (doc_id + 20000000) % 3
-       |  FROM documents WHERE doc_id BETWEEN 250 AND 254),
-       |i0 AS (SELECT doc_id, toks FROM inc WHERE b = 0),
-       |i1 AS (SELECT doc_id, toks FROM inc WHERE b = 1),
-       |i2 AS (SELECT doc_id, toks FROM inc WHERE b = 2),
+  /** The streamed near-dup oracle over a [[sqlTextStreamCtes]] `fixture`:
+    * each batch emits its in-batch pairs and its cross arm, whose prior
+    * side excludes `dead(b)`, the takedown batch `b` sees (p132, p146). */
+  private def sqlNearDupStream(fixture: String,
+      dead: Int => Option[String] = _ => None): String =
+    s"""WITH $fixture,
        |$sqlMinhashCoef,
        |${sqlMinhashChain("x", "ex")},
-       |${sqlMinhashChain("g0", "i0")},
-       |${sqlMinhashChain("g1", "i1")},
-       |${sqlMinhashChain("g2", "i2")},
-       |${sqlMinhashPairCtes("g0")},
-       |${sqlMinhashPairCtes("g1")},
-       |${sqlMinhashPairCtes("g2")},
-       |${crossArm(0)},
-       |${crossArm(1)},
-       |${crossArm(2)}
+       |${perBatch(3)(b => sqlMinhashChain(s"g$b", s"i$b"))},
+       |${perBatch(3)(b => sqlMinhashPairCtes(s"g$b"))},
+       |${perBatch(3)(b => sqlCrossArmCtes(b, excludeOld = dead(b)))}
        |SELECT id_a, id_b, jaccard, batch FROM (
-       |  SELECT id_a, id_b, jaccard, CAST(0 AS BIGINT) AS batch FROM
-       |    (SELECT * FROM mhg0 UNION ALL SELECT * FROM mx0)
-       |  UNION ALL
-       |  SELECT id_a, id_b, jaccard, CAST(1 AS BIGINT) FROM
-       |    (SELECT * FROM mhg1 UNION ALL SELECT * FROM mx1)
-       |  UNION ALL
-       |  SELECT id_a, id_b, jaccard, CAST(2 AS BIGINT) FROM
-       |    (SELECT * FROM mhg2 UNION ALL SELECT * FROM mx2))
+       |  ${(0 until 3).map(b => "SELECT id_a, id_b, jaccard, " +
+            s"CAST($b AS BIGINT) AS batch FROM (SELECT * FROM mhg$b " +
+            s"UNION ALL SELECT * FROM mx$b)").mkString("\n  UNION ALL\n  ")})
        |ORDER BY id_a, id_b""".stripMargin
-  }
+
+  val p79Sql: String =
+    sqlNearDupStream(sqlTextStreamCtes("doc_id >= 250", sqlPassagePlants))
 
   // =========================================================================
   // p80 — histogram quantile sketch: p50/p90/p99 of lineitem extended
@@ -3646,11 +3713,7 @@ object Pipeline {
   // the p36/p94 oracle shape.
   val p85Sql: String =
     s"""WITH t AS (SELECT doc_id, $sqlToks AS toks FROM documents),
-       |sh AS (SELECT doc_id, list_distinct(
-       |         CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-       |              ELSE list_transform(range(1, len(toks) - 1),
-       |                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-       |         END) AS s
+       |sh AS (SELECT doc_id, ${sqlShingle3List("toks")} AS s
        |       FROM t),
        |ne AS (SELECT doc_id, s, len(s) AS sz FROM sh WHERE len(s) > 0),
        |shu AS (SELECT doc_id, sz, unnest(s) AS g FROM ne),
@@ -3722,24 +3785,19 @@ object Pipeline {
   }
 
   def p86StreamFunnel(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     val ev = rankBatches(Tables.events(spark, dir)
       .filter(col("ts").isNotNull && col("user_id").isNotNull)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type")),
       3, Seq(col("ts"), col("event_id")))
-    val root = Files.createTempDirectory("p86_").toString
-    val stateRoot = s"$root/state"; val outRoot = s"$root/out"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
+    val r = new StreamRun(spark)
+    r.run(ev, col("batch"), 0 until 3)(
       () => spark.range(0, 50).select(col("id").as("user_id"),
           lit(1).as("stage"), lit(0L).as("__v"))
-        .write.parquet(s"$stateRoot/v0"),
-      () => stage(ev, col("batch"), root, 0 until 3))
-    replay(spark, root, ev.drop("batch").schema)(graft.streaming.FunnelStream
-      .advanceBatch(spark, stateRoot, outRoot, "user_id", "ts",
-        "event_id", "event_type", Seq("view", "click", "purchase")))
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("user_id"), col("stage"), col("batch"))
+        .write.parquet(r("state/v0")))(
+      graft.streaming.FunnelStream.advanceBatch(spark, r("state"), r("out"),
+        "user_id", "ts", "event_id", "event_type",
+        Seq("view", "click", "purchase")))
+    r.out.select(col("user_id"), col("stage"), col("batch"))
       .orderBy("user_id", "batch")
   }
 
@@ -3821,92 +3879,22 @@ object Pipeline {
   // bank, per-subspace stride-seeded Lloyd for the codebooks) through the
   // probe → reconstruct → refine-window → exact-rerank chain.
   // =========================================================================
-  def p87IvfPqRecallScaled(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val qs = emb.filter(col("vec_id") < 10)
-    val bank = scaledIvfBank(spark, dir)
-    val exact = Similarity.bruteForceTopK(qs, emb, k = 5)
-      .select("query_id", "neighbor_id")
-      .localCheckpoint(true)
-    val ann = Similarity.ivfPqTopK(qs, emb, k = 5,
-      centroids = bank, banks = pqBank(spark, dir),
-      nProbe = math.min(48, bank.length))
-    val balance = Similarity.ivfAssign(emb, bank)
-      .groupBy(col("cell")).agg(count(lit(1)).as("sz"))
-      .agg(count(lit(1)).as("n_cells"), max(col("sz")).as("max_cell"),
-        sum(col("sz")).as("n_vecs"))
-    ann.select("query_id", "neighbor_id")
-      .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-      .agg(count(lit(1)).as("hits"))
-      .crossJoin(exact.agg(count(lit(1)).as("total")))
-      .crossJoin(broadcast(balance))
-      .select(lit("ivfpq_scaled").as("method"), col("hits"), col("total"),
-        (col("hits").cast(DoubleType) / col("total").cast(DoubleType))
-          .as("recall"),
-        col("n_cells"), col("max_cell"),
-        (col("max_cell") * col("n_cells") <= col("n_vecs") * 4).as("balanced"))
-  }
+  def p87IvfPqRecallScaled(spark: SparkSession, dir: String): DataFrame =
+    scaledIvfGateRow(spark, dir, "ivfpq_scaled") { (qs, emb, bank) =>
+      Similarity.ivfPqTopK(qs, emb, k = 5,
+        centroids = bank, banks = pqBank(spark, dir),
+        nProbe = math.min(48, bank.length))
+    }
 
   /** The scale-adaptive IVF-PQ gate's oracle, shared by p87 (driver-bank
     * coarse stage) and p104 (relation-bank coarse stage) — the p76/p103
     * sharing argument composed with the PQ replay: coarse trainings are
     * bit-identical (IvfRelationalSpec), so one replay gates both, and
     * p104's `extraCols` appends its engine-computed `bank_matches`. */
-  private def ivfPqScaledGateSql(method: String, extraCols: String): String = {
-    import OracleHash._
-    val (ivfCtes, ivfBankName) = ivfBankCtes(nCells = 128, iters = 3,
-      stride = 15)
-    val (pqCtes, _) = sqlPqBankAndRv
-    s"""WITH emb AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-       |$ivfCtes,
-       |$pqCtes,
-       |${nearestCellCte("ca0", ivfBankName, keep = 1)},
-       |ca AS (SELECT id AS neighbor_id, cell FROM ca0),
-       |${nearestCellCte("qa0", ivfBankName, keep = 48, filter = " WHERE e.id < 10")},
-       |qa AS (SELECT id AS query_id, cell FROM qa0),
-       |q0 AS (SELECT id AS query_id, v AS qv0 FROM emb WHERE id < 10),
-       |apin AS (
-       |  SELECT qa.query_id, ca.neighbor_id, q0.qv0, rv.rv
-       |  FROM qa JOIN ca USING (cell)
-       |  JOIN q0 ON qa.query_id = q0.query_id
-       |  JOIN rv ON ca.neighbor_id = rv.neighbor_id
-       |  WHERE qa.query_id != ca.neighbor_id),
-       |${sqlPqSurvivors("apin", 5 * 24)},
-       |qv AS (SELECT id AS query_id, v AS qv FROM emb WHERE id < 10),
-       |cvx AS (SELECT id AS neighbor_id, v AS cv FROM emb),
-       |sx AS (SELECT query_id, neighbor_id,
-       |    ${seqDot("qv", "cv")} AS dt,
-       |    sqrt(${seqDot("qv", "qv")}) AS nq,
-       |    sqrt(${seqDot("cv", "cv")}) AS nc
-       |  FROM sv JOIN qv USING (query_id) JOIN cvx USING (neighbor_id)),
-       |annr AS (SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id
-       |        ORDER BY ${sqlCosine("dt", "nq", "nc")} DESC, neighbor_id ASC) AS rk
-       |    FROM sx) WHERE rk <= 5),
-       |se AS (SELECT query_id, neighbor_id,
-       |    ${seqDot("qv", "cv")} AS dt,
-       |    sqrt(${seqDot("qv", "qv")}) AS nq,
-       |    sqrt(${seqDot("cv", "cv")}) AS nc
-       |  FROM cvx CROSS JOIN qv WHERE query_id != neighbor_id),
-       |exact AS (SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id
-       |        ORDER BY ${sqlCosine("dt", "nq", "nc")} DESC, neighbor_id ASC) AS rk
-       |    FROM se) WHERE rk <= 5),
-       |sizes AS (SELECT cell, COUNT(*) AS sz FROM ca GROUP BY cell),
-       |bal AS (SELECT COUNT(*) AS n_cells, MAX(sz) AS max_cell,
-       |        SUM(sz) AS n_vecs FROM sizes),
-       |h AS (SELECT
-       |  (SELECT COUNT(*) FROM annr JOIN exact USING (query_id, neighbor_id)) AS hits,
-       |  (SELECT COUNT(*) FROM exact) AS total)
-       |SELECT '$method' AS method, CAST(hits AS BIGINT) AS hits,
-       |  CAST(total AS BIGINT) AS total,
-       |  CAST(hits AS DOUBLE) / CAST(total AS DOUBLE) AS recall,
-       |  CAST(n_cells AS BIGINT) AS n_cells, CAST(max_cell AS BIGINT) AS max_cell,
-       |  max_cell * n_cells <= 4 * n_vecs AS balanced$extraCols
-       |FROM h CROSS JOIN bal""".stripMargin
-  }
+  private def ivfPqScaledGateSql(method: String, extraCols: String): String =
+    s"""WITH ${sqlIvfPqSurvivorCtes(
+         OracleHash.ivfBankCtes(nCells = 128, iters = 3, stride = 15), 48)},
+       |${sqlIvfGateTail("sv", "emb", method, extraCols)}""".stripMargin
 
   val p87Sql: String = ivfPqScaledGateSql("ivfpq_scaled", "")
 
@@ -3927,25 +3915,19 @@ object Pipeline {
   // the joined-fold-CTE and multi-fold-SELECT planner traps p86 hit).
   // =========================================================================
   def p88StreamEwma(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     val ev = rankBatches(Tables.events(spark, dir)
       .filter(col("ts").isNotNull && col("user_id").isNotNull &&
         col("value").isNotNull)
       .select(col("event_id"), col("ts"), col("user_id"), col("value")),
       3, Seq(col("ts"), col("event_id")))
-    val root = Files.createTempDirectory("p88_").toString
-    val stateRoot = s"$root/state"; val outRoot = s"$root/out"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
+    val r = new StreamRun(spark)
+    r.run(ev, col("batch"), 0 until 3)(
       () => spark.range(0).select(col("id").as("user_id"),
           lit(0L).as("n_events"), lit(0.0).as("ewma"), lit(0L).as("__v"))
-        .write.parquet(s"$stateRoot/v0"),
-      () => stage(ev, col("batch"), root, 0 until 3))
-    replay(spark, root, ev.drop("batch").schema)(graft.streaming.EwmaStream
-      .advanceBatch(spark, stateRoot, outRoot, "user_id", "ts",
-        "event_id", "value", alpha = 0.125))
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("user_id"), col("n_events"), col("ewma"), col("batch"))
+        .write.parquet(r("state/v0")))(
+      graft.streaming.EwmaStream.advanceBatch(spark, r("state"), r("out"),
+        "user_id", "ts", "event_id", "value", alpha = 0.125))
+    r.out.select(col("user_id"), col("n_events"), col("ewma"), col("batch"))
       .orderBy("user_id", "batch")
   }
 
@@ -3990,28 +3972,8 @@ object Pipeline {
   // <= 2-versions assertions; this row puts the same contract under the
   // dual-scale correctness gate.
   // =========================================================================
-  def p89StreamCompacted(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    val (existing, incoming) = passageStreamCorpus(spark, dir)
-    val root = Files.createTempDirectory("p89_").toString
-    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
-    Dedup.passageWindowIndex(existing, "doc_id", "text")
-      .write.parquet(s"$idxRoot/v0")
-    val batchOf = pmod(col("doc_id"), lit(3))
-    def drain(): Unit = replay(spark, root, incoming.schema)(
-      graft.streaming.PassageStream
-        .filterBatch(spark, idxRoot, outRoot, "doc_id", "text"))
-    stage(incoming, batchOf, root, Seq(0, 1))
-    drain()
-    graft.streaming.PassageStream.compactIndex(spark, idxRoot, upTo = 2L)
-    stage(incoming, batchOf, root, Seq(2))
-    drain()
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("doc_id"), col("batch"), col("n_windows"),
-        col("n_dup_windows"), col("dup_ratio"),
-        (col("dup_ratio") < 0.5).as("kept"))
-      .orderBy("doc_id")
-  }
+  def p89StreamCompacted(spark: SparkSession, dir: String): DataFrame =
+    passageFilterStream(spark, dir, compacted = true)
 
   /** p75's oracle verbatim: compaction must be output-invisible. */
   val p89Sql: String = p75Sql
@@ -4189,21 +4151,15 @@ object Pipeline {
   // one synthetic observation per cell (n = 1).
   // =========================================================================
   def p93StreamKmeans(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
+    import graft.streaming.KMeansStream
     val emb = Tables.embeddings(spark, dir)
     val seed = Similarity.ivfCentroids(emb, nCells = 8)
-    val vecs = emb.select(col("vec_id"), col("embedding"))
-    val root = Files.createTempDirectory("p93_").toString
-    val stateRoot = s"$root/state"; val outRoot = s"$root/out"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => graft.streaming.KMeansStream.writeSeedState(spark, stateRoot,
-        seed),
-      () => stage(vecs, pmod(col("vec_id"), lit(3)), root, 0 until 3))
-    replay(spark, root, vecs.schema)(graft.streaming.KMeansStream
-      .advanceBatch(spark, stateRoot, outRoot, "vec_id", "embedding"))
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("batch"), col("cell"), col("n_points"), col("pos"),
+    val r = new StreamRun(spark)
+    r.run(emb.select(col("vec_id"), col("embedding")), stripe("vec_id", 3),
+      0 until 3)(() => KMeansStream.writeSeedState(spark, r("state"), seed))(
+      KMeansStream.advanceBatch(spark, r("state"), r("out"), "vec_id",
+        "embedding"))
+    r.out.select(col("batch"), col("cell"), col("n_points"), col("pos"),
         col("val"))
       .orderBy("batch", "cell", "pos")
   }
@@ -4260,11 +4216,7 @@ object Pipeline {
 
   val p94Sql: String =
     s"""WITH t AS (SELECT doc_id, $sqlToks AS toks FROM documents),
-       |sh AS (SELECT doc_id, list_distinct(
-       |         CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-       |              ELSE list_transform(range(1, len(toks) - 1),
-       |                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-       |         END) AS s
+       |sh AS (SELECT doc_id, ${sqlShingle3List("toks")} AS s
        |       FROM t),
        |ne AS (SELECT doc_id, s FROM sh WHERE len(s) > 0),
        |na AS (SELECT doc_id, len(s) AS n FROM ne),
@@ -4354,17 +4306,9 @@ object Pipeline {
        |  UNION ALL SELECT doc_id, text FROM plant),
        |tc AS (SELECT doc_id, $sqlToks AS toks FROM corpus),
        |tb AS (SELECT doc_id, $sqlToks AS toks FROM batch),
-       |shc AS (SELECT doc_id, list_distinct(
-       |         CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-       |              ELSE list_transform(range(1, len(toks) - 1),
-       |                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-       |         END) AS s
+       |shc AS (SELECT doc_id, ${sqlShingle3List("toks")} AS s
        |       FROM tc),
-       |shb AS (SELECT doc_id, list_distinct(
-       |         CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-       |              ELSE list_transform(range(1, len(toks) - 1),
-       |                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-       |         END) AS s
+       |shb AS (SELECT doc_id, ${sqlShingle3List("toks")} AS s
        |       FROM tb),
        |nb AS (SELECT doc_id, len(s) AS n FROM shb WHERE len(s) > 0),
        |exa AS (SELECT doc_id, unnest(s) AS g FROM shb WHERE len(s) > 0),
@@ -4952,46 +4896,52 @@ object Pipeline {
   // fail-loud in the stream).
   // =========================================================================
   def p105StreamIvfIndex(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     val emb = Tables.embeddings(spark, dir)
-    val standing = emb.filter(col("vec_id") < 250)
-    val incoming = emb.filter(col("vec_id") >= 250)
-      .select(col("vec_id"), col("embedding"))
-    val root = Files.createTempDirectory("p105_").toString
-    val bankRoot = s"$root/bank"
-    val indexRoot = s"$root/index"; val outRoot = s"$root/out"
-    val bank = IvfRelational.trainBank(standing, nCells = 16, iters = 3,
-      stride = 15)
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => graft.streaming.IvfStream.writeStanding(spark, bankRoot,
-        indexRoot, standing, bank),
-      () => stage(incoming, pmod(col("vec_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema)(
-      graft.streaming.IvfStream.appendBatch(spark, bankRoot, indexRoot, outRoot,
-        "vec_id", "embedding"))
-    graft.streaming.Versions.list(spark, indexRoot)
+    val r = new StreamRun(spark)
+    r.run(emb.filter(col("vec_id") >= 250)
+        .select(col("vec_id"), col("embedding")), stripe("vec_id", 2),
+      0 until 2)(ivfStanding(spark, r, emb.filter(col("vec_id") < 250)))(
+      graft.streaming.IvfStream.appendBatch(spark, r("bank"), r("index"),
+        r("out"), "vec_id", "embedding"))
+    ivfIndexBySrc(spark, r("index")).orderBy("vec_id")
+  }
+
+  /** Trains the 16-cell relation bank on `standing` and writes it with
+    * its assignments as the IVF stores' standing versions under `r`. */
+  private def ivfStanding(spark: SparkSession, r: StreamRun,
+      standing: DataFrame): () => Unit = () =>
+    graft.streaming.IvfStream.writeStanding(spark, r("bank"), r("index"),
+      standing, IvfRelational.trainBank(standing, nCells = 16, iters = 3,
+        stride = 15))
+
+  /** An IVF index's rows, each with the version it lives in as `src`. */
+  private def ivfIndexBySrc(spark: SparkSession, root: String): DataFrame =
+    graft.streaming.Versions.list(spark, root)
       .map { case (vid, p) =>
         spark.read.parquet(p.toString)
           .select(col("neighbor_id").as("vec_id"), col("cell"),
             lit(vid).cast("int").as("src"))
       }
       .reduce(_ unionAll _)
-      .orderBy("vec_id")
-  }
 
-  val p105Sql: String = {
+  val p105Sql: String = sqlIvfIndexSql("", 15,
+    "CASE WHEN id < 250 THEN 0 WHEN id % 2 = 0 THEN 1 ELSE 2 END", "")
+
+  /** The oracle of a streamed IVF index: the 16-cell bank trained (seed
+    * stride `stride`) on the vectors below 250 that pass `trainWhere`,
+    * every vector's nearest cell, its `src` version and `extraCols`. */
+  private def sqlIvfIndexSql(trainWhere: String, stride: Int, src: String,
+      extraCols: String): String = {
     import OracleHash._
-    val (bankCtes, bank) = ivfBankCtes(nCells = 16, iters = 3, stride = 15)
+    val (bankCtes, bank) = ivfBankCtes(nCells = 16, iters = 3, stride = stride)
     s"""WITH emb AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
-       |  FROM embeddings WHERE vec_id < 250),
+       |  FROM embeddings WHERE vec_id < 250$trainWhere),
        |$bankCtes,
        |allv AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
        |  FROM embeddings),
        |${nearestCellCte("asg", bank, keep = 1, source = "allv")}
        |SELECT id AS vec_id, CAST(cell AS INT) AS cell,
-       |  CAST(CASE WHEN id < 250 THEN 0
-       |            WHEN id % 2 = 0 THEN 1 ELSE 2 END AS INT) AS src
+       |  CAST($src AS INT) AS src$extraCols
        |FROM asg
        |ORDER BY vec_id""".stripMargin
   }
@@ -5108,20 +5058,15 @@ object Pipeline {
   // model rows double-for-double.
   // =========================================================================
   def p107StreamPca(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import graft.streaming.PcaStream
     val emb = Tables.embeddings(spark, dir)
-    val standing = emb.filter(col("vec_id") < 250)
-    val incoming = emb.filter(col("vec_id") >= 250)
-      .select(col("vec_id"), col("embedding"))
-    val root = Files.createTempDirectory("p107_").toString
-    val momRoot = s"$root/moments"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => PcaStream.writeStanding(spark, momRoot, standing),
-      () => stage(incoming, pmod(col("vec_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema)(PcaStream.advanceBatch(spark, momRoot))
-    val model = PcaStream.modelAt(spark, momRoot, k = 2, iters = p100Iters)
+    val r = new StreamRun(spark)
+    r.run(emb.filter(col("vec_id") >= 250)
+        .select(col("vec_id"), col("embedding")), stripe("vec_id", 2),
+      0 until 2)(() => PcaStream.writeStanding(spark, r("moments"),
+        emb.filter(col("vec_id") < 250)))(
+      PcaStream.advanceBatch(spark, r("moments")))
+    val model = PcaStream.modelAt(spark, r("moments"), k = 2, iters = p100Iters)
     import spark.implicits._
     val rows =
       model.mean.zipWithIndex.map { case (m, i) => (0, i, m, 0.0) } ++
@@ -5170,29 +5115,57 @@ object Pipeline {
   private val p108Terms = Seq("data", "merge", "hash", "scan")
 
   def p108StreamBm25(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.streaming.RetrievalStream
     val docs = Tables.documents(spark, dir)
-    val standing = docs.filter(col("doc_id") < 250)
-    val incoming = docs.filter(col("doc_id") >= 250)
-      .select(col("doc_id"), col("text"))
-    val root = Files.createTempDirectory("p108_").toString
-    val idxRoot = s"$root/idx"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => RetrievalStream.writeStanding(spark, idxRoot, standing),
-      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema)(
-      RetrievalStream.appendBatch(spark, idxRoot))
-    RetrievalStream.bm25TopK(spark, idxRoot, p108Terms, k = 40)
+    graft.streaming.RetrievalStream.bm25TopK(spark,
+      bm25Stream(spark, docs, docs.filter(col("doc_id") < 250))((_, _) => ()),
+      p108Terms, k = 40)
   }
 
+  /** p108's postings stream: `standing` stands and the docs from 250 on
+    * arrive in batch `doc_id mod 2`; `verbs(idx, id)` runs before batch
+    * `id`'s append (the takedowns of p133/p136/p139). Returns the index
+    * root. */
+  private def bm25Stream(spark: SparkSession, docs: DataFrame,
+      standing: DataFrame)(verbs: (String, Long) => Unit): String = {
+    import graft.streaming.RetrievalStream
+    val r = new StreamRun(spark)
+    r.run(docs.filter(col("doc_id") >= 250).select(col("doc_id"), col("text")),
+      stripe("doc_id", 2), 0 until 2)(
+      () => RetrievalStream.writeStanding(spark, r("idx"), standing)) {
+      (b, id) =>
+        verbs(r("idx"), id)
+        RetrievalStream.appendBatch(spark, r("idx"))(b, id)
+    }
+    r("idx")
+  }
+
+  /** The 4 lexicographically smallest distinct tokens of doc 251: a query
+    * vocabulary drawn from the corpus (p133's rule). */
+  private def corpusTerms(docs: DataFrame): Seq[String] =
+    docs.filter(col("doc_id") === 251)
+      .select(explode(TF.tokens(col("text"))).as("term"))
+      .distinct().orderBy("term").limit(4)
+      .collect().map(_.getString(0)).toSeq
+
+  /** [[corpusTerms]], oracle side, as CTE `qt$tag(term)`. */
+  private def sqlCorpusTermsCte(tag: String): String =
+    s"""qt$tag AS (SELECT term FROM (
+       |    SELECT DISTINCT unnest($sqlToks) AS term FROM documents
+       |    WHERE doc_id = 251)
+       |  ORDER BY term LIMIT 4)""".stripMargin
+
+  /** The oracle of a takedown through the BM25 stream: the unchanged
+    * chain over the retained corpus `live` (defined by `liveCtes`) for
+    * the [[corpusTerms]]. */
+  private def sqlLiveBm25(tag: String, liveCtes: String): String =
+    s"""WITH ${sqlCorpusTermsCte(tag)},
+       |$liveCtes,
+       |${sqlBm25Top(tag,
+            sqlBm25CtesWhere(tag, s"SELECT term FROM qt$tag", "live"), 40)}"""
+      .stripMargin
+
   val p108Sql: String =
-    s"""WITH ${sqlBm25Ctes("108", p108Terms)}
-       |SELECT doc_id, CAST(ROUND(SUM(sct), 6) AS DOUBLE) AS score
-       |FROM x108 GROUP BY doc_id
-       |ORDER BY score DESC, doc_id
-       |LIMIT 40""".stripMargin
+    s"WITH ${sqlBm25Top("108", sqlBm25Ctes("108", p108Terms), 40)}"
 
   // =========================================================================
   // p109 — STREAMING sketch maintenance: the profiling member of the
@@ -5209,22 +5182,15 @@ object Pipeline {
   // plus the exact countDistinct and the error in basis points.
   // =========================================================================
   def p109StreamHll(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import graft.streaming.SketchStream
     val docs = Tables.documents(spark, dir)
-    val standing = docs.filter(col("doc_id") < 250)
-    val incoming = docs.filter(col("doc_id") >= 250)
-      .select(col("doc_id"), col("lang"), col("text"))
-    val root = Files.createTempDirectory("p109_").toString
-    val regRoot = s"$root/reg"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => SketchStream.writeStanding(spark, regRoot, standing,
-        Seq("lang"), "text"),
-      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema)(
-      SketchStream.advanceBatch(spark, regRoot, Seq("lang"), "text"))
-    val hll = SketchStream.distinctAt(spark, regRoot, Seq("lang"))
+    val r = new StreamRun(spark)
+    r.run(docs.filter(col("doc_id") >= 250)
+        .select(col("doc_id"), col("lang"), col("text")),
+      stripe("doc_id", 2), 0 until 2)(() => SketchStream.writeStanding(spark,
+        r("reg"), docs.filter(col("doc_id") < 250), Seq("lang"), "text"))(
+      SketchStream.advanceBatch(spark, r("reg"), Seq("lang"), "text"))
+    val hll = SketchStream.distinctAt(spark, r("reg"), Seq("lang"))
     val exact = docs.groupBy(col("lang"))
       .agg(countDistinct(col("text")).as("n_exact"))
     exact.join(hll, "lang")
@@ -5265,29 +5231,22 @@ object Pipeline {
     "the", "value", "window")
 
   def p110StreamCountMin(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import graft.streaming.SketchStream
     val docs = Tables.documents(spark, dir)
     def toTokens(df: DataFrame): DataFrame =
       df.select(explode(TF.tokens(col("text"))).as("token"))
-    val standing = docs.filter(col("doc_id") < 250)
-    val incoming = docs.filter(col("doc_id") >= 250)
-      .select(col("doc_id"), col("text"))
-    val root = Files.createTempDirectory("p110_").toString
-    val cmRoot = s"$root/cm"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => SketchStream.writeStandingCm(spark, cmRoot, toTokens(standing),
-        "token"),
-      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema) { (b, id) =>
-      SketchStream.advanceBatchCm(spark, cmRoot, "token")(toTokens(b), id)
+    val r = new StreamRun(spark)
+    r.run(docs.filter(col("doc_id") >= 250).select(col("doc_id"), col("text")),
+      stripe("doc_id", 2), 0 until 2)(() => SketchStream.writeStandingCm(spark,
+        r("cm"), toTokens(docs.filter(col("doc_id") < 250)), "token")) {
+      (b, id) => SketchStream.advanceBatchCm(spark, r("cm"), "token")(
+        toTokens(b), id)
     }
     import spark.implicits._
     val probes = p110Keys.toDF("token")
     val exact = toTokens(docs).filter(col("token").isInCollection(p110Keys))
       .groupBy(col("token")).agg(count(lit(1)).as("n_exact"))
-    SketchStream.lookupAt(spark, cmRoot, probes, "token")
+    SketchStream.lookupAt(spark, r("cm"), probes, "token")
       .join(exact, Seq("token"), "left")
       .select(col("token"),
         coalesce(col("n_exact"), lit(0L)).as("n_exact"),
@@ -5297,24 +5256,11 @@ object Pipeline {
   }
 
   val p110Sql: String = {
-    import OracleHash._
     val keys = p110Keys.map(k => s"'$k'").mkString(", ")
     s"""WITH toks AS (SELECT unnest($sqlToks) AS k FROM documents),
        |src AS (SELECT CAST(k AS VARCHAR) AS k FROM toks),
-       |sj AS (SELECT k || '#' || CAST(j AS VARCHAR) AS sv, j
-       |       FROM src CROSS JOIN (SELECT unnest(range(4)) AS j) js),
-       |h0 AS (SELECT j, ${fnv1a("sv")} AS h FROM sj),
-       |hf AS (SELECT j, ${mix("h")} AS u FROM h0),
-       |counters AS (SELECT j, CAST(u % 1024 AS INT) AS bucket,
-       |    COUNT(*) AS cnt FROM hf GROUP BY j, bucket),
        |pk AS (SELECT unnest([$keys]) AS key),
-       |pj AS (SELECT key, key || '#' || CAST(j AS VARCHAR) AS sv, j
-       |       FROM pk CROSS JOIN (SELECT unnest(range(4)) AS j) js),
-       |q0 AS (SELECT key, j, ${fnv1a("sv")} AS h FROM pj),
-       |qf AS (SELECT key, j, ${mix("h")} AS u FROM q0),
-       |qb AS (SELECT key, j, CAST(u % 1024 AS INT) AS bucket FROM qf),
-       |est AS (SELECT key, MIN(COALESCE(cnt, 0)) AS n_cms
-       |        FROM qb LEFT JOIN counters USING (j, bucket) GROUP BY key),
+       |${sqlCountMinCtes("key")},
        |ex AS (SELECT k AS key, COUNT(*) AS n FROM toks
        |       WHERE k IN ($keys) GROUP BY 1)
        |SELECT est.key AS token, CAST(COALESCE(n, 0) AS BIGINT) AS n_exact,
@@ -5344,29 +5290,20 @@ object Pipeline {
   // counts — streamed estimates must match bin-for-bin.
   // =========================================================================
   def p111StreamQuantiles(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import graft.streaming.QuantileStream
     import graft.operators.Profiling
     val docs = Tables.documents(spark, dir)
-    val standing = docs.filter(col("doc_id") < 250)
-    val incoming = docs.filter(col("doc_id") >= 250)
-      .select(col("doc_id"), col("n_chars"))
-    val root = Files.createTempDirectory("p111_").toString
-    val boundsRoot = s"$root/bounds"
-    val countRoot = s"$root/counts"; val profRoot = s"$root/prof"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => QuantileStream.writeStanding(spark, boundsRoot, countRoot,
-        standing, "n_chars", 128),
-      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema)(
-      QuantileStream.advanceBatch(spark, boundsRoot, countRoot, profRoot,
-        "n_chars"))
-    val est = QuantileStream.quantilesAt(spark, boundsRoot, countRoot,
+    val r = new StreamRun(spark)
+    r.run(docs.filter(col("doc_id") >= 250).select(col("doc_id"), col("n_chars")),
+      stripe("doc_id", 2), 0 until 2)(() => QuantileStream.writeStanding(spark,
+        r("bounds"), r("counts"), docs.filter(col("doc_id") < 250), "n_chars",
+        128))(QuantileStream.advanceBatch(spark, r("bounds"), r("counts"),
+      r("prof"), "n_chars"))
+    val est = QuantileStream.quantilesAt(spark, r("bounds"), r("counts"),
       Seq(0.5, 0.9, 0.99))
     val exact = Profiling.histogramQuantiles(docs, "n_chars", 128,
       Seq(0.5, 0.9, 0.99), exact = true).select(col("q"), col("p_exact"))
-    val drift = spark.read.parquet(s"$profRoot/b*")
+    val drift = spark.read.parquet(r("prof/b*"))
       .agg(sum(col("n_below")).as("n_below"),
         sum(col("n_above")).as("n_above"))
     est.join(exact, Seq("q"))
@@ -5418,16 +5355,23 @@ object Pipeline {
        |       FROM qs CROSS JOIN nf
        |       JOIN ord ON ord.rn = CAST(ceil(q * nf.n) AS BIGINT))""".stripMargin
 
+  /** CTE `name(${p}below, ${p}above)`: how many n_chars of the docs
+    * matching `where` fall below and above the bounds `mm(mn, mx)` — the
+    * clamped mass, the drift signal of the quantile stores. */
+  private def sqlDriftCte(name: String, p: String, where: String,
+      mm: String): String =
+    s"""$name AS (SELECT
+       |    CAST(COALESCE(SUM(CASE WHEN x < $mm.mn THEN 1 ELSE 0 END), 0)
+       |         AS BIGINT) AS ${p}below,
+       |    CAST(COALESCE(SUM(CASE WHEN x > $mm.mx THEN 1 ELSE 0 END), 0)
+       |         AS BIGINT) AS ${p}above
+       |  FROM (SELECT CAST(n_chars AS DOUBLE) AS x FROM documents
+       |        WHERE $where AND n_chars IS NOT NULL)
+       |  CROSS JOIN $mm)""".stripMargin
+
   val p111Sql: String =
     s"""WITH ${sqlQuantileReplayCtes(128, "doc_id < 250")},
-       |drift AS (SELECT
-       |    CAST(COALESCE(SUM(CASE WHEN x < mm.mn THEN 1 ELSE 0 END), 0)
-       |         AS BIGINT) AS n_below,
-       |    CAST(COALESCE(SUM(CASE WHEN x > mm.mx THEN 1 ELSE 0 END), 0)
-       |         AS BIGINT) AS n_above
-       |  FROM (SELECT CAST(n_chars AS DOUBLE) AS x FROM documents
-       |        WHERE doc_id >= 250 AND n_chars IS NOT NULL) inc
-       |  CROSS JOIN mm)
+       |${sqlDriftCte("drift", "n_", "doc_id >= 250", "mm")}
        |SELECT est.q, est.n, est.est, ex.p_exact,
        |  est.est - ex.p_exact AS err, drift.n_below, drift.n_above
        |FROM est JOIN ex USING (q) CROSS JOIN drift ORDER BY q""".stripMargin
@@ -5455,47 +5399,32 @@ object Pipeline {
   // pattern); the oracle asserts it TRUE.
   // =========================================================================
   def p112StreamBloom(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import graft.streaming.SketchStream
     import graft.operators.Profiling
     val docs = Tables.documents(spark, dir)
-    def grams(df: DataFrame): DataFrame =
-      df.select(col("doc_id"),
-          array_distinct(TF.tokenShingles(TF.tokens(col("text")), 5)).as("sh"))
-        .select(col("doc_id"), explode(col("sh")).as("gram"))
     val bench = docs.filter(col("source") === "src0")
-    val standing = bench.filter(pmod(col("doc_id"), lit(4)) < 2)
-    val incoming = bench.filter(pmod(col("doc_id"), lit(4)) >= 2)
-      .select(col("doc_id"), col("text"))
-    val root = Files.createTempDirectory("p112_").toString
-    val bloomRoot = s"$root/bloom"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => SketchStream.writeStandingBloom(spark, bloomRoot,
-        grams(standing), "gram"),
-      () => stage(incoming, pmod(col("doc_id"), lit(4)) - 2, root, 0 until 2))
-    replay(spark, root, incoming.schema) { (b, id) =>
-      SketchStream.advanceBatchBloom(spark, bloomRoot, "gram")(grams(b), id)
+    val r = new StreamRun(spark)
+    r.run(bench.filter(pmod(col("doc_id"), lit(4)) >= 2)
+        .select(col("doc_id"), col("text")), pmod(col("doc_id"), lit(4)) - 2,
+      0 until 2)(() => SketchStream.writeStandingBloom(spark, r("bloom"),
+        gram5(bench.filter(pmod(col("doc_id"), lit(4)) < 2)), "gram")) {
+      (b, id) => SketchStream.advanceBatchBloom(spark, r("bloom"), "gram")(
+        gram5(b), id)
     }
     // folded == one-shot, engine-computed bit-for-bit; oracle asserts
     // TRUE. Rides into the result as a broadcast 1-row cross join (the
     // bank_matches pattern) — the whole query stays ONE plan, no
     // mid-query driver action (r10 VERDICT nit #2).
-    val folded = SketchStream.readBloomBits(spark, bloomRoot)
-    val oneShot = Profiling.bloomBits(grams(bench), "gram")
+    val folded = SketchStream.readBloomBits(spark, r("bloom"))
+    val oneShot = Profiling.bloomBits(gram5(bench), "gram")
     val bloomCmp = folded.withColumn("l", lit(1))
       .join(oneShot.withColumn("r", lit(1)), Seq("j", "bit"), "full_outer")
       .agg((count(lit(1)) === count(col("l")) &&
         count(lit(1)) === count(col("r"))).as("bloom_matches"))
-    val benchGrams = grams(bench).select(col("gram")).distinct()
-    val corpusGrams = grams(docs.filter(col("source") =!= "src0"))
-    val cand = SketchStream.prefilterAt(spark, bloomRoot, corpusGrams, "gram")
-    val nCand = cand.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_candidate_grams"))
-    val nShared = cand.join(broadcast(benchGrams), "gram")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared_grams"))
-      .filter(col("n_shared_grams") >= 3)
-    nShared.join(nCand, "doc_id")
+    val benchGrams = gram5(bench).select(col("gram")).distinct()
+    val corpusGrams = gram5(docs.filter(col("source") =!= "src0"))
+    sharedGrams(SketchStream.prefilterAt(spark, r("bloom"), corpusGrams,
+        "gram"), benchGrams)
       .crossJoin(broadcast(bloomCmp))
       .select(col("doc_id"), col("n_candidate_grams"),
         col("n_shared_grams"), col("bloom_matches"))
@@ -5517,8 +5446,7 @@ object Pipeline {
        |        i -> $toks[i] || ' ' || $toks[i+1] || ' ' || $toks[i+2] || ' ' || $toks[i+3] || ' ' || $toks[i+4])
        |    END)""".stripMargin
 
-  private val sqlBloomDecontamCtes: String = {
-    import OracleHash._
+  private val sqlBloomDecontamCtes: String =
     s"""sh AS (
        |  SELECT doc_id, source,
        |    ${sqlGram5List("toks")} AS sh
@@ -5528,18 +5456,34 @@ object Pipeline {
        |ns AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_shared_grams
        |       FROM corpus JOIN bench USING (gram)
        |       GROUP BY doc_id HAVING COUNT(*) >= 3),
-       |bj AS (SELECT gram || '#' || CAST(j AS VARCHAR) AS sv, j
-       |       FROM bench CROSS JOIN (SELECT unnest(range(4)) AS j) js),
-       |bh0 AS (SELECT j, ${fnv1a("sv")} AS h FROM bj),
-       |bbits AS (SELECT DISTINCT j, CAST(${mix("h")} % 65536 AS INT) AS bit
-       |          FROM bh0),
-       |cg AS (SELECT c.doc_id, c.gram FROM corpus c JOIN ns USING (doc_id)),
+       |${sqlBloomBitsCtes("b", "bench", 65536)},
+       |${sqlBloomCandCtes("bbits", 65536)}""".stripMargin
+
+  /** The bloom bits of the distinct grams of `keys(gram)`: 4 hashes
+    * fingerprint64(gram || '#' || j) into `m` bits (the SketchStream
+    * hash), as CTEs `${p}j`, `${p}h0` and `${p}bits(j, bit)`. */
+  private def sqlBloomBitsCtes(p: String, keys: String, m: Int): String = {
+    import OracleHash._
+    s"""${p}j AS (SELECT gram || '#' || CAST(j AS VARCHAR) AS sv, j
+       |       FROM $keys CROSS JOIN (SELECT unnest(range(4)) AS j) js),
+       |${p}h0 AS (SELECT j, ${fnv1a("sv")} AS h FROM ${p}j),
+       |${p}bits AS (SELECT DISTINCT j, CAST(${mix("h")} % $m AS INT) AS bit
+       |          FROM ${p}h0)""".stripMargin
+  }
+
+  /** The bloom candidates among the `corpus(doc_id, gram)` grams of the
+    * docs in `ns`: `cand(doc_id, gram)`, the grams all 4 of whose bits
+    * are in `bits`, and their count per doc, `nc(doc_id,
+    * n_candidate_grams)`. */
+  private def sqlBloomCandCtes(bits: String, m: Int): String = {
+    import OracleHash._
+    s"""cg AS (SELECT c.doc_id, c.gram FROM corpus c JOIN ns USING (doc_id)),
        |cj AS (SELECT doc_id, gram, gram || '#' || CAST(j AS VARCHAR) AS sv, j
        |       FROM cg CROSS JOIN (SELECT unnest(range(4)) AS j) js2),
        |ch0 AS (SELECT doc_id, gram, j, ${fnv1a("sv")} AS h FROM cj),
-       |cbits AS (SELECT doc_id, gram, j, CAST(${mix("h")} % 65536 AS INT) AS bit
+       |cbits AS (SELECT doc_id, gram, j, CAST(${mix("h")} % $m AS INT) AS bit
        |          FROM ch0),
-       |cand AS (SELECT doc_id, gram FROM cbits JOIN bbits USING (j, bit)
+       |cand AS (SELECT doc_id, gram FROM cbits JOIN $bits USING (j, bit)
        |         GROUP BY doc_id, gram HAVING COUNT(*) = 4),
        |nc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_candidate_grams
        |       FROM cand GROUP BY doc_id)""".stripMargin
@@ -5570,51 +5514,53 @@ object Pipeline {
   // provenance replayed from the deterministic split).
   // =========================================================================
   def p113StreamDecontam(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.streaming.SketchStream
     import graft.operators.Profiling
     val docs = Tables.documents(spark, dir)
-    def grams(df: DataFrame): DataFrame =
-      df.select(col("doc_id"),
-          array_distinct(TF.tokenShingles(TF.tokens(col("text")), 5)).as("sh"))
-        .select(col("doc_id"), explode(col("sh")).as("gram"))
-    val bench = docs.filter(col("source") === "src0")
-    val root = Files.createTempDirectory("p113_").toString
-    val bloomRoot = s"$root/bloom"; val outRoot = s"$root/out"
-    val incoming = docs.filter(col("source") =!= "src0")
-      .select(col("doc_id"), col("text"))
-    // frozen per-epoch probe artifacts (the bloom → literal-mask chain,
-    // the standing benchmark gram relation) and the input staging are
-    // independent setup chains — overlap them (guide §2.6)
-    val setupOut = graft.core.Par.eval(Seq[() => Any](
-      () => {
-        SketchStream.writeStandingBloom(spark, bloomRoot, grams(bench),
-          "gram")
-        Profiling.bloomMasks(
-          SketchStream.readBloomBits(spark, bloomRoot), 4, 1 << 16)
-      },
-      () => grams(bench).select(col("gram")).distinct()
-        .localCheckpoint(true),
-      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2)))
-    val masks = setupOut(0).asInstanceOf[Array[Array[Long]]]
-    val benchGrams = setupOut(1).asInstanceOf[DataFrame]
-    replay(spark, root, incoming.schema) { (b, id) =>
-      val g = grams(b)
-      val cand = g.filter(
-        Profiling.bloomMightContain(col("gram"), masks, 1 << 16))
-      val nCand = cand.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_candidate_grams"))
-      cand.join(broadcast(benchGrams), "gram")
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared_grams"))
-        .filter(col("n_shared_grams") >= 3)
-        .join(nCand, "doc_id")
+    val r = new StreamRun(spark)
+    val (masks, benchGrams) = frozenBlocklist(spark, r, docs)
+    r.run(docs.filter(col("source") =!= "src0")
+        .select(col("doc_id"), col("text")), stripe("doc_id", 2), 0 until 2)(
+      () => masks(), () => benchGrams()) { (b, id) =>
+      sharedGrams(gram5(b).filter(
+          Profiling.bloomMightContain(col("gram"), masks(), 1 << 16)),
+          benchGrams())
         .withColumn("batch", graft.functions.SteadyLit.steadyLong(id))
-        .write.mode("overwrite").parquet(s"$outRoot/b$id")
+        .write.mode("overwrite").parquet(r(s"out/b$id"))
     }
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("doc_id"), col("batch"), col("n_candidate_grams"),
+    r.out.select(col("doc_id"), col("batch"), col("n_candidate_grams"),
         col("n_shared_grams"))
       .orderBy("doc_id")
+  }
+
+  /** The docs of the bloom candidates `cand(doc_id, gram)` sharing at
+    * least 3 grams with `benchGrams`: (doc_id, n_shared_grams,
+    * n_candidate_grams), the exact verdict over the candidates only. */
+  private def sharedGrams(cand: DataFrame, benchGrams: DataFrame)
+      : DataFrame = {
+    val nCand = cand.groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_candidate_grams"))
+    cand.join(broadcast(benchGrams), "gram")
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared_grams"))
+      .filter(col("n_shared_grams") >= 3)
+      .join(nCand, "doc_id")
+  }
+
+  /** The frozen per-epoch decontamination artifacts of p113/p114, built
+    * lazily so a [[StreamRun]] overlaps them with its staging: the
+    * benchmark (`source = 'src0'`) blocklist bloom at `r("bloom")` as
+    * literal masks, and the benchmark's distinct grams, checkpointed. */
+  private def frozenBlocklist(spark: SparkSession, r: StreamRun,
+      docs: DataFrame): (() => Array[Array[Long]], () => DataFrame) = {
+    import graft.streaming.SketchStream
+    val bench = docs.filter(col("source") === "src0")
+    lazy val masks = {
+      SketchStream.writeStandingBloom(spark, r("bloom"), gram5(bench), "gram")
+      graft.operators.Profiling.bloomMasks(
+        SketchStream.readBloomBits(spark, r("bloom")), 4, 1 << 16)
+    }
+    lazy val grams = gram5(bench).select(col("gram")).distinct()
+      .localCheckpoint(true)
+    (() => masks, () => grams)
   }
 
   val p113Sql: String =
@@ -5693,16 +5639,7 @@ object Pipeline {
       pairsRoot, "doc_id", "text", threshold = 0.4,
       materializePairs = true)(
       b.select(col("doc_id"), col("text")), id)
-    // flag the INGEST side of each pair: id_b when it is this
-    // batch's (in-batch pairs drop the greater id; a cross pair's
-    // old side is never in the batch), else id_a
-    val dupIds = pairs
-      .join(b.select(col("doc_id").as("id_b"),
-        lit(true).as("__b_in")), Seq("id_b"), "left")
-      .select(when(col("__b_in").isNotNull, col("id_b"))
-        .otherwise(col("id_a")).as("doc_id"))
-      .distinct()
-      .withColumn("__dup", lit(true))
+    val dupIds = ingestSide(pairs, b, "doc_id").withColumn("__dup", lit(true))
     // ONE combined verdict delta per batch
     b.select(col("doc_id"))
       .join(contam, Seq("doc_id"), "left")
@@ -5718,13 +5655,20 @@ object Pipeline {
       .write.mode("overwrite").parquet(s"$outRoot/b$id")
   }
 
+  /** The INGEST side of each undirected pair of batch `b`, as column `id`:
+    * `id_b` when the batch holds it (an in-batch pair flags its greater
+    * id; a cross pair's standing side is never in the batch), else
+    * `id_a`. Shared by the p114 and p128 capstones. */
+  private def ingestSide(pairs: DataFrame, b: DataFrame, id: String)
+      : DataFrame = pairs
+    .join(b.select(col(id).as("id_b"), lit(true).as("__b_in")), Seq("id_b"),
+      "left")
+    .select(when(col("__b_in").isNotNull, col("id_b"))
+      .otherwise(col("id_a")).as(id))
+    .distinct()
+
   def p114StreamIngest(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.streaming.{NearDupStream, SketchStream}
-    import graft.operators.{Profiling, Quality}
     val docs = Tables.documents(spark, dir)
-    def grams(df: DataFrame): DataFrame = gram5(df)
-    val bench = docs.filter(col("source") === "src0")
     val corpus = docs.filter(col("source") =!= "src0")
     val standing = corpus.filter(col("doc_id") < 250)
       .select(col("doc_id"), col("text"))
@@ -5732,36 +5676,17 @@ object Pipeline {
       .select(col("doc_id"), col("text"))
       .unionAll(corpus.filter(col("doc_id") < 10)
         .select((col("doc_id") + 10000000).as("doc_id"), col("text")))
-    val root = Files.createTempDirectory("p114_").toString
-    val bloomRoot = s"$root/bloom"
-    val idxRoot = s"$root/idx"; val docsRoot = s"$root/docs"
-    val pairsRoot = s"$root/pairs"; val outRoot = s"$root/out"
+    val r = new StreamRun(spark)
     // frozen per-epoch artifacts: blocklist bloom → literal masks, the
     // standing benchmark gram relation, the standing band index + docs
-    // the frozen setup artifacts are independent chains (bloom → masks,
-    // the benchmark gram relation, band index, docs base, input staging)
-    // — overlap them (guide §2.6)
-    val setupOut = graft.core.Par.eval(Seq[() => Any](
-      () => {
-        SketchStream.writeStandingBloom(spark, bloomRoot, grams(bench),
-          "gram")
-        Profiling.bloomMasks(
-          SketchStream.readBloomBits(spark, bloomRoot), 4, 1 << 16)
-      },
-      () => grams(bench).select(col("gram")).distinct()
-        .localCheckpoint(true),
-      () => Dedup.minhashBandIndex(standing, "doc_id", "text",
-          numHashes = 64, bands = 16, shingleSize = 3, seed = 42L)
-        .write.parquet(s"$idxRoot/v0"),
-      () => standing.write.parquet(s"$docsRoot/v0"),
-      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2)))
-    val masks = setupOut(0).asInstanceOf[Array[Array[Long]]]
-    val benchGrams = setupOut(1).asInstanceOf[DataFrame]
-    replay(spark, root, incoming.schema)(
-      ingestCapstoneBatch(spark, masks, benchGrams, idxRoot, docsRoot,
-        pairsRoot, outRoot))
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("doc_id"), col("batch"), col("contaminated"),
+    val (masks, benchGrams) = frozenBlocklist(spark, r, docs)
+    r.run(incoming, stripe("doc_id", 2), 0 until 2)(
+      Seq[() => Unit](() => masks(), () => benchGrams()) ++
+        nearDupStanding(standing, r("idx"), r("docs")): _*) { (b, id) =>
+      ingestCapstoneBatch(spark, masks(), benchGrams(), r("idx"), r("docs"),
+        r("pairs"), r("out"))(b, id)
+    }
+    r.out.select(col("doc_id"), col("batch"), col("contaminated"),
         col("quality_keep"), col("near_dup"), col("keep"))
       .orderBy("doc_id")
   }
@@ -5835,62 +5760,36 @@ object Pipeline {
   // independent of the delta history that assembled it.
   // =========================================================================
   def p115IvfRebuild(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import graft.streaming.IvfStream
     val emb = Tables.embeddings(spark, dir)
     val standing = emb.filter(col("vec_id") < 150)
-    val incoming = emb.filter(col("vec_id") >= 150 && col("vec_id") < 250)
-      .select(col("vec_id"), col("embedding"))
-    val root = Files.createTempDirectory("p115_").toString
-    val bank1 = s"$root/bank1"; val idx1 = s"$root/idx1"
-    val bank2 = s"$root/bank2"; val idx2 = s"$root/idx2"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => IvfStream.writeStanding(spark, bank1, idx1, standing,
-        IvfRelational.trainBank(standing, nCells = 8, iters = 3,
-          stride = 15)),
-      () => stage(incoming, pmod(col("vec_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema)(
-      IvfStream.appendBatch(spark, bank1, idx1, s"$root/out1", "vec_id",
-        "embedding"))
+    val r = new StreamRun(spark)
+    r.run(emb.filter(col("vec_id") >= 150 && col("vec_id") < 250)
+        .select(col("vec_id"), col("embedding")), stripe("vec_id", 2),
+      0 until 2)(() => IvfStream.writeStanding(spark, r("bank1"), r("idx1"),
+        standing, IvfRelational.trainBank(standing, nCells = 8, iters = 3,
+          stride = 15)))(IvfStream.appendBatch(spark, r("bank1"), r("idx1"),
+      r("out1"), "vec_id", "embedding"))
     // the growth signal: 100 appended over 150 standing under 8 cells —
     // retrain with cells doubled, on the deterministic half sample
-    IvfStream.rebuildIndex(spark, idx1, bank2, idx2, nCells = 16,
-      iters = 3, stride = 3, trainFraction = 0.5)
+    IvfStream.rebuildIndex(spark, r("idx1"), r("bank2"), r("idx2"),
+      nCells = 16, iters = 3, stride = 3, trainFraction = 0.5)
     // post-swap: a NEW stream (fresh lineage) appends under the rebuilt
     // bank — one foreachBatch body call IS the stream's batch 0
-    IvfStream.appendBatch(spark, bank2, idx2, s"$root/out2",
+    IvfStream.appendBatch(spark, r("bank2"), r("idx2"), r("out2"),
       "vec_id", "embedding")(emb.filter(col("vec_id") >= 250), 0L)
     val sampleN = Curation.sampleUniform(
         emb.filter(col("vec_id") < 250), "vec_id", 0.5)
       .agg(count(lit(1)).as("sample_n"))
-    graft.streaming.Versions.list(spark, idx2)
-      .map { case (vid, p) =>
-        spark.read.parquet(p.toString)
-          .select(col("neighbor_id").as("vec_id"), col("cell"),
-            lit(vid).cast("int").as("src"))
-      }
-      .reduce(_ unionAll _)
+    ivfIndexBySrc(spark, r("idx2"))
       .crossJoin(broadcast(sampleN))
       .orderBy("vec_id")
   }
 
-  val p115Sql: String = {
-    import OracleHash._
-    val (bankCtes, bank) = ivfBankCtes(nCells = 16, iters = 3, stride = 3)
-    s"""WITH emb AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
-       |  FROM embeddings WHERE vec_id < 250
-       |    AND ${Curation.sampleBucketSql("vec_id")} < 5000),
-       |$bankCtes,
-       |allv AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
-       |  FROM embeddings),
-       |${nearestCellCte("asg", bank, keep = 1, source = "allv")}
-       |SELECT id AS vec_id, CAST(cell AS INT) AS cell,
-       |  CAST(CASE WHEN id < 250 THEN 0 ELSE 1 END AS INT) AS src,
-       |  (SELECT COUNT(*) FROM emb) AS sample_n
-       |FROM asg
-       |ORDER BY vec_id""".stripMargin
-  }
+  val p115Sql: String = sqlIvfIndexSql(
+    s"\n    AND ${Curation.sampleBucketSql("vec_id")} < 5000", 3,
+    "CASE WHEN id < 250 THEN 0 ELSE 1 END",
+    ",\n  (SELECT COUNT(*) FROM emb) AS sample_n")
 
   // =========================================================================
   // p116 — IMAGE aHash near-dup: the multimodal family's first ORACLE-HASH
@@ -5918,6 +5817,12 @@ object Pipeline {
     // maxBucketSize unbounded: the oracle replays UNCAPPED exact Hamming
     // pairs, and aHash band keys are near-uniform (no hot buckets), so the
     // engine must not silently drop over-cap buckets at a larger corpus
+    hammingPairsWithHashes(hashed)
+  }
+
+  /** Every pair of `hashed(media_id, ahash)` within Hamming 6, with both
+    * hashes (p116, p124). */
+  private def hammingPairsWithHashes(hashed: DataFrame): DataFrame =
     Dedup.hammingPairs64(
         hashed.select(col("media_id").as("id"), col("ahash").as("sh64")),
         maxHamming = 6, maxBucketSize = Int.MaxValue)
@@ -5929,7 +5834,6 @@ object Pipeline {
         col("hamming").cast("int").as("hamming"),
         col("ahash_a"), col("ahash_b"))
       .orderBy("id_a", "id_b")
-  }
 
   /** The planted-variant image set as an `imgs(id, vid, orig, w, h)` CTE:
     * every image doc (doc_id % 3 = 0) plus the +10000 pixel-perturbed
@@ -5980,12 +5884,16 @@ object Pipeline {
   }
 
   val p116Sql: String =
-    s"""WITH $sqlImageVariantsCte,
-       |$sqlAHashCtes
+    sqlHammingPairs(s"$sqlImageVariantsCte,\n$sqlAHashCtes", "ah")
+
+  /** Every pair of `rel(id, ahash)` (the end of `hashCtes`) within
+    * Hamming 6, with both hashes. Shared by p116 and p124. */
+  private def sqlHammingPairs(hashCtes: String, rel: String): String =
+    s"""WITH $hashCtes
        |SELECT a.id AS id_a, b.id AS id_b,
        |  CAST(bit_count(xor(a.ahash, b.ahash)) AS INT) AS hamming,
        |  a.ahash AS ahash_a, b.ahash AS ahash_b
-       |FROM ah a JOIN ah b ON a.id < b.id
+       |FROM $rel a JOIN $rel b ON a.id < b.id
        |WHERE bit_count(xor(a.ahash, b.ahash)) <= 6
        |ORDER BY id_a, id_b""".stripMargin
 
@@ -6006,44 +5914,95 @@ object Pipeline {
   // from the deterministic split (a pair lands in the batch its LATER
   // side arrived in; standing–standing pairs never stream).
   // =========================================================================
-  def p117StreamImageIndex(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.multimodal.Multimodal
+  def p117StreamImageIndex(spark: SparkSession, dir: String): DataFrame =
+    imageStream(spark, dir, 2, stripe("media_id", 2))((_, _, _) => ())
+
+  /** A streamed `kind` fixture of the media queries (audio as integer
+    * PCM): the records below 250 stand, the rest and `plants(records)`
+    * arrive, both as (media_id, payload) frames. */
+  private def mediaStreamFixture(spark: SparkSession, dir: String,
+      kind: String)(plants: Dataset[MediaRecord] => Dataset[MediaRecord])
+      : (DataFrame, DataFrame) = {
+    val recs = graft.multimodal.Multimodal.fromDocuments(spark,
+      Tables.documents(spark, dir), onlyKind = Some(kind), intAudio = true)
+    def frame(ds: Dataset[MediaRecord]): DataFrame =
+      ds.toDF().select(col("media_id"), col("payload"))
+    (frame(recs.filter(_.media_id < 250)),
+      frame(recs.filter(_.media_id >= 250)).unionAll(frame(plants(recs))))
+  }
+
+  /** Byte-identical re-ingests (+10000) of the records below 30. */
+  private def mediaCopies(recs: Dataset[MediaRecord]): Dataset[MediaRecord] = {
+    import recs.sparkSession.implicits._
+    recs.filter(_.media_id < 30).map(r => r.copy(media_id = r.media_id + 10000))
+  }
+
+  /** Retracts the standing records below 30, the plants' originals,
+    * before batch 1's probe (p137, p138). */
+  private def takedownPlantOriginals(spark: SparkSession)(r: StreamRun,
+      standing: DataFrame, id: Long): Unit =
+    if (id == 1L)
+      graft.streaming.Versions.tombstoneFrom(spark, r("idx"),
+        standing.filter(col("media_id") < 30).select("media_id"), id)
+
+  /** p117's stream: batch `batchOf` of `batches`, with the +10000
+    * pixel-perturbed variants of images below 30 as the plants. */
+  private def imageStream(spark: SparkSession, dir: String, batches: Int,
+      batchOf: Column)(verbs: (StreamRun, DataFrame, Long) => Unit)
+      : DataFrame = {
+    val (standing, incoming) = mediaStreamFixture(spark, dir, "image")(recs =>
+      graft.multimodal.Multimodal.plantImageVariants(
+        recs.filter(_.media_id < 30)))
+    percepStream(spark, standing, incoming, batches, batchOf)(verbs)
+  }
+
+  /** A streamed perceptual-hash index (AHashStream with `hasher`) over
+    * (`standing`, `incoming`); `verbs(r, standing, id)` runs before batch
+    * `id`'s probe (the takedown and revive of p137/p144). */
+  private def percepStream(spark: SparkSession, standing: DataFrame,
+      incoming: DataFrame, batches: Int, batchOf: Column,
+      hasher: (DataFrame, String, String) => DataFrame =
+        graft.multimodal.Multimodal.aHash64Bytes)(
+      verbs: (StreamRun, DataFrame, Long) => Unit): DataFrame = {
     import graft.streaming.AHashStream
-    val images = Multimodal.fromDocuments(spark, Tables.documents(spark, dir),
-      onlyKind = Some("image"))
-    val standing = images.filter(_.media_id < 250).toDF()
-      .select(col("media_id"), col("payload"))
-    val plants = Multimodal.plantImageVariants(images.filter(_.media_id < 30))
-    val incoming = images.filter(_.media_id >= 250).toDF()
-      .select(col("media_id"), col("payload"))
-      .unionAll(plants.toDF().select(col("media_id"), col("payload")))
-    val root = Files.createTempDirectory("p117_").toString
-    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => AHashStream.writeStanding(spark, idxRoot, standing),
-      () => stage(incoming, pmod(col("media_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema)(
-      AHashStream.appendBatch(spark, idxRoot, outRoot, "media_id", "payload"))
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("id_a"), col("id_b"), col("hamming"), col("batch"))
+    val r = new StreamRun(spark)
+    r.run(incoming, batchOf, 0 until batches)(() => AHashStream.writeStanding(
+        spark, r("idx"), standing, hasher = hasher)) { (b, id) =>
+      verbs(r, standing, id)
+      AHashStream.appendBatch(spark, r("idx"), r("out"), "media_id",
+        "payload", hasher = hasher)(b, id)
+    }
+    r.out.select(col("id_a"), col("id_b"), col("hamming"), col("batch"))
       .orderBy("id_a", "id_b")
   }
 
-  val p117Sql: String =
-    s"""WITH $sqlImageVariantsCte,
-       |$sqlAHashCtes,
-       |asg AS (SELECT id, ahash,
-       |    CASE WHEN id < 250 THEN -1 ELSE CAST(id % 2 AS INT) END AS b
-       |  FROM ah)
+  /** A streamed media id's batch: -1 (standing) below 250, else id mod 2. */
+  private val sqlMediaBatch =
+    "CASE WHEN id < 250 THEN -1 ELSE CAST(id % 2 AS INT) END"
+
+  /** A streamed fixture row's batch, planted rows flagged by `vnt`: -1
+    * (standing) for an original below 250, else id mod 2. */
+  private val sqlMediaArrival =
+    "CASE WHEN vnt = 0 AND id < 250 THEN -1 ELSE CAST(id % 2 AS INT) END"
+
+  /** The oracle of a streamed perceptual-hash index: `hashCtes` end in
+    * `rel(id, ahash)`; every Hamming ≤ 6 pair emits in the batch its later
+    * side arrived in (`batchOf`), unless `cut` drops it. */
+  private def sqlHammingStream(hashCtes: String, rel: String,
+      batchOf: String = sqlMediaBatch, cut: String = ""): String =
+    s"""WITH $hashCtes,
+       |asg AS (SELECT id, ahash, $batchOf AS b FROM $rel)
        |SELECT a.id AS id_a, b2.id AS id_b,
        |  CAST(bit_count(xor(a.ahash, b2.ahash)) AS INT) AS hamming,
        |  CAST(greatest(a.b, b2.b) AS BIGINT) AS batch
        |FROM asg a JOIN asg b2 ON a.id < b2.id
        |WHERE bit_count(xor(a.ahash, b2.ahash)) <= 6
        |  AND greatest(a.b, b2.b) >= 0
+       |  $cut
        |ORDER BY id_a, id_b""".stripMargin
+
+  val p117Sql: String =
+    sqlHammingStream(s"$sqlImageVariantsCte,\n$sqlAHashCtes", "ah")
 
   // =========================================================================
   // p118 — VIDEO frame-profile dedup: the video sibling of p116, closing
@@ -6295,46 +6254,37 @@ object Pipeline {
   // (sqlQuantileReplayCtes parameterized over the rebuilt bounds).
   // =========================================================================
   def p120QuantileRebuild(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import graft.streaming.QuantileStream
     import graft.operators.Profiling
     val docs = Tables.documents(spark, dir)
-    val standing = docs.filter(col("doc_id") < 250)
-    val inc1 = docs.filter(col("doc_id") >= 250 && col("doc_id") < 375)
-      .select(col("doc_id"), col("n_chars"))
-    val root = Files.createTempDirectory("p120_").toString
-    val bounds1 = s"$root/bounds1"; val counts1 = s"$root/counts1"
-    val bounds2 = s"$root/bounds2"; val counts2 = s"$root/counts2"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => QuantileStream.writeStanding(spark, bounds1, counts1, standing,
-        "n_chars", 128),
-      () => stage(inc1, pmod(col("doc_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, inc1.schema)(QuantileStream.advanceBatch(spark, bounds1,
-      counts1, s"$root/prof1", "n_chars"))
+    val r = new StreamRun(spark)
+    r.run(docs.filter(col("doc_id") >= 250 && col("doc_id") < 375)
+        .select(col("doc_id"), col("n_chars")), stripe("doc_id", 2),
+      0 until 2)(() => QuantileStream.writeStanding(spark, r("bounds1"),
+        r("counts1"), docs.filter(col("doc_id") < 250), "n_chars", 128))(
+      QuantileStream.advanceBatch(spark, r("bounds1"), r("counts1"),
+        r("prof1"), "n_chars"))
     // the rebuild signal: clamped mass under the OLD bounds
-    val drift1 = spark.read.parquet(s"$root/prof1/b*")
+    val drift1 = spark.read.parquet(r("prof1/b*"))
       .agg(coalesce(sum(col("n_below")), lit(0L)).as("old_below"),
         coalesce(sum(col("n_above")), lit(0L)).as("old_above"))
     // rebuild: bounds re-derived over the CURRENT corpus, bins doubled,
     // NEW roots — one corpus scan (the store retains only bin counts)
     QuantileStream.rebuildStore(spark,
       docs.filter(col("doc_id") < 375).select(col("doc_id"), col("n_chars")),
-      bounds2, counts2, "n_chars", 256)
+      r("bounds2"), r("counts2"), "n_chars", 256)
     // post-swap: a fresh stream (new lineage) appends under the rebuilt
     // bounds — direct callback calls ARE its batches 0..1 (p115's shape)
-    QuantileStream.advanceBatch(spark, bounds2, counts2, s"$root/prof2",
-      "n_chars")(
-      docs.filter(col("doc_id") >= 375 && pmod(col("doc_id"), lit(2)) === 0)
-        .select(col("doc_id"), col("n_chars")), 0L)
-    QuantileStream.advanceBatch(spark, bounds2, counts2, s"$root/prof2",
-      "n_chars")(
-      docs.filter(col("doc_id") >= 375 && pmod(col("doc_id"), lit(2)) === 1)
-        .select(col("doc_id"), col("n_chars")), 1L)
-    val drift2 = spark.read.parquet(s"$root/prof2/b*")
+    (0 until 2).foreach { b =>
+      QuantileStream.advanceBatch(spark, r("bounds2"), r("counts2"),
+        r("prof2"), "n_chars")(docs.filter(col("doc_id") >= 375 &&
+          pmod(col("doc_id"), lit(2)) === b)
+        .select(col("doc_id"), col("n_chars")), b.toLong)
+    }
+    val drift2 = spark.read.parquet(r("prof2/b*"))
       .agg(coalesce(sum(col("n_below")), lit(0L)).as("new_below"),
         coalesce(sum(col("n_above")), lit(0L)).as("new_above"))
-    val est = QuantileStream.quantilesAt(spark, bounds2, counts2,
+    val est = QuantileStream.quantilesAt(spark, r("bounds2"), r("counts2"),
       Seq(0.5, 0.9, 0.99))
     val exact = Profiling.histogramQuantiles(docs, "n_chars", 256,
       Seq(0.5, 0.9, 0.99), exact = true).select(col("q"), col("p_exact"))
@@ -6352,22 +6302,8 @@ object Pipeline {
        |mm1 AS (SELECT MIN(x) AS mn, MAX(x) AS mx
        |        FROM (SELECT CAST(n_chars AS DOUBLE) AS x FROM documents
        |              WHERE doc_id < 250 AND n_chars IS NOT NULL)),
-       |drift1 AS (SELECT
-       |    CAST(COALESCE(SUM(CASE WHEN x < mm1.mn THEN 1 ELSE 0 END), 0)
-       |         AS BIGINT) AS old_below,
-       |    CAST(COALESCE(SUM(CASE WHEN x > mm1.mx THEN 1 ELSE 0 END), 0)
-       |         AS BIGINT) AS old_above
-       |  FROM (SELECT CAST(n_chars AS DOUBLE) AS x FROM documents
-       |        WHERE doc_id >= 250 AND doc_id < 375 AND n_chars IS NOT NULL)
-       |  CROSS JOIN mm1),
-       |drift2 AS (SELECT
-       |    CAST(COALESCE(SUM(CASE WHEN x < mm.mn THEN 1 ELSE 0 END), 0)
-       |         AS BIGINT) AS new_below,
-       |    CAST(COALESCE(SUM(CASE WHEN x > mm.mx THEN 1 ELSE 0 END), 0)
-       |         AS BIGINT) AS new_above
-       |  FROM (SELECT CAST(n_chars AS DOUBLE) AS x FROM documents
-       |        WHERE doc_id >= 375 AND n_chars IS NOT NULL)
-       |  CROSS JOIN mm)
+       |${sqlDriftCte("drift1", "old_", "doc_id >= 250 AND doc_id < 375", "mm1")},
+       |${sqlDriftCte("drift2", "new_", "doc_id >= 375", "mm")}
        |SELECT est.q, est.n, est.est, ex.p_exact,
        |  est.est - ex.p_exact AS err,
        |  drift1.old_below, drift1.old_above,
@@ -6395,103 +6331,65 @@ object Pipeline {
   // positives of the new m must match bit-for-bit, not just verdicts.
   // =========================================================================
   def p121BloomRebuild(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import graft.streaming.SketchStream
     val docs = Tables.documents(spark, dir)
-    def grams(df: DataFrame): DataFrame =
-      df.select(col("doc_id"),
-          array_distinct(TF.tokenShingles(TF.tokens(col("text")), 5)).as("sh"))
-        .select(col("doc_id"), explode(col("sh")).as("gram"))
     val bench = docs.filter(col("source") === "src0")
-    val standing = bench.filter(pmod(col("doc_id"), lit(8)) < 4)
-    val inc1 = bench.filter(pmod(col("doc_id"), lit(8)).isin(4, 5))
-      .select(col("doc_id"), col("text"))
-    val root = Files.createTempDirectory("p121_").toString
-    val bloom1 = s"$root/bloom1"; val bloom2 = s"$root/bloom2"
+    val slot = pmod(col("doc_id"), lit(8))
     val mOld = 1 << 10; val mNew = 1 << 16
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => SketchStream.writeStandingBloom(spark, bloom1, grams(standing),
-        "gram", 4, mOld),
-      () => stage(inc1, pmod(col("doc_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, inc1.schema) { (b, id) =>
-      SketchStream.advanceBatchBloom(spark, bloom1, "gram", 4, mOld)(
-        grams(b), id)
+    val r = new StreamRun(spark)
+    r.run(bench.filter(slot.isin(4, 5)).select(col("doc_id"), col("text")),
+      stripe("doc_id", 2), 0 until 2)(() => SketchStream.writeStandingBloom(
+        spark, r("bloom1"), gram5(bench.filter(slot < 4)), "gram", 4, mOld)) {
+      (b, id) => SketchStream.advanceBatchBloom(spark, r("bloom1"), "gram", 4,
+        mOld)(gram5(b), id)
     }
     // saturation evidence: the folded old store's distinct set-bit count
     // (the integer numerator of bloomFillAt — ≤ 4×1024 at this m)
-    val oldBits = SketchStream.readBloomBits(spark, bloom1)
+    val oldBits = SketchStream.readBloomBits(spark, r("bloom1"))
       .agg(count(lit(1)).as("old_set_bits"))
     // rebuild: re-hash the retained key relation at the larger m into a
     // NEW root (keys are the authority; bits don't re-address)
-    SketchStream.rebuildBloomStore(spark, bloom2,
-      grams(bench.filter(pmod(col("doc_id"), lit(8)) < 6)), "gram", 4, mNew)
+    SketchStream.rebuildBloomStore(spark, r("bloom2"),
+      gram5(bench.filter(slot < 6)), "gram", 4, mNew)
     // post-swap: a fresh stream's batches 0..1 append under the new m
-    SketchStream.advanceBatchBloom(spark, bloom2, "gram", 4, mNew)(
-      grams(bench.filter(pmod(col("doc_id"), lit(8)) === 6)), 0L)
-    SketchStream.advanceBatchBloom(spark, bloom2, "gram", 4, mNew)(
-      grams(bench.filter(pmod(col("doc_id"), lit(8)) === 7)), 1L)
-    val newBits = SketchStream.readBloomBits(spark, bloom2)
+    (0 until 2).foreach(b =>
+      SketchStream.advanceBatchBloom(spark, r("bloom2"), "gram", 4, mNew)(
+        gram5(bench.filter(slot === 6 + b)), b.toLong))
+    val newBits = SketchStream.readBloomBits(spark, r("bloom2"))
       .agg(count(lit(1)).as("new_set_bits"))
     // the decontamination probe against the REBUILT store
-    val corpusGrams = grams(docs.filter(col("source") =!= "src0"))
-    val cand = SketchStream.prefilterAt(spark, bloom2, corpusGrams, "gram",
-      4, mNew)
-    val nCand = cand.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_candidate_grams"))
-    val benchGrams = grams(bench).select(col("gram")).distinct()
-    cand.join(broadcast(benchGrams), "gram")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared_grams"))
-      .filter(col("n_shared_grams") >= 3)
-      .join(nCand, "doc_id")
+    val corpusGrams = gram5(docs.filter(col("source") =!= "src0"))
+    sharedGrams(SketchStream.prefilterAt(spark, r("bloom2"), corpusGrams,
+        "gram", 4, mNew), gram5(bench).select(col("gram")).distinct())
       .crossJoin(broadcast(oldBits)).crossJoin(broadcast(newBits))
       .select(col("doc_id"), col("n_candidate_grams"),
         col("n_shared_grams"), col("old_set_bits"), col("new_set_bits"))
       .orderBy("doc_id")
   }
 
-  val p121Sql: String = {
-    import OracleHash._
+  val p121Sql: String =
     s"""WITH sh AS (
        |  SELECT doc_id, source, ${sqlGram5List("toks")} AS sh
        |  FROM (SELECT doc_id, source, $sqlToks AS toks FROM documents)),
        |bgr AS (SELECT doc_id, unnest(sh) AS gram FROM sh
        |        WHERE source = 'src0'),
        |okeys AS (SELECT DISTINCT gram FROM bgr WHERE doc_id % 8 < 6),
-       |oj AS (SELECT gram || '#' || CAST(j AS VARCHAR) AS sv, j
-       |       FROM okeys CROSS JOIN (SELECT unnest(range(4)) AS j) js),
-       |oh0 AS (SELECT j, ${fnv1a("sv")} AS h FROM oj),
-       |obits AS (SELECT DISTINCT j, CAST(${mix("h")} % 1024 AS INT) AS bit
-       |          FROM oh0),
+       |${sqlBloomBitsCtes("o", "okeys", 1024)},
        |osb AS (SELECT CAST(COUNT(*) AS BIGINT) AS old_set_bits FROM obits),
        |nkeys AS (SELECT DISTINCT gram FROM bgr),
-       |nj AS (SELECT gram || '#' || CAST(j AS VARCHAR) AS sv, j
-       |       FROM nkeys CROSS JOIN (SELECT unnest(range(4)) AS j) js2),
-       |nh0 AS (SELECT j, ${fnv1a("sv")} AS h FROM nj),
-       |nbits AS (SELECT DISTINCT j, CAST(${mix("h")} % 65536 AS INT) AS bit
-       |          FROM nh0),
+       |${sqlBloomBitsCtes("n", "nkeys", 65536)},
        |nsb AS (SELECT CAST(COUNT(*) AS BIGINT) AS new_set_bits FROM nbits),
        |corpus AS (SELECT doc_id, unnest(sh) AS gram FROM sh
        |           WHERE source != 'src0'),
        |ns AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_shared_grams
        |       FROM corpus JOIN nkeys USING (gram)
        |       GROUP BY doc_id HAVING COUNT(*) >= 3),
-       |cg AS (SELECT c.doc_id, c.gram FROM corpus c JOIN ns USING (doc_id)),
-       |cj AS (SELECT doc_id, gram, gram || '#' || CAST(j AS VARCHAR) AS sv, j
-       |       FROM cg CROSS JOIN (SELECT unnest(range(4)) AS j) js3),
-       |ch0 AS (SELECT doc_id, gram, j, ${fnv1a("sv")} AS h FROM cj),
-       |cbits AS (SELECT doc_id, gram, j,
-       |          CAST(${mix("h")} % 65536 AS INT) AS bit FROM ch0),
-       |cand AS (SELECT doc_id, gram FROM cbits JOIN nbits USING (j, bit)
-       |         GROUP BY doc_id, gram HAVING COUNT(*) = 4),
-       |nc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_candidate_grams
-       |       FROM cand GROUP BY doc_id)
+       |${sqlBloomCandCtes("nbits", 65536)}
        |SELECT ns.doc_id, nc.n_candidate_grams, ns.n_shared_grams,
        |  osb.old_set_bits, nsb.new_set_bits
        |FROM ns JOIN nc USING (doc_id)
        |CROSS JOIN osb CROSS JOIN nsb
        |ORDER BY doc_id""".stripMargin
-  }
 
   // =========================================================================
   // p122 — STREAMING audio-fingerprint index: the AUDIO member of the
@@ -6511,47 +6409,46 @@ object Pipeline {
   // the deterministic split (a pair lands in the batch its LATER side
   // arrived in; standing–standing pairs never stream).
   // =========================================================================
-  def p122StreamAudioIndex(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.multimodal.Multimodal
+  def p122StreamAudioIndex(spark: SparkSession, dir: String): DataFrame =
+    mediaFpStream(spark, dir, "audio", df => graft.multimodal.Multimodal
+      .audioFpBytes(df, "media_id", "payload"))((_, _, _) => ())
+
+  /** p122's stream over the `kind` records with `profiler` as the
+    * fingerprint fold and [[mediaCopies]] as the plants; `verbs(r,
+    * standing, id)` runs before batch `id`'s probe (p138). */
+  private def mediaFpStream(spark: SparkSession, dir: String, kind: String,
+      profiler: DataFrame => DataFrame)(
+      verbs: (StreamRun, DataFrame, Long) => Unit): DataFrame = {
     import graft.streaming.MediaFpStream
-    import spark.implicits._
-    val clips = Multimodal.fromDocuments(spark, Tables.documents(spark, dir),
-      onlyKind = Some("audio"), intAudio = true)
-    val standing = clips.filter(_.media_id < 250).toDF()
-      .select(col("media_id"), col("payload"))
-    val plants = clips.filter(_.media_id < 30)
-      .map(r => r.copy(media_id = r.media_id + 10000))
-    val incoming = clips.filter(_.media_id >= 250).toDF()
-      .select(col("media_id"), col("payload"))
-      .unionAll(plants.toDF().select(col("media_id"), col("payload")))
-    val root = Files.createTempDirectory("p122_").toString
-    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
-    val profiler = (df: DataFrame) =>
-      Multimodal.audioFpBytes(df, "media_id", "payload")
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => MediaFpStream.writeStanding(spark, idxRoot, standing, profiler),
-      () => stage(incoming, pmod(col("media_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema)(
-      MediaFpStream.appendBatch(spark, idxRoot, outRoot, profiler))
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("id_a"), col("id_b"), col("batch"))
+    val (standing, incoming) =
+      mediaStreamFixture(spark, dir, kind)(mediaCopies)
+    val r = new StreamRun(spark)
+    r.run(incoming, stripe("media_id", 2), 0 until 2)(
+      () => MediaFpStream.writeStanding(spark, r("idx"), standing,
+        profiler)) { (b, id) =>
+      verbs(r, standing, id)
+      MediaFpStream.appendBatch(spark, r("idx"), r("out"), profiler)(b, id)
+    }
+    r.out.select(col("id_a"), col("id_b"), col("batch"))
       .orderBy("id_a", "id_b")
   }
 
-  val p122Sql: String =
-    s"""WITH $sqlAudioClipsCte,
-       |$sqlAudioFpCtes,
-       |aasg AS (SELECT id, audio_fp,
-       |    CASE WHEN id < 250 THEN -1 ELSE CAST(id % 2 AS INT) END AS b
-       |  FROM afp)
+  /** The oracle of a streamed exact-fingerprint index: `fpCtes` end in
+    * `rel(id, fp)`; equal fingerprints pair in the batch their later side
+    * arrived in, unless `cut` drops the pair. */
+  private def sqlFpStream(fpCtes: String, rel: String, fp: String,
+      cut: String = ""): String =
+    s"""WITH $fpCtes,
+       |fasg AS (SELECT id, $fp AS fp, $sqlMediaBatch AS b FROM $rel)
        |SELECT a.id AS id_a, b2.id AS id_b,
        |  CAST(greatest(a.b, b2.b) AS BIGINT) AS batch
-       |FROM aasg a JOIN aasg b2
-       |  ON a.id < b2.id AND a.audio_fp = b2.audio_fp
+       |FROM fasg a JOIN fasg b2 ON a.id < b2.id AND a.fp = b2.fp
        |WHERE greatest(a.b, b2.b) >= 0
+       |  $cut
        |ORDER BY id_a, id_b""".stripMargin
+
+  val p122Sql: String =
+    sqlFpStream(s"$sqlAudioClipsCte,\n$sqlAudioFpCtes", "afp", "audio_fp")
 
   // =========================================================================
   // p123 — STREAMING video-fingerprint index: the VIDEO member closing
@@ -6565,47 +6462,12 @@ object Pipeline {
   // chain (drift → rasters → aHash → FNV-1a+mix over the sequence) —
   // the codec loop proven lossless per frame, per container, per batch.
   // =========================================================================
-  def p123StreamVideoIndex(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.multimodal.Multimodal
-    import graft.streaming.MediaFpStream
-    import spark.implicits._
-    val vids = Multimodal.fromDocuments(spark, Tables.documents(spark, dir),
-      onlyKind = Some("video"))
-    val standing = vids.filter(_.media_id < 250).toDF()
-      .select(col("media_id"), col("payload"))
-    val plants = vids.filter(_.media_id < 30)
-      .map(r => r.copy(media_id = r.media_id + 10000))
-    val incoming = vids.filter(_.media_id >= 250).toDF()
-      .select(col("media_id"), col("payload"))
-      .unionAll(plants.toDF().select(col("media_id"), col("payload")))
-    val root = Files.createTempDirectory("p123_").toString
-    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
-    val profiler = (df: DataFrame) =>
-      Multimodal.videoFpBytes(df, "media_id", "payload")
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => MediaFpStream.writeStanding(spark, idxRoot, standing, profiler),
-      () => stage(incoming, pmod(col("media_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema)(
-      MediaFpStream.appendBatch(spark, idxRoot, outRoot, profiler))
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("id_a"), col("id_b"), col("batch"))
-      .orderBy("id_a", "id_b")
-  }
+  def p123StreamVideoIndex(spark: SparkSession, dir: String): DataFrame =
+    mediaFpStream(spark, dir, "video", df => graft.multimodal.Multimodal
+      .videoFpBytes(df, "media_id", "payload"))((_, _, _) => ())
 
   val p123Sql: String =
-    s"""WITH $sqlVideoVidsCte,
-       |$sqlVideoFpCtes,
-       |vasg AS (SELECT id, video_fp,
-       |    CASE WHEN id < 250 THEN -1 ELSE CAST(id % 2 AS INT) END AS b
-       |  FROM vf)
-       |SELECT a.id AS id_a, b2.id AS id_b,
-       |  CAST(greatest(a.b, b2.b) AS BIGINT) AS batch
-       |FROM vasg a JOIN vasg b2
-       |  ON a.id < b2.id AND a.video_fp = b2.video_fp
-       |WHERE greatest(a.b, b2.b) >= 0
-       |ORDER BY id_a, id_b""".stripMargin
+    sqlFpStream(s"$sqlVideoVidsCte,\n$sqlVideoFpCtes", "vf", "video_fp")
 
   // =========================================================================
   // p124 — AUDIO windowed-amplitude near-dup: the perceptual-hash matrix
@@ -6631,29 +6493,25 @@ object Pipeline {
     val plants = Multimodal.plantAudioVariants(clips.filter(_.media_id < 30))
     val hashed = Multimodal.audioAHash64(clips.union(plants))
       .localCheckpoint(true)
-    Dedup.hammingPairs64(
-        hashed.select(col("media_id").as("id"), col("ahash").as("sh64")),
-        maxHamming = 6, maxBucketSize = Int.MaxValue)
-      .join(hashed.select(col("media_id").as("id_a"),
-        col("ahash").as("ahash_a")), "id_a")
-      .join(hashed.select(col("media_id").as("id_b"),
-        col("ahash").as("ahash_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        col("hamming").cast("int").as("hamming"),
-        col("ahash_a"), col("ahash_b"))
-      .orderBy("id_a", "id_b")
+    hammingPairsWithHashes(hashed)
   }
 
-  val p124Sql: String = {
+  val p124Sql: String = sqlHammingPairs(
+    s"$sqlAudioClipsCte,\n$sqlAudioSampleCtes,\n${sqlAudioPercepCtes(1)}",
+    "aah")
+
+  /** The windowed-amplitude audio hash over the `smp` samples, the clips
+    * flagged `vnt` wobbled first (every 37th sample by a seeded ±1024):
+    * CTEs `pz/pert/psmp` (the perturbed samples) through `aah(id, ahash)`.
+    * Shared by p124, p126 and p128. */
+  private def sqlAudioPercepCtes(vnt: Int): String = {
     import OracleHash._
-    s"""WITH $sqlAudioClipsCte,
-       |$sqlAudioSampleCtes,
-       |pz AS (SELECT id, n, i, s, CAST(id AS HUGEINT) * 131 + i AS z
-       |       FROM smp WHERE vnt = 1 AND i % 37 = 0),
+    s"""pz AS (SELECT id, n, i, s, CAST(id AS HUGEINT) * 131 + i AS z
+       |       FROM smp WHERE vnt = $vnt AND i % 37 = 0),
        |pert AS (SELECT id, n, i,
        |    s + CAST(${mix("z")} % 2048 AS BIGINT) - 1024 AS s FROM pz),
        |psmp AS (SELECT id, n, i, s FROM smp
-       |         WHERE NOT (vnt = 1 AND i % 37 = 0)
+       |         WHERE NOT (vnt = $vnt AND i % 37 = 0)
        |         UNION ALL SELECT id, n, i, s FROM pert),
        |wsum AS (SELECT id, (i * 64) // n AS w,
        |         SUM(ABS(s)) AS sw, COUNT(*) AS nw
@@ -6666,13 +6524,7 @@ object Pipeline {
        |      0::HUGEINT) AS u
        |  FROM wsum s JOIN wtot t ON s.id = t.id
        |  GROUP BY s.id),
-       |aah AS (SELECT id, ${signed64("u")} AS ahash FROM wahu)
-       |SELECT a.id AS id_a, b.id AS id_b,
-       |  CAST(bit_count(xor(a.ahash, b.ahash)) AS INT) AS hamming,
-       |  a.ahash AS ahash_a, b.ahash AS ahash_b
-       |FROM aah a JOIN aah b ON a.id < b.id
-       |WHERE bit_count(xor(a.ahash, b.ahash)) <= 6
-       |ORDER BY id_a, id_b""".stripMargin
+       |aah AS (SELECT id, ${signed64("u")} AS ahash FROM wahu)""".stripMargin
   }
 
   // =========================================================================
@@ -6716,28 +6568,65 @@ object Pipeline {
       .orderBy("id_a", "id_b")
   }
 
+  /** The distinct frame-aHash set of every video of [[sqlVideoFpCtes]]. */
+  private val sqlFrameSets = "(SELECT id, list_distinct(list(CAST(ahash " +
+    "AS VARCHAR))) AS s FROM vah GROUP BY id)"
+
   val p125Sql: String =
-    s"""WITH vids AS (
+    s"""WITH ${sqlClippedVidsCte("")},
+       |$sqlVideoFpCtes,
+       |${sqlOverlapCtes("v", sqlFrameSets)}
+       |${sqlContainmentPairs("v", "0.9")}""".stripMargin
+
+  /** p125's video fixture `vids(id, seed, w, h, nf$vnt)`: every video doc
+    * plus the +10000 clipped re-ingests (one frame fewer) of videos below
+    * 60 with at least 3 frames; `vnt` (when non-empty) names the flag
+    * column, 1 on the clips. */
+  private def sqlClippedVidsCte(vnt: String): String = {
+    val (v0, v1) = if (vnt.isEmpty) ("", "") else (s", 0 AS $vnt", ", 1")
+    s"""vids AS (
        |  SELECT doc_id AS id, doc_id AS seed, doc_id % 32 + 32 AS w,
-       |    doc_id % 24 + 32 AS h, doc_id % 6 + 2 AS nf
+       |    doc_id % 24 + 32 AS h, doc_id % 6 + 2 AS nf$v0
        |  FROM documents WHERE doc_id % 3 = 2
        |  UNION ALL
        |  SELECT doc_id + 10000, doc_id, doc_id % 32 + 32,
-       |    doc_id % 24 + 32, doc_id % 6 + 1
+       |    doc_id % 24 + 32, doc_id % 6 + 1$v1
        |  FROM documents
-       |  WHERE doc_id % 3 = 2 AND doc_id < 60 AND doc_id % 6 >= 1),
-       |$sqlVideoFpCtes,
-       |vsets AS (SELECT id, list_distinct(list(CAST(ahash AS VARCHAR)))
-       |          AS s FROM vah GROUP BY id),
-       |vna AS (SELECT id, len(s) AS n FROM vsets),
-       |vex AS (SELECT id, unnest(s) AS g FROM vsets),
-       |vov AS (SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS i
-       |  FROM vex a JOIN vex b ON a.g = b.g AND a.id != b.id
-       |  GROUP BY a.id, b.id)
-       |SELECT id_a, id_b, i / vna.n AS containment
-       |FROM vov JOIN vna ON vov.id_a = vna.id
-       |WHERE i / vna.n >= 0.9
+       |  WHERE doc_id % 3 = 2 AND doc_id < 60 AND doc_id % 6 >= 1)""".stripMargin
+  }
+
+  /** Directed set overlap over `sets(id, s)`: CTEs `${p}na(id, n)`,
+    * `${p}ex(id, g)` and `${p}ov(id_a, id_b, i)`, the exploded equi-join
+    * (complete for any positive containment threshold). */
+  private def sqlOverlapCtes(p: String, sets: String): String =
+    s"""${p}na AS (SELECT id, len(s) AS n FROM $sets),
+       |${p}ex AS (SELECT id, unnest(s) AS g FROM $sets),
+       |${p}ov AS (SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS i
+       |  FROM ${p}ex a JOIN ${p}ex b ON a.g = b.g AND a.id != b.id
+       |  GROUP BY a.id, b.id)""".stripMargin
+
+  /** Every directed pair of [[sqlOverlapCtes]] `p` with containment at
+    * least `theta`. */
+  private def sqlContainmentPairs(p: String, theta: String): String =
+    s"""SELECT id_a, id_b, i / ${p}na.n AS containment
+       |FROM ${p}ov JOIN ${p}na ON ${p}ov.id_a = ${p}na.id
+       |WHERE i / ${p}na.n >= $theta
        |ORDER BY id_a, id_b""".stripMargin
+
+  /** The streamed form of [[sqlContainmentPairs]]: `asg(id, b, del)` gives
+    * each id's arrival batch (-1 standing) and takedown flag; a pair
+    * emits in its probe side's batch when its contained side arrived no
+    * later and, past `delFrom`, is not taken down. */
+  private def sqlContainmentEmit(p: String, asg: String, theta: String,
+      delFrom: Option[Int] = None): String =
+    s"""SELECT id_a, id_b, i / ${p}na.n AS containment,
+       |  CAST(aa.b AS BIGINT) AS batch
+       |FROM ${p}ov JOIN ${p}na ON ${p}ov.id_a = ${p}na.id
+       |JOIN $asg aa ON ${p}ov.id_a = aa.id
+       |JOIN $asg bb ON ${p}ov.id_b = bb.id
+       |WHERE i / ${p}na.n >= $theta AND aa.b >= 0 AND bb.b <= aa.b
+       |  ${delFrom.fold("")(d => s"AND NOT (aa.b >= $d AND bb.del = 1)")}"""
+      .stripMargin
 
   // =========================================================================
   // p126 — STREAMING audio perceptual-hash index: p117's shape with the
@@ -6756,67 +6645,16 @@ object Pipeline {
   // from the deterministic split.
   // =========================================================================
   def p126StreamAudioNearDup(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import graft.multimodal.Multimodal
-    import graft.streaming.AHashStream
-    import spark.implicits._
-    val clips = Multimodal.fromDocuments(spark, Tables.documents(spark, dir),
-      onlyKind = Some("audio"), intAudio = true)
-    val standing = clips.filter(_.media_id < 250).toDF()
-      .select(col("media_id"), col("payload"))
-    val plants = Multimodal.plantAudioVariants(clips.filter(_.media_id < 30))
-    val incoming = clips.filter(_.media_id >= 250).toDF()
-      .select(col("media_id"), col("payload"))
-      .unionAll(plants.toDF().select(col("media_id"), col("payload")))
-    val root = Files.createTempDirectory("p126_").toString
-    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => AHashStream.writeStanding(spark, idxRoot, standing,
-        hasher = Multimodal.audioAHash64Bytes),
-      () => stage(incoming, pmod(col("media_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema)(
-      AHashStream.appendBatch(spark, idxRoot, outRoot, "media_id", "payload",
-        hasher = Multimodal.audioAHash64Bytes))
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("id_a"), col("id_b"), col("hamming"), col("batch"))
-      .orderBy("id_a", "id_b")
+    val (standing, incoming) = mediaStreamFixture(spark, dir, "audio")(recs =>
+      Multimodal.plantAudioVariants(recs.filter(_.media_id < 30)))
+    percepStream(spark, standing, incoming, 2, stripe("media_id", 2),
+      Multimodal.audioAHash64Bytes)((_, _, _) => ())
   }
 
-  val p126Sql: String = {
-    import OracleHash._
-    s"""WITH $sqlAudioClipsCte,
-       |$sqlAudioSampleCtes,
-       |pz AS (SELECT id, n, i, s, CAST(id AS HUGEINT) * 131 + i AS z
-       |       FROM smp WHERE vnt = 1 AND i % 37 = 0),
-       |pert AS (SELECT id, n, i,
-       |    s + CAST(${mix("z")} % 2048 AS BIGINT) - 1024 AS s FROM pz),
-       |psmp AS (SELECT id, n, i, s FROM smp
-       |         WHERE NOT (vnt = 1 AND i % 37 = 0)
-       |         UNION ALL SELECT id, n, i, s FROM pert),
-       |wsum AS (SELECT id, (i * 64) // n AS w,
-       |         SUM(ABS(s)) AS sw, COUNT(*) AS nw
-       |         FROM psmp GROUP BY id, (i * 64) // n),
-       |wtot AS (SELECT id, SUM(sw) AS tot, SUM(nw) AS nn
-       |         FROM wsum GROUP BY id),
-       |wahu AS (SELECT s.id,
-       |    COALESCE(SUM(CASE WHEN s.sw * t.nn > t.tot * s.nw
-       |      THEN (1::HUGEINT << CAST(s.w AS INT)) ELSE 0::HUGEINT END),
-       |      0::HUGEINT) AS u
-       |  FROM wsum s JOIN wtot t ON s.id = t.id
-       |  GROUP BY s.id),
-       |aah AS (SELECT id, ${signed64("u")} AS ahash FROM wahu),
-       |sasg AS (SELECT id, ahash,
-       |    CASE WHEN id < 250 THEN -1 ELSE CAST(id % 2 AS INT) END AS b
-       |  FROM aah)
-       |SELECT a.id AS id_a, b2.id AS id_b,
-       |  CAST(bit_count(xor(a.ahash, b2.ahash)) AS INT) AS hamming,
-       |  CAST(greatest(a.b, b2.b) AS BIGINT) AS batch
-       |FROM sasg a JOIN sasg b2 ON a.id < b2.id
-       |WHERE bit_count(xor(a.ahash, b2.ahash)) <= 6
-       |  AND greatest(a.b, b2.b) >= 0
-       |ORDER BY id_a, id_b""".stripMargin
-  }
+  val p126Sql: String = sqlHammingStream(
+    s"$sqlAudioClipsCte,\n$sqlAudioSampleCtes,\n${sqlAudioPercepCtes(1)}",
+    "aah")
 
   // =========================================================================
   // p127 — STREAMING video frame-set containment index: p125's
@@ -6844,69 +6682,46 @@ object Pipeline {
   // =========================================================================
   def p127StreamVideoContainment(spark: SparkSession, dir: String)
       : DataFrame = {
-    import java.nio.file.Files
     import graft.multimodal.{MediaCodec, Multimodal}
-    import graft.streaming.ContainmentStream
     import spark.implicits._
-    val vids = Multimodal.fromDocuments(spark, Tables.documents(spark, dir),
-      onlyKind = Some("video"))
-    val standing = vids.filter(_.media_id < 250).toDF()
-      .select(col("media_id"), col("payload"))
     // clipped re-ingests of STANDING videos (>= 3 frames so the clip
     // keeps >= 2) — the p125 plant, arriving through the stream
-    val plants = vids.filter(r => r.media_id < 60 && r.media_id % 6 >= 1)
-      .map(r => r.copy(media_id = r.media_id + 10000,
-        payload = java.util.Arrays.copyOfRange(r.payload, 0,
-          r.payload.length - MediaCodec.videoBlockBytes)))
-    val incoming = vids.filter(_.media_id >= 250).toDF()
-      .select(col("media_id"), col("payload"))
-      .unionAll(plants.toDF().select(col("media_id"), col("payload")))
-    val root = Files.createTempDirectory("p127_").toString
-    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
-    val setsOf = (df: DataFrame) =>
-      Multimodal.videoFrameSetBytes(df, "media_id", "payload")
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => ContainmentStream.writeStanding(spark, idxRoot, standing,
-        setsOf),
-      () => stage(incoming, pmod(col("media_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema) { (b, id) =>
-      ContainmentStream.filterBatch(spark, idxRoot, outRoot, setsOf,
-        threshold = 0.9)(b, id)
+    val (standing, incoming) = mediaStreamFixture(spark, dir, "video")(
+      _.filter(r => r.media_id < 60 && r.media_id % 6 >= 1)
+        .map(r => r.copy(media_id = r.media_id + 10000,
+          payload = java.util.Arrays.copyOfRange(r.payload, 0,
+            r.payload.length - MediaCodec.videoBlockBytes))))
+    containmentStream(spark, standing, incoming, "media_id", 0.9,
+      df => Multimodal.videoFrameSetBytes(df, "media_id", "payload"))(
+      (_, _) => ())
+  }
+
+  /** A streamed containment index (ContainmentStream, `setsOf` profiling
+    * a frame) over (`standing`, `incoming`), batch `id mod 2`;
+    * `verbs(r, id)` runs before batch `id`'s probe (p134's takedown). */
+  private def containmentStream(spark: SparkSession, standing: DataFrame,
+      incoming: DataFrame, id: String, theta: Double,
+      setsOf: DataFrame => DataFrame)(verbs: (StreamRun, Long) => Unit)
+      : DataFrame = {
+    import graft.streaming.ContainmentStream
+    val r = new StreamRun(spark)
+    r.run(incoming, stripe(id, 2), 0 until 2)(() =>
+      ContainmentStream.writeStanding(spark, r("idx"), standing, setsOf)) {
+      (b, bid) =>
+        verbs(r, bid)
+        ContainmentStream.filterBatch(spark, r("idx"), r("out"), setsOf,
+          threshold = theta)(b, bid)
     }
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("id_a"), col("id_b"), col("containment"), col("batch"))
+    r.out.select(col("id_a"), col("id_b"), col("containment"), col("batch"))
       .orderBy("id_a", "id_b")
   }
 
   val p127Sql: String =
-    s"""WITH vids AS (
-       |  SELECT doc_id AS id, doc_id AS seed, doc_id % 32 + 32 AS w,
-       |    doc_id % 24 + 32 AS h, doc_id % 6 + 2 AS nf, 0 AS vnt
-       |  FROM documents WHERE doc_id % 3 = 2
-       |  UNION ALL
-       |  SELECT doc_id + 10000, doc_id, doc_id % 32 + 32,
-       |    doc_id % 24 + 32, doc_id % 6 + 1, 1
-       |  FROM documents
-       |  WHERE doc_id % 3 = 2 AND doc_id < 60 AND doc_id % 6 >= 1),
+    s"""WITH ${sqlClippedVidsCte("vnt")},
        |$sqlVideoFpCtes,
-       |vsets AS (SELECT id, list_distinct(list(CAST(ahash AS VARCHAR)))
-       |          AS s FROM vah GROUP BY id),
-       |vna AS (SELECT id, len(s) AS n FROM vsets),
-       |vex AS (SELECT id, unnest(s) AS g FROM vsets),
-       |vov AS (SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS i
-       |  FROM vex a JOIN vex b ON a.g = b.g AND a.id != b.id
-       |  GROUP BY a.id, b.id),
-       |vasg AS (SELECT id,
-       |    CASE WHEN vnt = 0 AND id < 250 THEN -1
-       |         ELSE CAST(id % 2 AS INT) END AS b
-       |  FROM vids)
-       |SELECT id_a, id_b, i / vna.n AS containment,
-       |  CAST(aa.b AS BIGINT) AS batch
-       |FROM vov JOIN vna ON vov.id_a = vna.id
-       |JOIN vasg aa ON vov.id_a = aa.id
-       |JOIN vasg bb ON vov.id_b = bb.id
-       |WHERE i / vna.n >= 0.9 AND aa.b >= 0 AND bb.b <= aa.b
+       |${sqlOverlapCtes("v", sqlFrameSets)},
+       |vasg AS (SELECT id, $sqlMediaArrival AS b, 0 AS del FROM vids)
+       |${sqlContainmentEmit("v", "vasg", "0.9")}
        |ORDER BY id_a, id_b""".stripMargin
 
   // =========================================================================
@@ -6978,18 +6793,10 @@ object Pipeline {
     val fpPairs = famPairs(0)
     val ahPairs = famPairs(1)
     val ctPairs = famPairs(2)
-    // flag the INGEST side of each undirected pair (p114's rule: id_b
-    // when it is this batch's — in-batch pairs flag the greater id, a
-    // cross pair's standing side is never in the batch); containment
-    // pairs are DIRECTED with the probe side a ∈ batch by construction
-    def ingestIds(pairs: DataFrame): DataFrame = pairs
-      .join(b.select(col("media_id").as("id_b"),
-        lit(true).as("__b_in")), Seq("id_b"), "left")
-      .select(when(col("__b_in").isNotNull, col("id_b"))
-        .otherwise(col("id_a")).as("media_id"))
-      .distinct()
-    val x = ingestIds(fpPairs).withColumn("__x", lit(true))
-    val p = ingestIds(ahPairs).withColumn("__p", lit(true))
+    // containment pairs are DIRECTED with the probe side a ∈ batch by
+    // construction
+    val x = ingestSide(fpPairs, b, "media_id").withColumn("__x", lit(true))
+    val p = ingestSide(ahPairs, b, "media_id").withColumn("__p", lit(true))
     val c = ctPairs.select(col("id_a").as("media_id")).distinct()
       .withColumn("__c", lit(true))
     b.select(col("media_id"))
@@ -7008,55 +6815,47 @@ object Pipeline {
 
   def p128MediaIngestCapstone(spark: SparkSession, dir: String)
       : DataFrame = {
-    import java.nio.file.Files
     import graft.multimodal.Multimodal
     import graft.streaming.{AHashStream, ContainmentStream, MediaFpStream}
-    import spark.implicits._
-    val clips = Multimodal.fromDocuments(spark, Tables.documents(spark, dir),
-      onlyKind = Some("audio"), intAudio = true)
-    val standing = clips.filter(_.media_id < 250).toDF()
-      .select(col("media_id"), col("payload")).localCheckpoint(true)
-    val exactPlants = clips.filter(_.media_id < 30)
-      .map(r => r.copy(media_id = r.media_id + 10000))
-    val wobblePlants = Multimodal.plantAudioVariants(
-      clips.filter(_.media_id < 30), idOffset = 20000L)
-    val clipPlants = Multimodal.plantAudioClips(
-      clips.filter(r => r.media_id < 60 && r.media_id % 200 >= 14),
-      idOffset = 40000L)
-    val incoming = clips.filter(_.media_id >= 250).toDF()
-      .select(col("media_id"), col("payload"))
-      .unionAll(exactPlants.toDF().select(col("media_id"), col("payload")))
-      .unionAll(wobblePlants.toDF().select(col("media_id"), col("payload")))
-      .unionAll(clipPlants.toDF().select(col("media_id"), col("payload")))
-    val root = Files.createTempDirectory("p128_").toString
-    val fpIdx = s"$root/fpidx"; val ahIdx = s"$root/ahidx"
-    val ctIdx = s"$root/ctidx"; val outRoot = s"$root/out"
+    val (standing0, incoming) = mediaStreamFixture(spark, dir, "audio")(recs =>
+      mediaCopies(recs)
+        .union(Multimodal.plantAudioVariants(recs.filter(_.media_id < 30),
+          idOffset = 20000L))
+        .union(Multimodal.plantAudioClips(
+          recs.filter(r => r.media_id < 60 && r.media_id % 200 >= 14),
+          idOffset = 40000L)))
+    val standing = standing0.localCheckpoint(true)
     // one decode for the three standing stores too (the per-batch
     // decode-once treatment applied to setup)
     val ssamples = Multimodal.audioSamples(standing, "media_id", "payload")
       .localCheckpoint(true)
+    val r = new StreamRun(spark)
     // the three standing stores derive from the one checkpointed decode
-    // and write to independent roots, and the input staging is
-    // independent of all of them — overlap the four (guide §2.6)
-    graft.core.Par.run(
-      () => MediaFpStream.writeStanding(spark, fpIdx, standing,
+    // and write to independent roots, overlapped with the staging
+    r.run(incoming, stripe("media_id", 2), 0 until 2)(
+      () => MediaFpStream.writeStanding(spark, r("fpidx"), standing,
         _ => Multimodal.audioFpFromSamples(ssamples)),
-      () => AHashStream.writeStanding(spark, ahIdx, standing,
+      () => AHashStream.writeStanding(spark, r("ahidx"), standing,
         hasher = (_, _, _) => Multimodal.audioAHash64FromSamples(ssamples)),
-      () => ContainmentStream.writeStanding(spark, ctIdx, standing,
-        _ => Multimodal.audioWindowHashSetsFromSamples(ssamples)),
-      () => stage(incoming, pmod(col("media_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema)(
-      mediaCapstoneBatch(spark, fpIdx, ahIdx, ctIdx, s"$root/fpout",
-        s"$root/ahout", s"$root/ctout", outRoot))
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("media_id"), col("batch"), col("exact_dup"),
+      () => ContainmentStream.writeStanding(spark, r("ctidx"), standing,
+        _ => Multimodal.audioWindowHashSetsFromSamples(ssamples)))(
+      mediaCapstoneBatch(spark, r("fpidx"), r("ahidx"), r("ctidx"),
+        r("fpout"), r("ahout"), r("ctout"), r("out")))
+    r.out.select(col("media_id"), col("batch"), col("exact_dup"),
         col("percep_dup"), col("contained"), col("keep"))
       .orderBy("media_id")
   }
 
   val p128Sql: String = {
-    import OracleHash._
+    // the ingest side of each undirected `rel` pair meeting `cond`: the
+    // later arrival, the greater id within one batch
+    def flag(t: String, rel: String, cond: String): String =
+      s"""${t}p AS (SELECT a.id AS id_a, b2.id AS id_b, ba.b AS b_a, bb.b AS b_b
+         |  FROM $rel a JOIN $rel b2 ON a.id < b2.id AND $cond
+         |  JOIN basg ba ON a.id = ba.id JOIN basg bb ON b2.id = bb.id
+         |  WHERE greatest(ba.b, bb.b) >= 0),
+         |${t}flag AS (SELECT DISTINCT CASE WHEN b_b = greatest(b_a, b_b)
+         |    THEN id_b ELSE id_a END AS id FROM ${t}p)""".stripMargin
     s"""WITH clips AS (
        |  SELECT doc_id AS id, doc_id AS seed,
        |    (8000 * (doc_id % 200 + 50)) // 1000 AS n, 0 AS vnt
@@ -7075,67 +6874,15 @@ object Pipeline {
        |  FROM documents
        |  WHERE doc_id % 3 = 1 AND doc_id < 60 AND doc_id % 200 >= 14),
        |${sqlAudioSampleCtesFrom("n")},
-       |pz AS (SELECT id, n, i, s, CAST(id AS HUGEINT) * 131 + i AS z
-       |       FROM smp WHERE vnt = 2 AND i % 37 = 0),
-       |pert AS (SELECT id, n, i,
-       |    s + CAST(${mix("z")} % 2048 AS BIGINT) - 1024 AS s FROM pz),
-       |psmp AS (SELECT id, n, i, s FROM smp
-       |         WHERE NOT (vnt = 2 AND i % 37 = 0)
-       |         UNION ALL SELECT id, n, i, s FROM pert),
+       |${sqlAudioPercepCtes(2)},
        |${sqlAudioFpFoldCtes("psmp")},
-       |wsum AS (SELECT id, (i * 64) // n AS w,
-       |         SUM(ABS(s)) AS sw, COUNT(*) AS nw
-       |         FROM psmp GROUP BY id, (i * 64) // n),
-       |wtot AS (SELECT id, SUM(sw) AS tot, SUM(nw) AS nn
-       |         FROM wsum GROUP BY id),
-       |wahu AS (SELECT s.id,
-       |    COALESCE(SUM(CASE WHEN s.sw * t.nn > t.tot * s.nw
-       |      THEN (1::HUGEINT << CAST(s.w AS INT)) ELSE 0::HUGEINT END),
-       |      0::HUGEINT) AS u
-       |  FROM wsum s JOIN wtot t ON s.id = t.id
-       |  GROUP BY s.id),
-       |aah AS (SELECT id, ${signed64("u")} AS ahash FROM wahu),
-       |wfx AS (SELECT id, i // 256 AS w, (i % 256) // 4 AS sb, s
-       |        FROM psmp WHERE i < (n // 256) * 256),
-       |sbs AS (SELECT id, w, sb, SUM(ABS(s)) AS ss
-       |        FROM wfx GROUP BY id, w, sb),
-       |swt AS (SELECT id, w, SUM(ss) AS tot FROM sbs GROUP BY id, w),
-       |swu AS (SELECT s.id, s.w,
-       |    COALESCE(SUM(CASE WHEN s.ss * 64 > t.tot
-       |      THEN (1::HUGEINT << CAST(s.sb AS INT)) ELSE 0::HUGEINT END),
-       |      0::HUGEINT) AS u
-       |  FROM sbs s JOIN swt t ON s.id = t.id AND s.w = t.w
-       |  GROUP BY s.id, s.w),
-       |swh AS (SELECT id, ${signed64("u")} AS wh FROM swu),
-       |wsets AS (SELECT id, list_distinct(list(CAST(wh AS VARCHAR))) AS s
-       |          FROM swh GROUP BY id),
-       |basg AS (SELECT id,
-       |    CASE WHEN vnt = 0 AND id < 250 THEN -1
-       |         ELSE CAST(id % 2 AS INT) END AS b
-       |  FROM clips),
-       |xp AS (SELECT a.id AS id_a, b2.id AS id_b, ba.b AS b_a, bb.b AS b_b
-       |  FROM afp a JOIN afp b2 ON a.id < b2.id AND a.audio_fp = b2.audio_fp
-       |  JOIN basg ba ON a.id = ba.id JOIN basg bb ON b2.id = bb.id
-       |  WHERE greatest(ba.b, bb.b) >= 0),
-       |xflag AS (SELECT DISTINCT CASE WHEN b_b = greatest(b_a, b_b)
-       |    THEN id_b ELSE id_a END AS id FROM xp),
-       |pp AS (SELECT a.id AS id_a, b2.id AS id_b, ba.b AS b_a, bb.b AS b_b
-       |  FROM aah a JOIN aah b2 ON a.id < b2.id
-       |    AND bit_count(xor(a.ahash, b2.ahash)) <= 6
-       |  JOIN basg ba ON a.id = ba.id JOIN basg bb ON b2.id = bb.id
-       |  WHERE greatest(ba.b, bb.b) >= 0),
-       |pflag AS (SELECT DISTINCT CASE WHEN b_b = greatest(b_a, b_b)
-       |    THEN id_b ELSE id_a END AS id FROM pp),
-       |wna AS (SELECT id, len(s) AS n FROM wsets),
-       |wex AS (SELECT id, unnest(s) AS g FROM wsets),
-       |wov AS (SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS i
-       |  FROM wex a JOIN wex b ON a.g = b.g AND a.id != b.id
-       |  GROUP BY a.id, b.id),
-       |cflag AS (SELECT DISTINCT wov.id_a AS id
-       |  FROM wov JOIN wna ON wov.id_a = wna.id
-       |  JOIN basg aa ON wov.id_a = aa.id
-       |  JOIN basg bb ON wov.id_b = bb.id
-       |  WHERE i / wna.n >= 0.9 AND aa.b >= 0 AND bb.b <= aa.b)
+       |${sqlAudioWindowSetCtes("psmp")},
+       |basg AS (SELECT id, $sqlMediaArrival AS b FROM clips),
+       |${flag("x", "afp", "a.audio_fp = b2.audio_fp")},
+       |${flag("p", "aah", "bit_count(xor(a.ahash, b2.ahash)) <= 6")},
+       |${sqlOverlapCtes("w", "wsets")},
+       |cflag AS (SELECT DISTINCT id_a AS id
+       |  FROM (${sqlContainmentEmit("w", "basg", "0.9")}))
        |SELECT c.id AS media_id, CAST(ba.b AS BIGINT) AS batch,
        |  xflag.id IS NOT NULL AS exact_dup,
        |  pflag.id IS NOT NULL AS percep_dup,
@@ -7147,6 +6894,28 @@ object Pipeline {
        |LEFT JOIN cflag ON c.id = cflag.id
        |WHERE ba.b >= 0
        |ORDER BY media_id""".stripMargin
+  }
+
+  /** The fixed-window audio hash sets over samples `src`: a 64-bit hash
+    * per whole 256-sample window (one bit per 4-sample block louder than
+    * the window mean), ending in CTE `wsets(id, s)`. Shared by p128 and
+    * p130. */
+  private def sqlAudioWindowSetCtes(src: String): String = {
+    import OracleHash._
+    s"""wfx AS (SELECT id, i // 256 AS w, (i % 256) // 4 AS sb, s
+       |        FROM $src WHERE i < (n // 256) * 256),
+       |sbs AS (SELECT id, w, sb, SUM(ABS(s)) AS ss
+       |        FROM wfx GROUP BY id, w, sb),
+       |swt AS (SELECT id, w, SUM(ss) AS tot FROM sbs GROUP BY id, w),
+       |swu AS (SELECT s.id, s.w,
+       |    COALESCE(SUM(CASE WHEN s.ss * 64 > t.tot
+       |      THEN (1::HUGEINT << CAST(s.sb AS INT)) ELSE 0::HUGEINT END),
+       |      0::HUGEINT) AS u
+       |  FROM sbs s JOIN swt t ON s.id = t.id AND s.w = t.w
+       |  GROUP BY s.id, s.w),
+       |swh AS (SELECT id, ${signed64("u")} AS wh FROM swu),
+       |wsets AS (SELECT id, list_distinct(list(CAST(wh AS VARCHAR))) AS s
+       |          FROM swh GROUP BY id)""".stripMargin
   }
 
   // =========================================================================
@@ -7173,37 +6942,30 @@ object Pipeline {
   // quantization resolution, not a corpus fraction — SCALING.md).
   // =========================================================================
   def p129PqRebuild(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import graft.streaming.PqStream
     val emb = Tables.embeddings(spark, dir)
     val standing = emb.filter(col("vec_id") < 300)
-    val incoming = emb.filter(col("vec_id") >= 300 && col("vec_id") < 400)
-      .select(col("vec_id"), col("embedding"))
-    val root = Files.createTempDirectory("p129_").toString
-    val book1 = s"$root/book1"; val codes1 = s"$root/codes1"
-    val book2 = s"$root/book2"; val codes2 = s"$root/codes2"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => PqStream.writeStanding(spark, book1, codes1, standing,
-        Similarity.pqTrain(standing, m = 16, nCodes = 6)),
-      () => stage(incoming, pmod(col("vec_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema)(
-      PqStream.appendBatch(spark, book1, codes1, s"$root/out1", "vec_id",
+    val r = new StreamRun(spark)
+    r.run(emb.filter(col("vec_id") >= 300 && col("vec_id") < 400)
+        .select(col("vec_id"), col("embedding")), stripe("vec_id", 2),
+      0 until 2)(() => PqStream.writeStanding(spark, r("book1"), r("codes1"),
+        standing, Similarity.pqTrain(standing, m = 16, nCodes = 6)))(
+      PqStream.appendBatch(spark, r("book1"), r("codes1"), r("out1"), "vec_id",
         "embedding"))
     // the drift signal says the gen-1 books stopped fitting — retrain
     // over the CURRENT corpus at higher resolution into NEW roots
-    PqStream.rebuild(spark, emb.filter(col("vec_id") < 400), book2, codes2,
-      m = 16, nCodes = 8)
+    PqStream.rebuild(spark, emb.filter(col("vec_id") < 400), r("book2"),
+      r("codes2"), m = 16, nCodes = 8)
     // post-swap: a NEW stream (fresh lineage) appends under the rebuilt
     // codebooks — one foreachBatch body call IS the stream's batch 0
-    PqStream.appendBatch(spark, book2, codes2, s"$root/out2",
+    PqStream.appendBatch(spark, r("book2"), r("codes2"), r("out2"),
       "vec_id", "embedding")(emb.filter(col("vec_id") >= 400), 0L)
-    val drifts = spark.read.parquet(s"$root/out1/b*")
+    val drifts = spark.read.parquet(r("out1/b*"))
       .agg(max(when(col("batch") === 0, col("err_sum"))).as("drift_b0"),
         max(when(col("batch") === 1, col("err_sum"))).as("drift_b1"))
-      .crossJoin(spark.read.parquet(s"$root/out2/b0")
+      .crossJoin(spark.read.parquet(r("out2/b0"))
         .select(col("err_sum").as("drift_post")))
-    graft.streaming.Versions.list(spark, codes2)
+    graft.streaming.Versions.list(spark, r("codes2"))
       .map { case (vid, p) =>
         spark.read.parquet(p.toString)
           .select(col("neighbor_id").as("vec_id"), posexplode(col("codes")))
@@ -7222,6 +6984,16 @@ object Pipeline {
       iters = 2)
     val (g2Ctes, bank2) = pqBankCtes(m = 16, nCodes = 8, subDim = 4,
       iters = 2, prefix = "r", src = "emb2")
+    // phase k's vectors (`where`) encoded under `bank`, reconstructed, and
+    // their sequential squared error `e$k(id, se)`: the drift signal
+    def encodeErr(k: Int, where: String, enc: String, bank: String): String =
+      s"""ph$k AS (SELECT id, v FROM allv WHERE $where),
+         |${pqAssignCte(enc, bank, 4, src = s"ph$k")},
+         |rv$k AS (SELECT e.id, flatten(list(b.cv ORDER BY e.j)) AS rv
+         |  FROM $enc e JOIN $bank b ON e.j = b.j AND e.code = b.code
+         |  GROUP BY e.id),
+         |e$k AS (SELECT p.id, ${seqSqDist("p.v", "r.rv")} AS se
+         |  FROM ph$k p JOIN rv$k r ON p.id = r.id)""".stripMargin
     s"""WITH emb AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
        |  FROM embeddings WHERE vec_id < 300),
        |$g1Ctes,
@@ -7231,23 +7003,11 @@ object Pipeline {
        |allv AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
        |  FROM embeddings),
        |${pqAssignCte("enc2", bank2, 4, src = "allv")},
-       |ph1 AS (SELECT id, v FROM allv WHERE id >= 300 AND id < 400),
-       |${pqAssignCte("enc1", bank1, 4, src = "ph1")},
-       |rv1 AS (SELECT e.id, flatten(list(b.cv ORDER BY e.j)) AS rv
-       |  FROM enc1 e JOIN $bank1 b ON e.j = b.j AND e.code = b.code
-       |  GROUP BY e.id),
-       |e1 AS (SELECT p.id, ${seqSqDist("p.v", "r.rv")} AS se
-       |  FROM ph1 p JOIN rv1 r ON p.id = r.id),
+       |${encodeErr(1, "id >= 300 AND id < 400", "enc1", bank1)},
        |d1 AS (SELECT CAST(id % 2 AS INT) AS b,
        |    ${decimalToDouble(s"SUM(${decimalStage("se")})")} AS err
        |  FROM e1 GROUP BY 1),
-       |ph2 AS (SELECT id, v FROM allv WHERE id >= 400),
-       |${pqAssignCte("enc3", bank2, 4, src = "ph2")},
-       |rv2 AS (SELECT e.id, flatten(list(b.cv ORDER BY e.j)) AS rv
-       |  FROM enc3 e JOIN $bank2 b ON e.j = b.j AND e.code = b.code
-       |  GROUP BY e.id),
-       |e2 AS (SELECT p.id, ${seqSqDist("p.v", "r.rv")} AS se
-       |  FROM ph2 p JOIN rv2 r ON p.id = r.id),
+       |${encodeErr(2, "id >= 400", "enc3", bank2)},
        |d2 AS (SELECT ${decimalToDouble(s"SUM(${decimalStage("se")})")}
        |    AS drift_post FROM e2),
        |dd AS (SELECT
@@ -7301,8 +7061,7 @@ object Pipeline {
       .orderBy("id_a", "id_b")
   }
 
-  val p130Sql: String = {
-    import OracleHash._
+  val p130Sql: String =
     s"""WITH clips AS (
        |  SELECT doc_id AS id, doc_id AS seed,
        |    (8000 * (doc_id % 200 + 50)) // 1000 AS n, 0 AS vnt
@@ -7313,30 +7072,9 @@ object Pipeline {
        |  FROM documents
        |  WHERE doc_id % 3 = 1 AND doc_id < 60 AND doc_id % 200 >= 14),
        |${sqlAudioSampleCtesFrom("n")},
-       |wfx AS (SELECT id, i // 256 AS w, (i % 256) // 4 AS sb, s
-       |        FROM smp WHERE i < (n // 256) * 256),
-       |sbs AS (SELECT id, w, sb, SUM(ABS(s)) AS ss
-       |        FROM wfx GROUP BY id, w, sb),
-       |swt AS (SELECT id, w, SUM(ss) AS tot FROM sbs GROUP BY id, w),
-       |swu AS (SELECT s.id, s.w,
-       |    COALESCE(SUM(CASE WHEN s.ss * 64 > t.tot
-       |      THEN (1::HUGEINT << CAST(s.sb AS INT)) ELSE 0::HUGEINT END),
-       |      0::HUGEINT) AS u
-       |  FROM sbs s JOIN swt t ON s.id = t.id AND s.w = t.w
-       |  GROUP BY s.id, s.w),
-       |swh AS (SELECT id, ${signed64("u")} AS wh FROM swu),
-       |wsets AS (SELECT id, list_distinct(list(CAST(wh AS VARCHAR))) AS s
-       |          FROM swh GROUP BY id),
-       |wna AS (SELECT id, len(s) AS n FROM wsets),
-       |wex AS (SELECT id, unnest(s) AS g FROM wsets),
-       |wov AS (SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS i
-       |  FROM wex a JOIN wex b ON a.g = b.g AND a.id != b.id
-       |  GROUP BY a.id, b.id)
-       |SELECT id_a, id_b, i / wna.n AS containment
-       |FROM wov JOIN wna ON wov.id_a = wna.id
-       |WHERE i / wna.n >= 0.9
-       |ORDER BY id_a, id_b""".stripMargin
-  }
+       |${sqlAudioWindowSetCtes("smp")},
+       |${sqlOverlapCtes("w", "wsets")}
+       |${sqlContainmentPairs("w", "0.9")}""".stripMargin
 
   // =========================================================================
   // p131 — STREAMING text containment index: ContainmentStream's TEXT
@@ -7354,66 +7092,51 @@ object Pipeline {
   // replay plus the family's emission-batch rule.
   // =========================================================================
   def p131StreamTextContainment(spark: SparkSession, dir: String)
-      : DataFrame = {
-    import java.nio.file.Files
-    import graft.streaming.ContainmentStream
+      : DataFrame = textContainmentStream(spark, dir)((_, _) => ())
+
+  /** p131's stream: standing docs below 400, arriving the rest plus
+    * 12-token excerpts (+100000) of docs below 5; `verbs(r, id)` runs
+    * before batch `id`'s probe (p134's takedown). */
+  private def textContainmentStream(spark: SparkSession, dir: String)(
+      verbs: (StreamRun, Long) => Unit): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val standing = docs.filter(col("doc_id") < 400)
     val planted = docs.filter(col("doc_id") < 5)
       .select((col("doc_id") + 100000).as("doc_id"),
         array_join(slice(TF.tokens(col("text")), 1, 12), " ").as("text"))
-    val incoming = docs.filter(col("doc_id") >= 400).unionAll(planted)
-    val root = Files.createTempDirectory("p131_").toString
-    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
-    val setsOf = (df: DataFrame) =>
-      Dedup.jaccardShingleSets(df, "doc_id", "text")
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => ContainmentStream.writeStanding(spark, idxRoot, standing,
-        setsOf),
-      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema) { (b, id) =>
-      ContainmentStream.filterBatch(spark, idxRoot, outRoot, setsOf,
-        threshold = 0.6)(b, id)
-    }
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("id_a"), col("id_b"), col("containment"), col("batch"))
-      .orderBy("id_a", "id_b")
+    containmentStream(spark, docs.filter(col("doc_id") < 400),
+      docs.filter(col("doc_id") >= 400).unionAll(planted), "doc_id", 0.6,
+      df => Dedup.jaccardShingleSets(df, "doc_id", "text"))(verbs)
   }
 
-  val p131Sql: String =
+  /** The text containment replay over `docs(id, text, vnt)`: shingle sets
+    * `${p}ne(id, vnt, s)`, [[sqlOverlapCtes]] `p`, and `${p}asg(id, b, del)`
+    * — originals below `standing` stand (b = -1), the rest arrive in
+    * batch id mod 2, and `del` flags the retracted originals. */
+  private def sqlTextContainmentCtes(p: String, docs: String, standing: Int,
+      del: String = "FALSE"): String =
+    s"""${p}ne AS (SELECT id, vnt, s FROM (SELECT id, vnt,
+       |    ${sqlShingle3List("toks")} AS s
+       |  FROM (SELECT id, vnt, $sqlToks AS toks FROM $docs)) WHERE len(s) > 0),
+       |${sqlOverlapCtes(p, s"${p}ne")},
+       |${p}asg AS (SELECT id,
+       |    CASE WHEN vnt = 0 AND id < $standing THEN -1
+       |         ELSE CAST(id % 2 AS INT) END AS b,
+       |    CASE WHEN vnt = 0 AND id < $standing AND $del THEN 1 ELSE 0 END
+       |      AS del
+       |  FROM ${p}ne)""".stripMargin
+
+  /** p131's oracle; `dead` (p134) names the originals retracted before
+    * batch 1's probe. */
+  private def sqlTextContainmentStream(dead: Option[String]): String =
     s"""WITH tk0 AS (SELECT doc_id, $sqlToks AS toks FROM documents),
-       |corpus AS (SELECT doc_id AS id, text, 0 AS vnt
-       |  FROM documents),
-       |plant AS (SELECT doc_id + 100000 AS id,
-       |    array_to_string(toks[1:12], ' ') AS text, 1 AS vnt
-       |  FROM tk0 WHERE doc_id < 5),
-       |alld AS (SELECT id, text, vnt FROM corpus
-       |  UNION ALL SELECT id, text, vnt FROM plant),
-       |tks AS (SELECT id, vnt, $sqlToks AS toks FROM alld),
-       |shs AS (SELECT id, vnt, list_distinct(
-       |         CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-       |              ELSE list_transform(range(1, len(toks) - 1),
-       |                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-       |         END) AS s
-       |       FROM tks),
-       |ne AS (SELECT id, vnt, s FROM shs WHERE len(s) > 0),
-       |na AS (SELECT id, len(s) AS n FROM ne),
-       |ex AS (SELECT id, unnest(s) AS g FROM ne),
-       |ov AS (SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS i
-       |  FROM ex a JOIN ex b ON a.g = b.g AND a.id != b.id
-       |  GROUP BY a.id, b.id),
-       |basg AS (SELECT id,
-       |    CASE WHEN vnt = 0 AND id < 400 THEN -1
-       |         ELSE CAST(id % 2 AS INT) END AS b
-       |  FROM ne)
-       |SELECT id_a, id_b, i / na.n AS containment,
-       |  CAST(aa.b AS BIGINT) AS batch
-       |FROM ov JOIN na ON ov.id_a = na.id
-       |JOIN basg aa ON ov.id_a = aa.id
-       |JOIN basg bb ON ov.id_b = bb.id
-       |WHERE i / na.n >= 0.6 AND aa.b >= 0 AND bb.b <= aa.b
+       |alld AS (SELECT doc_id AS id, text, 0 AS vnt FROM documents
+       |  UNION ALL SELECT doc_id + 100000,
+       |    array_to_string(toks[1:12], ' '), 1 FROM tk0 WHERE doc_id < 5),
+       |${sqlTextContainmentCtes("", "alld", 400, dead.getOrElse("FALSE"))}
+       |${sqlContainmentEmit("", "asg", "0.6", dead.map(_ => 1))}
        |ORDER BY id_a, id_b""".stripMargin
+
+  val p131Sql: String = sqlTextContainmentStream(None)
 
   // =========================================================================
   // p132 — TAKEDOWN through the streaming near-dup filter (VERDICT r13 #1,
@@ -7434,86 +7157,35 @@ object Pipeline {
   // unaffected by the bound.
   // =========================================================================
   def p132TombstoneNearDup(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val existing = docs.filter(col("doc_id") < 250)
     val incoming = docs
       .filter(col("doc_id") >= 250 && col("doc_id") < 2250)
       .unionAll(docs.filter(col("doc_id") < 10)
         .select((col("doc_id") + 10000).as("doc_id"), col("text")))
       .unionAll(docs.filter(col("doc_id").between(250, 254))
         .select((col("doc_id") + 20000).as("doc_id"), col("text")))
-    val root = Files.createTempDirectory("p132_").toString
-    val idxRoot = s"$root/idx"
-    val docsRoot = s"$root/docs"; val outRoot = s"$root/out"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => Dedup.minhashBandIndex(existing, "doc_id", "text",
-          numHashes = 64, bands = 16, shingleSize = 3, seed = 42L)
-        .write.parquet(s"$idxRoot/v0"),
-      () => existing.write.parquet(s"$docsRoot/v0"),
-      () => stage(incoming, pmod(col("doc_id"), lit(3)), root, 0 until 3))
-    replay(spark, root, incoming.schema) { (b, id) =>
-      // the takedown lands before batch 1's probe: docs 0-9 (standing —
-      // strictly earlier than the marker's batch, per the tombstone
-      // contract) disappear from both stores from here on; a
-      // redelivered batch 1 re-issues the marker deterministically
-      if (id == 1L)
-        graft.streaming.NearDupStream.tombstone(spark, idxRoot, docsRoot,
-          0L until 10L, id)
-      graft.streaming.NearDupStream
-        .filterBatch(spark, idxRoot, docsRoot, outRoot, "doc_id", "text",
-          threshold = 0.4)(b, id)
+    nearDupStream(spark, docs.filter(col("doc_id") < 250), incoming,
+      stripe("doc_id", 3)) {
+      (r, id) =>
+        // the takedown lands before batch 1's probe: docs 0-9 (standing —
+        // strictly earlier than the marker's batch, per the tombstone
+        // contract) disappear from both stores from here on; a
+        // redelivered batch 1 re-issues the marker deterministically
+        if (id == 1L)
+          graft.streaming.NearDupStream.tombstone(spark, r("idx"), r("docs"),
+            0L until 10L, id)
     }
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("id_a"), col("id_b"), col("jaccard"), col("batch"))
-      .orderBy("id_a", "id_b")
   }
 
-  val p132Sql: String = {
-    // the literal takedown set (standing originals 0-9): every other id
-    // in the prior unions is >= 250 or offset by +10000/+20000, so the
-    // predicate names exactly the Spark side's literal marker ids at any
-    // corpus scale
-    def crossArm(b: Int): String =
-      sqlCrossArmCtes(b,
-        excludeOld = if (b >= 1) Some("id < 10") else None)
-    s"""WITH ex AS (SELECT doc_id, $sqlToks AS toks FROM documents
-       |           WHERE doc_id < 250),
-       |inc AS (
-       |  SELECT doc_id, $sqlToks AS toks, doc_id % 3 AS b FROM documents
-       |  WHERE doc_id >= 250 AND doc_id < 2250
-       |  UNION ALL
-       |  SELECT doc_id + 10000, $sqlToks, (doc_id + 10000) % 3
-       |  FROM documents WHERE doc_id < 10
-       |  UNION ALL
-       |  SELECT doc_id + 20000, $sqlToks, (doc_id + 20000) % 3
-       |  FROM documents WHERE doc_id BETWEEN 250 AND 254),
-       |i0 AS (SELECT doc_id, toks FROM inc WHERE b = 0),
-       |i1 AS (SELECT doc_id, toks FROM inc WHERE b = 1),
-       |i2 AS (SELECT doc_id, toks FROM inc WHERE b = 2),
-       |$sqlMinhashCoef,
-       |${sqlMinhashChain("x", "ex")},
-       |${sqlMinhashChain("g0", "i0")},
-       |${sqlMinhashChain("g1", "i1")},
-       |${sqlMinhashChain("g2", "i2")},
-       |${sqlMinhashPairCtes("g0")},
-       |${sqlMinhashPairCtes("g1")},
-       |${sqlMinhashPairCtes("g2")},
-       |${crossArm(0)},
-       |${crossArm(1)},
-       |${crossArm(2)}
-       |SELECT id_a, id_b, jaccard, batch FROM (
-       |  SELECT id_a, id_b, jaccard, CAST(0 AS BIGINT) AS batch FROM
-       |    (SELECT * FROM mhg0 UNION ALL SELECT * FROM mx0)
-       |  UNION ALL
-       |  SELECT id_a, id_b, jaccard, CAST(1 AS BIGINT) FROM
-       |    (SELECT * FROM mhg1 UNION ALL SELECT * FROM mx1)
-       |  UNION ALL
-       |  SELECT id_a, id_b, jaccard, CAST(2 AS BIGINT) FROM
-       |    (SELECT * FROM mhg2 UNION ALL SELECT * FROM mx2))
-       |ORDER BY id_a, id_b""".stripMargin
-  }
+  // the literal takedown set (standing originals 0-9): every other id in
+  // the prior unions is >= 250 or offset by +10000/+20000, so the
+  // predicate names exactly the Spark side's literal marker ids at any
+  // corpus scale
+  val p132Sql: String = sqlNearDupStream(
+    sqlTextStreamCtes("doc_id >= 250 AND doc_id < 2250",
+      Seq(sqlPlantArm(10000, "doc_id < 10"),
+        sqlPlantArm(20000, "doc_id BETWEEN 250 AND 254"))),
+    b => if (b >= 1) Some("id < 10") else None)
 
   // =========================================================================
   // p133 — TAKEDOWN through the streaming BM25 index: the retraction must
@@ -7540,44 +7212,23 @@ object Pipeline {
   // definition (the centroid-bank rule).
   // =========================================================================
   def p133TombstoneBm25(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import graft.streaming.RetrievalStream
     val docs = Tables.documents(spark, dir)
-    val qTerms = docs.filter(col("doc_id") === 251)
-      .select(explode(TF.tokens(col("text"))).as("term"))
-      .distinct().orderBy("term").limit(4)
-      .collect().map(_.getString(0)).toSeq
-    val standing = docs.filter(col("doc_id") < 250)
-    val incoming = docs.filter(col("doc_id") >= 250)
-      .select(col("doc_id"), col("text"))
-    val root = Files.createTempDirectory("p133_").toString
-    val idxRoot = s"$root/idx"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => RetrievalStream.writeStanding(spark, idxRoot, standing),
-      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema) { (b, id) =>
-      if (id == 1L)
-        RetrievalStream.tombstone(spark, idxRoot,
-          (0L until 120L) ++ (250L until 290L by 2), id)
-      RetrievalStream.appendBatch(spark, idxRoot)(b, id)
+    val qTerms = corpusTerms(docs)
+    val idx = bm25Stream(spark, docs, docs.filter(col("doc_id") < 250)) {
+      (idx, id) =>
+        if (id == 1L)
+          RetrievalStream.tombstone(spark, idx,
+            (0L until 120L) ++ (250L until 290L by 2), id)
     }
-    RetrievalStream.bm25TopK(spark, idxRoot, qTerms, k = 40)
+    RetrievalStream.bm25TopK(spark, idx, qTerms, k = 40)
   }
 
-  val p133Sql: String =
-    s"""WITH qt133 AS (SELECT term FROM (
-       |    SELECT DISTINCT unnest($sqlToks) AS term FROM documents
-       |    WHERE doc_id = 251)
-       |  ORDER BY term LIMIT 4),
-       |live AS (SELECT * FROM documents
-       |  WHERE NOT (doc_id < 120
-       |             OR (doc_id >= 250 AND doc_id < 290 AND doc_id % 2 = 0))),
-       |${sqlBm25CtesWhere("133", "SELECT term FROM qt133", "live")}
-       |SELECT doc_id, CAST(ROUND(SUM(sct), 6) AS DOUBLE) AS score
-       |FROM x133 GROUP BY doc_id
-       |ORDER BY score DESC, doc_id
-       |LIMIT 40""".stripMargin
+  val p133Sql: String = sqlLiveBm25("133",
+    """live AS (SELECT * FROM documents
+      |  WHERE NOT (doc_id < 120
+      |             OR (doc_id >= 250 AND doc_id < 290 AND doc_id % 2 = 0)))"""
+      .stripMargin)
 
   // =========================================================================
   // p134 — TAKEDOWN through the streaming text containment index: p131's
@@ -7594,70 +7245,13 @@ object Pipeline {
   // vnt-scoped, never id-magnitude.
   // =========================================================================
   def p134TombstoneContainment(spark: SparkSession, dir: String)
-      : DataFrame = {
-    import java.nio.file.Files
-    import graft.streaming.ContainmentStream
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val standing = docs.filter(col("doc_id") < 400)
-    val planted = docs.filter(col("doc_id") < 5)
-      .select((col("doc_id") + 100000).as("doc_id"),
-        array_join(slice(TF.tokens(col("text")), 1, 12), " ").as("text"))
-    val incoming = docs.filter(col("doc_id") >= 400).unionAll(planted)
-    val root = Files.createTempDirectory("p134_").toString
-    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
-    val setsOf = (df: DataFrame) =>
-      Dedup.jaccardShingleSets(df, "doc_id", "text")
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => ContainmentStream.writeStanding(spark, idxRoot, standing,
-        setsOf),
-      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema) { (b, id) =>
-      if (id == 1L)
-        ContainmentStream.tombstone(spark, idxRoot, 0L until 50L, id)
-      ContainmentStream.filterBatch(spark, idxRoot, outRoot, setsOf,
-        threshold = 0.6)(b, id)
-    }
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("id_a"), col("id_b"), col("containment"), col("batch"))
-      .orderBy("id_a", "id_b")
+      : DataFrame = textContainmentStream(spark, dir) { (r, id) =>
+    if (id == 1L)
+      graft.streaming.ContainmentStream.tombstone(spark, r("idx"),
+        0L until 50L, id)
   }
 
-  val p134Sql: String =
-    s"""WITH tk0 AS (SELECT doc_id, $sqlToks AS toks FROM documents),
-       |corpus AS (SELECT doc_id AS id, text, 0 AS vnt
-       |  FROM documents),
-       |plant AS (SELECT doc_id + 100000 AS id,
-       |    array_to_string(toks[1:12], ' ') AS text, 1 AS vnt
-       |  FROM tk0 WHERE doc_id < 5),
-       |alld AS (SELECT id, text, vnt FROM corpus
-       |  UNION ALL SELECT id, text, vnt FROM plant),
-       |tks AS (SELECT id, vnt, $sqlToks AS toks FROM alld),
-       |shs AS (SELECT id, vnt, list_distinct(
-       |         CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-       |              ELSE list_transform(range(1, len(toks) - 1),
-       |                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-       |         END) AS s
-       |       FROM tks),
-       |ne AS (SELECT id, vnt, s FROM shs WHERE len(s) > 0),
-       |na AS (SELECT id, len(s) AS n FROM ne),
-       |ex AS (SELECT id, unnest(s) AS g FROM ne),
-       |ov AS (SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS i
-       |  FROM ex a JOIN ex b ON a.g = b.g AND a.id != b.id
-       |  GROUP BY a.id, b.id),
-       |basg AS (SELECT id,
-       |    CASE WHEN vnt = 0 AND id < 400 THEN -1
-       |         ELSE CAST(id % 2 AS INT) END AS b,
-       |    CASE WHEN vnt = 0 AND id < 50 THEN 1 ELSE 0 END AS del
-       |  FROM ne)
-       |SELECT id_a, id_b, i / na.n AS containment,
-       |  CAST(aa.b AS BIGINT) AS batch
-       |FROM ov JOIN na ON ov.id_a = na.id
-       |JOIN basg aa ON ov.id_a = aa.id
-       |JOIN basg bb ON ov.id_b = bb.id
-       |WHERE i / na.n >= 0.6 AND aa.b >= 0 AND bb.b <= aa.b
-       |  AND NOT (aa.b >= 1 AND bb.del = 1)
-       |ORDER BY id_a, id_b""".stripMargin
+  val p134Sql: String = sqlTextContainmentStream(Some("id < 50"))
 
   // =========================================================================
   // p135 — TAKEDOWN through the streaming IVF vector index: the ANN member
@@ -7684,52 +7278,45 @@ object Pipeline {
   // unaffected).
   // =========================================================================
   def p135TombstoneIvf(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
+    import graft.streaming.IvfStream
     val emb = Tables.embeddings(spark, dir)
-    val standing = emb.filter(col("vec_id") < 250)
     val plants = emb.filter(col("vec_id") < 10)
       .select((col("vec_id") + 10000).as("vec_id"), col("embedding"))
-    val incoming = emb.filter(col("vec_id") >= 250 && col("vec_id") < 2250)
-      .select(col("vec_id"), col("embedding"))
-      .unionAll(plants)
-    val root = Files.createTempDirectory("p135_").toString
-    val bankRoot = s"$root/bank"
-    val indexRoot = s"$root/index"; val outRoot = s"$root/out"
-    val bank = IvfRelational.trainBank(standing, nCells = 16, iters = 3,
-      stride = 15)
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => graft.streaming.IvfStream.writeStanding(spark, bankRoot,
-        indexRoot, standing, bank),
-      () => stage(incoming, pmod(col("vec_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema) { (b, id) =>
+    val r = new StreamRun(spark)
+    r.run(emb.filter(col("vec_id") >= 250 && col("vec_id") < 2250)
+        .select(col("vec_id"), col("embedding")).unionAll(plants),
+      stripe("vec_id", 2), 0 until 2)(
+      ivfStanding(spark, r, emb.filter(col("vec_id") < 250))) { (b, id) =>
       // originals 0-9 are standing (v0) — strictly earlier than the
       // marker's batch, per the tombstone contract; a redelivered
       // batch 1 re-issues the marker deterministically
-      if (id == 1L)
-        graft.streaming.IvfStream.tombstone(spark, indexRoot,
-          0L until 10L, id)
-      graft.streaming.IvfStream.appendBatch(spark, bankRoot, indexRoot,
-        outRoot, "vec_id", "embedding")(b, id)
+      if (id == 1L) IvfStream.tombstone(spark, r("index"), 0L until 10L, id)
+      IvfStream.appendBatch(spark, r("bank"), r("index"), r("out"), "vec_id",
+        "embedding")(b, id)
     }
-    val idx = graft.streaming.IvfStream.readIndexFor(spark, indexRoot,
-      bankRoot)
-    val frozen = spark.read.parquet(s"$bankRoot/v0")
-    IvfRelational.topKIndexed(plants, idx, frozen, k = 5, nProbe = 4)
-      .orderBy("query_id", "rank")
+    ivfProbe(spark, r, plants).orderBy("query_id", "rank")
   }
 
-  val p135Sql: String = {
+  /** The top 5 of `queries` over [[ivfStanding]]'s masked index under
+    * `r`, probing 4 cells of the frozen bank (p135, p139). */
+  private def ivfProbe(spark: SparkSession, r: StreamRun,
+      queries: DataFrame): DataFrame =
+    IvfRelational.topKIndexed(queries,
+      graft.streaming.IvfStream.readIndexFor(spark, r("index"), r("bank")),
+      spark.read.parquet(r("bank/v0")), k = 5, nProbe = 4)
+
+  /** [[ivfProbe]]'s oracle: the 16-cell bank replayed over the standing
+    * vectors, `qs(id, v)` from `qsSql`, the retained corpus `ret(id, v)`
+    * from `retSql`, and each query's top-5 rows of `ivft(query_id,
+    * neighbor_id, sim, rk)` by the exact cosine over its 4 cells. */
+  private def sqlIvfProbeCtes(qsSql: String, retSql: String): String = {
     import OracleHash._
     val (bankCtes, bank) = ivfBankCtes(nCells = 16, iters = 3, stride = 15)
-    s"""WITH emb AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
+    s"""emb AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
        |  FROM embeddings WHERE vec_id < 250),
        |$bankCtes,
-       |qs AS (SELECT vec_id + 10000 AS id, embedding::DOUBLE[] AS v
-       |  FROM embeddings WHERE vec_id < 10),
-       |ret AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
-       |    FROM embeddings WHERE vec_id >= 10 AND vec_id < 2250
-       |  UNION ALL SELECT id, v FROM qs),
+       |qs AS ($qsSql),
+       |ret AS ($retSql),
        |${nearestCellCte("qa0", bank, keep = 4, source = "qs")},
        |qa AS (SELECT id AS query_id, cell FROM qa0),
        |${nearestCellCte("ca0", bank, keep = 1, source = "ret")},
@@ -7744,16 +7331,23 @@ object Pipeline {
        |    sqrt(${seqDot("qv", "qv")}) AS nq,
        |    sqrt(${seqDot("cv", "cv")}) AS nc
        |  FROM cand JOIN qv USING (query_id)),
-       |r AS (SELECT query_id, neighbor_id,
+       |ivfr AS (SELECT query_id, neighbor_id,
        |    ${sqlCosine("dt", "nq", "nc")} AS sim FROM sx),
-       |t AS (SELECT query_id, neighbor_id, sim,
+       |ivft AS (SELECT query_id, neighbor_id, sim,
        |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |                       ORDER BY sim DESC, neighbor_id ASC) AS "rank"
-       |  FROM r)
-       |SELECT query_id, "rank", neighbor_id, sim FROM t
-       |WHERE "rank" <= 5
-       |ORDER BY query_id, "rank"""".stripMargin
+       |                       ORDER BY sim DESC, neighbor_id ASC) AS rk
+       |  FROM ivfr)""".stripMargin
   }
+
+  val p135Sql: String =
+    s"""WITH ${sqlIvfProbeCtes(
+         "SELECT vec_id + 10000 AS id, embedding::DOUBLE[] AS v " +
+           "FROM embeddings WHERE vec_id < 10",
+         "SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings " +
+           "WHERE vec_id >= 10 AND vec_id < 2250 UNION ALL SELECT id, v FROM qs")}
+       |SELECT query_id, rk AS "rank", neighbor_id, sim FROM ivft
+       |WHERE rk <= 5
+       |ORDER BY query_id, "rank"""".stripMargin
 
   // =========================================================================
   // p136 — PREDICATE-DRIVEN takedown sweep: p133's BM25 store, but the
@@ -7771,68 +7365,56 @@ object Pipeline {
   // retained corpus.
   // =========================================================================
   def p136TombstoneSweep(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import graft.streaming.RetrievalStream
     val docs = Tables.documents(spark, dir)
-    // plant one guaranteed sub-threshold standing doc (ADVICE r14 #2: at a
-    // scale where no corpus doc organically scores < 0.6 the sweep would be
-    // empty and tombstoneFrom's empty-set refusal would abort the stream).
-    // "zq zq zq" scores 0.03·0.3 + 0.75·0.3 + 0 + 0.5·0.2 = 0.334 < 0.6 by
-    // construction, so the marker always holds at least the plant. The
-    // oracle needs no mirror: the plant is certainly in the deleted set, so
-    // the retained corpus — the only thing the final probe sees — is
-    // unchanged (its (1, dl) stats contribution retracts exactly via the
-    // doclen relation). Offset 30000000 clears every corpus id space (the
-    // r14 plant-collision rule).
-    val plant = spark.range(1)
-      .select(lit(30000000L).as("doc_id"), lit("zq zq zq").as("text"))
     val standing = docs.filter(col("doc_id") < 250)
-      .select(col("doc_id"), col("text")).unionAll(plant)
-    val incoming = docs.filter(col("doc_id") >= 250)
-      .select(col("doc_id"), col("text"))
-    val root = Files.createTempDirectory("p136_").toString
-    val idxRoot = s"$root/idx"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => RetrievalStream.writeStanding(spark, idxRoot, standing),
-      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema) { (b, id) =>
-      if (id == 1L) {
-        val sweep = standing
-          .select(col("doc_id"), TF.qualityScoreFromTokens(col("text"),
-            TF.tokens(col("text"))).as("q"))
-          .filter(col("q") < 0.6)
-          .select(col("doc_id"))
-        RetrievalStream.tombstoneFrom(spark, idxRoot, sweep, id)
-      }
-      RetrievalStream.appendBatch(spark, idxRoot)(b, id)
+      .select(col("doc_id"), col("text")).unionAll(qualityPlant(spark))
+    val idx = bm25Stream(spark, docs, standing) { (idx, id) =>
+      if (id == 1L)
+        RetrievalStream.tombstoneFrom(spark, idx, lowQuality(standing), id)
     }
     // corpus-drawn query vocabulary (p133's rule — doc 251 is incoming,
     // never swept): a literal list is vacuous at the zipf spot-gates
-    val qTerms = docs.filter(col("doc_id") === 251)
-      .select(explode(TF.tokens(col("text"))).as("term"))
-      .distinct().orderBy("term").limit(4)
-      .collect().map(_.getString(0)).toSeq
-    RetrievalStream.bm25TopK(spark, idxRoot, qTerms, k = 40)
+    RetrievalStream.bm25TopK(spark, idx, corpusTerms(docs), k = 40)
   }
 
-  val p136Sql: String =
-    s"""WITH qt136 AS (SELECT term FROM (
-       |    SELECT DISTINCT unnest($sqlToks) AS term FROM documents
-       |    WHERE doc_id = 251)
-       |  ORDER BY term LIMIT 4),
-       |t136s AS (SELECT doc_id, text, $sqlToks AS toks
+  /** One guaranteed sub-threshold standing doc (ADVICE r14 #2): at a scale
+    * where no corpus doc organically scores < 0.6 a quality sweep would
+    * be empty and tombstoneFrom's empty-set refusal would abort the
+    * stream. "zq zq zq" scores 0.03·0.3 + 0.75·0.3 + 0 + 0.5·0.2 = 0.334
+    * < 0.6 by construction, so the marker always holds at least the
+    * plant. Oracles need no mirror: the plant is certainly deleted, so
+    * the retained corpus, the only thing a probe sees, is unchanged (its
+    * (1, dl) stats contribution retracts exactly via the doclen
+    * relation). Offset 30000000 clears every corpus id space (the r14
+    * plant-collision rule). Shared by p136 and p139. */
+  private def qualityPlant(spark: SparkSession): DataFrame = spark.range(1)
+    .select(lit(30000000L).as("doc_id"), lit("zq zq zq").as("text"))
+
+  /** (id, score): `df`'s docs under the p03 quality score. */
+  private def scored(df: DataFrame): DataFrame = df
+    .select(col("doc_id").as("id"),
+      TF.qualityScoreFromTokens(col("text"), TF.tokens(col("text")))
+        .as("score"))
+
+  /** The ids of `df`'s docs scoring below 0.6: the quality sweep. */
+  private def lowQuality(df: DataFrame): DataFrame =
+    scored(df).filter(col("score") < 0.6).select(col("id").as("doc_id"))
+
+  /** The standing docs scoring below 0.6, `plus` any more ids, as CTE
+    * `del$tag(doc_id)`: [[lowQuality]]'s oracle side. */
+  private def sqlLowQualityCtes(tag: String, plus: String = ""): String =
+    s"""t${tag}s AS (SELECT doc_id, text, $sqlToks AS toks
        |  FROM documents WHERE doc_id < 250),
-       |${sqlQualityCtes("136s", "t136s", "doc_id")},
-       |del136 AS (SELECT doc_id FROM q136s WHERE quality < 0.6),
+       |${sqlQualityCtes(s"${tag}s", s"t${tag}s", "doc_id")},
+       |del$tag AS (SELECT doc_id FROM q${tag}s WHERE quality < 0.6$plus)"""
+      .stripMargin
+
+  val p136Sql: String = sqlLiveBm25("136",
+    s"""${sqlLowQualityCtes("136")},
        |live AS (SELECT d.* FROM documents d
        |  LEFT JOIN del136 x ON d.doc_id = x.doc_id
-       |  WHERE x.doc_id IS NULL),
-       |${sqlBm25CtesWhere("136", "SELECT term FROM qt136", "live")}
-       |SELECT doc_id, CAST(ROUND(SUM(sct), 6) AS DOUBLE) AS score
-       |FROM x136 GROUP BY doc_id
-       |ORDER BY score DESC, doc_id
-       |LIMIT 40""".stripMargin
+       |  WHERE x.doc_id IS NULL)""".stripMargin)
 
   /** The emission-batch exclusion both media takedown oracles share: a
     * pair whose emission batch is past the marker (>= 1) and whose
@@ -7855,50 +7437,13 @@ object Pipeline {
   // standing image. Oracle = p117's aHash replay with the shared
   // emission-batch exclusion.
   // =========================================================================
-  def p137TombstoneAHash(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.multimodal.Multimodal
-    import graft.streaming.AHashStream
-    val images = Multimodal.fromDocuments(spark, Tables.documents(spark, dir),
-      onlyKind = Some("image"))
-    val standing = images.filter(_.media_id < 250).toDF()
-      .select(col("media_id"), col("payload"))
-    val plants = Multimodal.plantImageVariants(images.filter(_.media_id < 30))
-    val incoming = images.filter(_.media_id >= 250).toDF()
-      .select(col("media_id"), col("payload"))
-      .unionAll(plants.toDF().select(col("media_id"), col("payload")))
-    val root = Files.createTempDirectory("p137_").toString
-    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => AHashStream.writeStanding(spark, idxRoot, standing),
-      () => stage(incoming, pmod(col("media_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema) { (b, id) =>
-      if (id == 1L)
-        graft.streaming.Versions.tombstoneFrom(spark, idxRoot,
-          standing.filter(col("media_id") < 30).select("media_id"), id)
-      AHashStream.appendBatch(spark, idxRoot, outRoot,
-        "media_id", "payload")(b, id)
-    }
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("id_a"), col("id_b"), col("hamming"), col("batch"))
-      .orderBy("id_a", "id_b")
-  }
+  def p137TombstoneAHash(spark: SparkSession, dir: String): DataFrame =
+    imageStream(spark, dir, 2, stripe("media_id", 2))(
+      takedownPlantOriginals(spark))
 
   val p137Sql: String =
-    s"""WITH $sqlImageVariantsCte,
-       |$sqlAHashCtes,
-       |asg AS (SELECT id, ahash,
-       |    CASE WHEN id < 250 THEN -1 ELSE CAST(id % 2 AS INT) END AS b
-       |  FROM ah)
-       |SELECT a.id AS id_a, b2.id AS id_b,
-       |  CAST(bit_count(xor(a.ahash, b2.ahash)) AS INT) AS hamming,
-       |  CAST(greatest(a.b, b2.b) AS BIGINT) AS batch
-       |FROM asg a JOIN asg b2 ON a.id < b2.id
-       |WHERE bit_count(xor(a.ahash, b2.ahash)) <= 6
-       |  AND greatest(a.b, b2.b) >= 0
-       |  ${sqlMediaTombstoneCut("a", "b2")}
-       |ORDER BY id_a, id_b""".stripMargin
+    sqlHammingStream(s"$sqlImageVariantsCte,\n$sqlAHashCtes", "ah",
+      cut = sqlMediaTombstoneCut("a", "b2"))
 
   // =========================================================================
   // p138 — TAKEDOWN through the streaming EXACT media-fingerprint index:
@@ -7911,55 +7456,16 @@ object Pipeline {
   // IVF / perceptual / exact-fp) now has a mid-stream retraction query
   // hash-matched against a from-scratch replay over the retained corpus.
   // =========================================================================
-  def p138TombstoneMediaFp(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.multimodal.Multimodal
-    import graft.streaming.MediaFpStream
-    import spark.implicits._
-    val clips = Multimodal.fromDocuments(spark, Tables.documents(spark, dir),
-      onlyKind = Some("audio"), intAudio = true)
-    val standing = clips.filter(_.media_id < 250).toDF()
-      .select(col("media_id"), col("payload"))
-    val plants = clips.filter(_.media_id < 30)
-      .map(r => r.copy(media_id = r.media_id + 10000))
-    val incoming = clips.filter(_.media_id >= 250).toDF()
-      .select(col("media_id"), col("payload"))
-      .unionAll(plants.toDF().select(col("media_id"), col("payload")))
-    val root = Files.createTempDirectory("p138_").toString
-    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
-    val profiler = (df: DataFrame) =>
-      Multimodal.audioFpBytes(df, "media_id", "payload")
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => MediaFpStream.writeStanding(spark, idxRoot, standing, profiler),
-      () => stage(incoming, pmod(col("media_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema) { (b, id) =>
-      // the relation form keeps the marker set to ids the store
-      // actually holds (audio ids < 30 — the 0..29 range also spans
-      // image/video ids this store never saw)
-      if (id == 1L)
-        graft.streaming.Versions.tombstoneFrom(spark, idxRoot,
-          standing.filter(col("media_id") < 30).select("media_id"), id)
-      MediaFpStream.appendBatch(spark, idxRoot, outRoot, profiler)(b, id)
-    }
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("id_a"), col("id_b"), col("batch"))
-      .orderBy("id_a", "id_b")
-  }
+  def p138TombstoneMediaFp(spark: SparkSession, dir: String): DataFrame =
+    // the relation form keeps the marker set to ids the store actually
+    // holds (audio ids < 30 — the 0..29 range also spans image/video ids
+    // this store never saw)
+    mediaFpStream(spark, dir, "audio", df => graft.multimodal.Multimodal
+      .audioFpBytes(df, "media_id", "payload"))(takedownPlantOriginals(spark))
 
   val p138Sql: String =
-    s"""WITH $sqlAudioClipsCte,
-       |$sqlAudioFpCtes,
-       |aasg AS (SELECT id, audio_fp,
-       |    CASE WHEN id < 250 THEN -1 ELSE CAST(id % 2 AS INT) END AS b
-       |  FROM afp)
-       |SELECT a.id AS id_a, b2.id AS id_b,
-       |  CAST(greatest(a.b, b2.b) AS BIGINT) AS batch
-       |FROM aasg a JOIN aasg b2
-       |  ON a.id < b2.id AND a.audio_fp = b2.audio_fp
-       |WHERE greatest(a.b, b2.b) >= 0
-       |  ${sqlMediaTombstoneCut("a", "b2")}
-       |ORDER BY id_a, id_b""".stripMargin
+    sqlFpStream(s"$sqlAudioClipsCte,\n$sqlAudioFpCtes", "afp", "audio_fp",
+      sqlMediaTombstoneCut("a", "b2"))
 
   // =========================================================================
   // p139 — CROSS-STORE TAKEDOWN CAPSTONE (VERDICT r14 next #1): ONE
@@ -8002,105 +7508,78 @@ object Pipeline {
   // arms, one result, ordered (store, a, b).
   // =========================================================================
   def p139TakedownCapstone(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import graft.streaming.{ContainmentStream, CorpusMaintenance, IvfStream,
       NearDupStream, RetrievalStream, Takedown}
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val emb = Tables.embeddings(spark, dir)
     val standing = docs.filter(col("doc_id") < 250)
-    val standingVecs = emb.filter(col("vec_id") < 250)
-    val qPlant = spark.range(1)
-      .select(lit(30000000L).as("doc_id"), lit("zq zq zq").as("text"))
     val copies = docs.filter(col("doc_id") < 5)
       .select((col("doc_id") + 10000000).as("doc_id"), col("text"))
     val excerpts = docs.filter(col("doc_id").between(1, 3))
       .select((col("doc_id") + 20000000).as("doc_id"),
         array_join(slice(TF.tokens(col("text")), 1, 12), " ").as("text"))
-    val incoming = docs.filter(col("doc_id") >= 250 && col("doc_id") < 2250)
-      .unionAll(copies).unionAll(excerpts)
-    val root = Files.createTempDirectory("p139_").toString
-    val ndIdx = s"$root/nd_idx"; val ndDocs = s"$root/nd_docs"
-    val ndOut = s"$root/nd_out"; val bmRoot = s"$root/bm"
-    val ctRoot = s"$root/ct"; val ctOut = s"$root/ct_out"
-    val bankRoot = s"$root/bank"; val ivfIdx = s"$root/ivf_idx"
-    val ivfOut = s"$root/ivf_out"; val corpusRoot = s"$root/corpus"
     val setsOf = (df: DataFrame) =>
       Dedup.jaccardShingleSets(df, "doc_id", "text")
-    // the five standing stores, the corpus base, and the input staging
-    // are all independent setup writes — overlap them (guide §2.6): the
-    // setup pays the slowest store's wall (the IVF Lloyd training), not
-    // the sum of seven chains
-    graft.core.Par.run(
-      () => Dedup.minhashBandIndex(standing, "doc_id", "text",
-          numHashes = 64, bands = 16, shingleSize = 3, seed = 42L)
-        .write.parquet(s"$ndIdx/v0"),
-      () => standing.write.parquet(s"$ndDocs/v0"),
-      () => RetrievalStream.writeStanding(spark, bmRoot,
-        standing.unionAll(qPlant)),
-      () => ContainmentStream.writeStanding(spark, ctRoot, standing, setsOf),
-      () => IvfStream.writeStanding(spark, bankRoot, ivfIdx, standingVecs,
-        IvfRelational.trainBank(standingVecs, nCells = 16, iters = 3,
-          stride = 15)),
-      () => standing.write.parquet(s"$corpusRoot/v0"),
-      () => stage(incoming, pmod(col("doc_id"), lit(2)), root, 0 until 2))
-    replay(spark, root, incoming.schema) { (b, id) =>
+    val r = new StreamRun(spark)
+    // the five standing stores and the corpus base are all independent
+    // setup writes: the setup pays the slowest store's wall (the IVF
+    // Lloyd training), not the sum of seven chains
+    r.run(docs.filter(col("doc_id") >= 250 && col("doc_id") < 2250)
+        .unionAll(copies).unionAll(excerpts), stripe("doc_id", 2), 0 until 2)(
+      nearDupStanding(standing, r("nd_idx"), r("nd_docs")) ++ Seq[() => Unit](
+        () => RetrievalStream.writeStanding(spark, r("bm"),
+          standing.unionAll(qualityPlant(spark))),
+        () => ContainmentStream.writeStanding(spark, r("ct"), standing, setsOf),
+        ivfStanding(spark, r, emb.filter(col("vec_id") < 250)),
+        () => standing.write.parquet(r("corpus/v0"))): _*) { (b, id) =>
       if (id == 1L) {
         // the ONE sweep: a distributed quality scan over standing data
         // (strictly earlier than the marker's batch) ∪ a licensing id
         // list — resolved once by takedownAll, fanned out from the
         // journal to all five stores + the corpus under batch id 1
-        val sweep = standing.unionAll(qPlant)
-          .select(col("doc_id"), TF.qualityScoreFromTokens(col("text"),
-            TF.tokens(col("text"))).as("q"))
-          .filter(col("q") < 0.6).select(col("doc_id"))
+        val sweep = lowQuality(standing.unionAll(qualityPlant(spark)))
           .unionAll(spark.range(10).select(col("id").as("doc_id")))
-        Takedown.takedownAll(spark, s"$root/journal", sweep, id,
+        Takedown.takedownAll(spark, r("journal"), sweep, id,
           targets = Seq(
-            Takedown.Target("band index", ndIdx),
-            Takedown.Target("docs store", ndDocs),
+            Takedown.Target("band index", r("nd_idx")),
+            Takedown.Target("docs store", r("nd_docs")),
             Takedown.Target("bm25 postings",
               (s: SparkSession, ids: DataFrame, b: Long) =>
-                RetrievalStream.tombstoneFrom(s, bmRoot, ids, b)),
-            Takedown.Target("containment sets", ctRoot),
-            Takedown.Target("ivf assignments", ivfIdx)),
-          corpus = Some((corpusRoot, "doc_id")))
-        ()
+                RetrievalStream.tombstoneFrom(s, r("bm"), ids, b)),
+            Takedown.Target("containment sets", r("ct")),
+            Takedown.Target("ivf assignments", r("index"))),
+          corpus = Some((r("corpus"), "doc_id")))
       }
       // the four stores are independent (disjoint roots, one shared
       // batch input) — overlap their per-trigger bodies (guide §2.6)
       graft.core.Par.run(
-        () => { NearDupStream.filterBatch(spark, ndIdx, ndDocs, ndOut,
-          "doc_id", "text", threshold = 0.4)(b, id); () },
-        () => RetrievalStream.appendBatch(spark, bmRoot)(b, id),
-        () => { ContainmentStream.filterBatch(spark, ctRoot, ctOut,
+        () => { NearDupStream.filterBatch(spark, r("nd_idx"), r("nd_docs"),
+          r("nd_out"), "doc_id", "text", threshold = 0.4)(b, id); () },
+        () => RetrievalStream.appendBatch(spark, r("bm"))(b, id),
+        () => { ContainmentStream.filterBatch(spark, r("ct"), r("ct_out"),
           setsOf, threshold = 0.6)(b, id); () },
-        () => IvfStream.appendBatch(spark, bankRoot, ivfIdx, ivfOut,
-          "vec_id", "embedding")(
+        () => IvfStream.appendBatch(spark, r("bank"), r("index"),
+          r("ivf_out"), "vec_id", "embedding")(
           emb.join(broadcast(b.select(col("doc_id").as("vec_id"))),
             "vec_id"), id))
     }
-    val qTerms = docs.filter(col("doc_id") === 251)
-      .select(explode(TF.tokens(col("text"))).as("term"))
-      .distinct().orderBy("term").limit(4)
-      .collect().map(_.getString(0)).toSeq
+    val qTerms = corpusTerms(docs)
     val ivfQueries = emb.filter(col("vec_id") < 5)
       .select((col("vec_id") + 10000).as("vec_id"), col("embedding"))
-    val nd = spark.read.parquet(s"$ndOut/b*")
-      .select(lit("nd").as("store"), col("id_a").as("a"),
-        col("id_b").as("b"), col("batch"), col("jaccard").as("v"))
-    val ct = spark.read.parquet(s"$ctOut/b*")
-      .select(lit("ct").as("store"), col("id_a").as("a"),
-        col("id_b").as("b"), col("batch"), col("containment").as("v"))
-    val bm = RetrievalStream.bm25TopK(spark, bmRoot, qTerms, k = 40)
+    def part(store: String, out: String, v: String): DataFrame =
+      spark.read.parquet(r(s"$out/b*"))
+        .select(lit(store).as("store"), col("id_a").as("a"),
+          col("id_b").as("b"), col("batch"), col(v).as("v"))
+    val (nd, ct) = (part("nd", "nd_out", "jaccard"),
+      part("ct", "ct_out", "containment"))
+    val bm = RetrievalStream.bm25TopK(spark, r("bm"), qTerms, k = 40)
       .select(lit("bm").as("store"), col("doc_id").as("a"),
         lit(-1L).as("b"), lit(-1L).as("batch"), col("score").as("v"))
-    val ivf = IvfRelational.topKIndexed(ivfQueries,
-        IvfStream.readIndexFor(spark, ivfIdx, bankRoot),
-        spark.read.parquet(s"$bankRoot/v0"), k = 5, nProbe = 4)
+    val ivf = ivfProbe(spark, r, ivfQueries)
       .select(lit("ivf").as("store"), col("query_id").as("a"),
         col("neighbor_id").as("b"), lit(-1L).as("batch"), col("sim").as("v"))
     val corpus = spark.read
-      .parquet(CorpusMaintenance.latest(spark, corpusRoot).get)
+      .parquet(CorpusMaintenance.latest(spark, r("corpus")).get)
       .select(lit("corpus").as("store"), col("doc_id").as("a"),
         lit(-1L).as("b"), lit(-1L).as("batch"), lit(0.0).as("v"))
     nd.unionAll(ct).unionAll(bm).unionAll(ivf).unionAll(corpus)
@@ -8108,39 +7587,19 @@ object Pipeline {
   }
 
   val p139Sql: String = {
-    import OracleHash._
-    val (bankCtes, bank) = ivfBankCtes(nCells = 16, iters = 3, stride = 15)
-    def crossArm(b: Int): String =
-      sqlCrossArmCtes(b,
-        excludeOld =
-          if (b >= 1) Some("id IN (SELECT doc_id FROM del139)") else None)
+    def dead(c: String): String = s"($c IN (SELECT doc_id FROM del139))"
     s"""WITH tk139 AS (SELECT doc_id, $sqlToks AS toks FROM documents),
-       |t139s AS (SELECT doc_id, text, $sqlToks AS toks FROM documents
-       |  WHERE doc_id < 250),
-       |${sqlQualityCtes("139s", "t139s", "doc_id")},
-       |del139 AS (SELECT doc_id FROM q139s WHERE quality < 0.6
-       |           UNION SELECT unnest(range(10)) AS doc_id),
-       |ex AS (SELECT doc_id, $sqlToks AS toks FROM documents
-       |       WHERE doc_id < 250),
-       |inc AS (
-       |  SELECT doc_id, $sqlToks AS toks, doc_id % 2 AS b FROM documents
-       |  WHERE doc_id >= 250 AND doc_id < 2250
-       |  UNION ALL
-       |  SELECT doc_id + 10000000, $sqlToks, (doc_id + 10000000) % 2
-       |  FROM documents WHERE doc_id < 5
-       |  UNION ALL
-       |  SELECT doc_id + 20000000, toks[1:12], (doc_id + 20000000) % 2
-       |  FROM tk139 WHERE doc_id BETWEEN 1 AND 3),
-       |i0 AS (SELECT doc_id, toks FROM inc WHERE b = 0),
-       |i1 AS (SELECT doc_id, toks FROM inc WHERE b = 1),
+       |${sqlLowQualityCtes("139", "\n           UNION SELECT unnest(range(10)) AS doc_id")},
+       |${sqlTextStreamCtes("doc_id >= 250 AND doc_id < 2250", Seq(
+            sqlPlantArm(10000000, "doc_id < 5", k = 2),
+            sqlPlantArm(20000000, "doc_id BETWEEN 1 AND 3", k = 2,
+              toks = "toks[1:12]", from = "tk139")), k = 2)},
        |$sqlMinhashCoef,
        |${sqlMinhashChain("x", "ex")},
-       |${sqlMinhashChain("g0", "i0")},
-       |${sqlMinhashChain("g1", "i1")},
-       |${sqlMinhashPairCtes("g0")},
-       |${sqlMinhashPairCtes("g1")},
-       |${crossArm(0)},
-       |${crossArm(1)},
+       |${perBatch(2)(b => sqlMinhashChain(s"g$b", s"i$b"))},
+       |${perBatch(2)(b => sqlMinhashPairCtes(s"g$b"))},
+       |${perBatch(2)(b =>
+            sqlCrossArmCtes(b, excludeOld = Some(dead("id")).filter(_ => b >= 1)))},
        |ctall AS (SELECT doc_id AS id, text, 0 AS vnt FROM documents
        |    WHERE doc_id < 2250
        |  UNION ALL SELECT doc_id + 10000000, text, 1 FROM documents
@@ -8148,65 +7607,15 @@ object Pipeline {
        |  UNION ALL SELECT doc_id + 20000000,
        |    array_to_string(toks[1:12], ' '), 1
        |  FROM tk139 WHERE doc_id BETWEEN 1 AND 3),
-       |cttks AS (SELECT id, vnt, $sqlToks AS toks FROM ctall),
-       |ctshs AS (SELECT id, vnt, list_distinct(
-       |    CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-       |         ELSE list_transform(range(1, len(toks) - 1),
-       |           i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) END) AS s
-       |  FROM cttks),
-       |ctne AS (SELECT id, vnt, s FROM ctshs WHERE len(s) > 0),
-       |ctna AS (SELECT id, len(s) AS n FROM ctne),
-       |ctex AS (SELECT id, unnest(s) AS g FROM ctne),
-       |ctov AS (SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS i
-       |  FROM ctex a JOIN ctex b ON a.g = b.g AND a.id != b.id
-       |  GROUP BY a.id, b.id),
-       |ctbasg AS (SELECT id,
-       |    CASE WHEN vnt = 0 AND id < 250 THEN -1
-       |         ELSE CAST(id % 2 AS INT) END AS b,
-       |    CASE WHEN vnt = 0 AND id < 250
-       |           AND id IN (SELECT doc_id FROM del139)
-       |         THEN 1 ELSE 0 END AS del
-       |  FROM ctne),
-       |qt139 AS (SELECT term FROM (
-       |    SELECT DISTINCT unnest($sqlToks) AS term FROM documents
-       |    WHERE doc_id = 251)
-       |  ORDER BY term LIMIT 4),
-       |bmall AS (SELECT doc_id, text FROM documents WHERE doc_id < 2250
-       |  UNION ALL SELECT doc_id + 10000000, text FROM documents
-       |    WHERE doc_id < 5
-       |  UNION ALL SELECT doc_id + 20000000, array_to_string(toks[1:12], ' ')
-       |  FROM tk139 WHERE doc_id BETWEEN 1 AND 3),
-       |bmlive AS (SELECT doc_id, text FROM bmall
-       |  WHERE doc_id NOT IN (SELECT doc_id FROM del139)),
+       |${sqlTextContainmentCtes("ct", "ctall", 250, dead("id"))},
+       |${sqlCorpusTermsCte("139")},
+       |bmlive AS (SELECT id AS doc_id, text FROM ctall WHERE NOT ${dead("id")}),
        |${sqlBm25CtesWhere("139", "SELECT term FROM qt139", "bmlive")},
-       |emb AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
-       |  FROM embeddings WHERE vec_id < 250),
-       |$bankCtes,
-       |qs AS (SELECT vec_id + 10000 AS id, embedding::DOUBLE[] AS v
-       |  FROM embeddings WHERE vec_id < 5),
-       |ret AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
-       |  FROM embeddings WHERE vec_id < 2250
-       |    AND vec_id NOT IN (SELECT doc_id FROM del139)),
-       |${nearestCellCte("qa0", bank, keep = 4, source = "qs")},
-       |qa AS (SELECT id AS query_id, cell FROM qa0),
-       |${nearestCellCte("ca0", bank, keep = 1, source = "ret")},
-       |ca AS (SELECT id AS neighbor_id, v AS cv, cell FROM ca0),
-       |cand AS (
-       |  SELECT query_id, neighbor_id, cv
-       |  FROM qa JOIN ca USING (cell)
-       |  WHERE query_id != neighbor_id),
-       |qv AS (SELECT id AS query_id, v AS qv FROM qs),
-       |sx AS (SELECT query_id, neighbor_id,
-       |    ${seqDot("qv", "cv")} AS dt,
-       |    sqrt(${seqDot("qv", "qv")}) AS nq,
-       |    sqrt(${seqDot("cv", "cv")}) AS nc
-       |  FROM cand JOIN qv USING (query_id)),
-       |ivfr AS (SELECT query_id, neighbor_id,
-       |    ${sqlCosine("dt", "nq", "nc")} AS sim FROM sx),
-       |ivft AS (SELECT query_id, neighbor_id, sim,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |                       ORDER BY sim DESC, neighbor_id ASC) AS rk
-       |  FROM ivfr)
+       |${sqlIvfProbeCtes(
+            "SELECT vec_id + 10000 AS id, embedding::DOUBLE[] AS v " +
+              "FROM embeddings WHERE vec_id < 5",
+            "SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings " +
+              s"WHERE vec_id < 2250 AND NOT ${dead("vec_id")}")}
        |SELECT store, a, b, batch, v FROM (
        |  SELECT 'nd' AS store, id_a AS a, id_b AS b,
        |    CAST(0 AS BIGINT) AS batch, jaccard AS v
@@ -8215,12 +7624,8 @@ object Pipeline {
        |  SELECT 'nd', id_a, id_b, CAST(1 AS BIGINT), jaccard
        |  FROM (SELECT * FROM mhg1 UNION ALL SELECT * FROM mx1)
        |  UNION ALL
-       |  SELECT 'ct', id_a, id_b, CAST(aa.b AS BIGINT), i / ctna.n
-       |  FROM ctov JOIN ctna ON ctov.id_a = ctna.id
-       |  JOIN ctbasg aa ON ctov.id_a = aa.id
-       |  JOIN ctbasg bb ON ctov.id_b = bb.id
-       |  WHERE i / ctna.n >= 0.6 AND aa.b >= 0 AND bb.b <= aa.b
-       |    AND NOT (aa.b >= 1 AND bb.del = 1)
+       |  SELECT 'ct', id_a, id_b, batch, containment
+       |  FROM (${sqlContainmentEmit("ct", "ctasg", "0.6", Some(1))})
        |  UNION ALL
        |  SELECT 'bm', doc_id, CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), s
        |  FROM (SELECT doc_id, CAST(ROUND(SUM(sct), 6) AS DOUBLE) AS s
@@ -8231,8 +7636,7 @@ object Pipeline {
        |  FROM ivft WHERE rk <= 5
        |  UNION ALL
        |  SELECT 'corpus', doc_id, CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), 0.0
-       |  FROM documents WHERE doc_id < 250
-       |    AND doc_id NOT IN (SELECT doc_id FROM del139))
+       |  FROM documents WHERE doc_id < 250 AND NOT ${dead("doc_id")})
        |ORDER BY store, a, b""".stripMargin
   }
 
@@ -8261,15 +7665,11 @@ object Pipeline {
   // the deleted set never arrive (the production mask's position).
   // =========================================================================
   def p140StreamClusters(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import graft.streaming.ClusterStream
     import spark.implicits._
     val del = Seq(99L, 100L, 102L, 40000000L, 40000003L)
-    val plant = spark.range(10)
-      .select((col("id") + 40000000L).as("doc_id"),
-        lit("pl run pl run pl").as("text"))
     val allDocs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text")).unionAll(plant)
+      .select(col("doc_id"), col("text")).unionAll(plantedRun(spark))
       .withColumn("b0", pmod(col("doc_id"), lit(3)))
       .withColumn("arr", when(col("doc_id") < 250, lit(-1))
         .otherwise(when(col("b0") === 2, lit(3)).otherwise(col("b0"))))
@@ -8293,45 +7693,54 @@ object Pipeline {
       .filter(!(col("pb") === 3 &&
         (col("id_a").isin(del: _*) || col("id_b").isin(del: _*))))
       .localCheckpoint(true)
-    def scored(df: DataFrame): DataFrame = df
-      .select(col("doc_id").as("id"),
-        TF.qualityScoreFromTokens(col("text"),
-          TF.tokens(col("text"))).as("score"))
     val incoming = allDocs.filter(col("arr") >= 0)
       .select(col("doc_id"), col("text"), col("arr").as("batch"))
-    val root = Files.createTempDirectory("p140_").toString
-    // independent setup chains over the checkpointed fixture — overlap
-    // them (guide §2.6)
-    graft.core.Par.run(
-      () => ClusterStream.writeStanding(spark, s"$root/cs",
+    val r = new StreamRun(spark)
+    r.run(incoming, col("batch"), 0 until 4)(
+      () => ClusterStream.writeStanding(spark, r("cs"),
         scored(allDocs.filter(col("arr") === -1)),
-        pairsAll.filter(col("pb") === -1)),
-      () => stage(incoming, col("batch"), root, 0 until 4))
-    replay(spark, root, incoming.drop("batch").schema) { (b, id) =>
+        pairsAll.filter(col("pb") === -1))) { (b, id) =>
       if (id == 2L)
         // the takedown's own maintenance trigger (batch 2 stages an
         // empty file): markers + component-local split/re-election
         // repair occupy the v3 slot alone
-        ClusterStream.retract(spark, s"$root/cs", del.toDF("id"), id)
+        ClusterStream.retract(spark, r("cs"), del.toDF("id"), id)
       else
-        ClusterStream.foldBatch(spark, s"$root/cs")(scored(b),
+        ClusterStream.foldBatch(spark, r("cs"))(scored(b),
           pairsAll.filter(col("pb") === id)
             .select(col("id_a"), col("id_b")), id)
     }
-    ClusterStream.readAssignments(spark, s"$root/cs")
+    clusterState(spark, r("cs")).orderBy("part", "a", "b")
+  }
+
+  /** Ten identical docs 40000000-40000009: a planted run that clusters at
+    * every corpus scale (p140, p145, p147). */
+  private def plantedRun(spark: SparkSession): DataFrame = spark.range(10)
+    .select((col("id") + 40000000L).as("doc_id"),
+      lit("pl run pl run pl").as("text"))
+
+  /** [[plantedRun]] appended to `documents`, oracle side, as CTE `pr`. */
+  private val sqlPlantedRunDocs =
+    """pr AS (SELECT doc_id, text FROM documents
+      |  UNION ALL SELECT CAST(40000000 + i.x AS BIGINT),
+      |    'pl run pl run pl' FROM (SELECT unnest(range(10)) AS x) i)"""
+      .stripMargin
+
+  /** A cluster store's state as (part, a, b, n, v) rows: `assign` (id,
+    * cid) and `canon` (cid, keep_id, n_members, score). */
+  private def clusterState(spark: SparkSession, cs: String): DataFrame = {
+    import graft.streaming.ClusterStream
+    ClusterStream.readAssignments(spark, cs)
       .select(lit("assign").as("part"), col("id").as("a"),
         col("cid").as("b"), lit(-1L).as("n"), lit(0.0).as("v"))
-      .unionAll(ClusterStream.readCanonicals(spark, s"$root/cs")
+      .unionAll(ClusterStream.readCanonicals(spark, cs)
         .select(lit("canon").as("part"), col("cid").as("a"),
           col("keep_id").as("b"), col("n_members").cast("long").as("n"),
           col("score").as("v")))
-      .orderBy("part", "a", "b")
   }
 
   val p140Sql: String =
-    s"""WITH pr AS (SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT CAST(40000000 + i.x AS BIGINT),
-       |    'pl run pl run pl' FROM (SELECT unnest(range(10)) AS x) i),
+    s"""WITH $sqlPlantedRunDocs,
        |del140 AS (SELECT CAST(x AS BIGINT) AS doc_id FROM (VALUES
        |  (99),(100),(102),(40000000),(40000003)) t(x)),
        |ret140 AS (SELECT doc_id, text FROM pr
@@ -8721,61 +8130,29 @@ object Pipeline {
   // discriminated by their kind-stripe residue (id % 3 = 1), never by
   // magnitude (the zipf1 id-collision lesson).
   // =========================================================================
-  def p144ReviveAHash(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.multimodal.Multimodal
-    import graft.streaming.AHashStream
-    val images = Multimodal.fromDocuments(spark, Tables.documents(spark, dir),
-      onlyKind = Some("image"))
-    val standing = images.filter(_.media_id < 250).toDF()
-      .select(col("media_id"), col("payload"))
-    val plants = Multimodal.plantImageVariants(images.filter(_.media_id < 30))
-    val incoming = images.filter(_.media_id >= 250).toDF()
-      .select(col("media_id"), col("payload"))
-      .withColumn("batch", pmod(expr("media_id div 3"), lit(3)))
-      .unionAll(plants.toDF().select(col("media_id"), col("payload"))
-        .withColumn("batch", pmod(col("media_id"), lit(2)) * 2))
-    val root = Files.createTempDirectory("p144_").toString
-    val idxRoot = s"$root/idx"; val outRoot = s"$root/out"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => AHashStream.writeStanding(spark, idxRoot, standing),
-      () => stage(incoming, col("batch"), root, 0 until 3))
-    replay(spark, root, incoming.drop("batch").schema) { (b, id) =>
-      if (id == 1L)
-        graft.streaming.Versions.tombstoneFrom(spark, idxRoot,
-          standing.filter(col("media_id") < 30).select("media_id"), id)
-      if (id == 2L)
-        graft.streaming.Versions.revive(spark, idxRoot,
-          standing.filter(col("media_id") < 15).select("media_id"), id)
-      AHashStream.appendBatch(spark, idxRoot, outRoot,
-        "media_id", "payload")(b, id)
+  def p144ReviveAHash(spark: SparkSession, dir: String): DataFrame =
+    // originals arrive in batch (id div 3) mod 3; the variants (the only
+    // ids ≡ 1 mod 3: images are ≡ 0, +10000 adds 1) in batch 0 or 2
+    imageStream(spark, dir, 3,
+      when(pmod(col("media_id"), lit(3)) === 1, pmod(col("media_id"), lit(2)) * 2)
+        .otherwise(pmod(expr("media_id div 3"), lit(3)))) {
+      (r, standing, id) =>
+        takedownPlantOriginals(spark)(r, standing, id)
+        if (id == 2L)
+          graft.streaming.Versions.revive(spark, r("idx"),
+            standing.filter(col("media_id") < 15).select("media_id"), id)
     }
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("id_a"), col("id_b"), col("hamming"), col("batch"))
-      .orderBy("id_a", "id_b")
-  }
 
   val p144Sql: String =
-    s"""WITH $sqlImageVariantsCte,
-       |$sqlAHashCtes,
-       |asg AS (SELECT id, ahash,
-       |    CASE WHEN id % 3 = 1 THEN CAST((id % 2) * 2 AS INT)
-       |         WHEN id < 250 THEN -1
-       |         ELSE CAST((id // 3) % 3 AS INT) END AS b
-       |  FROM ah)
-       |SELECT a.id AS id_a, b2.id AS id_b,
-       |  CAST(bit_count(xor(a.ahash, b2.ahash)) AS INT) AS hamming,
-       |  CAST(greatest(a.b, b2.b) AS BIGINT) AS batch
-       |FROM asg a JOIN asg b2 ON a.id < b2.id
-       |WHERE bit_count(xor(a.ahash, b2.ahash)) <= 6
-       |  AND greatest(a.b, b2.b) >= 0
-       |  AND NOT (greatest(a.b, b2.b) = 1 AND
-       |    ((a.b = -1 AND a.id < 30) OR (b2.b = -1 AND b2.id < 30)))
-       |  AND NOT (greatest(a.b, b2.b) = 2 AND
-       |    ((a.b = -1 AND a.id >= 15 AND a.id < 30) OR
-       |     (b2.b = -1 AND b2.id >= 15 AND b2.id < 30)))
-       |ORDER BY id_a, id_b""".stripMargin
+    sqlHammingStream(s"$sqlImageVariantsCte,\n$sqlAHashCtes", "ah",
+      batchOf = """CASE WHEN id % 3 = 1 THEN CAST((id % 2) * 2 AS INT)
+                  |         WHEN id < 250 THEN -1
+                  |         ELSE CAST((id // 3) % 3 AS INT) END""".stripMargin,
+      cut = """AND NOT (greatest(a.b, b2.b) = 1 AND
+              |    ((a.b = -1 AND a.id < 30) OR (b2.b = -1 AND b2.id < 30)))
+              |  AND NOT (greatest(a.b, b2.b) = 2 AND
+              |    ((a.b = -1 AND a.id >= 15 AND a.id < 30) OR
+              |     (b2.b = -1 AND b2.id >= 15 AND b2.id < 30)))""".stripMargin)
 
   // =========================================================================
   // p145 — THE PRODUCTION DEDUP LOOP IN ONE STREAM (VERDICT r15 next #5):
@@ -8798,16 +8175,19 @@ object Pipeline {
   // pair graph is arbitrary here — no gaps-and-islands shortcut), the
   // shared quality election, and the final retained-state snapshot.
   // =========================================================================
-  def p145ProductionLoop(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
+  def p145ProductionLoop(spark: SparkSession, dir: String): DataFrame =
+    productionLoop(spark, dir, revive = false)
+
+  /** p145's loop; with `revive` (p147) the stream runs one more
+    * maintenance trigger, 4, that revives 40000000 in every store the
+    * takedown hit. */
+  private def productionLoop(spark: SparkSession, dir: String,
+      revive: Boolean): DataFrame = {
     import graft.streaming.{ClusterStream, NearDupStream, Takedown}
     import graft.streaming.Takedown.Target
     import spark.implicits._
-    val del = Seq(99L, 100L, 40000000L, 40000003L)
-    val plant = spark.range(10)
-      .select((col("id") + 40000000L).as("doc_id"),
-        lit("pl run pl run pl").as("text"),
-        pmod(col("id"), lit(3)).as("b0"))
+    val plant = plantedRun(spark)
+      .withColumn("b0", pmod(col("doc_id") - 40000000L, lit(3)))
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val standing = docs.filter(col("doc_id") < 250).localCheckpoint(true)
     val incoming = docs.filter(col("doc_id") >= 250)
@@ -8815,92 +8195,99 @@ object Pipeline {
       .unionAll(plant)
       .withColumn("batch", when(col("b0") === 2, lit(3)).otherwise(col("b0")))
       .select(col("doc_id"), col("text"), col("batch"))
-    def scored(df: DataFrame): DataFrame = df
-      .select(col("doc_id").as("id"),
-        TF.qualityScoreFromTokens(col("text"),
-          TF.tokens(col("text"))).as("score"))
-    val root = Files.createTempDirectory("p145_").toString
-    val ndIdx = s"$root/ndidx"
-    val ndDocs = s"$root/nddocs"; val ndOut = s"$root/ndout"
-    val csRoot = s"$root/cs"; val outRoot = s"$root/out"
-    // independent setup writes over the checkpointed standing corpus —
-    // overlap them (guide §2.6); the cluster bootstrap's star
-    // contraction is the slowest chain and hides the rest
-    graft.core.Par.run(
+    val r = new StreamRun(spark)
+    val (ndIdx, ndDocs, cs) = (r("ndidx"), r("nddocs"), r("cs"))
+    // independent setup writes over the checkpointed standing corpus; the
+    // cluster bootstrap's star contraction is the slowest chain and hides
+    // the rest
+    r.run(incoming, col("batch"), 0 until (if (revive) 5 else 4))(
       () => Dedup.minhashBandIndex(standing, "doc_id", "text")
         .write.parquet(s"$ndIdx/v0"),
       () => standing.write.parquet(s"$ndDocs/v0"),
-      () => ClusterStream.writeStanding(spark, csRoot, scored(standing),
-        Dedup.minhashPairs(standing, "doc_id", "text", threshold = 0.4)),
-      () => stage(incoming, col("batch"), root, 0 until 4))
-    replay(spark, root, incoming.drop("batch").schema) { (b, id) =>
-      if (id == 2L) {
-        // the takedown's own maintenance trigger: ONE journaled sweep
-        // fans to both near-dup stores AND the cluster store's
-        // component-local repair verb, all under batch id 2
-        Takedown.takedownAll(spark, s"$root/journal", del.toDF("id"), id,
-          targets = Seq(
-            Target("band index", ndIdx),
-            Target("docs store", ndDocs),
-            Target("cluster store",
-              (s: SparkSession, ids: DataFrame, bi: Long) =>
-                ClusterStream.retract(s, csRoot, ids, bi))))
-        ()
-      } else {
-        // the re-ingest guard at the loop's front door (VERDICT r16
-        // next #4): a post-takedown batch carrying a dead id refuses
-        // loud — revive or a fresh ingest id, never a silent re-ingest
-        Takedown.guardReingest(spark,
-          Seq(ndIdx, ndDocs, s"$csRoot/assign"), b.select(col("doc_id")))
-        val pairs = NearDupStream.filterBatch(spark, ndIdx, ndDocs,
-          ndOut, "doc_id", "text", threshold = 0.4,
-          materializePairs = true)(
-          b.select(col("doc_id"), col("text")), id)
-        ClusterStream.foldBatch(spark, csRoot)(scored(b),
-          pairs.select(col("id_a"), col("id_b")), id)
-        // the verdict: keep iff the doc IS its cluster's canonical at
-        // fold time.
-        // r18: the verdict resolves from the fold's JUST-WRITTEN deltas
-        // instead of the full-store reads (each a window fold + eager
-        // checkpoint per trigger) — result-identical because the fold
-        // guarantees every batch doc an assign row in v{id+1}
-        // (newInPairs ∪ newSingles = the whole batch; the empty-pairs
-        // path writes all of it too) and every such doc's cid a live
-        // election row there (electCanon runs over ALL touched labels'
-        // full membership, new singletons included), and v{id+1} is by
-        // construction the newest version for exactly those ids/cids.
-        graft.streaming.Versions.read(spark, s"$csRoot/assign",
-            Seq(s"$csRoot/assign/v${id + 1}"))
-          .join(broadcast(b.select(col("doc_id").as("id"))), Seq("id"),
-            "left_semi")
-          .join(graft.streaming.Versions.read(spark, s"$csRoot/canon",
-              Seq(s"$csRoot/canon/v${id + 1}"))
-            .filter(col("n_members") > 0)
-            .select(col("cid"), col("keep_id")),
-            Seq("cid"))
-          .select(col("id").as("doc_id"), col("keep_id"),
-            graft.functions.SteadyLit.steadyLong(id).as("batch"),
-            when(col("keep_id") === col("id"), 1.0).otherwise(0.0)
-              .as("keep"))
-          .write.mode("overwrite").parquet(s"$outRoot/b$id")
-      }
+      () => ClusterStream.writeStanding(spark, cs, scored(standing),
+        Dedup.minhashPairs(standing, "doc_id", "text", threshold = 0.4))) {
+      (b, id) =>
+        if (id == 2L)
+          // the takedown's own maintenance trigger: ONE journaled sweep
+          // fans to both near-dup stores AND the cluster store's
+          // component-local repair verb, all under batch id 2
+          Takedown.takedownAll(spark, r("journal"),
+            Seq(99L, 100L, 40000000L, 40000003L).toDF("id"), id,
+            targets = Seq(Target("band index", ndIdx),
+              Target("docs store", ndDocs),
+              Target("cluster store",
+                (s: SparkSession, ids: DataFrame, bi: Long) =>
+                  ClusterStream.retract(s, cs, ids, bi))))
+        else if (id == 4L)
+          // re-license: ONE journaled revive fanned to every store the
+          // takedown hit (Takedown.reviveAll — the same write-ahead
+          // intent-log protocol as the takedown direction): generic
+          // markers on the mask-only roots, the paired merge-repair
+          // verb on the cluster store. Sharing the journal root also
+          // exercises the vacuum cadence — the committed t2 journal is
+          // dropped on the way in.
+          Takedown.reviveAll(spark, r("journal"), Seq(40000000L).toDF("id"),
+            id, targets = Seq(Target.revive("band index", ndIdx),
+              Target.revive("docs store", ndDocs),
+              Target("cluster store",
+                (s: SparkSession, ids: DataFrame, bi: Long) =>
+                  ClusterStream.revive(s, cs, ids, bi))))
+        else {
+          // the re-ingest guard at the loop's front door (VERDICT r16
+          // next #4): a post-takedown batch carrying a dead id refuses
+          // loud — revive or a fresh ingest id, never a silent re-ingest
+          Takedown.guardReingest(spark, Seq(ndIdx, ndDocs, s"$cs/assign"),
+            b.select(col("doc_id")))
+          val pairs = NearDupStream.filterBatch(spark, ndIdx, ndDocs,
+            r("ndout"), "doc_id", "text", threshold = 0.4,
+            materializePairs = true)(b.select(col("doc_id"), col("text")), id)
+          ClusterStream.foldBatch(spark, cs)(scored(b),
+            pairs.select(col("id_a"), col("id_b")), id)
+          // the verdict: keep iff the doc IS its cluster's canonical at
+          // fold time.
+          // r18: the verdict resolves from the fold's JUST-WRITTEN deltas
+          // instead of the full-store reads (each a window fold + eager
+          // checkpoint per trigger) — result-identical because the fold
+          // guarantees every batch doc an assign row in v{id+1}
+          // (newInPairs ∪ newSingles = the whole batch; the empty-pairs
+          // path writes all of it too) and every such doc's cid a live
+          // election row there (electCanon runs over ALL touched labels'
+          // full membership, new singletons included), and v{id+1} is by
+          // construction the newest version for exactly those ids/cids.
+          graft.streaming.Versions.read(spark, s"$cs/assign",
+              Seq(s"$cs/assign/v${id + 1}"))
+            .join(broadcast(b.select(col("doc_id").as("id"))), Seq("id"),
+              "left_semi")
+            .join(graft.streaming.Versions.read(spark, s"$cs/canon",
+                Seq(s"$cs/canon/v${id + 1}"))
+              .filter(col("n_members") > 0)
+              .select(col("cid"), col("keep_id")),
+              Seq("cid"))
+            .select(col("id").as("doc_id"), col("keep_id"),
+              graft.functions.SteadyLit.steadyLong(id).as("batch"),
+              when(col("keep_id") === col("id"), 1.0).otherwise(0.0)
+                .as("keep"))
+            .write.mode("overwrite").parquet(r(s"out/b$id"))
+        }
     }
-    spark.read.parquet(s"$outRoot/b*")
-      .select(lit("v").as("part"), col("doc_id").as("a"),
+    r.out.select(lit("v").as("part"), col("doc_id").as("a"),
         col("keep_id").as("b"), col("batch").cast("long").as("n"),
         col("keep").as("v"))
-      .unionAll(ClusterStream.readAssignments(spark, csRoot)
-        .select(lit("assign").as("part"), col("id").as("a"),
-          col("cid").as("b"), lit(-1L).as("n"), lit(0.0).as("v")))
-      .unionAll(ClusterStream.readCanonicals(spark, csRoot)
-        .select(lit("canon").as("part"), col("cid").as("a"),
-          col("keep_id").as("b"), col("n_members").cast("long").as("n"),
-          col("score").as("v")))
+      .unionAll(clusterState(spark, cs))
       .orderBy("part", "a", "b")
   }
 
-  val p145Sql: String = {
+  val p145Sql: String = sqlProductionLoop(revive = false)
+
+  /** p145's oracle; with `revive` (p147) the final state is a fourth
+    * closure view over retained ∪ revived: pv3 = every pair ever written
+    * (pv1 ∪ arm-2 pairs) with only the still-dead cut, dv3 = every doc
+    * not still dead — the masked read's newest-verb-wins resolution of
+    * the d2/r4 marker pair. */
+  private def sqlProductionLoop(revive: Boolean): String = {
     val delList = "99, 100, 40000000, 40000003"
+    val stillDead = "99, 100, 40000003"
+    val last = if (revive) 3 else 2
     // per-view pieces: pv{k} pair sets, dv{k} doc sets, rc{k} recursive
     // min-label closures, m{k} memberships, cn{k} elections. EVERYTHING
     // feeding or consumed by a recursive term is AS MATERIALIZED — the
@@ -8914,11 +8301,11 @@ object Pipeline {
          |m$k AS MATERIALIZED (
          |  SELECT r.id, MIN(r.l) AS cid FROM rc$k r GROUP BY r.id),
          |cn$k AS MATERIALIZED (
-         |  SELECT m$k.cid, m$k.id AS keep_id, q145m.quality,
+         |  SELECT m$k.cid, m$k.id AS keep_id, qm.quality,
          |    COUNT(*) OVER (PARTITION BY m$k.cid) AS nm,
          |    ROW_NUMBER() OVER (PARTITION BY m$k.cid
-         |      ORDER BY q145m.quality DESC, m$k.id ASC) AS rn
-         |  FROM m$k JOIN q145m ON q145m.doc_id = m$k.id)""".stripMargin
+         |      ORDER BY qm.quality DESC, m$k.id ASC) AS rn
+         |  FROM m$k JOIN qm ON qm.doc_id = m$k.id)""".stripMargin
     def verdictArm(k: Int, batch: Int): String =
       s"""SELECT 'v' AS part, a.doc_id AS a, c.keep_id AS b,
          |    CAST($batch AS BIGINT) AS n,
@@ -8926,12 +8313,19 @@ object Pipeline {
          |  FROM armm a JOIN m$k ON m$k.id = a.doc_id
          |  JOIN cn$k c ON c.cid = m$k.cid AND c.rn = 1
          |  WHERE a.k = $k""".stripMargin
+    // the view after the revive: pairs and docs minus the still-dead
+    val revived = if (!revive) "" else
+      s""",
+         |pv3 AS MATERIALIZED (SELECT id_a, id_b FROM pv1
+         |    WHERE id_a NOT IN ($stillDead) AND id_b NOT IN ($stillDead)
+         |  UNION SELECT id_a, id_b FROM mhg2
+         |  UNION SELECT id_a, id_b FROM mx2),
+         |dv3 AS MATERIALIZED (
+         |  SELECT doc_id FROM armm WHERE doc_id NOT IN ($stillDead))""".stripMargin
     s"""WITH RECURSIVE
-       |pr AS (SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT CAST(40000000 + i.x AS BIGINT),
-       |    'pl run pl run pl' FROM (SELECT unnest(range(10)) AS x) i),
-       |t145 AS (SELECT doc_id, text, $sqlToks AS toks FROM pr),
-       |${sqlQualityCtes("145", "t145", "doc_id")},
+       |$sqlPlantedRunDocs,
+       |tpl AS (SELECT doc_id, text, $sqlToks AS toks FROM pr),
+       |${sqlQualityCtes("pl", "tpl", "doc_id")},
        |arm AS (SELECT doc_id, toks,
        |    CASE WHEN doc_id >= 40000000 THEN
        |      (CASE WHEN (doc_id - 40000000) % 3 = 2 THEN 2
@@ -8939,24 +8333,18 @@ object Pipeline {
        |      WHEN doc_id < 250 THEN -1
        |      WHEN doc_id % 3 = 2 THEN 2
        |      ELSE CAST(doc_id % 3 AS INT) END AS k
-       |  FROM t145),
+       |  FROM tpl),
        |ex AS (SELECT doc_id, toks FROM arm WHERE k = -1),
-       |i0 AS (SELECT doc_id, toks FROM arm WHERE k = 0),
-       |i1 AS (SELECT doc_id, toks FROM arm WHERE k = 1),
-       |i2 AS (SELECT doc_id, toks FROM arm WHERE k = 2),
+       |${perBatch(3)(b => s"i$b AS (SELECT doc_id, toks FROM arm WHERE k = $b)")},
        |$sqlMinhashCoef,
        |${sqlMinhashChain("x", "ex")},
        |${sqlMinhashPairCtes("x")},
-       |${sqlMinhashChain("g0", "i0")},
-       |${sqlMinhashPairCtes("g0")},
-       |${sqlMinhashChain("g1", "i1")},
-       |${sqlMinhashPairCtes("g1")},
-       |${sqlMinhashChain("g2", "i2")},
-       |${sqlMinhashPairCtes("g2")},
+       |${perBatch(3)(b => sqlMinhashChain(s"g$b", s"i$b") + ",\n" +
+            sqlMinhashPairCtes(s"g$b"))},
        |${sqlCrossArmCtes(0)},
        |${sqlCrossArmCtes(1)},
        |${sqlCrossArmCtes(2, excludeOld = Some(s"id IN ($delList)"))},
-       |q145m AS MATERIALIZED (SELECT doc_id, quality FROM q145),
+       |qm AS MATERIALIZED (SELECT doc_id, quality FROM qpl),
        |armm AS MATERIALIZED (SELECT doc_id, k FROM arm),
        |pv0 AS MATERIALIZED (SELECT id_a, id_b FROM mhx
        |  UNION SELECT id_a, id_b FROM mhg0
@@ -8971,10 +8359,8 @@ object Pipeline {
        |dv0 AS MATERIALIZED (SELECT doc_id FROM armm WHERE k <= 0),
        |dv1 AS MATERIALIZED (SELECT doc_id FROM armm WHERE k <= 1),
        |dv2 AS MATERIALIZED (
-       |  SELECT doc_id FROM armm WHERE doc_id NOT IN ($delList)),
-       |${closure(0)},
-       |${closure(1)},
-       |${closure(2)}
+       |  SELECT doc_id FROM armm WHERE doc_id NOT IN ($delList))$revived,
+       |${(0 to last).map(closure).mkString(",\n")}
        |SELECT part, a, b, n, v FROM (
        |  ${verdictArm(0, 0)}
        |  UNION ALL
@@ -8982,10 +8368,10 @@ object Pipeline {
        |  UNION ALL
        |  ${verdictArm(2, 3)}
        |  UNION ALL
-       |  SELECT 'assign', id, cid, CAST(-1 AS BIGINT), 0.0 FROM m2
+       |  SELECT 'assign', id, cid, CAST(-1 AS BIGINT), 0.0 FROM m$last
        |  UNION ALL
        |  SELECT 'canon', cid, keep_id, CAST(nm AS BIGINT), quality
-       |  FROM cn2 WHERE rn = 1)
+       |  FROM cn$last WHERE rn = 1)
        |ORDER BY part, a, b""".stripMargin
   }
 
@@ -9010,9 +8396,7 @@ object Pipeline {
   // feasibility, the p132 bound.
   // =========================================================================
   def p146ReviveNearDup(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val existing = docs.filter(col("doc_id") < 250)
     val incoming = docs
       .filter(col("doc_id") >= 250 && col("doc_id") < 2250)
       .select(col("doc_id"), col("text"),
@@ -9020,84 +8404,38 @@ object Pipeline {
       .unionAll(docs.filter(col("doc_id") < 10)
         .select((col("doc_id") + 10000000L).as("doc_id"), col("text"),
           pmod(col("doc_id"), lit(3)).as("batch")))
-    val root = Files.createTempDirectory("p146_").toString
-    val idxRoot = s"$root/idx"
-    val docsRoot = s"$root/docs"; val outRoot = s"$root/out"
-    // independent setup chains — overlap them (guide §2.6)
-    graft.core.Par.run(
-      () => Dedup.minhashBandIndex(existing, "doc_id", "text",
-          numHashes = 64, bands = 16, shingleSize = 3, seed = 42L)
-        .write.parquet(s"$idxRoot/v0"),
-      () => existing.write.parquet(s"$docsRoot/v0"),
-      () => stage(incoming, col("batch"), root, 0 until 3))
-    replay(spark, root, incoming.drop("batch").schema) { (b, id) =>
-      if (id == 1L)
-        graft.streaming.NearDupStream.tombstone(spark, idxRoot, docsRoot,
-          0L until 10L, id)
-      if (id == 2L) {
-        // the claim is withdrawn for 0-4: the generic verb suffices on
-        // mask-only stores — the retained rows come back into every
-        // read, no repair needed (the p144 aHash precedent, on text)
-        val rv = spark.range(5).select(col("id"))
-        // independent marker roots — overlap the two revives (§2.6)
-        graft.core.Par.run(
-          () => graft.streaming.Versions.revive(spark, idxRoot, rv, id),
-          () => graft.streaming.Versions.revive(spark, docsRoot, rv, id))
-      }
-      graft.streaming.NearDupStream
-        .filterBatch(spark, idxRoot, docsRoot, outRoot, "doc_id", "text",
-          threshold = 0.4)(b, id)
+    nearDupStream(spark, docs.filter(col("doc_id") < 250), incoming,
+      col("batch")) {
+      (r, id) =>
+        if (id == 1L)
+          graft.streaming.NearDupStream.tombstone(spark, r("idx"), r("docs"),
+            0L until 10L, id)
+        if (id == 2L) {
+          // the claim is withdrawn for 0-4: the generic verb suffices on
+          // mask-only stores — the retained rows come back into every
+          // read, no repair needed (the p144 aHash precedent, on text)
+          val rv = spark.range(5).select(col("id"))
+          // independent marker roots — overlap the two revives (§2.6)
+          graft.core.Par.run(
+            () => graft.streaming.Versions.revive(spark, r("idx"), rv, id),
+            () => graft.streaming.Versions.revive(spark, r("docs"), rv, id))
+        }
     }
-    spark.read.parquet(s"$outRoot/b*")
-      .select(col("id_a"), col("id_b"), col("jaccard"), col("batch"))
-      .orderBy("id_a", "id_b")
   }
 
-  val p146Sql: String = {
-    // arm 1 sees the full takedown; arm 2 sees it minus the revived 0-4
-    // (newest verb wins). Plant ids are +10000000 and originals in the
-    // incoming stream are >= 250, so the predicates name exactly the
-    // marker ids at any corpus scale.
-    def crossArm(b: Int): String =
-      sqlCrossArmCtes(b,
-        excludeOld = b match {
-          case 1 => Some("id < 10")
-          case 2 => Some("id >= 5 AND id < 10")
-          case _ => None
-        })
-    s"""WITH ex AS (SELECT doc_id, $sqlToks AS toks FROM documents
-       |           WHERE doc_id < 250),
-       |inc AS (
-       |  SELECT doc_id, $sqlToks AS toks, doc_id % 3 AS b FROM documents
-       |  WHERE doc_id >= 250 AND doc_id < 2250
-       |  UNION ALL
-       |  SELECT doc_id + 10000000, $sqlToks, doc_id % 3
-       |  FROM documents WHERE doc_id < 10),
-       |i0 AS (SELECT doc_id, toks FROM inc WHERE b = 0),
-       |i1 AS (SELECT doc_id, toks FROM inc WHERE b = 1),
-       |i2 AS (SELECT doc_id, toks FROM inc WHERE b = 2),
-       |$sqlMinhashCoef,
-       |${sqlMinhashChain("x", "ex")},
-       |${sqlMinhashChain("g0", "i0")},
-       |${sqlMinhashChain("g1", "i1")},
-       |${sqlMinhashChain("g2", "i2")},
-       |${sqlMinhashPairCtes("g0")},
-       |${sqlMinhashPairCtes("g1")},
-       |${sqlMinhashPairCtes("g2")},
-       |${crossArm(0)},
-       |${crossArm(1)},
-       |${crossArm(2)}
-       |SELECT id_a, id_b, jaccard, batch FROM (
-       |  SELECT id_a, id_b, jaccard, CAST(0 AS BIGINT) AS batch FROM
-       |    (SELECT * FROM mhg0 UNION ALL SELECT * FROM mx0)
-       |  UNION ALL
-       |  SELECT id_a, id_b, jaccard, CAST(1 AS BIGINT) FROM
-       |    (SELECT * FROM mhg1 UNION ALL SELECT * FROM mx1)
-       |  UNION ALL
-       |  SELECT id_a, id_b, jaccard, CAST(2 AS BIGINT) FROM
-       |    (SELECT * FROM mhg2 UNION ALL SELECT * FROM mx2))
-       |ORDER BY id_a, id_b""".stripMargin
-  }
+  // arm 1 sees the full takedown; arm 2 sees it minus the revived 0-4
+  // (newest verb wins). Plant ids are +10000000 and originals in the
+  // incoming stream are >= 250, so the predicates name exactly the
+  // marker ids at any corpus scale.
+  val p146Sql: String = sqlNearDupStream(
+    sqlTextStreamCtes("doc_id >= 250 AND doc_id < 2250",
+      Seq(s"SELECT doc_id + 10000000, $sqlToks, doc_id % 3 FROM documents " +
+        "WHERE doc_id < 10")),
+    {
+      case 1 => Some("id < 10")
+      case 2 => Some("id >= 5 AND id < 10")
+      case _ => None
+    })
 
   // =========================================================================
   // p147 — THE FULL LICENSING LIFECYCLE IN THE PRODUCTION LOOP (VERDICT
@@ -9126,210 +8464,10 @@ object Pipeline {
   // the d2/r4 marker pair — replaying assign/canon from scratch; the
   // verdict arms replay the fold-time views 0/1/2 unchanged.
   // =========================================================================
-  def p147ReviveLoop(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.streaming.{ClusterStream, NearDupStream, Takedown}
-    import graft.streaming.Takedown.Target
-    import spark.implicits._
-    val del = Seq(99L, 100L, 40000000L, 40000003L)
-    val rv = Seq(40000000L)
-    val plant = spark.range(10)
-      .select((col("id") + 40000000L).as("doc_id"),
-        lit("pl run pl run pl").as("text"),
-        pmod(col("id"), lit(3)).as("b0"))
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val standing = docs.filter(col("doc_id") < 250).localCheckpoint(true)
-    val incoming = docs.filter(col("doc_id") >= 250)
-      .withColumn("b0", pmod(col("doc_id"), lit(3)))
-      .unionAll(plant)
-      .withColumn("batch", when(col("b0") === 2, lit(3)).otherwise(col("b0")))
-      .select(col("doc_id"), col("text"), col("batch"))
-    def scored(df: DataFrame): DataFrame = df
-      .select(col("doc_id").as("id"),
-        TF.qualityScoreFromTokens(col("text"),
-          TF.tokens(col("text"))).as("score"))
-    val root = Files.createTempDirectory("p147_").toString
-    val ndIdx = s"$root/ndidx"
-    val ndDocs = s"$root/nddocs"; val ndOut = s"$root/ndout"
-    val csRoot = s"$root/cs"; val outRoot = s"$root/out"
-    // independent setup writes over the checkpointed standing corpus —
-    // overlap them (guide §2.6, the p145 shape)
-    graft.core.Par.run(
-      () => Dedup.minhashBandIndex(standing, "doc_id", "text")
-        .write.parquet(s"$ndIdx/v0"),
-      () => standing.write.parquet(s"$ndDocs/v0"),
-      () => ClusterStream.writeStanding(spark, csRoot, scored(standing),
-        Dedup.minhashPairs(standing, "doc_id", "text", threshold = 0.4)),
-      () => stage(incoming, col("batch"), root, 0 until 5))
-    replay(spark, root, incoming.drop("batch").schema) { (b, id) =>
-      if (id == 2L) {
-        Takedown.takedownAll(spark, s"$root/journal", del.toDF("id"), id,
-          targets = Seq(
-            Target("band index", ndIdx),
-            Target("docs store", ndDocs),
-            Target("cluster store",
-              (s: SparkSession, ids: DataFrame, bi: Long) =>
-                ClusterStream.retract(s, csRoot, ids, bi))))
-        ()
-      } else if (id == 4L) {
-        // re-license: ONE journaled revive fanned to every store the
-        // takedown hit (Takedown.reviveAll — the same write-ahead
-        // intent-log protocol as the takedown direction): generic
-        // markers on the mask-only roots, the paired merge-repair
-        // verb on the cluster store. Sharing the journal root also
-        // exercises the vacuum cadence — the committed t2 journal is
-        // dropped on the way in.
-        Takedown.reviveAll(spark, s"$root/journal", rv.toDF("id"), id,
-          targets = Seq(
-            Target.revive("band index", ndIdx),
-            Target.revive("docs store", ndDocs),
-            Target("cluster store",
-              (s: SparkSession, ids: DataFrame, bi: Long) =>
-                ClusterStream.revive(s, csRoot, ids, bi))))
-        ()
-      } else {
-        // the re-ingest guard at the loop's front door: a batch
-        // carrying a taken-down id refuses loud (revive or fresh id —
-        // never a silent same-id re-ingest)
-        Takedown.guardReingest(spark,
-          Seq(ndIdx, ndDocs, s"$csRoot/assign"), b.select(col("doc_id")))
-        val pairs = NearDupStream.filterBatch(spark, ndIdx, ndDocs,
-          ndOut, "doc_id", "text", threshold = 0.4,
-          materializePairs = true)(
-          b.select(col("doc_id"), col("text")), id)
-        ClusterStream.foldBatch(spark, csRoot)(scored(b),
-          pairs.select(col("id_a"), col("id_b")), id)
-        // r18: the verdict resolves from the fold's JUST-WRITTEN deltas
-        // instead of the full-store reads (each a window fold + eager
-        // checkpoint per trigger) — result-identical because the fold
-        // guarantees every batch doc an assign row in v{id+1}
-        // (newInPairs ∪ newSingles = the whole batch; the empty-pairs
-        // path writes all of it too) and every such doc's cid a live
-        // election row there (electCanon runs over ALL touched labels'
-        // full membership, new singletons included), and v{id+1} is by
-        // construction the newest version for exactly those ids/cids.
-        graft.streaming.Versions.read(spark, s"$csRoot/assign",
-            Seq(s"$csRoot/assign/v${id + 1}"))
-          .join(broadcast(b.select(col("doc_id").as("id"))), Seq("id"),
-            "left_semi")
-          .join(graft.streaming.Versions.read(spark, s"$csRoot/canon",
-              Seq(s"$csRoot/canon/v${id + 1}"))
-            .filter(col("n_members") > 0)
-            .select(col("cid"), col("keep_id")),
-            Seq("cid"))
-          .select(col("id").as("doc_id"), col("keep_id"),
-            graft.functions.SteadyLit.steadyLong(id).as("batch"),
-            when(col("keep_id") === col("id"), 1.0).otherwise(0.0)
-              .as("keep"))
-          .write.mode("overwrite").parquet(s"$outRoot/b$id")
-      }
-    }
-    spark.read.parquet(s"$outRoot/b*")
-      .select(lit("v").as("part"), col("doc_id").as("a"),
-        col("keep_id").as("b"), col("batch").cast("long").as("n"),
-        col("keep").as("v"))
-      .unionAll(ClusterStream.readAssignments(spark, csRoot)
-        .select(lit("assign").as("part"), col("id").as("a"),
-          col("cid").as("b"), lit(-1L).as("n"), lit(0.0).as("v")))
-      .unionAll(ClusterStream.readCanonicals(spark, csRoot)
-        .select(lit("canon").as("part"), col("cid").as("a"),
-          col("keep_id").as("b"), col("n_members").cast("long").as("n"),
-          col("score").as("v")))
-      .orderBy("part", "a", "b")
-  }
+  def p147ReviveLoop(spark: SparkSession, dir: String): DataFrame =
+    productionLoop(spark, dir, revive = true)
 
-  val p147Sql: String = {
-    val delList = "99, 100, 40000000, 40000003"
-    val stillDead = "99, 100, 40000003"
-    def closure(k: Int): String =
-      s"""e$k AS MATERIALIZED (SELECT id_a AS a, id_b AS b FROM pv$k
-         |  UNION ALL SELECT id_b, id_a FROM pv$k),
-         |rc$k AS (SELECT doc_id AS id, doc_id AS l FROM dv$k
-         |  UNION SELECT e$k.a, rc$k.l FROM rc$k JOIN e$k ON e$k.b = rc$k.id),
-         |m$k AS MATERIALIZED (
-         |  SELECT r.id, MIN(r.l) AS cid FROM rc$k r GROUP BY r.id),
-         |cn$k AS MATERIALIZED (
-         |  SELECT m$k.cid, m$k.id AS keep_id, q147m.quality,
-         |    COUNT(*) OVER (PARTITION BY m$k.cid) AS nm,
-         |    ROW_NUMBER() OVER (PARTITION BY m$k.cid
-         |      ORDER BY q147m.quality DESC, m$k.id ASC) AS rn
-         |  FROM m$k JOIN q147m ON q147m.doc_id = m$k.id)""".stripMargin
-    def verdictArm(k: Int, batch: Int): String =
-      s"""SELECT 'v' AS part, a.doc_id AS a, c.keep_id AS b,
-         |    CAST($batch AS BIGINT) AS n,
-         |    CASE WHEN c.keep_id = a.doc_id THEN 1.0 ELSE 0.0 END AS v
-         |  FROM armm a JOIN m$k ON m$k.id = a.doc_id
-         |  JOIN cn$k c ON c.cid = m$k.cid AND c.rn = 1
-         |  WHERE a.k = $k""".stripMargin
-    s"""WITH RECURSIVE
-       |pr AS (SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT CAST(40000000 + i.x AS BIGINT),
-       |    'pl run pl run pl' FROM (SELECT unnest(range(10)) AS x) i),
-       |t147 AS (SELECT doc_id, text, $sqlToks AS toks FROM pr),
-       |${sqlQualityCtes("147", "t147", "doc_id")},
-       |arm AS (SELECT doc_id, toks,
-       |    CASE WHEN doc_id >= 40000000 THEN
-       |      (CASE WHEN (doc_id - 40000000) % 3 = 2 THEN 2
-       |            ELSE CAST((doc_id - 40000000) % 3 AS INT) END)
-       |      WHEN doc_id < 250 THEN -1
-       |      WHEN doc_id % 3 = 2 THEN 2
-       |      ELSE CAST(doc_id % 3 AS INT) END AS k
-       |  FROM t147),
-       |ex AS (SELECT doc_id, toks FROM arm WHERE k = -1),
-       |i0 AS (SELECT doc_id, toks FROM arm WHERE k = 0),
-       |i1 AS (SELECT doc_id, toks FROM arm WHERE k = 1),
-       |i2 AS (SELECT doc_id, toks FROM arm WHERE k = 2),
-       |$sqlMinhashCoef,
-       |${sqlMinhashChain("x", "ex")},
-       |${sqlMinhashPairCtes("x")},
-       |${sqlMinhashChain("g0", "i0")},
-       |${sqlMinhashPairCtes("g0")},
-       |${sqlMinhashChain("g1", "i1")},
-       |${sqlMinhashPairCtes("g1")},
-       |${sqlMinhashChain("g2", "i2")},
-       |${sqlMinhashPairCtes("g2")},
-       |${sqlCrossArmCtes(0)},
-       |${sqlCrossArmCtes(1)},
-       |${sqlCrossArmCtes(2, excludeOld = Some(s"id IN ($delList)"))},
-       |q147m AS MATERIALIZED (SELECT doc_id, quality FROM q147),
-       |armm AS MATERIALIZED (SELECT doc_id, k FROM arm),
-       |pv0 AS MATERIALIZED (SELECT id_a, id_b FROM mhx
-       |  UNION SELECT id_a, id_b FROM mhg0
-       |  UNION SELECT id_a, id_b FROM mx0),
-       |pv1 AS MATERIALIZED (SELECT id_a, id_b FROM pv0
-       |  UNION SELECT id_a, id_b FROM mhg1
-       |  UNION SELECT id_a, id_b FROM mx1),
-       |pv2 AS MATERIALIZED (SELECT id_a, id_b FROM pv1
-       |    WHERE id_a NOT IN ($delList) AND id_b NOT IN ($delList)
-       |  UNION SELECT id_a, id_b FROM mhg2
-       |  UNION SELECT id_a, id_b FROM mx2),
-       |pv3 AS MATERIALIZED (SELECT id_a, id_b FROM pv1
-       |    WHERE id_a NOT IN ($stillDead) AND id_b NOT IN ($stillDead)
-       |  UNION SELECT id_a, id_b FROM mhg2
-       |  UNION SELECT id_a, id_b FROM mx2),
-       |dv0 AS MATERIALIZED (SELECT doc_id FROM armm WHERE k <= 0),
-       |dv1 AS MATERIALIZED (SELECT doc_id FROM armm WHERE k <= 1),
-       |dv2 AS MATERIALIZED (
-       |  SELECT doc_id FROM armm WHERE doc_id NOT IN ($delList)),
-       |dv3 AS MATERIALIZED (
-       |  SELECT doc_id FROM armm WHERE doc_id NOT IN ($stillDead)),
-       |${closure(0)},
-       |${closure(1)},
-       |${closure(2)},
-       |${closure(3)}
-       |SELECT part, a, b, n, v FROM (
-       |  ${verdictArm(0, 0)}
-       |  UNION ALL
-       |  ${verdictArm(1, 1)}
-       |  UNION ALL
-       |  ${verdictArm(2, 3)}
-       |  UNION ALL
-       |  SELECT 'assign', id, cid, CAST(-1 AS BIGINT), 0.0 FROM m3
-       |  UNION ALL
-       |  SELECT 'canon', cid, keep_id, CAST(nm AS BIGINT), quality
-       |  FROM cn3 WHERE rn = 1)
-       |ORDER BY part, a, b""".stripMargin
-  }
+  val p147Sql: String = sqlProductionLoop(revive = true)
 
   // ---- registry -----------------------------------------------------------
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

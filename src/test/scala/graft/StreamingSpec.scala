@@ -73,40 +73,69 @@ class StreamingSpec extends SparkSpec {
 
   test("stage + replay: a root staged in two phases replays each batch " +
       "once, in batch order, and never re-stamps earlier files") {
-    // The registry's streaming harness (p89 drains, compacts, then stages
-    // the rest): a second stage() into the same root must leave the first
+    // The registry's streaming harness in p89's shape: drain batches 0-1,
+    // compact (here: a setup write between the phases), then stage the
+    // rest. A second stage() into the same root must leave the first
     // phase's mtimes alone, and replay() resumes from the same checkpoint.
+    // Driven twice: by stage() + replay() on a plain root, and by the
+    // StreamRun runner the registry queries use.
     import java.io.File
     import java.nio.file.Files
-    import graft.queries.Pipeline.{replay, stage}
+    import graft.queries.Pipeline.{StreamRun, replay, stage}
     import spark.implicits._
-    val root = Files.createTempDirectory("replay_").toString
     // ids stripe across the batches, which hold 4, 4 and 3 rows
     val rows = (0L until 11L).map(i => (i, s"t$i", (i % 3).toInt))
     val incoming = rows.toDF("id", "txt", "batch")
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[Long])]
-    def drain(): Unit =
-      replay(spark, root, incoming.drop("batch").schema) { (b, id) =>
+    def check(root: String)(
+        phase: (Seq[Int], (DataFrame, Long) => Unit) => Unit): Unit = {
+      val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[Long])]
+      val body: (DataFrame, Long) => Unit = (b, id) =>
         seen += ((id, b.select("id").as[Long].collect().toSet))
-      }
-    def stamps(): Map[String, Long] = new File(s"$root/in").listFiles()
-      .filter(_.getName.startsWith("part-"))
-      .map(f => f.getName -> f.lastModified()).toMap
-    stage(incoming, col("batch"), root, Seq(0, 1))
-    drain()
-    val first = stamps()
-    stage(incoming, col("batch"), root, Seq(2))
-    drain()
-    val last = stamps()
+      def stamps(): Map[String, Long] = new File(s"$root/in").listFiles()
+        .filter(_.getName.startsWith("part-"))
+        .map(f => f.getName -> f.lastModified()).toMap
+      phase(Seq(0, 1), body)
+      val first = stamps()
+      phase(Seq(2), body)
+      val last = stamps()
 
-    assert(seen.map(_._1).toSeq === Seq(0L, 1L, 2L))
-    val want = (0 until 3).map(b => rows.filter(_._3 == b).map(_._1).toSet)
-    assert(seen.map(_._2).toSeq === want)
-    assert(first.size === 2 && last.size === 3)
-    first.foreach { case (name, t) =>
-      assert(last(name) === t, s"$name was re-stamped by the second stage")
+      assert(seen.map(_._1).toSeq === Seq(0L, 1L, 2L))
+      val want = (0 until 3).map(b => rows.filter(_._3 == b).map(_._1).toSet)
+      assert(seen.map(_._2).toSeq === want)
+      assert(first.size === 2 && last.size === 3)
+      first.foreach { case (name, t) =>
+        assert(last(name) === t, s"$name was re-stamped by the second stage")
+      }
+      assert((last -- first.keys).values.forall(_ > first.values.max))
     }
-    assert((last -- first.keys).values.forall(_ > first.values.max))
+    val plain = Files.createTempDirectory("replay_").toString
+    check(plain) { (batches, body) =>
+      stage(incoming, col("batch"), plain, batches)
+      replay(spark, plain, incoming.drop("batch").schema)(body)
+    }
+    val r = new StreamRun(spark)
+    check(r.root) { (batches, body) =>
+      r.run(incoming, col("batch"), batches)(
+        () => Seq(batches.head).toDF("b").write.parquet(r(s"setup/${batches.head}")))(
+        body)
+    }
+    assert(spark.read.parquet(r("setup/*")).count() === 2)
+  }
+
+  test("stream runner: every root lives under one parent, and the " +
+      "cleanup removes a populated tree") {
+    import java.nio.file.{Files, Paths}
+    import graft.queries.Pipeline.{StreamRun, deleteTree, streamParent}
+    val (a, b) = (new StreamRun(spark), new StreamRun(spark))
+    assert(a.root !== b.root)
+    assert(Paths.get(a.root).getParent === streamParent)
+    assert(Paths.get(b.root).getParent === streamParent)
+    Files.createDirectories(Paths.get(a("x/y")))
+    Files.writeString(Paths.get(a("x/y/f.txt")), "data")
+    Files.writeString(Paths.get(a("top.txt")), "data")
+    deleteTree(new java.io.File(a.root))
+    assert(!Files.exists(Paths.get(a.root)))
+    assert(Files.isDirectory(Paths.get(b.root)))
   }
 
   test("DSv2 paged stream: one page per micro-batch, drains to EOF bound") {
