@@ -2997,12 +2997,15 @@ object Pipeline {
 
   /** The stream runner of the streaming registry queries: one fresh root
     * under [[streamParent]]. `r("idx")` names a store under the root and
-    * `out` reads the batch outputs a body wrote to `r("out")/b<id>`. */
+    * `batches("prof")` reads the batch outputs a body wrote to
+    * `r("prof")/b<id>` (`out` those of `r("out")`). */
   private[graft] final class StreamRun(spark: SparkSession) {
     val root: String = java.nio.file.Files.createDirectory(
       streamParent.resolve(s"s${streamSeq.incrementAndGet()}")).toString
     def apply(sub: String): String = s"$root/$sub"
-    def out: DataFrame = spark.read.parquet(s"$root/out/b*")
+    def out: DataFrame = batches("out")
+    def batches(sub: String): DataFrame =
+      graft.streaming.Versions.readBatches(spark, apply(sub))
 
     /** Runs the `setup` writes concurrently with [[stage]] of `batches`
       * (`batchOf` names a row's batch), then [[replay]]s them into `body`
@@ -5303,9 +5306,8 @@ object Pipeline {
       Seq(0.5, 0.9, 0.99))
     val exact = Profiling.histogramQuantiles(docs, "n_chars", 128,
       Seq(0.5, 0.9, 0.99), exact = true).select(col("q"), col("p_exact"))
-    val drift = spark.read.parquet(r("prof/b*"))
-      .agg(sum(col("n_below")).as("n_below"),
-        sum(col("n_above")).as("n_above"))
+    val drift = r.batches("prof").agg(sum(col("n_below")).as("n_below"),
+      sum(col("n_above")).as("n_above"))
     est.join(exact, Seq("q"))
       .crossJoin(broadcast(drift))
       .select(col("q"), col("n"), col("est"), col("p_exact"),
@@ -5969,7 +5971,7 @@ object Pipeline {
     r.run(incoming, batchOf, 0 until batches)(() => AHashStream.writeStanding(
         spark, r("idx"), standing, hasher = hasher)) { (b, id) =>
       verbs(r, standing, id)
-      AHashStream.appendBatch(spark, r("idx"), r("out"), "media_id",
+      AHashStream.filterBatch(spark, r("idx"), r("out"), "media_id",
         "payload", hasher = hasher)(b, id)
     }
     r.out.select(col("id_a"), col("id_b"), col("hamming"), col("batch"))
@@ -6265,7 +6267,7 @@ object Pipeline {
       QuantileStream.advanceBatch(spark, r("bounds1"), r("counts1"),
         r("prof1"), "n_chars"))
     // the rebuild signal: clamped mass under the OLD bounds
-    val drift1 = spark.read.parquet(r("prof1/b*"))
+    val drift1 = r.batches("prof1")
       .agg(coalesce(sum(col("n_below")), lit(0L)).as("old_below"),
         coalesce(sum(col("n_above")), lit(0L)).as("old_above"))
     // rebuild: bounds re-derived over the CURRENT corpus, bins doubled,
@@ -6281,7 +6283,7 @@ object Pipeline {
           pmod(col("doc_id"), lit(2)) === b)
         .select(col("doc_id"), col("n_chars")), b.toLong)
     }
-    val drift2 = spark.read.parquet(r("prof2/b*"))
+    val drift2 = r.batches("prof2")
       .agg(coalesce(sum(col("n_below")), lit(0L)).as("new_below"),
         coalesce(sum(col("n_above")), lit(0L)).as("new_above"))
     val est = QuantileStream.quantilesAt(spark, r("bounds2"), r("counts2"),
@@ -6427,7 +6429,7 @@ object Pipeline {
       () => MediaFpStream.writeStanding(spark, r("idx"), standing,
         profiler)) { (b, id) =>
       verbs(r, standing, id)
-      MediaFpStream.appendBatch(spark, r("idx"), r("out"), profiler)(b, id)
+      MediaFpStream.filterBatch(spark, r("idx"), r("out"), profiler)(b, id)
     }
     r.out.select(col("id_a"), col("id_b"), col("batch"))
       .orderBy("id_a", "id_b")
@@ -6960,7 +6962,7 @@ object Pipeline {
     // codebooks — one foreachBatch body call IS the stream's batch 0
     PqStream.appendBatch(spark, r("book2"), r("codes2"), r("out2"),
       "vec_id", "embedding")(emb.filter(col("vec_id") >= 400), 0L)
-    val drifts = spark.read.parquet(r("out1/b*"))
+    val drifts = r.batches("out1")
       .agg(max(when(col("batch") === 0, col("err_sum"))).as("drift_b0"),
         max(when(col("batch") === 1, col("err_sum"))).as("drift_b1"))
       .crossJoin(spark.read.parquet(r("out2/b0"))
@@ -7567,9 +7569,8 @@ object Pipeline {
     val ivfQueries = emb.filter(col("vec_id") < 5)
       .select((col("vec_id") + 10000).as("vec_id"), col("embedding"))
     def part(store: String, out: String, v: String): DataFrame =
-      spark.read.parquet(r(s"$out/b*"))
-        .select(lit(store).as("store"), col("id_a").as("a"),
-          col("id_b").as("b"), col("batch"), col(v).as("v"))
+      r.batches(out).select(lit(store).as("store"), col("id_a").as("a"),
+        col("id_b").as("b"), col("batch"), col(v).as("v"))
     val (nd, ct) = (part("nd", "nd_out", "jaccard"),
       part("ct", "ct_out", "containment"))
     val bm = RetrievalStream.bm25TopK(spark, r("bm"), qTerms, k = 40)

@@ -42,7 +42,7 @@ object AHashStream {
     * into 28 chunk-pair keys and pushes no stored-column predicate, so no
     * sort order of (media_id, ahash) can gain it row-group pruning — the
     * standing scan is inherently full (and 16 bytes/image cheap). */
-  private val spec = Versions.StoreSpec("hash index", Some("media_id"))
+  private val spec = Versions.StoreSpec("hash index", Seq("media_id"))
 
   /** Hash the standing corpus's media and write `root/v0`
     * (live-root-guarded: [[Versions.guardStandingWrite]]). `hasher` maps
@@ -74,21 +74,9 @@ object AHashStream {
 
   /** The `foreachBatch` callback: hash batch `batchId`'s images, emit its
     * near-dup pairs (in-batch + against everything earlier) to
-    * `outRoot/b<batchId>`, and append the batch's hash delta as
-    * `root/v{batchId+1}`. */
-  def appendBatch(spark: SparkSession, root: String, outRoot: String,
-      idCol: String, payloadCol: String, maxHamming: Int = 6,
-      autoCompactVersions: Option[Int] = None,
-      hasher: (DataFrame, String, String) => DataFrame =
-        Multimodal.aHash64Bytes)(
-      batch: DataFrame, batchId: Long): Unit = {
-    filterBatch(spark, root, outRoot, idCol, payloadCol, maxHamming,
-      autoCompactVersions, hasher)(batch, batchId)
-    ()
-  }
-
-  /** [[appendBatch]] returning the batch's pair frame — the composing
-    * shape ([[NearDupStream.filterBatch]]'s contract): the media ingest
+    * `outRoot/b<batchId>`, append the batch's hash delta as
+    * `root/v{batchId+1}`, and return the pair frame
+    * ([[NearDupStream.filterBatch]]'s contract): the media ingest
     * capstone sets `materializePairs` to reuse the pairs without
     * recomputing the probe; plain callers ignore the return (the write
     * is the frame's only consumer, no eager checkpoint). */

@@ -73,17 +73,18 @@ object ClusterStream {
     * docs dropped physically, the base CLUSTERED by `cid` (the fold's
     * membership reads prune by a pushed cid predicate). */
   private val assignSpec = Versions.StoreSpec("cluster assignments",
-    Some("id"), Versions.newestPerKey("id"), Seq("cid"), standingHint)
+    Seq("id"), Versions.newestPerKey("id"), Seq("cid"), standingHint)
 
   /** Canonicals compact to one LIVE row per cid. */
-  private val canonSpec = Versions.StoreSpec("cluster canonicals", None,
+  private val canonSpec = Versions.StoreSpec("cluster canonicals", Nil,
     df => Versions.newestPerKey("cid")(df).filter(col("n_members") > 0),
     Seq("cid"), standingHint)
 
-  /** Pair reads mask tombstoned ids on `id_a` here and on `id_b` at the
-    * call site; compaction drops both (see [[compactStore]]). */
-  private val pairsSpec = Versions.StoreSpec("cluster pairs", Some("id_a"),
-    missingHint = standingHint)
+  /** Pairs touching a tombstoned id on EITHER endpoint are masked on read
+    * and dropped by compaction (a one-column drop would resurrect the
+    * other endpoint's rows once the markers are consumed). */
+  private val pairsSpec = Versions.StoreSpec("cluster pairs",
+    Seq("id_a", "id_b"), missingHint = standingHint)
 
   /** Bootstrap: batch-solve the standing corpus with the batch kernels and
     * write the three `v0`s. `standingDocs` is (idCol, scoreCol); every doc
@@ -213,9 +214,7 @@ object ClusterStream {
   def readPairs(spark: SparkSession, root: String,
       upTo: Long = Long.MaxValue): DataFrame = {
     requireRepairedRevives(spark, root)
-    val pr = pairsRoot(root)
-    Versions.maskTombstones(spark, pr, pairsSpec.read(spark, pr, upTo),
-      "id_b", upTo)
+    pairsSpec.read(spark, pairsRoot(root), upTo)
   }
 
   /** This store's takedown/revive verbs pair their markers with
@@ -370,10 +369,9 @@ object ClusterStream {
         (d, d.select(col("id")).collect())
       },
       () => {
-        val d = Versions.maskTombstones(spark, ar,
-            Versions.maskTombstones(spark, ar,
-              batchPairs.select(col("id_a"), col("id_b")), "id_a", batchId),
-            "id_b", batchId)
+        val d = Versions.maskIds(spark, ar,
+            batchPairs.select(col("id_a"), col("id_b")), Seq("id_a", "id_b"),
+            batchId)
           .localCheckpoint(true)
         (d, d.collect())
       }))
@@ -557,7 +555,10 @@ object ClusterStream {
     val ar = assignRoot(root); val pr = pairsRoot(root)
     assignSpec.guardAppend(spark, ar, batchId, lease)
     canonSpec.guardAppend(spark, canonRoot(root), batchId, lease)
-    val rel = Versions.idRelation(ids).localCheckpoint(true)
+    import spark.implicits._
+    // revive-sized by contract: collected once, so each root's dead-as-of
+    // check below runs on the driver
+    val rel = Versions.collectIds(ids, "revive").toDF("id")
     // independent marker roots — overlap the two revive-marker writes
     // (guide §2.6); the repair below reads both post-marker views
     graft.core.Par.run(
@@ -658,13 +659,11 @@ object ClusterStream {
         .write.mode("overwrite").parquet(s"$cr/v$v"))
   }
 
-  /** Fold all three roots' deltas into fresh bases (each root's spec);
-    * pairs with both-endpoint tombstone drops (the marker set is applied
-    * to BOTH columns before the id_a-keyed consumption — a one-column
-    * drop would resurrect the id_b rows once the markers are consumed). */
+  /** Fold all three roots' deltas into fresh bases (each root's spec;
+    * pairs drop on both endpoints — a revived id's pairs survive, the
+    * dead set is newest-verb-wins). */
   def compactStore(spark: SparkSession, root: String, upTo: Long,
       lease: Option[Versions.Lease] = None): Unit = {
-    val pr = pairsRoot(root)
     // allowSingle on all three roots: a marker-only history (retract/
     // revive with no interleaved folds) leaves one version + markers to
     // consume, and a crash between the per-root rewrites must leave the
@@ -676,14 +675,7 @@ object ClusterStream {
         allowSingle = true, lease),
       () => canonSpec.compact(spark, canonRoot(root), upTo,
         allowSingle = true, lease),
-      () => {
-        // deadIds, not the raw marker union: a revived id's pair rows must
-        // survive the physical fold (newest-verb-wins, the
-        // RetrievalStream.compactStore discipline)
-        val delIds = Versions.deadIds(spark, pr, upTo)
-        Versions.compact(spark, pr, upTo,
-          df => delIds.fold(df)(Versions.withoutIds(df, "id_b", _)),
-          tombstoneIdCol = Some("id_a"), allowSingle = true, lease = lease)
-      })
+      () => pairsSpec.compact(spark, pairsRoot(root), upTo,
+        allowSingle = true, lease))
   }
 }

@@ -40,7 +40,7 @@ object ContainmentStream {
     * gram predicate skips most row groups of the standing scan the probe
     * pays every trigger (VERDICT r13 #2 — the §6-documented linear
     * term's layout lever). */
-  private val spec = Versions.StoreSpec("set index", Some("id"),
+  private val spec = Versions.StoreSpec("set index", Seq("id"),
     clusterBy = Seq("g"))
 
   private def explodeSets(sets: DataFrame): DataFrame =
@@ -90,13 +90,9 @@ object ContainmentStream {
     * [[Dedup.containmentIncrementalFromSets]]), and it is what turns a
     * [[compactStore]]-clustered base's row-group zones into actual scan
     * pruning for trickle-sized batches (the §6-documented linear term's
-    * layout lever). The driver pull is bounded at `pushGramLimit + 1`
-    * strings (model-sized, the pin discipline). NOTE Spark rewrites an
-    * `IN` wider than `spark.sql.parquet.pushdown.inFilterThreshold`
-    * (default 10) into a min/max range before the parquet filter — on
-    * uniform hash keys that range prunes nothing, so deploys expecting
-    * pruning on multi-item batches should raise the threshold toward
-    * their trigger's gram bound. 0 disables the push. */
+    * layout lever; [[Versions.pushKeys]] — deploys expecting pruning on
+    * multi-item batches should raise parquet's `inFilterThreshold` toward
+    * their trigger's gram bound). 0 disables the push. */
   def filterBatch(spark: SparkSession, root: String, outRoot: String,
       setsOf: DataFrame => DataFrame, threshold: Double,
       autoCompactVersions: Option[Int] = None,
@@ -107,15 +103,8 @@ object ContainmentStream {
     val bsets = setsOf(batch).toDF("id", "sh")
       .filter(size(col("sh")) > 0)
       .localCheckpoint(true)
-    val idx = readIndex(spark, root, upTo = batchId)
-    val restricted =
-      if (pushGramLimit <= 0) idx
-      else {
-        val grams = bsets.select(explode(col("sh")).as("g")).distinct()
-          .limit(pushGramLimit + 1).collect().map(_.getString(0)).toSeq
-        if (grams.size <= pushGramLimit) idx.filter(col("g").isin(grams: _*))
-        else idx
-      }
+    val restricted = Versions.pushKeys(readIndex(spark, root, upTo = batchId),
+      bsets.select(explode(col("sh")).as("g")), pushGramLimit)
     // stageHits = false: trigger batches are trickle-sized and the
     // pushed gram IN above already prunes the standing scans — the
     // staging action costs more than the repeated pruned scans it

@@ -31,7 +31,7 @@ object EwmaStream {
 
   /** Compaction keeps each key's newest state row, like
     * [[FunnelStream]]'s. */
-  private def spec(keyCol: String) = Versions.StoreSpec("state", None,
+  private def spec(keyCol: String) = Versions.StoreSpec("state", Nil,
     Versions.newestPerKey(keyCol),
     missingHint = "write it (empty for a cold start) before starting the " +
       "stream")

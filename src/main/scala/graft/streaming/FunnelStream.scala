@@ -30,7 +30,7 @@ object FunnelStream {
     * compaction prunes every superseded stage row — the base shrinks to
     * one row per key, keeping original `__v` values so later reads rank
     * identically against post-compaction deltas. */
-  private def spec(keyCol: String) = Versions.StoreSpec("state", None,
+  private def spec(keyCol: String) = Versions.StoreSpec("state", Nil,
     Versions.newestPerKey(keyCol),
     missingHint = "write it (empty for a cold start) before starting the " +
       "stream")

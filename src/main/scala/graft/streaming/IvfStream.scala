@@ -52,7 +52,7 @@ object IvfStream {
     * fold; tombstoned vectors drop physically and the base CLUSTERS by
     * the probe key `cell` — probes that push their shortlisted cell ids
     * into the standing scan then skip non-shortlist row groups. */
-  private val spec = Versions.StoreSpec("index", Some("neighbor_id"),
+  private val spec = Versions.StoreSpec("index", Seq("neighbor_id"),
     clusterBy = Seq("cell"))
 
   // ---- bank-identity pinning ----------------------------------------------
@@ -69,55 +69,14 @@ object IvfStream {
   // compaction), and appendBatch / the bank-taking read path fail loud
   // when the bank at hand doesn't hash to the pinned value.
 
-  /** Order-independent content fingerprint of a bank relation (cell, cv):
-    * (bit_xor over `fingerprint64` of each row's canonical
-    * `cell:v0,v1,...` rendering, row count) — one model-sized fold
-    * (≤ cells rows), deterministic across partitionings because XOR is
-    * commutative and the per-row rendering is value-only. The count rides
-    * along because XOR alone is blind to PAIRED duplicates (two copies of
-    * a row cancel: a bank with a crash-double-appended row would
-    * fingerprint identical to the clean bank); pinning (fp, n) together
-    * closes that hole. */
-  def bankFingerprint(bank: DataFrame): (Long, Long) = {
-    val row = bank
-      .select(graft.functions.HashFunctions.fingerprint64(concat_ws(":",
-          col("cell").cast("string"),
-          concat_ws(",", transform(col("cv").cast("array<double>"),
-            e => e.cast("string"))))).as("__fp"))
-      .agg(expr("bit_xor(__fp)").as("fp"), count(lit(1)).as("n"))
-      .head()
-    require(row.getLong(1) > 0, "cannot fingerprint an empty bank")
-    (row.getLong(0), row.getLong(1))
-  }
-
-  /** Fail loud unless the bank at `bankRoot/v0` hashes to the fingerprint
-    * pinned when `indexRoot` was built — the [[SketchStream]]
-    * `checkParams` pattern for a relation-valued model. */
+  /** Fail loud unless the bank at `bankRoot/v0` hashes to the content pin
+    * (`bank_fp`, `bank_n` over `cell:cv` rows) written when `indexRoot`
+    * was built ([[Versions.checkContentPin]]). */
   def checkBank(spark: SparkSession, bankRoot: String,
-      indexRoot: String): Unit = {
-    val pinRows = Versions.readPin(spark, indexRoot,
-      "writeStanding (which pins the fingerprint of the bank the index " +
-        "was assigned under) before appending or probing")
-    // a pin written by the pre-r12 single-row format carries only bank_fp;
-    // comparing it against today's (fp, n) would fail EVERY bank — even a
-    // byte-identical one — with a misleading "does not match" message, so
-    // name the real problem (ADVICE r12): the old pin cannot distinguish
-    // a crash-double-appended bank row (XOR pairs cancel), which is the
-    // hole count-pinning closed
-    require(pinRows.contains("bank_n"),
-      s"$indexRoot/_params predates count pinning (bank_fp only) — the " +
-        "old pin format cannot detect paired-duplicate bank rows; " +
-        "rebuildIndex into new roots (which re-pins (fp, n)) before " +
-        "appending or probing")
-    val pinned = (pinRows("bank_fp"), pinRows("bank_n"))
-    val actual = bankFingerprint(Versions.read(spark, bankRoot,
-      Seq(s"$bankRoot/v0")))
-    require(actual == pinned,
-      s"bank at $bankRoot does not match the bank $indexRoot was built " +
-        s"under (fingerprint/count $actual vs pinned $pinned) — assignments " +
-        "under one bank probed under another silently collapse recall; " +
-        "use the original bank root or rebuildIndex into new roots")
-  }
+      indexRoot: String): Unit =
+    Versions.checkContentPin(spark, bankRoot, indexRoot, "bank", Seq("cell"),
+      "bank", "assignments under one bank probed under another silently " +
+        "collapse recall", "rebuildIndex into new roots")
 
   /** Write the standing stores: the trained bank as `bankRoot/v0`, the
     * standing corpus's assignment as `indexRoot/v0`, and the frozen
@@ -131,10 +90,10 @@ object IvfStream {
     Versions.guardStandingWrite(spark, bankRoot)
     Versions.guardStandingWrite(spark, indexRoot)
     bank.write.mode("overwrite").parquet(s"$bankRoot/v0")
-    val frozen = Versions.read(spark, bankRoot, Seq(s"$bankRoot/v0"))
-    val (fp, n) = bankFingerprint(frozen)
-    Versions.writePin(spark, indexRoot, Seq("bank_fp" -> fp, "bank_n" -> n))
-    IvfRelational.assign(standing, frozen, idCol, vecCol)
+    Versions.writeContentPin(spark, bankRoot, indexRoot, "bank", Seq("cell"),
+      "bank")
+    IvfRelational.assign(standing,
+      Versions.read(spark, bankRoot, Seq(s"$bankRoot/v0")), idCol, vecCol)
       .select(col("id").as("neighbor_id"), col("cell"), col("v"))
       .write.mode("overwrite").parquet(s"$indexRoot/v0")
   }

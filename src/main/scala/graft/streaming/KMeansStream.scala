@@ -48,7 +48,7 @@ object KMeansStream {
 
   /** Current state is the newest row per (cell, pos); compaction prunes
     * the superseded ones. */
-  private val spec = Versions.StoreSpec("state", None,
+  private val spec = Versions.StoreSpec("state", Nil,
     Versions.newestPerKey("cell", "pos"), missingHint = "writeSeedState first")
 
   private val outSchema = StructType(Seq(

@@ -36,7 +36,7 @@ object MediaFpStream {
     * base clusters by the probe key `fp`, so a small batch's fingerprint
     * set pushed into the standing scan skips most row groups. */
   private val spec = Versions.StoreSpec("fingerprint index",
-    Some("media_id"), clusterBy = Seq("fp"))
+    Seq("media_id"), clusterBy = Seq("fp"))
 
   /** Fingerprint the standing corpus and write `root/v0`
     * (live-root-guarded). `profiler` maps a (idCol, payload...) frame to
@@ -66,19 +66,9 @@ object MediaFpStream {
 
   /** The `foreachBatch` callback: fingerprint batch `batchId`'s media,
     * emit its exact-dup pairs (in-batch + against everything earlier) to
-    * `outRoot/b<batchId>`, and append the batch's fingerprint delta as
-    * `root/v{batchId+1}`. */
-  def appendBatch(spark: SparkSession, root: String, outRoot: String,
-      profiler: DataFrame => DataFrame,
-      autoCompactVersions: Option[Int] = None)(
-      batch: DataFrame, batchId: Long): Unit = {
-    filterBatch(spark, root, outRoot, profiler, autoCompactVersions)(
-      batch, batchId)
-    ()
-  }
-
-  /** [[appendBatch]] returning the batch's pair frame — the composing
-    * shape ([[NearDupStream.filterBatch]]'s contract): the media ingest
+    * `outRoot/b<batchId>`, append the batch's fingerprint delta as
+    * `root/v{batchId+1}`, and return the pair frame
+    * ([[NearDupStream.filterBatch]]'s contract): the media ingest
     * capstone sets `materializePairs` to reuse the pairs without
     * recomputing the probe; plain callers ignore the return (the write
     * is the frame's only consumer, no eager checkpoint).
@@ -88,10 +78,8 @@ object MediaFpStream {
     * predicate into the standing scan — result-identical (the cross arm
     * joins on fp equality), and it is what turns a [[compactStore]]-
     * clustered base's row-group zones into actual scan pruning for
-    * trickle-sized batches (the [[ContainmentStream.filterBatch]]
-    * pushGramLimit contract — same parquet `inFilterThreshold` caveat
-    * for wide INs on uniform hash keys). The driver pull is bounded at
-    * `pushFpLimit + 1` longs. 0 disables the push. */
+    * trickle-sized batches ([[Versions.pushKeys]]). 0 disables the
+    * push. */
   def filterBatch(spark: SparkSession, root: String, outRoot: String,
       profiler: DataFrame => DataFrame,
       autoCompactVersions: Option[Int] = None,
@@ -112,16 +100,8 @@ object MediaFpStream {
     // cross arm: the standing index stays a narrow scan union; the
     // batch's fingerprints BROADCAST into the join — the standing index
     // never crosses a shuffle
-    val idx = readIndex(spark, root, upTo = batchId)
-    val restricted =
-      if (pushFpLimit <= 0) idx
-      else {
-        val fps = bf.select(col("fp")).distinct()
-          .limit(pushFpLimit + 1).collect().map(_.getLong(0)).toSeq
-        if (fps.size <= pushFpLimit) idx.filter(col("fp").isin(fps: _*))
-        else idx
-      }
-    val cross = restricted
+    val cross = Versions.pushKeys(readIndex(spark, root, upTo = batchId),
+        bf.select(col("fp")), pushFpLimit)
       .join(broadcast(bf.select(col("media_id").as("new_id"),
         col("fp"))), Seq("fp"))
       // a batch id already present in the standing index (re-crawl under

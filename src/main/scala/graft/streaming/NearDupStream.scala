@@ -33,14 +33,14 @@ object NearDupStream {
     * also collapsing any rows a crashed, re-run batch left behind; the
     * base CLUSTERS by the probe key (band, bucket) so a small batch's
     * pushed band predicate can skip standing row groups. */
-  private val bandSpec = Versions.StoreSpec("band index", Some("id"),
+  private val bandSpec = Versions.StoreSpec("band index", Seq("id"),
     _.distinct(), Seq("band", "bucket"),
     missingHint = "write it before starting the stream")
 
   /** The docs store compacts by plain union (ids are unique per batch and
     * the verify semi-join re-reads by id). */
   private def docsSpec(idCol: String) = Versions.StoreSpec("docs store",
-    Some(idCol), missingHint = "write it before starting the stream")
+    Seq(idCol), missingHint = "write it before starting the stream")
 
   /** The `foreachBatch` callback: emit batch `batchId`'s near-dup pairs
     * (in-batch + against everything earlier) to `outRoot/b<batchId>`,
@@ -66,12 +66,8 @@ object NearDupStream {
     * occupancy cap counts JOINED rows per (band, bucket), which the
     * value-level restriction preserves for every surviving bucket), and
     * it is what turns a [[compactStores]]-clustered base's row-group
-    * zones into actual scan pruning for trickle-sized batches (the
-    * [[ContainmentStream.filterBatch]] pushGramLimit contract — same
-    * parquet `inFilterThreshold` caveat: Spark rewrites an IN wider than
-    * that threshold into a min/max range that prunes nothing on uniform
-    * hash keys). The driver pull is bounded at `pushBucketLimit + 1`
-    * longs. 0 disables the push. */
+    * zones into actual scan pruning for trickle-sized batches
+    * ([[Versions.pushKeys]]). 0 disables the push. */
   def filterBatch(spark: SparkSession, indexRoot: String, docsRoot: String,
       outRoot: String, idCol: String, textCol: String,
       numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3,
@@ -87,17 +83,9 @@ object NearDupStream {
     val existingDocs = docs.read(spark, docsRoot, upTo = batchId)
     val bBands = Dedup.minhashBandIndex(batch, idCol, textCol, numHashes,
       bands, shingleSize, seed).localCheckpoint(true)
-    val restricted =
-      if (pushBucketLimit <= 0) idx
-      else {
-        val bks = bBands.select(col("bucket")).distinct()
-          .limit(pushBucketLimit + 1).collect().map(_.getLong(0)).toSeq
-        if (bks.size <= pushBucketLimit)
-          idx.filter(col("bucket").isin(bks: _*))
-        else idx
-      }
     val probe = Dedup.minhashPairsIncremental(batch, idCol, textCol,
-        restricted, existingDocs, numHashes, bands, shingleSize, threshold,
+        Versions.pushKeys(idx, bBands.select(col("bucket")), pushBucketLimit),
+        existingDocs, numHashes, bands, shingleSize, threshold,
         maxBucketSize, seed, newBandedOpt = Some(bBands))
       .withColumn("batch", SteadyLit.steadyLong(batchId))
     val pairs = if (materializePairs) probe.localCheckpoint(true) else probe

@@ -39,7 +39,7 @@ object PassageStream {
     * duplicate fps collapse via `distinct` — the compacted base is
     * strictly smaller and read-equivalent. The index is MONOTONE: see
     * [[tombstone]]. */
-  private val spec = Versions.StoreSpec("index", None, _.distinct(),
+  private val spec = Versions.StoreSpec("index", Nil, _.distinct(),
     missingHint = "write Dedup.passageWindowIndex(corpus) there before " +
       "starting the stream",
     rebuildHint = "the passage-fp index stores id-free fingerprints " +
@@ -68,7 +68,7 @@ object PassageStream {
     *
     * `autoCompactVersions = Some(k)` bounds the per-batch read fan-in: a
     * batch that sees more than k visible deltas folds them into the base
-    * before probing ([[Versions.autoCompact]] — read-equivalent, inside
+    * before probing ([[Versions.compactionDue]] — read-equivalent, inside
     * this batch's own lineage guard). */
   def filterBatch(spark: SparkSession, indexRoot: String, outRoot: String,
       idCol: String, textCol: String, windowTokens: Int = 8,

@@ -41,7 +41,7 @@ object PcaStream {
         sum(col("cnt")).as("cnt"))
       .select(momentCols.map(col): _*)
 
-  private val spec = Versions.StoreSpec("moments store", None, foldMoments)
+  private val spec = Versions.StoreSpec("moments store", Nil, foldMoments)
 
   /** Write the standing corpus's moments as `root/v0` (live-root-guarded:
     * [[Versions.guardStandingWrite]]). */

@@ -41,7 +41,7 @@ object PqStream {
 
   /** (neighbor_id, codes) rows unique across deltas ⇒ the identity fold;
     * tombstoned vectors drop physically (markers consumed). */
-  private val spec = Versions.StoreSpec("codes store", Some("neighbor_id"))
+  private val spec = Versions.StoreSpec("codes store", Seq("neighbor_id"))
 
   /** The codebook relation (j, code, cv) of a driver-side bank array —
     * model-sized (m × nCodes rows). */
@@ -74,38 +74,14 @@ object PqStream {
     banks
   }
 
-  /** Order-independent content fingerprint of a codebook relation —
-    * (bit_xor of `fingerprint64` over each row's canonical
-    * `j:code:v0,v1,...` rendering, row count): the [[IvfStream
-    * .bankFingerprint]] (fp, n) convention for the m-subspace model. */
-  def bookFingerprint(book: DataFrame): (Long, Long) = {
-    val row = book
-      .select(graft.functions.HashFunctions.fingerprint64(concat_ws(":",
-          col("j").cast("string"), col("code").cast("string"),
-          concat_ws(",", transform(col("cv").cast("array<double>"),
-            e => e.cast("string"))))).as("__fp"))
-      .agg(expr("bit_xor(__fp)").as("fp"), count(lit(1)).as("n"))
-      .head()
-    require(row.getLong(1) > 0, "cannot fingerprint an empty codebook")
-    (row.getLong(0), row.getLong(1))
-  }
-
-  /** Fail loud unless the codebook at `bookRoot/v0` hashes to the
-    * fingerprint pinned when `codesRoot` was built. */
+  /** Fail loud unless the codebook at `bookRoot/v0` hashes to the content
+    * pin (`book_fp`, `book_n` over `j:code:cv` rows) written when
+    * `codesRoot` was built ([[Versions.checkContentPin]]). */
   def checkBook(spark: SparkSession, bookRoot: String,
-      codesRoot: String): Unit = {
-    val pinRows = Versions.readPin(spark, codesRoot,
-      "writeStanding (which pins the fingerprint of the codebook the " +
-        "codes were encoded under) before appending or probing")
-    val pinned = (pinRows("book_fp"), pinRows("book_n"))
-    val actual = bookFingerprint(Versions.read(spark, bookRoot,
-      Seq(s"$bookRoot/v0")))
-    require(actual == pinned,
-      s"codebook at $bookRoot does not match the codebook $codesRoot " +
-        s"was encoded under (fingerprint/count $actual vs pinned $pinned)" +
-        " — codes under one codebook decoded under another reconstruct " +
-        "garbage; use the original book root or rebuild into new roots")
-  }
+      codesRoot: String): Unit =
+    Versions.checkContentPin(spark, bookRoot, codesRoot, "book",
+      Seq("j", "code"), "codebook", "codes under one codebook decoded " +
+        "under another reconstruct garbage", "rebuild into new roots")
 
   /** Write the standing stores: the codebooks as `bookRoot/v0`, the
     * standing corpus's codes as `codesRoot/v0`, and the frozen book's
@@ -119,9 +95,8 @@ object PqStream {
     bookRelation(spark, banks)
       .write.mode("overwrite").parquet(s"$bookRoot/v0")
     val frozen = banksOf(spark, bookRoot)
-    val (fp, n) =
-      bookFingerprint(Versions.read(spark, bookRoot, Seq(s"$bookRoot/v0")))
-    Versions.writePin(spark, codesRoot, Seq("book_fp" -> fp, "book_n" -> n))
+    Versions.writeContentPin(spark, bookRoot, codesRoot, "book",
+      Seq("j", "code"), "codebook")
     Similarity.pqEncode(standing, frozen, idCol, vecCol)
       .write.mode("overwrite").parquet(s"$codesRoot/v0")
   }

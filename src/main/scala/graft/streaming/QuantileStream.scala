@@ -45,7 +45,7 @@ object QuantileStream {
     df.groupBy(col("__bin")).agg(sum(col("__nb")).as("__nb"))
 
   /** Bin counts fold by sum-merge (read-equivalent by associativity). */
-  private val countSpec = Versions.StoreSpec("count store", None, foldCounts,
+  private val countSpec = Versions.StoreSpec("count store", Nil, foldCounts,
     rebuildHint = "the bin-count store holds per-bin sums with no " +
       "per-item provenance. Rebuild from the retained corpus into NEW " +
       "roots and swap readers (rebuildStore — the p120 lifecycle)")

@@ -49,7 +49,7 @@ object RetrievalStream {
     * filter pushes into the parquet scan, so a sorted base prunes
     * standing row groups per probe — VERDICT r13 #2). Takedown is the
     * store's own paired verb ([[tombstoneFrom]]), not the spec's. */
-  private val postSpec = Versions.StoreSpec("postings", Some("doc_id"),
+  private val postSpec = Versions.StoreSpec("postings", Seq("doc_id"),
     clusterBy = Seq("term"))
 
   /** Write the standing corpus's postings + stats + per-doc lengths as
@@ -101,22 +101,15 @@ object RetrievalStream {
         "— a writeStanding crashed mid-way, or the store predates the " +
         "takedown-capable layout); re-run writeStanding before starting " +
         "the stream")
-    autoCompactVersions.foreach { k =>
-      // takedown-aware auto-compaction (VERDICT r14 wrong #2: the old
-      // per-root folds deliberately preserved markers, so a long-running
-      // stream that only ever auto-compacted paid the marker fan-in —
-      // one listStatus + one broadcast read per marker dir per read —
-      // FOREVER): when the version count trips the threshold, run the
-      // full three-root orchestration, bounding both the version fan-in
-      // AND the accumulated marker count by the compaction cadence.
-      // `upTo = batchId` is inside the compact safety bound for
-      // [[Versions.autoCompact]]'s reason: the executing batch is
-      // uncommitted, so every committed batch is < batchId.
-      require(k >= 1, s"autoCompactVersions must be >= 1: $k")
-      val visible = Versions.list(spark, postRoot(root))
-        .filter(_._1 <= batchId)
-      if (visible.size > k) compactStore(spark, root, upTo = batchId, lease)
-    }
+    // takedown-aware auto-compaction (VERDICT r14 wrong #2: the old
+    // per-root folds deliberately preserved markers, so a long-running
+    // stream that only ever auto-compacted paid the marker fan-in
+    // FOREVER): when the version count trips the threshold, run the full
+    // three-root orchestration, bounding both the version fan-in AND the
+    // accumulated marker count by the compaction cadence
+    if (Versions.compactionDue(spark, postRoot(root), batchId,
+        autoCompactVersions))
+      compactStore(spark, root, upTo = batchId, lease)
     val b = batch.localCheckpoint(true)
     // the three per-batch delta writes are independent (distinct
     // batch-id-named paths; a crash leaving any completion subset is the
@@ -171,24 +164,15 @@ object RetrievalStream {
 
   /** [[tombstone]] with the retracted ids as a relation — the
     * predicate-driven sweep shape: the id set is computed distributively
-    * (a quality/PII/licensing pass over the corpus) and never touches
-    * the driver. Id hygiene (single long-castable column, nulls dropped,
-    * empty refused) is [[Versions.tombstoneFrom]]'s contract. */
+    * (a quality/PII/licensing pass over the corpus), then collected once
+    * (takedown-sized by the marker contract; single long-castable column,
+    * nulls dropped, empty refused — [[Versions.tombstoneFrom]]'s
+    * hygiene). */
   def tombstoneFrom(spark: SparkSession, root: String, ids: DataFrame,
       batchId: Long, lease: Option[Versions.Lease] = None): Unit = {
     Versions.checkWriter(spark, postRoot(root), lease)
-    require(ids.schema.fields.length == 1,
-      s"tombstoneFrom takes a single id column, got ${ids.schema.fieldNames
-        .mkString(", ")}")
-    require(Versions.list(spark, postRoot(root)).exists(_._1 == 0L),
-      s"tombstone refused: ${postRoot(root)}/v0 missing — the store must " +
-        "exist before ids can be retracted from it")
-    val rel = Versions.idRelation(ids).localCheckpoint(true)
-    require(rel.limit(1).count() > 0, "tombstone of an empty id set")
-    val dlen = Versions.list(spark, dlenRoot(root))
-    require(dlen.nonEmpty,
-      s"takedown refused: ${dlenRoot(root)} is empty — the store predates " +
-        "the takedown-capable layout; rebuild via writeStanding")
+    val rel = Versions.collectIds(ids, "tombstone")
+    Versions.requireStore(spark, postRoot(root))
     // the correction subtracts only ids ALIVE as of the markers strictly
     // before this batch (ADVICE r16 #1): two overlapping sweeps are
     // in-contract input (a GDPR pass re-listing a quality pass's ids),
@@ -197,16 +181,31 @@ object RetrievalStream {
     // and compaction would bake it in. `upTo = batchId - 1` ignores this
     // batch's own marker, so a redelivered sweep re-computes the SAME
     // correction (redelivery-stable, the readAssignmentsMasked precedent)
-    val alive = Versions.deadSet(spark, postRoot(root), upTo = batchId - 1)
-      .fold(rel)(dead => rel.join(broadcast(dead), Seq("id"), "left_anti"))
+    val dead = Versions.deadIds(spark, postRoot(root), upTo = batchId - 1)
+      .getOrElse(Nil).toSet
+    writeCorrection(spark, root, rel.filterNot(dead), -1L, batchId,
+      "takedown")
+    Versions.writeMarker(spark, postRoot(root), 'd', rel, batchId)
+  }
+
+  /** `stats/c<batchId>`: `sign` times the exact (n_docs, total_dl) of the
+    * docs `ids` from the doclen relation (zero-token docs included) — the
+    * in-band correction a takedown (-1) or revive (+1) writes before its
+    * marker. */
+  private def writeCorrection(spark: SparkSession, root: String,
+      ids: Seq[Long], sign: Long, batchId: Long, verb: String): Unit = {
+    import spark.implicits._
+    val dlen = Versions.list(spark, dlenRoot(root))
+    require(dlen.nonEmpty,
+      s"$verb refused: ${dlenRoot(root)} is empty — the store predates " +
+        "the takedown-capable layout; rebuild via writeStanding")
     Versions.read(spark, dlenRoot(root), dlen.map(_._2.toString))
-      .join(broadcast(alive.select(col("id").as("doc_id"))), "doc_id")
-      .agg((-count(lit(1))).cast("long").as("n_docs"),
-        (-coalesce(sum(col("dl")), lit(0L))).cast("long").as("total_dl"))
+      .join(broadcast(ids.toDF("doc_id")), "doc_id")
+      .agg((lit(sign) * count(lit(1))).cast("long").as("n_docs"),
+        (lit(sign) * coalesce(sum(col("dl")), lit(0L))).cast("long")
+          .as("total_dl"))
       .coalesce(1).write.mode("overwrite")
       .parquet(s"${statsRoot(root)}/c$batchId")
-    rel.coalesce(1).write.mode("overwrite")
-      .parquet(s"${postRoot(root)}/d$batchId")
   }
 
   /** The root this store's takedown markers live under (the posting
@@ -224,9 +223,9 @@ object RetrievalStream {
     * POSITIVE stats correction `stats/c<batchId>` re-adding the revived
     * docs' exact (1, dl) — the same dlen rows the takedown subtracted,
     * still physically present because [[compactStore]]'s fold is
-    * deadSet-aware and revive-of-compacted refuses at the dead check —
-    * then the `r<batchId>` marker via [[Versions.revive]] (newest-verb-
-    * wins, every [[Versions.revive]] contract clause applies). The
+    * dead-set-aware and revive-of-compacted refuses at the dead check —
+    * then the `r<batchId>` marker (newest-verb-wins, every
+    * [[Versions.revive]] contract clause applies). The
     * correction lands first (the [[tombstoneFrom]] ordering), so a crash
     * between the writes is the same newest-batch torn window
     * [[readStats]] documents, healed by redelivery. Post-revive probes
@@ -235,34 +234,12 @@ object RetrievalStream {
   def revive(spark: SparkSession, root: String, ids: DataFrame,
       batchId: Long, lease: Option[Versions.Lease] = None): Unit = {
     Versions.checkWriter(spark, postRoot(root), lease)
-    require(ids.schema.fields.length == 1,
-      s"revive takes a single id column, got ${ids.schema.fieldNames
-        .mkString(", ")}")
-    val rel = Versions.idRelation(ids).localCheckpoint(true)
-    require(rel.limit(1).count() > 0, "revive of an empty id set")
-    // the dead-as-of-(batchId-1) check runs HERE, before the correction
-    // write (Versions.revive re-checks before its marker write): a
-    // refused revive must not leave an orphan correction behind
-    val dead = Versions.deadSet(spark, postRoot(root), upTo = batchId - 1)
-    require(dead.isDefined,
-      s"revive refused: no tombstones at ${postRoot(root)} — nothing to " +
-        "revive")
-    val notDead = rel.join(dead.get, Seq("id"), "left_anti")
-      .limit(5).collect().map(_.getLong(0))
-    require(notDead.isEmpty,
-      s"revive refused: ids ${notDead.mkString(", ")} are not taken down " +
-        s"at ${postRoot(root)} as of batch ${batchId - 1}")
-    val dlen = Versions.list(spark, dlenRoot(root))
-    require(dlen.nonEmpty,
-      s"revive refused: ${dlenRoot(root)} is empty — the store predates " +
-        "the takedown-capable layout")
-    Versions.read(spark, dlenRoot(root), dlen.map(_._2.toString))
-      .join(broadcast(rel.select(col("id").as("doc_id"))), "doc_id")
-      .agg(count(lit(1)).cast("long").as("n_docs"),
-        coalesce(sum(col("dl")), lit(0L)).cast("long").as("total_dl"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"${statsRoot(root)}/c$batchId")
-    Versions.revive(spark, postRoot(root), rel, batchId, lease)
+    val rel = Versions.collectIds(ids, "revive")
+    // the dead-as-of-(batchId-1) check runs BEFORE the correction write:
+    // a refused revive must not leave an orphan correction behind
+    Versions.requireDead(spark, postRoot(root), rel, batchId)
+    writeCorrection(spark, root, rel, 1L, batchId, "revive")
+    Versions.writeMarker(spark, postRoot(root), 'r', rel, batchId)
   }
 
   /** The assembled posting relation: plain union, zero exchanges (rows
@@ -369,20 +346,8 @@ object RetrievalStream {
     // then refuse, and the already-revived doc would be left live with
     // no dlen row — a FUTURE takedown of it would subtract (0, 0) and
     // the stats would go silently wrong forever.
-    val pending = Versions.listRevives(spark, postRoot(root))
-      .filter(_._1 > upTo)
-    if (pending.nonEmpty)
-      Versions.deadSet(spark, postRoot(root), upTo).foreach { dead =>
-        val orphaned = Versions.read(spark, s"${postRoot(root)}#d",
-            pending.map(_._2.toString)).select(col("id"))
-          .join(dead, Seq("id"), "left_semi")
-          .limit(5).collect().map(_.getLong(0))
-        require(orphaned.isEmpty,
-          s"compactStore($root, upTo=$upTo) refused: ids " +
-            s"${orphaned.mkString(", ")} have a revive marker newer than " +
-            "the bound but their rows would be physically dropped here — " +
-            "raise upTo past the revive or withdraw it")
-      }
+    Versions.refusePendingRevives(spark, postRoot(root), upTo,
+      s"compactStore($root, upTo=$upTo)")
     // resolve the deleted ids BEFORE the posting compaction consumes the
     // markers (driver-side, so the set survives the delete): ids dead as
     // of upTo (tombstoned, not since revived) — a revived id's rows must

@@ -56,7 +56,7 @@ object SketchStream {
   /** Registers fold by (group, idx)-wise max — read-equivalent by
     * associativity, and idempotent besides. */
   private def hllSpec(groupCols: Seq[String]) = Versions.StoreSpec(
-    "register store", None, foldRegisters(groupCols), rebuildHint = rebuildHint)
+    "register store", Nil, foldRegisters(groupCols), rebuildHint = rebuildHint)
 
   // ---- sketch-parameter pinning ------------------------------------------
   // A register/counter store is bound to the sketch parameters it was
@@ -146,7 +146,7 @@ object SketchStream {
     df.groupBy(col("j"), col("bucket"))
       .agg(sum(col("cnt")).cast("long").as("cnt"))
 
-  private val cmSpec = Versions.StoreSpec("counter store", None, foldCounters,
+  private val cmSpec = Versions.StoreSpec("counter store", Nil, foldCounters,
     rebuildHint = rebuildHint)
 
   /** Write the standing corpus's count-min counters as `root/v0`. */
@@ -203,7 +203,7 @@ object SketchStream {
 
   private def foldBits(df: DataFrame): DataFrame = df.distinct()
 
-  private val bloomSpec = Versions.StoreSpec("bloom store", None, foldBits,
+  private val bloomSpec = Versions.StoreSpec("bloom store", Nil, foldBits,
     rebuildHint = rebuildHint)
 
   /** Write the standing blocklist's set-bit relation as `root/v0`. */

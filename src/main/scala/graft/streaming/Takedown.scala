@@ -264,9 +264,7 @@ object Takedown {
       // a journal is complete iff its parquet commit marker exists —
       // Spark writes _SUCCESS last, so its presence implies full data
       if (!fs.exists(new Path(idsPath, "_SUCCESS"))) {
-        require(sweep.schema.fields.length == 1,
-          s"${what}All takes a single id column, got " +
-            s"${sweep.schema.fieldNames.mkString(", ")}")
+        Versions.requireOneColumn(sweep, s"${what}All")
         // one evaluation of the sweep: the journal write IS its
         // materialization (the old checkpoint + count + write ran it
         // through three actions); the emptiness guard re-reads the

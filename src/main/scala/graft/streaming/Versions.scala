@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{broadcast, col, row_number}
+import org.apache.spark.sql.functions.{broadcast, col, concat_ws, count,
+  expr, lit, row_number, transform}
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
 
@@ -50,14 +51,21 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField,
   * ==Adding a store==
   *
   * Declare one [[StoreSpec]] per versioned root — the store's name for
-  * messages, its id column (`None` for a monotone store, whose
-  * `tombstone` then refuses with the store's rebuild hint), its
-  * compaction fold and its `clusterBy` probe key — and call the spec's
-  * verbs: `writeStanding`, `beginAppend` (lineage guard, then threshold
+  * messages, its id columns (`Nil` for a monotone store, whose
+  * `tombstone` then refuses with the store's rebuild hint; several for a
+  * root whose rows carry more than one item id, like a pair root, which
+  * reads and compaction then mask on every one), its compaction fold and
+  * its `clusterBy` probe key — and call the spec's verbs:
+  * `writeStanding`, `beginAppend` (lineage guard, then threshold
   * auto-compaction with the same fold [[compact]] uses), `read`,
   * `tombstone` and `compact`. The store's file keeps only its kernel
-  * (hash, assign, encode, fold, repair). A model pin lives at
-  * `root/_params` and goes through [[writePin]]/[[readPin]]. */
+  * (hash, assign, encode, fold, repair). Marker state has one owner:
+  * [[deadIds]] answers "is this id dead as of batch b" for every read,
+  * revive check ([[requireDead]]), takedown correction and compaction
+  * ([[refusePendingRevives]]). A model pin lives at `root/_params` and
+  * goes through [[writePin]]/[[readPin]]; a store bound to a trained
+  * relation (a bank, a codebook) pins its content with
+  * [[writeContentPin]] and checks it with [[checkContentPin]]. */
 object Versions {
 
   // --- the single-writer lease protocol ------------------------------------
@@ -354,6 +362,24 @@ object Versions {
       df.join(broadcast(ids.toDF(idCol)), Seq(idCol), "left_anti")
     }
 
+  /** The trickle-probe push: `idx` restricted to the batch's distinct
+    * values of `keys`' one column when there are at most `limit` of them,
+    * as a literal `IN` on the same-named `idx` column — result-identical
+    * for a probe that only joins on that key, and what turns a
+    * compaction-clustered base's row-group zones into scan pruning for
+    * trickle-sized batches. The driver pull is bounded at `limit + 1`
+    * values; `limit <= 0` disables the push. Spark rewrites an `IN` wider
+    * than `spark.sql.parquet.pushdown.inFilterThreshold` (default 10)
+    * into a min/max range, which prunes nothing on uniform hash keys. */
+  private[streaming] def pushKeys(idx: DataFrame, keys: DataFrame,
+      limit: Int): DataFrame =
+    if (limit <= 0) idx
+    else {
+      val ks = keys.distinct().limit(limit + 1).collect().map(_.get(0)).toSeq
+      if (ks.size <= limit) idx.filter(col(keys.columns.head).isin(ks: _*))
+      else idx
+    }
+
   // --- model pins (`root/_params`) ----------------------------------------
 
   /** The one pin layout: (k, v) rows, a name and a long. Pins are read
@@ -385,8 +411,71 @@ object Versions {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
   }
 
+  /** Order-independent content pin of a model relation with a `cv`
+    * vector column: (bit_xor over `fingerprint64` of each row's
+    * `k1:…:kn:v0,v1,…` rendering — the `keyCols` cast to string, then the
+    * comma-joined `cv` — row count). One model-sized fold, deterministic
+    * across partitionings because XOR is commutative and the rendering is
+    * value-only. The count rides along because XOR alone is blind to
+    * PAIRED duplicates (two copies of a row cancel: a crash-double-
+    * appended row would pin identical to the clean model). `what` names
+    * the model in every refusal. */
+  def contentPin(model: DataFrame, keyCols: Seq[String],
+      what: String): (Long, Long) = {
+    val cv = concat_ws(",",
+      transform(col("cv").cast("array<double>"), e => e.cast("string")))
+    val row = model
+      .select(graft.functions.HashFunctions.fingerprint64(concat_ws(":",
+        keyCols.map(col(_).cast("string")) :+ cv: _*)).as("__fp"))
+      .agg(expr("bit_xor(__fp)").as("fp"), count(lit(1)).as("n"))
+      .head()
+    require(row.getLong(1) > 0, s"cannot fingerprint an empty $what")
+    (row.getLong(0), row.getLong(1))
+  }
+
+  /** Pin the content of the model at `modelRoot/v0` ([[contentPin]]) at
+    * `root/_params` as `<prefix>_fp` and `<prefix>_n`. */
+  def writeContentPin(spark: SparkSession, modelRoot: String, root: String,
+      prefix: String, keyCols: Seq[String], what: String): Unit = {
+    val (fp, n) = contentPin(read(spark, modelRoot, Seq(s"$modelRoot/v0")),
+      keyCols, what)
+    writePin(spark, root, Seq(s"${prefix}_fp" -> fp, s"${prefix}_n" -> n))
+  }
+
+  /** Refuse unless the model at `modelRoot/v0` hashes to the content pin
+    * [[writeContentPin]] left at `root/_params` — the identity check a
+    * version-count guard cannot make (the WRONG root, or a same-named
+    * retrain). `refusal` is the mismatch wording after the
+    * "(fingerprint/count …)" figures; `rebuildHint` names the way to
+    * new roots. */
+  def checkContentPin(spark: SparkSession, modelRoot: String, root: String,
+      prefix: String, keyCols: Seq[String], what: String, refusal: String,
+      rebuildHint: String): Unit = {
+    val pin = readPin(spark, root, s"writeStanding (which pins the " +
+      s"fingerprint of the $what) before appending or probing")
+    // a pin without the count (the pre-count single-row format) would fail
+    // every model, even a byte-identical one, with a misleading mismatch
+    require(pin.contains(s"${prefix}_n"),
+      s"$root/_params predates count pinning (${prefix}_fp only) — the " +
+        s"old pin format cannot detect paired-duplicate $what rows; " +
+        s"$rebuildHint (which re-pins (fp, n)) before appending or probing")
+    val pinned = (pin(s"${prefix}_fp"), pin(s"${prefix}_n"))
+    val actual = contentPin(read(spark, modelRoot, Seq(s"$modelRoot/v0")),
+      keyCols, what)
+    require(actual == pinned,
+      s"$what at $modelRoot does not match the $what $root was built " +
+        s"under (fingerprint/count $actual vs pinned $pinned) — $refusal; " +
+        s"use the original $what root or $rebuildHint")
+  }
+
   def list(spark: SparkSession, root: String): Seq[(Long, Path)] =
     listPrefixed(spark, root, 'v')
+
+  /** The batch outputs a stream body wrote to `outRoot/b<batchId>`, read
+    * as explicit paths: a glob read makes Spark's file-sink metadata probe
+    * stat the literal glob and log a stack trace per read. */
+  def readBatches(spark: SparkSession, outRoot: String): DataFrame =
+    spark.read.parquet(listPrefixed(spark, outRoot, 'b').map(_._2.toString): _*)
 
   /** Batch-id-named sibling dirs `root/<prefix><batchId>` — the shared
     * lister behind version (`v`), tombstone-marker (`d`), and in-band
@@ -442,12 +531,30 @@ object Versions {
       batchId: Long, lease: Option[Lease] = None): Unit = {
     checkWriter(spark, root, lease)
     require(ids.nonEmpty, "tombstone of an empty id set")
+    requireStore(spark, root)
+    writeMarker(spark, root, 'd', ids, batchId)
+  }
+
+  /** Refuse a takedown on a root without its standing `v0`. */
+  private[streaming] def requireStore(spark: SparkSession,
+      root: String): Unit =
     require(list(spark, root).exists(_._1 == 0L),
       s"tombstone refused: $root/v0 missing — the store must exist before " +
         "ids can be retracted from it")
+
+  /** Refuse an id relation of more than one column; `verb` names the
+    * caller. */
+  private[streaming] def requireOneColumn(ids: DataFrame, verb: String): Unit =
+    require(ids.schema.fields.length == 1,
+      s"$verb takes a single id column, got ${ids.columns.mkString(", ")}")
+
+  /** Write the marker `root/<kind><batchId>` (`d` takedown, `r` revive)
+    * holding the driver-resolved `ids` as one file. */
+  private[streaming] def writeMarker(spark: SparkSession, root: String,
+      kind: Char, ids: Seq[Long], batchId: Long): Unit = {
     import spark.implicits._
     ids.toDF("id").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/d$batchId")
+      .write.mode("overwrite").parquet(s"$root/$kind$batchId")
   }
 
   /** [[tombstone]] with the retracted ids as a RELATION — the
@@ -468,12 +575,8 @@ object Versions {
   def tombstoneFrom(spark: SparkSession, root: String, ids: DataFrame,
       batchId: Long, lease: Option[Lease] = None): Unit = {
     checkWriter(spark, root, lease)
-    require(ids.schema.fields.length == 1,
-      s"tombstoneFrom takes a single id column, got ${ids.schema.fieldNames
-        .mkString(", ")}")
-    require(list(spark, root).exists(_._1 == 0L),
-      s"tombstone refused: $root/v0 missing — the store must exist before " +
-        "ids can be retracted from it")
+    requireOneColumn(ids, "tombstoneFrom")
+    requireStore(spark, root)
     // ids that cast to null (a wrong-typed sweep column) would survive
     // distinct() and satisfy the non-empty guard while masking nothing —
     // the exact forever-read waste the empty-set refusal exists to prevent.
@@ -504,6 +607,19 @@ object Versions {
     ids.toDF("id").select(col("id").cast("long").as("id"))
       .filter(col("id").isNotNull)
       .distinct()
+
+  /** A takedown- or revive-sized id relation on the driver, with
+    * [[idRelation]]'s hygiene applied there (one long-castable column,
+    * nulls dropped, deduplicated — one collect, no shuffle); refused when
+    * empty. `verb` names the caller in the refusals. */
+  private[streaming] def collectIds(ids: DataFrame, verb: String)
+      : Seq[Long] = {
+    requireOneColumn(ids, verb)
+    val rel = ids.toDF("id").select(col("id").cast("long")).collect()
+      .filterNot(_.isNullAt(0)).map(_.getLong(0)).distinct.sorted.toSeq
+    require(rel.nonEmpty, s"$verb of an empty id set")
+    rel
+  }
 
   /** Marker deltas under `root` (`d<batchId>` dirs), sorted by batch. */
   def listTombstones(spark: SparkSession, root: String): Seq[(Long, Path)] =
@@ -546,21 +662,18 @@ object Versions {
   def revive(spark: SparkSession, root: String, ids: DataFrame,
       batchId: Long, lease: Option[Lease] = None): Unit = {
     checkWriter(spark, root, lease)
-    require(ids.schema.fields.length == 1,
-      s"revive takes a single id column, got ${ids.schema.fieldNames
-        .mkString(", ")}")
-    val rel = idRelation(ids).localCheckpoint(true)
-    require(rel.limit(1).count() > 0, "revive of an empty id set")
-    val dead = deadSet(spark, root, upTo = batchId - 1)
-    require(dead.isDefined,
-      s"revive refused: no tombstones at $root — nothing to revive")
-    val notDead = rel.join(dead.get, Seq("id"), "left_anti")
-      .limit(5).collect().map(_.getLong(0))
-    require(notDead.isEmpty,
-      s"revive refused: ids ${notDead.mkString(", ")} are not taken down " +
-        s"at $root as of batch ${batchId - 1} (already live, never " +
-        "retracted, or physically compacted away)")
-    rel.coalesce(1).write.mode("overwrite").parquet(s"$root/r$batchId")
+    val rel = collectIds(ids, "revive")
+    requireDead(spark, root, rel, batchId)
+    writeMarker(spark, root, 'r', rel, batchId)
+  }
+
+  /** The ids a `d`/`r` marker directory holds, resolved once per listing
+    * ([[resolveRows]]). */
+  private def markerIds(spark: SparkSession, root: String,
+      dir: Path): Seq[Long] = {
+    val (schema, rows) = resolveRows(spark, s"$root#d", dir)
+    val i = schema.fieldIndex("id")
+    rows.toSeq.filterNot(_.isNullAt(i)).map(_.getLong(i))
   }
 
   /** The ids dead at `upTo` — tombstoned and not since revived (per id,
@@ -574,10 +687,7 @@ object Versions {
     if (ds.isEmpty) None
     else {
       def newest(dirs: Seq[(Long, Path)]): Map[Long, Long] = dirs
-        .flatMap { case (b, p) =>
-          val (schema, rows) = resolveRows(spark, s"$root#d", p)
-          val i = schema.fieldIndex("id")
-          rows.filterNot(_.isNullAt(i)).map(_.getLong(i) -> b) }
+        .flatMap { case (b, p) => markerIds(spark, root, p).map(_ -> b) }
         .groupMapReduce(_._1)(_._2)(math.max)
       val revived = newest(listRevives(spark, root).filter(_._1 <= upTo))
       Some(newest(ds).collect {
@@ -586,12 +696,39 @@ object Versions {
     }
   }
 
-  /** [[deadIds]] as a local `id` relation — for the callers that join a
-    * relation (sweeps, revive checks, compaction folds). */
-  def deadSet(spark: SparkSession, root: String,
-      upTo: Long = Long.MaxValue): Option[DataFrame] = {
-    import spark.implicits._
-    deadIds(spark, root, upTo).map(_.toDF("id"))
+  /** The revive check: refuse unless every id of `ids` is dead at `root`
+    * as of the markers strictly before `batchId` ([[deadIds]] on the
+    * driver; redelivery-stable because the batch's own marker is
+    * ignored). Run it before any write a refused revive must not leave
+    * behind. */
+  private[streaming] def requireDead(spark: SparkSession, root: String,
+      ids: Seq[Long], batchId: Long): Unit = {
+    val dead = deadIds(spark, root, upTo = batchId - 1)
+    require(dead.isDefined,
+      s"revive refused: no tombstones at $root — nothing to revive")
+    val notDead = ids.filterNot(dead.get.toSet).take(5)
+    require(notDead.isEmpty,
+      s"revive refused: ids ${notDead.mkString(", ")} are not taken down " +
+        s"at $root as of batch ${batchId - 1} (already live, never " +
+        "retracted, or physically compacted away)")
+  }
+
+  /** The pending-revive refusal of every physical fold of `root`'s markers
+    * at `upTo`: an id dead at `upTo` whose revive marker is newer than the
+    * bound would be physically dropped, turning the revive into a
+    * permanent no-op. Intersects the resolved `r<N>` rows above the bound
+    * with [[deadIds]] on the driver; `what` prefixes the refusal. */
+  private[streaming] def refusePendingRevives(spark: SparkSession,
+      root: String, upTo: Long, what: String): Unit = {
+    val pending = listRevives(spark, root).filter(_._1 > upTo)
+      .flatMap { case (_, p) => markerIds(spark, root, p) }
+    if (pending.nonEmpty) deadIds(spark, root, upTo).foreach { dead =>
+      val orphaned = pending.filter(dead.toSet).distinct.sorted.take(5)
+      require(orphaned.isEmpty,
+        s"$what refused: ids ${orphaned.mkString(", ")} have a revive " +
+          "marker newer than the bound but their rows would be physically " +
+          "dropped here — raise upTo past the revive or withdraw it")
+    }
   }
 
   /** Mask tombstoned ids (markers `<= upTo`) out of a store read on
@@ -604,29 +741,32 @@ object Versions {
     * keep their exact pre-tombstone plans. */
   def maskTombstones(spark: SparkSession, root: String, df: DataFrame,
       idCol: String, upTo: Long = Long.MaxValue): DataFrame =
-    deadIds(spark, root, upTo).fold(df)(withoutIds(df, idCol, _))
+    maskIds(spark, root, df, Seq(idCol), upTo)
 
-  /** Version-count-threshold auto-compaction for `foreachBatch` bodies
-    * (VERDICT r7 #6: [[compact]] existed but nothing called it
-    * automatically, so a long-lived stream's per-batch read fan-in grew
-    * with stream lifetime): when more than `threshold` versions are
-    * visible to the executing batch (ids <= `batchId`), fold them into
-    * the base with `transform`, bounding every batch's read at
-    * `threshold + 1` version roots regardless of how long the stream has
-    * run. Call it AFTER the store's lineage guard, at batch start —
-    * `upTo = batchId` is then within [[compact]]'s safety bound (the
-    * executing batch is uncommitted, so every committed batch is
-    * < `batchId`). A redelivered batch that already compacted sees a
-    * single base below threshold and skips; reads are version-set
-    * invariant either way, so outputs stay byte-identical. */
-  private[streaming] def autoCompact(spark: SparkSession, root: String,
-      batchId: Long, threshold: Int, transform: DataFrame => DataFrame,
-      tombstoneIdCol: Option[String], clusterBy: Seq[String]): Unit = {
-    require(threshold >= 1, s"autoCompact threshold must be >= 1: $threshold")
-    val visible = list(spark, root).filter(_._1 <= batchId)
-    if (visible.size > threshold)
-      compact(spark, root, batchId, transform, tombstoneIdCol, clusterBy)
-  }
+  /** [[maskTombstones]] on every one of `idCols` (a pair root masks both
+    * endpoints) with one [[deadIds]] resolution. */
+  private[streaming] def maskIds(spark: SparkSession, root: String,
+      df: DataFrame, idCols: Seq[String], upTo: Long): DataFrame =
+    if (idCols.isEmpty) df
+    else deadIds(spark, root, upTo)
+      .fold(df)(ids => idCols.foldLeft(df)(withoutIds(_, _, ids)))
+
+  /** Whether version-count-threshold auto-compaction is due in a
+    * `foreachBatch` body at `batchId` (`None` never is): more than
+    * `threshold` versions are visible to the batch (ids <= `batchId`).
+    * Folding them then bounds every batch's read at `threshold + 1`
+    * version roots however long the stream has run. Check it AFTER the
+    * store's lineage guard, at batch start — `upTo = batchId` is then
+    * within [[compact]]'s safety bound (the executing batch is
+    * uncommitted, so every committed batch is < `batchId`). A redelivered
+    * batch that already compacted sees a single base below threshold and
+    * skips; reads are version-set invariant either way. */
+  private[streaming] def compactionDue(spark: SparkSession, root: String,
+      batchId: Long, threshold: Option[Int]): Boolean =
+    threshold.exists { k =>
+      require(k >= 1, s"autoCompactVersions must be >= 1: $k")
+      list(spark, root).count(_._1 <= batchId) > k
+    }
 
   /** Merge deltas `v0..v<upTo>` into one new base snapshot named `v0`,
     * leaving newer deltas untouched — the maintenance operation that keeps
@@ -720,33 +860,16 @@ object Versions {
     val merged = versions.filter(_._1 <= upTo)
     require(merged.size >= 2 || (allowSingle && merged.nonEmpty),
       s"nothing to compact at $root: ${merged.size} version(s) <= v$upTo")
-    if (tombstoneIdCol.isDefined) {
-      // physical deletion is final: a revive marker newer than the bound
-      // whose tombstone this fold would consume becomes a permanent
-      // no-op (its rows are about to be dropped) — refuse loud
-      val pending = listRevives(spark, root).filter(_._1 > upTo)
-      if (pending.nonEmpty) deadSet(spark, root, upTo).foreach { dead =>
-        val orphaned = read(spark, s"$root#d",
-            pending.map(_._2.toString)).select(col("id"))
-          .join(dead, Seq("id"), "left_semi")
-          .limit(5).collect().map(_.getLong(0))
-        require(orphaned.isEmpty,
-          s"compact($root, upTo=$upTo) refused: ids " +
-            s"${orphaned.mkString(", ")} have a revive marker newer than " +
-            "the bound but would be physically dropped here — raise upTo " +
-            "past the revive or withdraw it")
-      }
-    }
+    // physical deletion is final: refuse a fold that would consume a
+    // tombstone whose revive is newer than the bound
+    if (tombstoneIdCol.isDefined)
+      refusePendingRevives(spark, root, upTo, s"compact($root, upTo=$upTo)")
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new Path(rootPath, ".compact_tmp")
-    val folded = read(spark, root,
-      merged.map(_._2.toString) ++ extraDirs.map(_.toString))
-    val masked = tombstoneIdCol match {
-      case Some(idCol) => maskTombstones(spark, root, folded, idCol, upTo)
-      case None        => folded
-    }
-    val shaped = transform(masked)
+    val shaped = transform(maskIds(spark, root, read(spark, root,
+      merged.map(_._2.toString) ++ extraDirs.map(_.toString)),
+      tombstoneIdCol.toSeq, upTo))
     val clustered =
       if (clusterBy.isEmpty) shaped
       else shaped.repartitionByRange(clusterBy.map(col): _*)
@@ -775,16 +898,16 @@ object Versions {
   /** One versioned root's lifecycle, declared once per store:
     *
     *   - `what` names the store in every guard and refusal message;
-    *   - `idCol` is the item-id column reads mask and compaction drops
-    *     tombstoned ids on, or `None` for a MONOTONE store (no per-item
-    *     provenance), whose [[StoreSpec.tombstone]] refuses with
-    *     `rebuildHint`;
+    *   - `idCols` are the item-id columns reads mask and compaction drops
+    *     tombstoned ids on (both endpoints of a pair root), or `Nil` for
+    *     a MONOTONE store (no per-item provenance), whose
+    *     [[StoreSpec.tombstone]] refuses with `rebuildHint`;
     *   - `fold` is the read-equivalent compaction transform (see
     *     [[compact]]), used by auto-compaction on the append path and by
     *     [[StoreSpec.compact]] alike, so the two can never drift apart;
     *   - `clusterBy` is the probe key the folded base sorts by;
     *   - `missingHint` names the store's bootstrap entry point. */
-  final case class StoreSpec(what: String, idCol: Option[String],
+  final case class StoreSpec(what: String, idCols: Seq[String],
       fold: DataFrame => DataFrame = identity,
       clusterBy: Seq[String] = Nil,
       missingHint: String = "writeStanding before starting the stream",
@@ -804,12 +927,12 @@ object Versions {
         lease: Option[Lease] = None): Unit =
       Versions.guardAppend(spark, root, what, batchId, missingHint, lease)
 
-    /** Threshold auto-compaction with this store's own fold
-      * ([[Versions.autoCompact]]); `None` never compacts. */
+    /** Threshold auto-compaction with this store's own fold; `None` never
+      * compacts ([[compactionDue]]). */
     def autoCompact(spark: SparkSession, root: String, batchId: Long,
         threshold: Option[Int]): Unit =
-      threshold.foreach(k => Versions.autoCompact(spark, root, batchId, k,
-        fold, idCol, clusterBy))
+      if (compactionDue(spark, root, batchId, threshold))
+        compact(spark, root, batchId)
 
     /** The append prologue every `foreachBatch` body runs before touching
       * the root: lineage guard, then threshold auto-compaction. */
@@ -821,29 +944,31 @@ object Versions {
 
     /** Every version `<= upTo` as a plain scan union (rows unique across
       * deltas, or merged by the caller's own fold), tombstoned ids masked
-      * on `idCol` ([[maskTombstones]] — the plan is untouched when no
-      * takedown happened). */
+      * on every id column ([[maskTombstones]] — the plan is untouched when
+      * no takedown happened). */
     def read(spark: SparkSession, root: String, upTo: Long): DataFrame = {
       val versions = list(spark, root).filter(_._1 <= upTo)
       require(versions.nonEmpty, s"no $what versions at $root")
-      val df = Versions.read(spark, root, versions.map(_._2.toString))
-      idCol.fold(df)(maskTombstones(spark, root, df, _, upTo))
+      maskIds(spark, root, Versions.read(spark, root,
+        versions.map(_._2.toString)), idCols, upTo)
     }
 
     /** [[Versions.tombstone]] on a store with ids; a monotone store
       * refuses and points at its rebuild lifecycle. */
     def tombstone(spark: SparkSession, root: String, ids: Seq[Long],
         batchId: Long): Unit =
-      if (idCol.isDefined) Versions.tombstone(spark, root, ids, batchId)
+      if (idCols.nonEmpty) Versions.tombstone(spark, root, ids, batchId)
       else throw new UnsupportedOperationException(
         s"tombstone($root, ${ids.size} ids, batch $batchId) refused: " +
           rebuildHint)
 
-    /** [[Versions.compact]] with this store's fold, tombstone drop and
-      * clustering. */
+    /** [[Versions.compact]] with this store's fold, tombstone drop on every
+      * id column (the first consumes the markers; the rest are masked with
+      * the same dead set before the consumption) and clustering. */
     def compact(spark: SparkSession, root: String, upTo: Long,
         allowSingle: Boolean = false, lease: Option[Lease] = None): Unit =
-      Versions.compact(spark, root, upTo, fold, idCol, clusterBy,
-        allowSingle, lease = lease)
+      Versions.compact(spark, root, upTo,
+        df => fold(maskIds(spark, root, df, idCols.drop(1), upTo)),
+        idCols.headOption, clusterBy, allowSingle, lease = lease)
   }
 }

@@ -264,14 +264,14 @@ class AdviceRegressionSpec extends SparkSpec {
     val ahRoot = dir("spec_ah_")
     AHashStream.writeStanding(spark, ahRoot,
       media.filter(col("media_id") < 20), hasher = hash)
-    AHashStream.appendBatch(spark, ahRoot, s"$ahRoot.out", "media_id",
+    AHashStream.filterBatch(spark, ahRoot, s"$ahRoot.out", "media_id",
       "payload", hasher = hash)(media.filter(col("media_id") >= 20), 0L)
     val fp = (df: DataFrame) =>
       df.select(col("media_id"), xxhash64(col("payload")).as("fp"))
     val fpRoot = dir("spec_fp_")
     MediaFpStream.writeStanding(spark, fpRoot,
       media.filter(col("media_id") < 20), fp)
-    MediaFpStream.appendBatch(spark, fpRoot, s"$fpRoot.out", fp)(
+    MediaFpStream.filterBatch(spark, fpRoot, s"$fpRoot.out", fp)(
       media.filter(col("media_id") >= 20), 0L)
     val emb = (0L until 48L).map(i =>
       (i, Array.tabulate(8)(d => ((i * 7 + d * 3) % 11).toFloat)))

@@ -613,7 +613,7 @@ class PlanSpec extends SparkSpec {
     val standing = images.filter(_.media_id < 250).toDF()
       .select(col("media_id"), col("payload"))
     AHashStream.writeStanding(spark, s"$root/idx", standing)
-    AHashStream.appendBatch(spark, s"$root/idx", s"$root/out",
+    AHashStream.filterBatch(spark, s"$root/idx", s"$root/out",
       "media_id", "payload")(
       Multimodal.plantImageVariants(images.filter(_.media_id < 30)).toDF()
         .select(col("media_id"), col("payload")), 0L)

@@ -1081,7 +1081,7 @@ class StreamingSpec extends SparkSpec {
       images.filter(_.media_id < 30)).toDF()
       .select(col("media_id"), col("payload")).localCheckpoint(true)
     AHashStream.writeStanding(spark, s"$root/idx", standing)
-    val append = AHashStream.appendBatch(spark, s"$root/idx", s"$root/out",
+    val append = AHashStream.filterBatch(spark, s"$root/idx", s"$root/out",
       "media_id", "payload") _
     val b0 = plants.filter(pmod(col("media_id"), lit(2)) === 0)
     val b1 = plants.filter(pmod(col("media_id"), lit(2)) === 1)
@@ -1109,7 +1109,7 @@ class StreamingSpec extends SparkSpec {
     val eFork = intercept[IllegalArgumentException] { append(b0, 0L) }
     assert(eFork.getMessage.contains("fork"), eFork.getMessage)
     val eH = intercept[IllegalArgumentException] {
-      AHashStream.appendBatch(spark, s"$root/idx", s"$root/out",
+      AHashStream.filterBatch(spark, s"$root/idx", s"$root/out",
         "media_id", "payload", maxHamming = 7)(b0, 2L)
     }
     assert(eH.getMessage.contains("pigeonhole"), eH.getMessage)
@@ -1144,7 +1144,7 @@ class StreamingSpec extends SparkSpec {
         .map(r => r.copy(media_id = r.media_id + 10000)).toDF()
         .select(col("media_id"), col("payload")).localCheckpoint(true)
       MediaFpStream.writeStanding(spark, s"$root/idx", standing, profiler)
-      val append = MediaFpStream.appendBatch(spark, s"$root/idx",
+      val append = MediaFpStream.filterBatch(spark, s"$root/idx",
         s"$root/out", profiler) _
       val b0 = plants.filter(pmod(col("media_id"), lit(2)) === 0)
       val b1 = plants.filter(pmod(col("media_id"), lit(2)) === 1)
@@ -1927,5 +1927,30 @@ class StreamingSpec extends SparkSpec {
     callback(rc, masksC, bgC)(b1, 1L)
     assert(snapshot(rc) === want,
       "crash between pairs and band deltas must converge")
+  }
+
+  test("content pins are stable: a fixed bank and a fixed codebook hash to " +
+      "the (fp, n) values earlier builds pinned, under the same pin keys") {
+    import graft.streaming.{IvfStream, PqStream, Versions}
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("pinstable_").toString
+    val bank = Seq((0, Seq(0.5, -1.25, 3.0)), (1, Seq(1.0e-4, 2.5, 0.0)),
+      (2, Seq(7.0, 8.125, -0.5))).toDF("cell", "cv")
+    val book = Seq((0, 0, Seq(0.5, 1.5)), (0, 1, Seq(-2.0, 0.25)),
+      (1, 0, Seq(3.0, 4.0)), (1, 1, Seq(1.0e-3, -7.5))).toDF("j", "code", "cv")
+    val (bankPin, bookPin) = ((-5521700838055837850L, 3L),
+      (7785996275254967018L, 4L))
+    assert(Versions.contentPin(bank, Seq("cell"), "bank") === bankPin)
+    assert(Versions.contentPin(book, Seq("j", "code"), "codebook") === bookPin)
+    // a store pinned by an earlier build still opens: literal pin rows
+    // under the old keys pass the checks
+    bank.write.parquet(s"$root/bank/v0")
+    book.write.parquet(s"$root/book/v0")
+    Versions.writePin(spark, s"$root/idx",
+      Seq("bank_fp" -> bankPin._1, "bank_n" -> bankPin._2))
+    Versions.writePin(spark, s"$root/codes",
+      Seq("book_fp" -> bookPin._1, "book_n" -> bookPin._2))
+    IvfStream.checkBank(spark, s"$root/bank", s"$root/idx")
+    PqStream.checkBook(spark, s"$root/book", s"$root/codes")
   }
 }

@@ -927,8 +927,8 @@ class TombstoneSpec extends SparkSpec {
     RetrievalStream.tombstone(spark, root, Seq(2L), 2L)
     // simulate the crash: dlen + posting steps completed (both marker
     // batches consumed), the stats step never ran
-    val delIds = Versions.deadSet(spark, s"$root/post", 2L).get
-      .select(col("id").as("doc_id")).localCheckpoint(true)
+    val delIds = spark.createDataFrame(Versions.deadIds(spark, s"$root/post",
+        2L).get.map(Tuple1(_))).toDF("doc_id").localCheckpoint(true)
     Versions.compact(spark, s"$root/dlen", 2L,
       df => df.join(broadcast(delIds), Seq("doc_id"), "left_anti"),
       allowSingle = true)
@@ -1018,5 +1018,36 @@ class TombstoneSpec extends SparkSpec {
     Versions.tombstone(spark, root, 100L to 100L + Versions.PushIdLimit, 1L)
     assert(Versions.deadIds(spark, root).get.size > Versions.PushIdLimit)
     assert(kept === Seq("a", "b"))
+  }
+
+  test("a refused RetrievalStream.revive writes no stats correction: a " +
+      "live id and a compacted-away id leave no stats/c<batchId>, no revive " +
+      "marker and readStats unchanged") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("tomb_rvref_")
+      .toString
+    RetrievalStream.writeStanding(spark, root,
+      docs.filter(col("doc_id") < 40))
+    // ids 1 and 2 are compacted away; id 3 stays dead behind a live
+    // marker, so every refusal below is the per-id check
+    RetrievalStream.tombstone(spark, root, Seq(1L, 2L), 1L)
+    RetrievalStream.compactStore(spark, root, upTo = 1L)
+    RetrievalStream.tombstone(spark, root, Seq(3L), 2L)
+    def stats(): Seq[String] =
+      RetrievalStream.readStats(spark, root).collect().map(_.toString).toSeq
+    val before = stats()
+    for (ids <- Seq(Seq(5L), Seq(1L), Seq(3L, 5L), Seq(2L, 3L))) {
+      val e = intercept[IllegalArgumentException] {
+        RetrievalStream.revive(spark, root, ids.toDF("id"), 3L)
+      }
+      assert(e.getMessage.contains("not taken down"), e.getMessage)
+      assert(!Versions.listPrefixed(spark, s"$root/stats", 'c')
+        .exists(_._1 == 3L), s"refused revive of $ids left stats/c3")
+      assert(Versions.listRevives(spark, s"$root/post").isEmpty)
+      assert(stats() === before, s"refused revive of $ids moved readStats")
+    }
+    // the same store still revives a dead id
+    RetrievalStream.revive(spark, root, Seq(3L).toDF("id"), 3L)
+    assert(stats() !== before)
   }
 }
