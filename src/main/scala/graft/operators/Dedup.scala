@@ -1,8 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.SparkEnv
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.graftshim.ColumnBridge
 import graft.core.UnionFind
 import graft.functions.{HashFunctions, TextFunctions}
 
@@ -536,19 +542,16 @@ object Dedup {
   def minhashBandIndex(
       docs: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 64, bands: Int = 16,
-      shingleSize: Int = 3, seed: Long = 42L): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
-    val shingles = array_distinct(TextFunctions.tokenShingles(
-      TextFunctions.tokens(col(textCol)), shingleSize))
-    docs.select(col(idCol).as("id"),
-        HashFunctions.minhashSignature(shingles, numHashes, seed).as("sig"))
-      .select(col("id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice(col("sig"), b * rowsPerBand + 1,
-            lit(rowsPerBand)), b))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-  }
+      shingleSize: Int = 3, seed: Long = 42L): DataFrame =
+    minhashBandedRows(docs.select(col(idCol).as("id"),
+      tokenShingleSet(col(textCol), shingleSize).as("sh")),
+      numHashes, bands, seed)
+
+  /** The distinct word `shingleSize`-gram set of a text column — what the
+    * band index signs and the incremental probe verifies. */
+  private def tokenShingleSet(text: Column, shingleSize: Int): Column =
+    array_distinct(TextFunctions.tokenShingles(TextFunctions.tokens(text),
+      shingleSize))
 
   /** Persist a [[minhashBandIndex]] as a table bucketed (and sorted) on
     * (band, bucket) — the standing side of [[minhashPairsIncremental]]'s
@@ -581,18 +584,22 @@ object Dedup {
     * near-dup. New docs band as usual; cross-set candidates form ONLY where
     * a new doc's (band, bucket) hits the persisted [[minhashBandIndex]] —
     * the existing corpus never re-shingles, and its text is re-read only
-    * for docs that actually share a bucket with the batch (a semi-join
-    * before the shingle verify). In-batch pairs come from the standard
-    * [[minhashPairs]]. Returns (id_a, id_b, jaccard) with new-batch ids on
-    * at least one side.
+    * for docs that actually share a bucket with the batch. In-batch
+    * candidates come from the batch's own band rows under [[bucketPairs]]'
+    * cap, verified like [[minhashPairs]]. Returns (id_a, id_b, jaccard)
+    * with new-batch ids on at least one side.
+    *
+    * Two paths return the same rows, and the batch's size picks one: a
+    * batch whose driver pulls fit the in-memory budget (4M rows, the
+    * connected-components loop's own budget, and half of
+    * `spark.driver.maxResultSize` in bytes) is paired and verified on the
+    * driver ([[probeLocal]]); a larger one, or one with non-Long ids, runs
+    * the distributed plan ([[probeDistributed]]).
     *
     * `newBandedOpt`: a caller that already banded the batch (the
-    * [[graft.streaming.NearDupStream]] delta write — which also needs the
-    * batch's buckets for its trickle-probe push) passes the relation here
-    * so the batch's shingle+minhash chain runs ONCE per trigger instead
-    * of twice; it must be exactly [[minhashBandIndex]] of `newDocs` under
-    * the same parameters (banding is deterministic, so results are
-    * byte-identical either way). */
+    * [[graft.streaming.NearDupStream]] delta write) passes the relation
+    * here; it must be exactly [[minhashBandIndex]] of `newDocs` under the
+    * same parameters. */
   def minhashPairsIncremental(
       newDocs: DataFrame, idCol: String, textCol: String,
       existingIndex: DataFrame, existingDocs: DataFrame,
@@ -600,12 +607,223 @@ object Dedup {
       shingleSize: Int = 3, threshold: Double = 0.6,
       maxBucketSize: Int = 200, seed: Long = 42L,
       newBandedOpt: Option[DataFrame] = None): DataFrame = {
-    val inBatch = minhashPairs(newDocs, idCol, textCol, numHashes, bands,
-      shingleSize, threshold, maxBucketSize, seed)
+    val banded = newBandedOpt.getOrElse(minhashBandIndex(newDocs, idCol,
+      textCol, numHashes, bands, shingleSize, seed))
+    probeLocal(newDocs, idCol, textCol, existingIndex, existingDocs,
+        shingleSize, threshold, maxBucketSize, banded)
+      .getOrElse(probeDistributed(newDocs, idCol, textCol, existingIndex,
+        existingDocs, shingleSize, threshold, maxBucketSize, banded))
+  }
 
-    val newBanded = newBandedOpt.getOrElse(
-      minhashBandIndex(newDocs, idCol, textCol, numHashes,
-        bands, shingleSize, seed))
+  /** [[minhashPairsIncremental]]'s in-memory path over the batch's band
+    * rows `newBanded`, or None when the batch is past the budget or an id
+    * column is not Long. The reference folds a batch inside one worker; a
+    * trickle batch's probe as a distributed plan is ~15 query stage jobs
+    * for a few hundred candidate pairs. This path is three driver pulls,
+    * each ONE job over a scan (no exchange) bounded by [[pullWithin]]:
+    *   1. the batch: its shingle sets and its band rows, one union;
+    *   2. the standing band rows whose bucket the batch holds;
+    *   3. the shingle sets of the standing docs that are candidates, by id.
+    * Pulls 2 and 3 filter the scan by the keys pull 1 and 2 brought back
+    * ([[inSet]], no job). The driver then forms and verifies candidates
+    * exactly as the plan does: in-batch buckets of 2 to `maxBucketSize`
+    * rows, cross buckets of at most `maxBucketSize` joined rows, distinct
+    * (new, old) candidates, and every shingle-set row of each candidate id
+    * verified (a repeated id pairs once per row, as the join does). The
+    * pairs come back as a one-partition local relation.
+    *
+    * `budget` and `bytes` bound each pull (rows, and [[pulledBytes]] in
+    * all); they are arguments only so a test can force the fallback. */
+  private[graft] def probeLocal(
+      newDocs: DataFrame, idCol: String, textCol: String,
+      existingIndex: DataFrame, existingDocs: DataFrame,
+      shingleSize: Int, threshold: Double, maxBucketSize: Int,
+      newBanded: DataFrame, budget: Long = LoopEdgesPerPartition,
+      bytes: Long = pullByteBudget): Option[DataFrame] = {
+    val spark = newDocs.sparkSession
+    def isLong(df: DataFrame, c: String) =
+      df.select(col(c)).schema.head.dataType == LongType
+    if (!(isLong(newDocs, idCol) && isLong(newBanded, "id") &&
+        isLong(newBanded, "bucket") && isLong(existingIndex, "id") &&
+        isLong(existingIndex, "bucket") && isLong(existingDocs, idCol)))
+      return None
+
+    val sh = tokenShingleSet(col(textCol), shingleSize)
+    val shType = newDocs.select(sh).schema.head.dataType
+    val batchRows = pullWithin(newDocs.select(lit(true).as("is_sh"),
+        col(idCol).as("id"), sh.as("sh"), lit(null).cast(IntegerType)
+          .as("band"), lit(null).cast(LongType).as("bucket"))
+      .unionAll(newBanded.select(lit(false), col("id"),
+        lit(null).cast(shType), col("band").cast(IntegerType), col("bucket"))),
+      budget, bytes)
+    if (batchRows.isEmpty) return None
+    type Ids = mutable.ArrayBuffer[java.lang.Long]
+    def idAt(r: Row, i: Int): java.lang.Long =
+      if (r.isNullAt(i)) null else java.lang.Long.valueOf(r.getLong(i))
+    def shAt(r: Row, i: Int): Option[Set[String]] =
+      Option(r.getSeq[String](i)).map(_.toSet)
+    val newSh = mutable.HashMap.empty[Long, Vector[Option[Set[String]]]]
+    val newByKey = mutable.LinkedHashMap.empty[(Int, Long), Ids]
+    batchRows.get.foreach { r =>
+      val id = idAt(r, 1)
+      if (!r.getBoolean(0))
+        newByKey.getOrElseUpdate((r.getInt(3), r.getLong(4)),
+          mutable.ArrayBuffer.empty) += id
+      else if (id != null)
+        newSh(id) = newSh.getOrElse(id, Vector.empty) :+ shAt(r, 2)
+    }
+
+    // the standing band rows of the batch's buckets (a row of another band
+    // finds no batch key below), then the standing docs of the candidates
+    val oldByKey = mutable.HashMap.empty[(Int, Long), Ids]
+    if (newByKey.nonEmpty) {
+      val rows = pullWithin(existingIndex
+          .filter(inSet(col("bucket"), newByKey.keysIterator.map(_._2).toSet))
+          .select(col("id"), col("band").cast(IntegerType), col("bucket")),
+        budget, bytes)
+      if (rows.isEmpty) return None
+      rows.get.foreach(r => if (!r.isNullAt(1)) oldByKey.getOrElseUpdate(
+        (r.getInt(1), r.getLong(2)), mutable.ArrayBuffer.empty) += idAt(r, 0))
+    }
+    // a bucket's cap counts its joined rows, null ids included
+    val cross = mutable.LinkedHashSet.empty[(Long, Long)]
+    for ((k, olds) <- oldByKey; news <- newByKey.get(k)
+         if news.size.toLong * olds.size <= maxBucketSize;
+         n <- news if n != null; o <- olds if o != null)
+      cross += ((n.longValue, o.longValue))
+    val oldSh = mutable.HashMap.empty[Long, Vector[Option[Set[String]]]]
+    if (cross.nonEmpty) {
+      val rows = pullWithin(existingDocs
+          .filter(inSet(col(idCol), cross.iterator.map(_._2).toSet))
+          .select(col(idCol), sh), budget, bytes)
+      if (rows.isEmpty) return None
+      rows.get.foreach { r =>
+        val id = r.getLong(0)
+        oldSh(id) = oldSh.getOrElse(id, Vector.empty) :+ shAt(r, 1)
+      }
+    }
+
+    // jaccardExpr on the driver: a null set sizes to null under ANSI (no
+    // pair) and to -1 under the legacy setting (-1 / -1 = 1.0)
+    val sizeOfNull = spark.sessionState.conf.legacySizeOfNull
+    def jaccard(a: Option[Set[String]], b: Option[Set[String]]) =
+      (a, b) match {
+        case (Some(x), Some(y)) =>
+          val inter = x.count(y.contains)
+          val uni = x.size + y.size - inter
+          Some(if (uni == 0) 0.0 else inter.toDouble / uni.toDouble)
+        case _ => if (sizeOfNull) Some(1.0) else None
+      }
+    val out = mutable.ArrayBuffer.empty[Row]
+    def verify(a: Long, b: Long, as: Seq[Option[Set[String]]],
+        bs: Seq[Option[Set[String]]]): Unit =
+      for (x <- as; y <- bs; j <- jaccard(x, y) if j >= threshold)
+        out += Row(math.min(a, b), math.max(a, b), j)
+    val inBatch = mutable.LinkedHashSet.empty[(Long, Long)]
+    newByKey.valuesIterator.filter(ids => ids.size >= 2 &&
+        ids.size <= maxBucketSize).foreach { ids =>
+      val live = ids.filter(_ != null).map(_.longValue)
+      for (i <- live.indices; j <- i + 1 until live.size)
+        inBatch += ((math.min(live(i), live(j)), math.max(live(i), live(j))))
+    }
+    def shOf(m: mutable.HashMap[Long, Vector[Option[Set[String]]]], id: Long) =
+      m.getOrElse(id, Vector.empty)
+    inBatch.foreach { case (a, b) => verify(a, b, shOf(newSh, a), shOf(newSh, b)) }
+    cross.foreach { case (n, o) => verify(n, o, shOf(newSh, n), shOf(oldSh, o)) }
+    // one partition: a local relation otherwise spans the default
+    // parallelism, and a writer would leave one file per slice
+    Some(spark.createDataFrame(out.asJava, PairSchema).coalesce(1))
+  }
+
+  /** The (id_a, id_b, jaccard) schema of an incremental probe's pairs. */
+  private val PairSchema = StructType(Seq(StructField("id_a", LongType),
+    StructField("id_b", LongType), StructField("jaccard", DoubleType)))
+
+  /** `c IN keys` as the `InSet` Catalyst's optimizer makes of a long
+    * literal `IN`, built directly: `isin` puts one literal node per key
+    * through analysis, which measured 5.4 s to plan for 160k keys against
+    * 0.2 s for the `InSet` (0.66 s against 0.03 s for 16k). The scan
+    * still receives it as a pushed `In` filter. */
+  private def inSet(c: Column, keys: Set[Long]): Column =
+    ColumnBridge.column(InSet(ColumnBridge.expression(c), keys.toSet[Any]))
+
+  /** The default byte bound of one [[probeLocal]] pull: half of
+    * `spark.driver.maxResultSize` (Spark's 1g when unset, no cap at 0),
+    * and at most a quarter of the driver heap the rows land in. */
+  private def pullByteBudget: Long = {
+    val max = SparkEnv.get.conf.getSizeAsBytes("spark.driver.maxResultSize",
+      "1g")
+    math.min(if (max > 0) max / 2 else Long.MaxValue,
+      Runtime.getRuntime.maxMemory / 4)
+  }
+
+  /** An upper bound on a pulled value's serialized size, Java's or Kryo's:
+    * a string takes at most 3 bytes a char in (modified) UTF-8, and every
+    * row, collection or boxed value at most a fixed header. */
+  private[graft] def pulledBytes(v: Any): Long = v match {
+    case null => 1L
+    case s: String => 16L + 3L * s.length
+    case r: Row => r.toSeq.foldLeft(64L)((n, x) => n + pulledBytes(x))
+    case xs: Iterable[_] => xs.foldLeft(32L)((n, x) => n + pulledBytes(x))
+    case _ => 16L
+  }
+
+  /** What a task result carries besides its rows (accumulator updates,
+    * the class descriptors and schema of the first row), bounded. */
+  private val TaskResultBytes = 16384L
+
+  /** `df`'s rows on the driver in ONE job over its scan, or None when they
+    * pass either bound: more than `rows` rows, or more than `bytes` of
+    * [[pulledBytes]] in all. Each task stops at `rows + 1` rows or at its
+    * even share of `bytes`, so the results Spark ships stay under `bytes`
+    * in sum whatever their spread (Spark aborts the job past
+    * `spark.driver.maxResultSize`); the driver gives up when a task
+    * stopped early or the rows add up past `rows`. (`limit(n).collect()`
+    * would run one job per growing partition wave.) */
+  private def pullWithin(df: DataFrame, rows: Long,
+      bytes: Long): Option[Array[Row]] = {
+    val rdd = df.rdd
+    val parts = new Array[Array[Row]](rdd.getNumPartitions)
+    val share = bytes / math.max(parts.length, 1)
+    val header = TaskResultBytes
+    var total = 0L
+    var over = false
+    df.sparkSession.sparkContext.runJob(rdd, (it: Iterator[Row]) => {
+      val kept = mutable.ArrayBuffer.empty[Row]
+      var size = header
+      var full = false
+      while (!full && it.hasNext) {
+        val r = it.next()
+        size += pulledBytes(r)
+        if (size > share || kept.size >= rows) full = true else kept += r
+      }
+      (kept.toArray, full)
+    }, (i: Int, res: (Array[Row], Boolean)) => {
+      total += res._1.length
+      over ||= res._2 || total > rows
+      if (!over) parts(i) = res._1
+    })
+    if (over) None else Some(parts.flatten)
+  }
+
+  /** [[minhashPairsIncremental]]'s distributed plan over the batch's band
+    * rows `newBanded`: the standing text is re-read only for docs sharing
+    * a bucket with the batch (a semi-join before the shingle verify). */
+  private[graft] def probeDistributed(
+      newDocs: DataFrame, idCol: String, textCol: String,
+      existingIndex: DataFrame, existingDocs: DataFrame,
+      shingleSize: Int, threshold: Double, maxBucketSize: Int,
+      newBanded: DataFrame): DataFrame = {
+    def shingleTable(docs: DataFrame, as: String): DataFrame =
+      docs.select(col(idCol).as(as),
+        tokenShingleSet(col(textCol), shingleSize).as(s"__sh_$as"))
+    val inBatch = bucketPairs(newBanded, Seq("band", "bucket"), maxBucketSize)
+      .join(shingleTable(newDocs, "id_a"), "id_a")
+      .join(shingleTable(newDocs, "id_b"), "id_b")
+      .withColumn("jaccard", jaccardExpr(col("__sh_id_a"), col("__sh_id_b")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
+
     val idx = existingIndex.select(col("id").as("old_id"), col("band"),
       col("bucket"))
     // candidate (new, old) ids from shared buckets; bucket cap bounds the
@@ -618,10 +836,6 @@ object Dedup {
       .dropDuplicates("new_id", "old_id")
 
     // exact-Jaccard verify: shingle only the candidate-touched docs
-    def shingleTable(docs: DataFrame, as: String): DataFrame =
-      docs.select(col(idCol).as(as),
-        array_distinct(TextFunctions.tokenShingles(
-          TextFunctions.tokens(col(textCol)), shingleSize)).as(s"__sh_$as"))
     val touchedOld = existingDocs.join(
       candidates.select(col("old_id")).distinct(),
       existingDocs(idCol) === col("old_id"), "left_semi")

@@ -16,10 +16,11 @@ import graft.operators.Dedup
   *     written before the stream starts; `v{b+1}` = batch b's bands). The
   *     standing corpus never re-shingles.
   *   - `docsRoot/v*` — (id, text) deltas with the same versioning. The
-  *     exact-Jaccard verify needs candidate-touched documents' text;
-  *     the semi-join inside [[Dedup.minhashPairsIncremental]] re-reads
-  *     text only for docs that actually share a bucket with the batch,
-  *     so this store is scanned, never shuffled wholesale.
+  *     exact-Jaccard verify needs candidate-touched documents' text; the
+  *     probe re-reads text only for docs that actually share a bucket
+  *     with the batch (pushed by id on the in-memory path, a semi-join on
+  *     the distributed one), so this store is scanned, never shuffled
+  *     wholesale.
   *
   * Exactly-once contract is [[PassageStream]]'s, applied to both roots: a
   * redelivered batch rebases on deltas `<= batchId` and overwrites its
@@ -55,19 +56,31 @@ object NearDupStream {
     * materialize every batch's pairs into the block manager for nothing
     * (the r12 p79 1.2× regression). Hashes are identical either way.
     *
-    * The batch is banded ONCE per trigger (a batch-sized checkpoint
-    * feeds the probe, the bucket push, and the delta write — previously
-    * the shingle+minhash chain ran twice per batch).
+    * The batch is banded ONCE per trigger: a batch-sized checkpoint feeds
+    * the probe's in-batch candidates, its cross candidates and the band
+    * delta write.
     *
-    * `pushBucketLimit`: when the batch's banded rows hold at most this
-    * many DISTINCT bucket values, they are additionally pushed as a
-    * literal `bucket IN` predicate into the standing band scan —
-    * result-identical (cross candidates require bucket equality, and the
+    * The batch's size picks the probe's path. A batch whose driver pulls
+    * fit the in-memory budget (4M rows, and half of
+    * `spark.driver.maxResultSize` in bytes) — every trickle batch — is
+    * paired and verified on the driver ([[Dedup.probeLocal]]): one pull
+    * of the batch's shingle sets and band rows, one of the standing band
+    * rows in the batch's buckets, one of the candidate standing docs'
+    * shingle sets, each a single job, and the pairs come back as a local
+    * relation (already materialized, so `materializePairs` checkpoints
+    * nothing). A larger batch runs the distributed probe plan
+    * ([[Dedup.probeDistributed]]).
+    *
+    * `pushBucketLimit`: when the distributed plan runs and the batch holds
+    * at most this many DISTINCT bucket values, they are additionally
+    * pushed as a literal `bucket IN` predicate into the standing band scan
+    * — result-identical (cross candidates require bucket equality, and the
     * occupancy cap counts JOINED rows per (band, bucket), which the
-    * value-level restriction preserves for every surviving bucket), and
-    * it is what turns a [[compactStores]]-clustered base's row-group
-    * zones into actual scan pruning for trickle-sized batches
-    * ([[Versions.pushKeys]]). 0 disables the push. */
+    * value-level restriction preserves for every surviving bucket), and it
+    * is what turns a [[compactStores]]-clustered base's row-group zones
+    * into actual scan pruning ([[Versions.pushKeys]]). 0 disables the
+    * push. The in-memory path always filters its standing pulls by the
+    * batch's buckets and candidate ids, which it holds on the driver. */
   def filterBatch(spark: SparkSession, indexRoot: String, docsRoot: String,
       outRoot: String, idCol: String, textCol: String,
       numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3,
@@ -83,12 +96,15 @@ object NearDupStream {
     val existingDocs = docs.read(spark, docsRoot, upTo = batchId)
     val bBands = Dedup.minhashBandIndex(batch, idCol, textCol, numHashes,
       bands, shingleSize, seed).localCheckpoint(true)
-    val probe = Dedup.minhashPairsIncremental(batch, idCol, textCol,
+    val local = Dedup.probeLocal(batch, idCol, textCol, idx, existingDocs,
+      shingleSize, threshold, maxBucketSize, bBands)
+    val probe = local.getOrElse(Dedup.probeDistributed(batch, idCol, textCol,
         Versions.pushKeys(idx, bBands.select(col("bucket")), pushBucketLimit),
-        existingDocs, numHashes, bands, shingleSize, threshold,
-        maxBucketSize, seed, newBandedOpt = Some(bBands))
+        existingDocs, shingleSize, threshold, maxBucketSize, bBands))
       .withColumn("batch", SteadyLit.steadyLong(batchId))
-    val pairs = if (materializePairs) probe.localCheckpoint(true) else probe
+    val pairs =
+      if (materializePairs && local.isEmpty) probe.localCheckpoint(true)
+      else probe
     // the three per-trigger writes are independent (distinct batch-id-named
     // paths; redelivery overwrites any completion subset deterministically)
     // — overlap them so the trigger pays max, not sum (guide §2.6)

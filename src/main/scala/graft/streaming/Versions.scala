@@ -401,13 +401,20 @@ object Versions {
   }
 
   /** The pin at `root/_params` (see [[writePin]]); refuses with
-    * `missingHint` when the root has none. */
+    * `missingHint` when the root has none. The part files are read as
+    * explicit paths: Spark logs an "All paths were ignored" warning for
+    * every read of a path whose own name starts with `_` (a hidden name
+    * to its file index), so the directory itself never goes to the
+    * reader. */
   def readPin(spark: SparkSession, root: String,
       missingHint: String): Map[String, Long] = {
     val p = new Path(s"$root/_params")
-    require(p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p),
-      s"$root/_params missing — $missingHint")
-    spark.read.schema(PinSchema).parquet(p.toString)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    require(fs.exists(p), s"$root/_params missing — $missingHint")
+    val parts = fs.listStatus(p).map(_.getPath).filterNot(f =>
+      f.getName.startsWith("_") || f.getName.startsWith("."))
+    if (parts.isEmpty) Map.empty
+    else spark.read.schema(PinSchema).parquet(parts.map(_.toString).toSeq: _*)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
   }
 

@@ -85,6 +85,150 @@ class DedupSimilaritySpec extends SparkSpec {
       s"unrelated existing doc wrongly paired: $pairs")
   }
 
+  /** A seeded incremental-probe corpus over a 6-word vocabulary (short
+    * texts collide into shared and over-cap buckets): standing docs with
+    * null and empty texts and a block of identical copies, a batch of
+    * near-dups, copies, in-batch duplicates, a standing id redelivered, a
+    * repeated and a null batch id, and tombstones masking both standing
+    * relations or the docs only. Every tenth corpus has an empty batch and
+    * every tenth a batch with no standing match. */
+  private def probeCorpus(seed: Int) = {
+    val r = new scala.util.Random(seed)
+    def text(words: String): Option[String] = r.nextInt(10) match {
+      case 0 => None
+      case 1 => Some("")
+      case _ => Some((0 until r.nextInt(9))
+        .map(_ => s"$words${r.nextInt(6)}").mkString(" "))
+    }
+    val copy = Some("w1 w2 w3 w4")
+    val standing: Seq[(Option[Long], Option[String])] =
+      (1 to 4 + r.nextInt(16)).map(i => (Option(i.toLong), text("w"))) ++
+        (1 to 1 + r.nextInt(4)).map(i => (Option(100L + i), copy)) ++
+        (if (r.nextInt(4) == 0) Seq((Option.empty[Long], text("w"))) else Nil)
+    val vocab = if (seed % 10 == 2) "z" else "w"
+    val n = if (seed % 10 == 1) 0 else 1 + r.nextInt(14)
+    val batch: Seq[(Option[Long], Option[String])] = (0 until n).map { i =>
+      val id = Option(1000L + i)
+      r.nextInt(5) match {
+        case 0 if vocab == "w" => (id, standing(r.nextInt(standing.size))._2
+          .map(_.split(" ").updated(0, "w5").mkString(" ")))
+        case 1 if vocab == "w" => (id, copy)
+        case _ => (id, text(vocab))
+      }
+    } ++ (if (n > 0 && r.nextBoolean()) Seq((Option(1000L), text(vocab)))
+      else Nil) ++
+      (if (n > 0 && r.nextBoolean()) Seq((Option(1L), text(vocab))) else Nil) ++
+      (if (n > 0 && r.nextInt(4) == 0) Seq((Option.empty[Long], copy)) else Nil) ++
+      (if (n > 0) Seq.fill(r.nextInt(4))((Option(2000L + r.nextInt(3)), copy))
+       else Nil)
+    val dead = standing.flatMap(_._1).filter(_ => r.nextInt(5) == 0)
+    (standing, batch, dead, r.nextInt(3) == 0, 2 + r.nextInt(6),
+      Seq(0.0, 0.3, 0.6, 1.0)(r.nextInt(4)))
+  }
+
+  test("incremental probe: the in-memory path and the distributed plan " +
+      "return the same (id_a, id_b, jaccard) rows over 60 seeded corpora") {
+    var nonEmpty = 0
+    var crossHits = 0
+    for (seed <- 1 to 60) {
+      val (standing, batch, dead, docsOnly, cap, threshold) = probeCorpus(seed)
+      val std = standing.toDF("doc_id", "text")
+      val b = batch.toDF("doc_id", "text")
+      def live(df: org.apache.spark.sql.DataFrame, c: String) =
+        if (dead.isEmpty) df
+        else df.filter(col(c).isNull || !col(c).isin(dead: _*))
+      val bands = Dedup.minhashBandIndex(std, "doc_id", "text")
+      val idx = if (docsOnly) bands else live(bands, "id")
+      val docs = live(std, "doc_id")
+      val banded = Dedup.minhashBandIndex(b, "doc_id", "text")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      def both(): Unit = {
+        val mem = Dedup.probeLocal(b, "doc_id", "text", idx, docs,
+          shingleSize = 3, threshold, cap, banded)
+        assert(mem.isDefined, s"seed $seed: a trickle batch pairs in memory")
+        val dist = Dedup.probeDistributed(b, "doc_id", "text", idx, docs,
+          shingleSize = 3, threshold, cap, banded)
+        assert(mem.get.schema.map(f => (f.name, f.dataType)) ===
+          dist.schema.map(f => (f.name, f.dataType)))
+        val got = rows(mem.get)
+        assert(got === rows(dist), s"seed $seed: paths disagree")
+        if (got.nonEmpty) nonEmpty += 1
+        if (mem.get.filter(col("id_a") < 1000 && col("id_b") >= 1000)
+            .count() > 0) crossHits += 1
+      }
+      // a null shingle set sizes to -1 with ANSI off: check that branch too
+      if (seed % 10 == 5) {
+        val key = "spark.sql.ansi.enabled"
+        val before = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try both() finally spark.conf.set(key, before)
+      } else both()
+    }
+    assert(nonEmpty >= 30 && crossHits >= 10, s"$nonEmpty / $crossHits")
+  }
+
+  test("incremental probe: a batch or standing pull past the row budget " +
+      "leaves the batch to the distributed plan, which returns the same rows") {
+    val copy = "w1 w2 w3 w4 w5 w6"
+    val std = ((1L to 60L).map(i => (i, copy)) ++
+      (61L to 70L).map(i => (i, doc(i, 30)))).toDF("doc_id", "text")
+    val b = ((1000L to 1017L).map(i => (i, doc(i, 30))) ++
+      Seq((1018L, copy), (1019L, doc(65, 30)))).toDF("doc_id", "text")
+    val idx = Dedup.minhashBandIndex(std, "doc_id", "text")
+    val banded = Dedup.minhashBandIndex(b, "doc_id", "text")
+    def local(budget: Long) = Dedup.probeLocal(b, "doc_id", "text", idx, std,
+      shingleSize = 3, threshold = 0.5, maxBucketSize = 200, banded,
+      budget = budget)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val mem = rows(local(4000000L).get)
+    // pull 1 holds 20 docs + 320 band rows; pull 2 holds the 60 copies'
+    // 960 band rows
+    for (budget <- Seq(100L, 400L))
+      assert(local(budget).isEmpty, s"budget $budget must fall back")
+    assert(rows(Dedup.probeDistributed(b, "doc_id", "text", idx, std, 3, 0.5,
+      200, banded)) === mem)
+    assert(rows(Dedup.minhashPairsIncremental(b, "doc_id", "text", idx, std,
+      threshold = 0.5)) === mem)
+    assert(mem.size === 61, mem.take(3))
+  }
+
+  test("incremental probe: a few long docs past the byte bound leave the " +
+      "batch to the distributed plan; the bound covers the serialized rows") {
+    import org.apache.spark.SparkEnv
+    // 3 docs of 20k distinct words: ~60k shingles of ~20 chars in 60 rows
+    // of a 66-row batch, well inside the 4M-row budget
+    val long = (0 until 3).map(d =>
+      (2000L + d, (0 until 20000).map(i => s"long${d}w$i").mkString(" ")))
+    val std = (1L to 30L).map(i => (i, doc(i, 30))).toDF("doc_id", "text")
+    val b = ((1000L to 1002L).map(i => (i, doc(i, 30))) ++ long ++
+      Seq((1003L, doc(7, 30)))).toDF("doc_id", "text")
+    val idx = Dedup.minhashBandIndex(std, "doc_id", "text")
+    val banded = Dedup.minhashBandIndex(b, "doc_id", "text")
+    def local(bytes: Long) = Dedup.probeLocal(b, "doc_id", "text", idx, std,
+      shingleSize = 3, threshold = 0.5, maxBucketSize = 200, banded,
+      bytes = bytes)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    // the estimate bounds what the result serializer really writes
+    val sh = b.select(col("doc_id"), array_distinct(
+      graft.functions.TextFunctions.tokenShingles(
+        graft.functions.TextFunctions.tokens(col("text")), 3)).as("sh"))
+      .collect()
+    val estimate = sh.map(r => Dedup.pulledBytes(r)).sum
+    val written = SparkEnv.get.serializer.newInstance().serialize(sh).limit()
+    assert(written <= estimate, s"$written > $estimate")
+    assert(estimate > 3000000L, estimate)
+    val mem = local(Long.MaxValue)
+    assert(mem.isDefined)
+    assert(local(2000000L).isEmpty, "the long docs must pass the byte bound")
+    val dist = rows(Dedup.probeDistributed(b, "doc_id", "text", idx, std, 3,
+      0.5, 200, banded))
+    assert(dist === rows(mem.get))
+    assert(dist.contains("[7,1003,1.0]"), dist)
+  }
+
   test("connected components: chains, cycles, and isolation") {
     // chain 1-2-3-4 (transitivity), triangle 10-11-12 with a cycle edge,
     // and a lone pair 20-21 — three components labeled by their min ids

@@ -467,6 +467,61 @@ class StreamingSpec extends SparkSpec {
     assert(e.getMessage.contains("fresh checkpoint"))
   }
 
+  test("a trickle near-dup trigger runs at most 8 jobs: NearDupStream." +
+      "filterBatch pairs and verifies a 20-doc batch with driver pulls") {
+    import java.nio.file.Files
+    import graft.streaming.NearDupStream
+    import graft.tools.JobAttribution
+    import spark.implicits._
+    def doc(seed: Int, words: Int): String =
+      (0 until words).map(i => s"t${seed}x$i").mkString(" ")
+    val root = Files.createTempDirectory("ndjobs_").toString
+    val standing = (1 to 40).map(i => (i.toLong, doc(i, 40)))
+      .toDF("doc_id", "text")
+    graft.operators.Dedup.minhashBandIndex(standing, "doc_id", "text")
+      .write.parquet(s"$root/idx/v0")
+    standing.write.parquet(s"$root/docs/v0")
+    // batches arrive as file scans, as a stream's micro-batches do
+    def batch(b: Int, rows: Seq[(Long, String)]) = {
+      rows.toDF("doc_id", "text").coalesce(1).write.parquet(s"$root/in$b")
+      spark.read.parquet(s"$root/in$b")
+    }
+    def trigger(b: Int, rows: Seq[(Long, String)]) =
+      NearDupStream.filterBatch(spark, s"$root/idx", s"$root/docs",
+        s"$root/out", "doc_id", "text", threshold = 0.4)(batch(b, rows), b)
+    // trigger 0 is the stream's first read of each root, which infers the
+    // root's schema with one job per store (Versions.read caches it)
+    trigger(0, (500 until 520).map(i => (i.toLong, doc(i, 40))))
+    // trigger 1: near-dups of a standing and a batch-0 doc, one in-batch
+    // copy, 17 novel docs
+    val rows = (1000 to 1016).map(i => (i.toLong, doc(i, 40))) ++ Seq(
+      (1017L, doc(3, 40).replace("t3x5 ", "changed ")),
+      (1018L, doc(509, 40).replace("t509x7 ", "altered ")),
+      (1019L, doc(1000, 40)))
+    val in1 = batch(1, rows)
+    def line: Int = new Throwable().getStackTrace()(1).getLineNumber
+    val l = new JobAttribution
+    spark.sparkContext.addSparkListener(l)
+    val sentinel =
+      try {
+        NearDupStream.filterBatch(spark, s"$root/idx", s"$root/docs",
+          s"$root/out", "doc_id", "text", threshold = 0.4)(in1, 1L)
+        // the listener bus delivers in order: once the sentinel job's end
+        // is seen, every filterBatch job's events have been too
+        val at = line; spark.sparkContext.parallelize(Seq(1), 1).count()
+        val deadline = System.nanoTime() + 20000000000L
+        while (System.nanoTime() < deadline &&
+            !l.jobs.exists(j => j.site.endsWith(s":$at") && j.tEnd > 0))
+          Thread.sleep(20)
+        s"StreamingSpec.scala:$at"
+      } finally spark.sparkContext.removeSparkListener(l)
+    val jobs = l.jobs.filterNot(_.site.endsWith(sentinel))
+    assert(jobs.size <= 8, jobs.map(_.site).mkString("\n"))
+    val pairs = spark.read.parquet(s"$root/out/b1")
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(pairs === Set((3L, 1017L), (509L, 1018L), (1000L, 1019L)), pairs)
+  }
+
   test("trickle-probe pushes are result-identical: near-dup bucket IN and " +
       "media fp IN emit the same pairs as the unpushed probe") {
     import java.nio.file.Files
