@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.SparkEnv
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.graftshim.ColumnBridge
 
 /** The one way graft code brings a contract-bounded relation to the
@@ -70,7 +71,8 @@ object DriverPull {
     * the class descriptors and schema of the first row), bounded. */
   private val TaskResultBytes = 16384L
 
-  /** `df`'s rows on the driver in ONE job over its scan, or None when they
+  /** `df`'s rows on the driver in ONE job over its scan (a plain collect
+    * when `df` derives from local relations only), or None when they
     * pass either bound: more than `maxRows` rows, or more than `maxBytes`
     * of [[pulledBytes]] in all. Each task stops at `maxRows + 1` rows or at
     * its even share of `maxBytes`, so the results Spark ships stay under
@@ -81,7 +83,18 @@ object DriverPull {
     * tasks' sets, so `maxRows` bounds the DISTINCT rows (first-seen
     * order). */
   def apply(df: DataFrame, maxRows: Long = rows, maxBytes: Long = bytes,
-      distinct: Boolean = false): Option[Array[Row]] = {
+      distinct: Boolean = false): Option[Array[Row]] =
+    if (df.queryExecution.analyzed.collectLeaves()
+        .forall(_.isInstanceOf[LocalRelation])) {
+      // rows derived from rows already on the driver (a local relation's
+      // projections and filters plan to its rows, no job): the same bounds
+      val rs = if (distinct) df.collect().distinct else df.collect()
+      Some(rs).filter(_ => rs.length <= maxRows &&
+        rs.iterator.map(pulledBytes).sum <= maxBytes)
+    } else scan(df, maxRows, maxBytes, distinct)
+
+  private def scan(df: DataFrame, maxRows: Long, maxBytes: Long,
+      distinct: Boolean): Option[Array[Row]] = {
     val rdd = df.rdd
     val parts = new Array[Array[Row]](rdd.getNumPartitions)
     val share = maxBytes / math.max(parts.length, 1)

@@ -20,8 +20,6 @@ object TextFunctions {
     * `filter(split(lower(text), "[^a-z0-9]+"), t => t =!= "")`. */
   def tokens(text: Column): Column = TextExpressions.tokenize(text)
 
-  def distinctTokens(text: Column): Column = array_distinct(tokens(text))
-
   def tokenCount(text: Column): Column = size(tokens(text))
 
   /** Word n-gram shingles over a token array, space-joined.
@@ -37,10 +35,9 @@ object TextFunctions {
   def tokenChars(toks: Column): Column =
     aggregate(toks, lit(0), (acc, t) => acc + length(t))
 
-  /** BPE-ish subword count: words are split into ceil(len/4) units — a cheap,
-    * deterministic stand-in for a real tokenizer's token count. */
-  def subwordCount(text: Column): Column = subwordCountFromTokens(tokens(text))
-
+  /** BPE-ish subword count of a token array: words are split into
+    * ceil(len/4) units — a cheap, deterministic stand-in for a real
+    * tokenizer's token count. */
   def subwordCountFromTokens(toks: Column): Column =
     aggregate(toks, lit(0),
       (acc, t) => acc + ceil(length(t) / lit(4.0)).cast("int"))

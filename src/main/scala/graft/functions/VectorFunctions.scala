@@ -34,22 +34,6 @@ object VectorFunctions {
     * higher-order-function overhead. */
   def cosine(a: Column, b: Column): Column = VectorExpressions.cosine(a, b)
 
-  /** Euclidean (L2) distance. */
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(asDouble(a), asDouble(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (s, x) => s + x))
-
-  /** Sign-bit bucket of `v` against `planes` (a literal array of hyperplane
-    * arrays): bit t = 1 iff v·planes(t) ≥ 0. The random-hyperplane LSH used
-    * by the approximate-nearest-neighbor path. */
-  def hyperplaneBucket(v: Column, planes: Seq[Seq[Double]]): Column = {
-    val vd = asDouble(v)
-    planes.zipWithIndex.map { case (p, i) =>
-      val planeCol = array(p.map(lit): _*)
-      when(dot(vd, planeCol) >= 0.0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
-
   /** Deterministic pseudo-random hyperplanes (SplitMix64-seeded, mapped to
     * [-1,1]) — stable across sessions so LSH buckets are reproducible. */
   def seededPlanes(nPlanes: Int, dim: Int, seed: Long): Seq[Seq[Double]] =

@@ -156,7 +156,8 @@ object Curation {
     * single-partition window: ids bucket into blocks of `blockIds`, block
     * totals aggregate (partial+final, one small exchange), the
     * block-offset cumsum runs over only `#blocks` rows (model-sized — the
-    * lone single-partition step), and each row adds its broadcast block
+    * lone single-partition step, and the window Spark's "No Partition
+    * Defined for Window operation" warning names), and each row adds its broadcast block
     * offset to a within-block running sum (one exchange, `#blocks`-way
     * parallel). A 100 TB corpus with 10^10 ids at the default block size is
     * ~153k block rows through the tiny window — still driver-trivial —

@@ -51,9 +51,9 @@ object IvfRelational {
 
   /** The stride-sample seed bank as a relation: of the first
     * `nCells·stride` corpus rows by id, every `stride`-th vector becomes
-    * cell `(rank-1)/stride`. The single-partition window runs on the
-    * ALREADY-LIMITED prefix (≤ nCells·stride rows — model-sized), never
-    * the corpus. */
+    * cell `(rank-1)/stride`. The single-partition window (Spark warns "No
+    * Partition Defined for Window operation") runs on the ALREADY-LIMITED
+    * prefix (≤ nCells·stride rows — model-sized), never the corpus. */
   def seedBank(corpus: DataFrame, nCells: Int, stride: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     corpus.orderBy(col(idCol)).limit(nCells * stride)

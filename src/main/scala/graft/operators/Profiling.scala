@@ -96,10 +96,11 @@ object Profiling {
     * the quantile and the estimate is
     * `bin_lo + ((r - cum_before) / n_bin) * width` (association order
     * fixed, mirrored by the oracle). Degenerate column (mx = mn) yields
-    * the value itself. The cumulative window runs over at most `bins`
-    * rows — model-sized, never the data — and is eagerly checkpointed:
-    * it feeds three downstream branches, and Catalyst would otherwise
-    * re-run the binning scan for each.
+    * the value itself. The cumulative window has no partition (Spark warns
+    * "No Partition Defined for Window operation") and runs over at most
+    * `bins` rows — model-sized, never the data. It is eagerly
+    * checkpointed: it feeds three downstream branches, and Catalyst would
+    * otherwise re-run the binning scan for each.
     *
     * `exact = true` adds the TRUE `percentile_disc` value per quantile
     * via histogram-guided rank-select — the two-phase exact-quantile
@@ -203,8 +204,9 @@ object Profiling {
     * expression-for-expression (target rank `r = ceil(q*n)` with `n` the
     * SUM of bin counts, first bin with `cum >= r`, linear interpolation
     * inside it, association order mirrored by the oracle); everything
-    * after the count fold runs over at most `bins` rows — model-sized,
-    * never the data. Returns (q, n, est) ordered by q. */
+    * after the count fold, its unpartitioned cumulative window included,
+    * runs over at most `bins` rows — model-sized, never the data. Returns
+    * (q, n, est) ordered by q. */
   def quantilesFromCounts(counts: DataFrame, bins: Int, mn: Double,
       mx: Double, qs: Seq[Double]): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),

@@ -59,6 +59,24 @@ object Pipeline {
        |  FROM m$tag)"""
   }
 
+  /** Adjacent-doc bigram-Jaccard edge CTEs `t`, `sh`, `j` and `e`: the
+    * (doc_a, doc_b = doc_a + 1) pairs whose distinct token-bigram sets
+    * reach Jaccard 0.05 — the edge set of the p24/p41/p44/p50 oracles
+    * (the Spark side's `p07NgramJaccard` at 0.05). Embed inside a
+    * stripMargin string. */
+  private val sqlAdjacentEdgeCtes: String =
+    s"""t AS (SELECT doc_id, $sqlToks AS toks FROM documents),
+       |sh AS (SELECT doc_id,
+       |    list_distinct(CASE WHEN len(toks) < 2 THEN [array_to_string(toks, ' ')]
+       |         ELSE list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])
+       |    END) AS sh FROM t),
+       |j AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       |  CASE WHEN len(list_distinct(list_concat(a.sh, b.sh))) = 0 THEN 0.0
+       |       ELSE len(list_intersect(a.sh, b.sh)) / len(list_distinct(list_concat(a.sh, b.sh)))
+       |  END AS jaccard
+       |  FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1),
+       |e AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.05)"""
+
   /** Contaminated-doc CTE chain `sh$tag … cont$tag` over a base CTE
     * exposing doc_id, source, toks: documents sharing >= 3 5-gram shingles
     * with the src0 benchmark slice. ONE oracle-side mirror of
@@ -1004,17 +1022,7 @@ object Pipeline {
   }
 
   val p24Sql: String =
-    s"""WITH t AS (SELECT doc_id, $sqlToks AS toks FROM documents),
-       |sh AS (SELECT doc_id,
-       |    list_distinct(CASE WHEN len(toks) < 2 THEN [array_to_string(toks, ' ')]
-       |         ELSE list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])
-       |    END) AS sh FROM t),
-       |j AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |  CASE WHEN len(list_distinct(list_concat(a.sh, b.sh))) = 0 THEN 0.0
-       |       ELSE len(list_intersect(a.sh, b.sh)) / len(list_distinct(list_concat(a.sh, b.sh)))
-       |  END AS jaccard
-       |  FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1),
-       |e AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.05),
+    s"""WITH $sqlAdjacentEdgeCtes,
        |d AS (SELECT DISTINCT doc_id FROM
        |       (SELECT doc_a AS doc_id FROM e UNION ALL SELECT doc_b FROM e)),
        |m AS (SELECT doc_id,
@@ -1618,17 +1626,7 @@ object Pipeline {
   }
 
   val p41Sql: String =
-    s"""WITH t AS (SELECT doc_id, $sqlToks AS toks FROM documents),
-       |sh AS (SELECT doc_id,
-       |    list_distinct(CASE WHEN len(toks) < 2 THEN [array_to_string(toks, ' ')]
-       |         ELSE list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])
-       |    END) AS sh FROM t),
-       |j AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |  CASE WHEN len(list_distinct(list_concat(a.sh, b.sh))) = 0 THEN 0.0
-       |       ELSE len(list_intersect(a.sh, b.sh)) / len(list_distinct(list_concat(a.sh, b.sh)))
-       |  END AS jaccard
-       |  FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1),
-       |e AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.05),
+    s"""WITH $sqlAdjacentEdgeCtes,
        |d AS (SELECT DISTINCT doc_id FROM
        |       (SELECT doc_a AS doc_id FROM e UNION ALL SELECT doc_b FROM e)),
        |m AS (SELECT doc_id,
@@ -1741,17 +1739,7 @@ object Pipeline {
   val p44Sql: String = {
     s"""WITH b44 AS (SELECT doc_id, text, $sqlToks AS toks FROM documents),
        |${sqlQualityCtes("44", "b44", "doc_id")},
-       |t AS (SELECT doc_id, $sqlToks AS toks FROM documents),
-       |sh AS (SELECT doc_id,
-       |    list_distinct(CASE WHEN len(toks) < 2 THEN [array_to_string(toks, ' ')]
-       |         ELSE list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])
-       |    END) AS sh FROM t),
-       |j AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |  CASE WHEN len(list_distinct(list_concat(a.sh, b.sh))) = 0 THEN 0.0
-       |       ELSE len(list_intersect(a.sh, b.sh)) / len(list_distinct(list_concat(a.sh, b.sh)))
-       |  END AS jaccard
-       |  FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1),
-       |e AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.05),
+       |$sqlAdjacentEdgeCtes,
        |d AS (SELECT DISTINCT doc_id FROM
        |       (SELECT doc_a AS doc_id FROM e UNION ALL SELECT doc_b FROM e)),
        |mst AS (SELECT doc_id,
@@ -1924,17 +1912,7 @@ object Pipeline {
          |   FROM dir JOIN deg ON deg.src = dir.src
          |   JOIN $prev ON $prev.id = dir.src CROSS JOIN nn
          |   GROUP BY dir.dst, nn.n)""".stripMargin
-    s"""WITH t AS (SELECT doc_id, $sqlToks AS toks FROM documents),
-       |sh AS (SELECT doc_id,
-       |    list_distinct(CASE WHEN len(toks) < 2 THEN [array_to_string(toks, ' ')]
-       |         ELSE list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])
-       |    END) AS sh FROM t),
-       |j AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |  CASE WHEN len(list_distinct(list_concat(a.sh, b.sh))) = 0 THEN 0.0
-       |       ELSE len(list_intersect(a.sh, b.sh)) / len(list_distinct(list_concat(a.sh, b.sh)))
-       |  END AS jaccard
-       |  FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1),
-       |e AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.05),
+    s"""WITH $sqlAdjacentEdgeCtes,
        |dir AS (SELECT doc_a AS src, doc_b AS dst FROM e
        |        UNION ALL SELECT doc_b AS src, doc_a AS dst FROM e),
        |deg AS (SELECT src, COUNT(*) AS deg FROM dir GROUP BY src),
@@ -2408,8 +2386,9 @@ object Pipeline {
   // lists fused by Reciprocal Rank Fusion, rrf = Σ 1/(60 + rank) — the
   // standard hybrid-search combiner. Every term is an exact-operand IEEE
   // division on integer ranks, so fusion is bit-exact; the two top-50
-  // lists are model-sized, so their global rank windows are as driver-safe
-  // as a broadcast centroid bank (the corpus-scale work happened inside
+  // lists are model-sized, so their global rank windows (the lexical one
+  // unpartitioned: at most 50 rows) are as driver-safe as a broadcast
+  // centroid bank (the corpus-scale work happened inside
   // bm25TopK / bruteForceTopK, both bounded top-k). vec_id aligns 1:1 with
   // doc_id in the testdata, standing in for a doc-embedding join key.
   // =========================================================================

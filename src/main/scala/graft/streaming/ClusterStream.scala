@@ -507,9 +507,20 @@ object ClusterStream {
       .getOrElse(Versions.refusePastBudget(what))
       .map(_.getLong(0)).toSeq
 
+  /** The `kind` markers (`d` takedown, `r` revive) of `ids` on the
+    * assign and pairs roots, each written by [[Versions.mark]]; the roots
+    * are independent, so the two writes overlap (guide §2.6). */
+  private def markBoth(spark: SparkSession, root: String, kind: Char,
+      ids: Seq[Long], batchId: Long, lease: Option[Versions.Lease]): Unit =
+    graft.core.Par.run(Seq(assignRoot(root), pairsRoot(root)).map(r =>
+      () => Versions.mark(spark, r, kind, ids, batchId, lease)): _*)
+
   /** Takedown + component-local repair (the [[Versions.tombstone]]
     * contract, plus the cluster-specific consequences the generic marker
-    * cannot express): markers land on the assign + pairs roots, then the
+    * cannot express): the ids are pulled to the driver once
+    * ([[Versions.collectIds]]' hygiene; empty or past the shared budget,
+    * refused before any write), the affected labels resolved from them,
+    * then markers land on the assign + pairs roots ([[markBoth]]) and the
     * AFFECTED components — and only those — are re-solved over their
     * retained pairs. Splits produce new min-id labels; members isolated
     * by the deletion become singletons; canonicals re-elect (the deleted-
@@ -526,20 +537,15 @@ object ClusterStream {
     // old batch over newer deltas would fork the repair's lineage
     assignSpec.guardAppend(spark, ar, batchId, lease)
     canonSpec.guardAppend(spark, cr, batchId, lease)
-    val del = Versions.idRelation(ids).localCheckpoint(true)
+    val what = s"ClusterStream.retract($root, batch $batchId)"
+    val del = Versions.collectIds(ids, "tombstone", what)
+    Versions.requireStore(spark, pairsRoot(root))
     // affected components: the deleted docs' rows must stay visible to
     // THIS resolution even on redelivery (this batch's own marker may
     // already exist), so the mask stops strictly before batchId
-    val affected = affectedCids(readAssignmentsMasked(spark, root,
-        upTo = batchId, maskUpTo = batchId - 1)
-      .join(broadcast(del), Seq("id"), "left_semi"),
-      s"ClusterStream.retract($root, batch $batchId)")
-    // independent marker roots (the repair below reads both post-marker
-    // views) — overlap the two marker writes (guide §2.6)
-    graft.core.Par.run(
-      () => Versions.tombstoneFrom(spark, ar, del, batchId, lease),
-      () => Versions.tombstoneFrom(spark, pairsRoot(root), del, batchId,
-        lease))
+    val affected = affectedCids(restrictTo(readAssignmentsMasked(spark, root,
+      upTo = batchId, maskUpTo = batchId - 1), "id", del, pushCidLimit), what)
+    markBoth(spark, root, 'd', del, batchId, lease)
     // retained members and retained intra-component pairs (both reads are
     // masked now); connectivity re-solves component-locally
     repairComponents(spark, root, affected, batchId, pushCidLimit)
@@ -548,9 +554,10 @@ object ClusterStream {
   /** Un-delete + component-local MERGE repair (VERDICT r16 next #4 —
     * the store's own revive path; the generic [[Versions.revive]] is
     * refused on read because it cannot invert [[retract]]'s paired
-    * repair): `r<batchId>` markers land on the assign + pairs roots (the
-    * ORIGINAL rows return — [[Versions.revive]]'s dead-as-of check and
-    * every other contract clause apply per root), then the AFFECTED
+    * repair): the ids are pulled once and checked dead on both roots,
+    * then `r<batchId>` markers land on the assign + pairs roots
+    * ([[markBoth]]; the ORIGINAL rows return — every [[Versions.revive]]
+    * contract clause applies per root), then the AFFECTED
     * components — the revived docs' own labels plus every component a
     * revived pair reaches — re-solve over the now-retained pairs: the
     * returning doc re-merges into its old neighborhood (possibly
@@ -586,7 +593,6 @@ object ClusterStream {
     // check runs on the driver
     val revived = Versions.collectIds(ids, "revive")
     Seq(ar, pr).foreach(Versions.requireDead(spark, _, revived, batchId))
-    val rel = revived.toDF("id")
     // the affected labels are resolved, and bounded, before any marker
     // lands: the post-revive view is the masked read with the revived ids
     // left visible (on redelivery the markers already say the same), so a
@@ -595,25 +601,17 @@ object ClusterStream {
     // (a revived pair can merge the doc's old neighborhood with whatever
     // its partners drifted into while it was dead) — their components,
     // and only those, re-solve
-    val pairs = pairsSpec.read(spark, pr, batchId, revived.toSet)
-    val touching = pairs
-      .join(broadcast(rel.withColumnRenamed("id", "id_a")), Seq("id_a"),
-        "left_semi")
-      .unionAll(pairs.join(broadcast(rel.withColumnRenamed("id", "id_b")),
-        Seq("id_b"), "left_semi"))
-      .localCheckpoint(true)
-    val seeds = touching.select(col("id_a").as("id"))
-      .unionAll(touching.select(col("id_b").as("id")))
-      .unionAll(rel).distinct()
+    val touching = pairsTouching(pairsSpec.read(spark, pr, batchId,
+      revived.toSet), revived, pushCidLimit)
+    val seeds = touching.select(explode(array(col("id_a"), col("id_b")))
+        .as("id"))
+      .unionAll(revived.toDF("id")).distinct()
     val affected = affectedCids(readAssignmentsMasked(spark, root,
         upTo = batchId, maskUpTo = batchId, revived.toSet)
       .join(broadcast(seeds), Seq("id"), "left_semi"),
       s"ClusterStream.revive($root, batch $batchId)")
-    // independent marker roots — overlap the two revive-marker writes
-    // (guide §2.6); the repair below reads both post-marker views
-    graft.core.Par.run(
-      () => Versions.revive(spark, ar, rel, batchId, lease),
-      () => Versions.revive(spark, pr, rel, batchId, lease))
+    // the repair below reads both post-marker views
+    markBoth(spark, root, 'r', revived, batchId, lease)
     repairComponents(spark, root, affected, batchId, pushCidLimit)
   }
 

@@ -185,7 +185,7 @@ object RetrievalStream {
       .getOrElse(Nil).toSet
     writeCorrection(spark, root, rel.filterNot(dead), -1L, batchId,
       "takedown")
-    Versions.writeMarker(spark, postRoot(root), 'd', rel, batchId)
+    Versions.mark(spark, postRoot(root), 'd', rel, batchId, lease)
   }
 
   /** `stats/c<batchId>`: `sign` times the exact (n_docs, total_dl) of the
@@ -239,7 +239,7 @@ object RetrievalStream {
     // a refused revive must not leave an orphan correction behind
     Versions.requireDead(spark, postRoot(root), rel, batchId)
     writeCorrection(spark, root, rel, 1L, batchId, "revive")
-    Versions.writeMarker(spark, postRoot(root), 'r', rel, batchId)
+    Versions.mark(spark, postRoot(root), 'r', rel, batchId, lease)
   }
 
   /** The assembled posting relation: plain union, zero exchanges (rows

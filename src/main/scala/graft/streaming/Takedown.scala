@@ -46,8 +46,8 @@ import org.apache.spark.sql.functions.col
   * Everything [[Versions.tombstone]] specifies carries over per target:
   * swept content must be strictly earlier than `batchId`, marker
   * relations are takedown-sized (within the shared driver pull budget of
-  * [[graft.core.DriverPull]]: a sweep past it is refused at the journal,
-  * before any target is written), monotone
+  * [[graft.core.DriverPull]]: a sweep past it is refused before its
+  * journal is written), monotone
   * sketch stores cannot participate (route them to their rebuild
   * lifecycle — they refuse the verb themselves), and delete-aware
   * compaction later makes each store's retraction physical.
@@ -183,12 +183,15 @@ object Takedown {
   }
 
   /** Resolve `sweep` (single long-castable id column; nulls dropped,
-    * empty refused — [[Versions.tombstoneFrom]]'s hygiene) into the
-    * journal, then fan markers out to every target and delete the keys
-    * from the optional raw corpus `(root, keyCol)`, all under `batchId`.
-    * Idempotent: re-running with the same journalRoot/batchId resumes
-    * from the journal (partial fan-out) or no-ops (committed). Returns
-    * the journaled id relation (column `id`). */
+    * empty refused — [[Versions.tombstoneFrom]]'s hygiene) on the driver
+    * in one bounded pull, refusing an empty sweep or one past the shared
+    * budget before anything is written; write the pulled ids as the
+    * journal, then fan markers out to every target from the same ids and
+    * delete the keys from the optional raw corpus `(root, keyCol)`, all
+    * under `batchId`. Idempotent: re-running with the same
+    * journalRoot/batchId resumes from the journal (partial fan-out) or
+    * no-ops (committed). Returns the journaled id relation (column
+    * `id`). */
   def takedownAll(spark: SparkSession, journalRoot: String, sweep: DataFrame,
       batchId: Long, targets: Seq[Target],
       corpus: Option[(String, String)] = None): DataFrame = {
@@ -246,56 +249,51 @@ object Takedown {
 
   /** The shared write-ahead journal protocol (see [[takedownAll]]'s
     * scaladoc): resolve `sweep` once into `journalRoot/<prefix><batchId>/
-    * ids`, run `fanOut` FROM THE JOURNAL (never the sweep — a re-run
+    * ids`, run `fanOut` FROM THE JOURNALED IDS (never the sweep — a re-run
     * after a crash must fan the set the first run resolved, not
     * whatever the predicate evaluates to over half-masked stores),
-    * then write the commit flag. Committed journals at most
-    * `batchId - 1` are vacuumed on the way in (the cadence: streaming
-    * redelivers at most the first uncommitted batch — this one — and
-    * every committed batch is < batchId; uncommitted journals are
-    * never touched regardless). */
+    * then write the commit flag. The sweep is pulled to the driver once
+    * ([[Versions.collectIds]]: one bounded pull under the shared budget
+    * every target's marker is written under), and an empty sweep, or one
+    * past the budget, refuses before the journal directory exists, so a
+    * refusal leaves nothing to recover. The journal is then written from
+    * the pulled ids and the targets fan out from the same ids as a local
+    * relation; a recovery run pulls the journal instead. Committed
+    * journals at most `batchId - 1` are vacuumed on the way in (the
+    * cadence: streaming redelivers at most the first uncommitted batch —
+    * this one — and every committed batch is < batchId; uncommitted
+    * journals are never touched regardless). Returns the journaled ids
+    * as a relation (column `id`). */
   private def journaledFanOut(spark: SparkSession, journalRoot: String,
       prefix: Char, what: String, sweep: DataFrame, batchId: Long)(
       fanOut: DataFrame => Unit): DataFrame = {
+    import spark.implicits._
     vacuumJournal(spark, journalRoot, retainUpTo = batchId - 1)
     val dir = journalDir(journalRoot, prefix, batchId)
     val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
     val committed = new Path(dir, "_committed")
     val idsPath = new Path(dir, "ids")
     def journal = Versions.read(spark, s"$journalRoot#ids", Seq(s"$idsPath"))
-    if (!fs.exists(committed)) {
+    if (fs.exists(committed)) journal
+    else {
+      def pull(df: DataFrame) = Versions.collectIds(df, what,
+        s"${what}All($journalRoot, batch $batchId)")
       // a journal is complete iff its parquet commit marker exists —
       // Spark writes _SUCCESS last, so its presence implies full data
-      val ids = if (fs.exists(new Path(idsPath, "_SUCCESS"))) journal else {
-        Versions.requireOneColumn(sweep, s"${what}All")
-        // one evaluation of the sweep: the journal write IS its
-        // materialization (the old checkpoint + count + write ran it
-        // through three actions); the guard then pulls the written ids
-        // back in one bounded pull (graft.core.DriverPull), the shared
-        // budget every target's marker is resolved under, and the targets
-        // fan out from those rows as a local relation rather than each
-        // re-reading the journal. An empty sweep, or one past the budget,
-        // deletes its torn journal dir before refusing, so nothing is
-        // journaled post-refusal (`incomplete` stays empty) and no target
-        // is touched.
-        Versions.idRelation(sweep)
-          .coalesce(1).write.mode("overwrite").parquet(idsPath.toString)
-        val journaled = graft.core.DriverPull(journal)
-        if (journaled.forall(_.isEmpty)) {
-          fs.delete(new Path(dir), true)
-          val sweepName = s"${what}All($journalRoot, batch $batchId)"
-          if (journaled.isEmpty) Versions.refusePastBudget(sweepName)
-          throw new IllegalArgumentException(
-            s"requirement failed: $what of an empty id set")
+      val ids = if (fs.exists(new Path(idsPath, "_SUCCESS"))) pull(journal)
+        else {
+          Versions.requireOneColumn(sweep, s"${what}All")
+          val swept = pull(sweep)
+          swept.toDF("id").coalesce(1)
+            .write.mode("overwrite").parquet(idsPath.toString)
+          swept
         }
-        spark.createDataFrame(java.util.Arrays.asList(journaled.get: _*),
-          journal.schema)
-      }
-      fanOut(ids)
+      val rel = ids.toDF("id")
+      fanOut(rel)
       require(fs.createNewFile(committed) || fs.exists(committed),
         s"could not write the commit flag $committed — the fan-out is " +
           "complete but will re-run (harmlessly, idempotent) on recovery")
+      rel
     }
-    journal
   }
 }

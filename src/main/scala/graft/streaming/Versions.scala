@@ -305,42 +305,62 @@ object Versions {
 
   /** Directories whose rows [[resolveRows]] holds; the least recently used
     * entry goes first. Each entry is one batch-sized delta or one
-    * takedown-sized marker. */
+    * takedown-sized marker, with its [[DriverPull.pulledBytes]] size. */
   private val MaxResolvedDirs = 256
 
   private val resolved = new java.util.LinkedHashMap[String,
-      (StructType, Array[Row])](64, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[String, (StructType, Array[Row])]): Boolean =
+      (StructType, Array[Row], Long)](64, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String,
+        (StructType, Array[Row], Long)]): Boolean =
       size() > MaxResolvedDirs
+  }
+
+  /** Whether `n` rows of `bytes` in all fit the shared pull budget. */
+  private def fits(n: Int, bytes: Long): Boolean =
+    n <= DriverPull.rows && bytes <= DriverPull.bytes
+
+  /** A directory's listing key: the qualified directory plus every data
+    * file's name, length and modification time, so a rewrite under the
+    * same directory name (a redelivered batch, a re-issued marker) gets a
+    * new key — Spark part names carry a per-write UUID. */
+  private def listingKey(spark: SparkSession, dir: Path): String = {
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.listStatus(dir).toSeq
+      .filterNot(s => s.getPath.getName.startsWith("_") ||
+        s.getPath.getName.startsWith("."))
+      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
+      .sorted.mkString(s"${fs.makeQualified(dir)}|", "|", "")
+  }
+
+  /** Hold `rows` as the rows of the directory listed as `key`, when they
+    * fit the shared pull budget. */
+  private def remember(key: String, schema: StructType,
+      rows: Array[Row]): Unit = {
+    val bytes = rows.iterator.map(DriverPull.pulledBytes).sum
+    if (fits(rows.length, bytes))
+      resolved.synchronized(resolved.put(key, (schema, rows, bytes)))
   }
 
   /** The rows of one batch-id-named directory (a `v<N>` delta, a `d<N>`
     * marker, an `r<N>` revive) with their schema, read to the driver ONCE
-    * per listing: the key is the directory plus every data file's name,
-    * length and modification time, so a rewrite under the same directory
-    * name (a redelivered batch, a re-issued marker) gets a new key — Spark
-    * part names carry a per-write UUID. Only directories the store
-    * contracts bound are resolved here: deltas are recent-batch-sized and
-    * markers takedown-sized. The read is one [[DriverPull]], so None
-    * (never cached) when the directory passes the shared budget; each
-    * caller falls back or refuses by name. `cacheKey` is [[read]]'s
+    * per listing ([[listingKey]]), or taken from the [[mark]] that wrote
+    * them. Only directories the store contracts bound are resolved here:
+    * deltas are recent-batch-sized and markers takedown-sized. The read is
+    * one [[DriverPull]], so None when the directory passes the shared
+    * budget — also for held rows, under a budget forced smaller since;
+    * each caller falls back or refuses by name. `cacheKey` is [[read]]'s
     * schema key. */
   private[graft] def resolveRows(spark: SparkSession, cacheKey: String,
       dir: Path): Option[(StructType, Array[Row])] = {
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val key = fs.listStatus(dir).toSeq
-      .filterNot(s => s.getPath.getName.startsWith("_") ||
-        s.getPath.getName.startsWith("."))
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString(s"$dir|", "|", "")
-    val hit = resolved.synchronized(resolved.get(key))
-    if (hit != null) Some(hit)
-    else {
-      val df = read(spark, cacheKey, Seq(dir.toString))
-      val rows = DriverPull(df).map((df.schema, _))
-      rows.foreach(r => resolved.synchronized(resolved.put(key, r)))
-      rows
+    val key = listingKey(spark, dir)
+    resolved.synchronized(Option(resolved.get(key))) match {
+      case Some((schema, rows, bytes)) =>
+        Some((schema, rows)).filter(_ => fits(rows.length, bytes))
+      case None =>
+        val df = read(spark, cacheKey, Seq(dir.toString))
+        val rows = DriverPull(df)
+        rows.foreach(remember(key, df.schema, _))
+        rows.map((df.schema, _))
     }
   }
 
@@ -542,23 +562,24 @@ object Versions {
     *     could not see.
     *   - Marker relations are takedown-sized: within the shared driver
     *     pull budget of [[graft.core.DriverPull]] (4M ids, and a byte
-    *     bound under `spark.driver.maxResultSize`). Each read resolves
-    *     them to the driver once per listing and masks by an id literal or
-    *     a broadcast local relation ([[maskTombstones]]). Past the budget
-    *     a sweep is refused at its journal ([[Takedown.takedownAll]]) or
-    *     its marker ([[tombstoneFrom]]), an id relation at
-    *     [[collectIds]], and a marker met on read by name: a corpus-scale
-    *     retraction is a rebuild, not a tombstone.
+    *     bound under `spark.driver.maxResultSize`). Every marker is
+    *     written by [[mark]] from ids already on the driver, which also
+    *     hands them to the first masked read; later reads resolve them
+    *     once per listing, and each masks by an id literal or a broadcast
+    *     local relation ([[maskTombstones]]). Past the budget an id
+    *     relation is refused where it is pulled, before anything is
+    *     written ([[collectIds]]: a sweep at [[Takedown.takedownAll]]'s
+    *     journal, [[tombstoneFrom]]'s ids), and a marker met on read by
+    *     name: a corpus-scale retraction is a rebuild, not a tombstone.
     *   - MONOTONE stores cannot retract: a bloom filter's set bits, an HLL
     *     register max, or an id-free fingerprint index ([[PassageStream]])
     *     cannot un-absorb one item — those stores refuse this verb and
     *     point at their rebuild lifecycle instead. */
   def tombstone(spark: SparkSession, root: String, ids: Seq[Long],
       batchId: Long, lease: Option[Lease] = None): Unit = {
-    checkWriter(spark, root, lease)
     require(ids.nonEmpty, "tombstone of an empty id set")
     requireStore(spark, root)
-    writeMarker(spark, root, 'd', ids, batchId)
+    mark(spark, root, 'd', ids, batchId, lease)
   }
 
   /** Refuse a takedown on a root without its standing `v0`. */
@@ -574,66 +595,48 @@ object Versions {
     require(ids.schema.fields.length == 1,
       s"$verb takes a single id column, got ${ids.columns.mkString(", ")}")
 
-  /** Write the marker `root/<kind><batchId>` (`d` takedown, `r` revive)
-    * holding the driver-resolved `ids` as one file. */
-  private[streaming] def writeMarker(spark: SparkSession, root: String,
-      kind: Char, ids: Seq[Long], batchId: Long): Unit = {
+  /** The schema a marker reads back with. */
+  private val MarkerSchema = StructType(Seq(StructField("id", LongType)))
+
+  /** The one marker writer: `ids`, already on the driver, as the marker
+    * `root/<kind><batchId>` (`d` takedown, `r` revive) in one file, behind
+    * [[checkWriter]] (the epoch is checked again right before the write).
+    * The written rows are handed to [[resolveRows]] under the new
+    * directory's listing key when they fit the shared pull budget, so the
+    * first masked read after the write resolves the marker with no job; a
+    * marker past the budget is left for its read to refuse. */
+  private[streaming] def mark(spark: SparkSession, root: String, kind: Char,
+      ids: Seq[Long], batchId: Long, lease: Option[Lease]): Unit = {
     import spark.implicits._
-    ids.toDF("id").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/$kind$batchId")
+    checkWriter(spark, root, lease)
+    val dir = new Path(s"$root/$kind$batchId")
+    ids.toDF("id").coalesce(1).write.mode("overwrite").parquet(dir.toString)
+    remember(listingKey(spark, dir), MarkerSchema, ids.map(Row(_)).toArray)
   }
 
   /** [[tombstone]] with the retracted ids as a RELATION — the
     * predicate-driven sweep shape: a GDPR/PII/quality re-curation pass
     * computes WHICH ids to retract distributively (a scan + filter over
-    * the corpus), and hand-listing the result through a driver `Seq`
-    * would be exactly the `collect()` the engine's operator code avoids.
-    * `ids` must be a single long-castable column (any name); it is
-    * deduplicated and written as the marker delta by one distributed
-    * write. The written marker is then resolved to the driver once
-    * ([[resolveRows]], one [[DriverPull]] under the shared budget), which
-    * both checks it and serves every later masked read. The empty sweep
-    * refuses like the `Seq` form (an empty marker delta would mask
-    * nothing while still paying a read per version forever), and so does
-    * a sweep past the budget; either deletes its marker first, so the
-    * refusal leaves no marker behind. Everything
-    * else — batch-id naming, redelivery overwrite, strictly-earlier
-    * content, compaction consumption — is [[tombstone]]'s contract
+    * the corpus). `ids` must be a single long-castable column (any name);
+    * it is pulled to the driver once with [[collectIds]]' hygiene (nulls
+    * dropped, deduplicated), and the empty sweep refuses like the `Seq`
+    * form (an empty marker delta would mask nothing while still paying a
+    * read per version forever), as does a sweep past the shared budget,
+    * both before anything is written. The ids then go through
+    * [[tombstone]], whose contract — batch-id naming, redelivery
+    * overwrite, strictly-earlier content, compaction consumption — holds
     * verbatim. */
   def tombstoneFrom(spark: SparkSession, root: String, ids: DataFrame,
       batchId: Long, lease: Option[Lease] = None): Unit = {
     checkWriter(spark, root, lease)
     requireOneColumn(ids, "tombstoneFrom")
-    requireStore(spark, root)
-    // ids that cast to null (a wrong-typed sweep column) would survive
-    // distinct() and satisfy the non-empty guard while masking nothing —
-    // the exact forever-read waste the empty-set refusal exists to prevent.
-    // r17: the sweep is evaluated ONCE, by the marker write itself (the
-    // old checkpoint + count + write ran it through three actions). An
-    // empty marker is undone before the refusal, so the post-refusal
-    // state is unchanged, and a reader racing the short-lived empty dir
-    // sees a marker that masks nothing — the same as no marker.
-    // (NOT Dataset.observe: instantiating the session's ObservationManager
-    // makes every later closure that captures the SparkSession
-    // unserializable — it poisoned Similarity's typed top-k aggregator.)
-    // The emptiness check resolves the written marker through
-    // [[resolveRows]], so the masked reads that follow reuse its rows.
-    val rel = idRelation(ids)
-    val dir = new Path(s"$root/d$batchId")
-    rel.coalesce(1).write.mode("overwrite").parquet(dir.toString)
-    val rows = resolveRows(spark, s"$root#d", dir)
-    if (rows.forall(_._2.isEmpty)) {
-      dir.getFileSystem(spark.sessionState.newHadoopConf()).delete(dir, true)
-      if (rows.isEmpty) refusePastBudget(s"tombstoneFrom($root, batch " +
-        s"$batchId)")
-      throw new IllegalArgumentException(
-        "requirement failed: tombstone of an empty id set")
-    }
+    tombstone(spark, root, collectIds(ids, "tombstone",
+      s"tombstoneFrom($root, batch $batchId)"), batchId, lease)
   }
 
-  /** A single-column id relation as marker rows: cast to long, nulls
-    * dropped, deduplicated — the id hygiene every takedown, revive and
-    * sweep shares. */
+  /** A single-column id relation cast to long, nulls dropped,
+    * deduplicated — [[collectIds]]' hygiene for ids that stay
+    * distributed ([[Takedown.guardReingest]]'s ingest batch). */
   def idRelation(ids: DataFrame): DataFrame =
     ids.toDF("id").select(col("id").cast("long").as("id"))
       .filter(col("id").isNotNull)
@@ -645,11 +648,15 @@ object Versions {
     * when empty, and by name when the distinct ids pass the shared
     * budget. `verb` names the caller in the refusals. */
   private[streaming] def collectIds(ids: DataFrame, verb: String)
-      : Seq[Long] = {
+      : Seq[Long] = collectIds(ids, verb, s"$verb of the id relation")
+
+  /** [[collectIds]] with `what` naming the pull in its budget refusal. */
+  private[streaming] def collectIds(ids: DataFrame, verb: String,
+      what: String): Seq[Long] = {
     requireOneColumn(ids, verb)
     val rel = DriverPull(ids.toDF("id").select(col("id").cast("long"))
         .filter(col("id").isNotNull), distinct = true)
-      .getOrElse(refusePastBudget(s"$verb of the id relation"))
+      .getOrElse(refusePastBudget(what))
       .map(_.getLong(0)).sorted.toSeq
     require(rel.nonEmpty, s"$verb of an empty id set")
     rel
@@ -698,7 +705,7 @@ object Versions {
     checkWriter(spark, root, lease)
     val rel = collectIds(ids, "revive")
     requireDead(spark, root, rel, batchId)
-    writeMarker(spark, root, 'r', rel, batchId)
+    mark(spark, root, 'r', rel, batchId, lease)
   }
 
   /** The ids a `d`/`r` marker directory holds, resolved once per listing

@@ -78,8 +78,10 @@ object QueryJobProfile {
   * job — from a future, so those are named `… at CompletableFuture.java:…`;
   * [[jobs]] credits each of them to the job of the same
   * `spark.sql.execution.id` that carries a real site, or else to the
-  * execution's own description (its call site, from the SQL
-  * execution-start event). */
+  * execution's own call site, read from the SQL execution-start event's
+  * long-form call site ([[JobAttribution.siteOf]]) — not from its
+  * description, which inside a stream trigger is the batch text
+  * (`id = … runId = … batch = N`) Structured Streaming sets. */
 private[graft] class JobAttribution extends SparkListener {
   import JobAttribution.Job
   private val byJob = new ConcurrentHashMap[Int, Job]()
@@ -105,7 +107,8 @@ private[graft] class JobAttribution extends SparkListener {
       .foreach(_.tasks += e.stageInfo.numTasks)
   override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
     case s: SparkListenerSQLExecutionStart =>
-      execSite.put(s.executionId, s.description)
+      execSite.put(s.executionId,
+        JobAttribution.siteOf(s.details).getOrElse(s.description))
     case _ => ()
   }
 
@@ -127,6 +130,17 @@ private[graft] class JobAttribution extends SparkListener {
 }
 
 private[graft] object JobAttribution {
+  private val Frame = """.*\.([^.(]+)\((.*)\)""".r
+
+  /** The short call site `<method> at <file>:<line>` of a long-form one,
+    * whose first frame is the last Spark method called and whose second
+    * is the first frame outside Spark; None when it has no such pair. */
+  def siteOf(details: String): Option[String] =
+    details.linesIterator.take(2).toSeq match {
+      case Seq(Frame(method, _), Frame(_, at)) => Some(s"$method at $at")
+      case _ => None
+    }
+
   final case class Job(id: Int, site: String, t0: Long,
       exec: Option[Long] = None, var tEnd: Long = 0L, var tasks: Int = 0)
 }

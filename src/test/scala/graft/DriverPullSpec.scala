@@ -152,6 +152,60 @@ class DriverPullSpec extends SparkSpec {
     assert(!exists(s"$bm/stats/c1"), "no stats correction either")
   }
 
+  test("an empty sweep, or one past the budget, refuses before its journal " +
+      "exists: no t<N> or r<N> directory and nothing incomplete") {
+    val ct = freshContainmentStore()
+    val j = Files.createTempDirectory("pull_je_").toString
+    val none = docs.filter(col("doc_id") < 0).select(col("doc_id"))
+    val five = docs.filter(col("doc_id") < 5).select(col("doc_id"))
+    val e = intercept[IllegalArgumentException] {
+      Takedown.takedownAll(spark, j, none, 1L, Seq(Takedown.Target("ct", ct)))
+    }
+    assert(e.getMessage === "requirement failed: takedown of an empty id set")
+    assert(!exists(s"$j/t1"))
+    assert(Takedown.incomplete(spark, j).isEmpty)
+    Versions.tombstone(spark, ct, Seq(0L, 1L, 2L, 3L, 4L), 1L)
+    val revive = Seq(Takedown.Target.revive("ct", ct))
+    val e2 = intercept[IllegalArgumentException] {
+      Takedown.reviveAll(spark, j, none, 2L, revive)
+    }
+    assert(e2.getMessage === "requirement failed: revive of an empty id set")
+    val msg = refusedPastBudget {
+      Takedown.reviveAll(spark, j, five, 2L, revive)
+    }
+    assert(msg.contains(s"reviveAll($j, batch 2)"), msg)
+    assert(!exists(s"$j/r2"))
+    assert(Takedown.incomplete(spark, j, 'r').isEmpty)
+    assert(Versions.listRevives(spark, ct).isEmpty)
+  }
+
+  test("after tombstone, tombstoneFrom, Versions.revive and " +
+      "ClusterStream.retract, building the next masked read runs no job") {
+    val ct = freshContainmentStore()
+    def index = ContainmentStream.readIndex(spark, ct)
+    index // reads the root's schema once
+    Versions.tombstone(spark, ct, Seq(0L, 1L), 1L)
+    assert(jobsOf(index) === 0)
+    Versions.tombstoneFrom(spark, ct,
+      docs.filter(col("doc_id").between(2, 3)).select(col("doc_id")), 2L)
+    assert(jobsOf(index) === 0)
+    Versions.revive(spark, ct, Seq(1L).toDF("id"), 3L)
+    assert(jobsOf(index) === 0)
+    assert(index.filter(col("id") < 5).select("id").as[Long].collect().toSet
+      === Set(1L, 4L))
+
+    val cs = freshClusterStore()
+    val assign = s"$cs/assign"
+    def pairs = ClusterStream.readPairs(spark, cs)
+    def assigns = Versions.maskTombstones(spark, assign,
+      Versions.read(spark, assign, Seq(s"$assign/v0")), "id")
+    pairs; assigns // read each root's schema once
+    ClusterStream.retract(spark, cs, Seq(2L).toDF("id"), 1L)
+    assert(jobsOf { pairs; assigns } === 0)
+    assert(pairs.count() === 1L, "only (5, 6) is left")
+    assert(assigns.filter(col("id") === 2L).isEmpty)
+  }
+
   test("a marker past the budget met on read refuses the read by name") {
     val ct = freshContainmentStore()
     // the Seq form writes the marker without resolving it

@@ -2,6 +2,7 @@ package graft
 
 import java.util.Properties
 import org.apache.spark.scheduler.{JobSucceeded, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.tools.JobAttribution
@@ -43,6 +44,25 @@ class QueryJobProfileSpec extends SparkSpec {
     assert(js.forall(_.tEnd > 0))
     l.clear()
     assert(l.jobs.isEmpty)
+  }
+
+  test("an AQE job with no site-carrying sibling is named by its " +
+      "execution's call site, not by a stream trigger's batch description") {
+    val l = new JobAttribution
+    l.onOtherEvent(SparkListenerSQLExecutionStart(7L, Some(7L),
+      "\nid = 1f\nrunId = 2e\nbatch = 3",
+      "org.apache.spark.sql.classic.DataFrameWriter.parquet(" +
+        "DataFrameWriter.scala:300)\n" +
+        "graft.streaming.Versions$.mark(Versions.scala:612)\n" +
+        "graft.streaming.Versions$.tombstone(Versions.scala:570)",
+      "", null, 0L))
+    val p = new Properties()
+    p.setProperty("spark.sql.execution.id", "7")
+    l.onJobStart(SparkListenerJobStart(1, 0L, Seq(new StageInfo(1, 0,
+      "run at CompletableFuture.java:1804", 1, Seq.empty, Seq.empty, "",
+      resourceProfileId = 0)), p))
+    assert(l.jobs.map(_.site) === Seq("parquet at Versions.scala:612"))
+    assert(JobAttribution.siteOf("<unknown>") === None)
   }
 
   test("on a real session every job is named by its call site: a " +

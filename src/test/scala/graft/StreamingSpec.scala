@@ -530,28 +530,45 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.Tables
     import spark.implicits._
     // near-dup: the same 3-doc batch (one a near-dup of a standing doc)
-    // probes the same standing store with and without the bucket push
+    // probes the same standing store with and without the bucket push.
+    // Int ids: the in-memory probe (Dedup.probeLocal) takes Long ids only,
+    // so this batch goes through the distributed probe the push feeds
     def doc(seed: Int, words: Int): String =
       (0 until words).map(i => s"t${seed}x$i").mkString(" ")
     val base = doc(3, 60)
-    val standing = Seq((1L, base), (2L, doc(50, 60))).toDF("doc_id", "text")
+    val standing = Seq((1, base), (2, doc(50, 60))).toDF("doc_id", "text")
     val batch = Seq(
-      (10L, base.split(" ").updated(5, "changed").mkString(" ")),
-      (11L, doc(70, 60)), (12L, doc(80, 60))).toDF("doc_id", "text")
-    def ndPairs(push: Int): Set[(Long, Long, Long)] = {
+      (10, base.split(" ").updated(5, "changed").mkString(" ")),
+      (11, doc(70, 60)), (12, doc(80, 60))).toDF("doc_id", "text")
+    // the pairs, and whether the standing band scan carries a pushed
+    // bucket IN
+    def ndPairs(push: Int): (Set[(Long, Long, Long)], Boolean) = {
+      import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+      import org.apache.spark.sql.execution.FileSourceScanExec
       val root = Files.createTempDirectory("ndpush_").toString
       graft.operators.Dedup.minhashBandIndex(standing, "doc_id", "text")
         .write.parquet(s"$root/idx/v0")
       standing.write.parquet(s"$root/docs/v0")
-      NearDupStream.filterBatch(spark, s"$root/idx", s"$root/docs",
-        s"$root/out", "doc_id", "text", threshold = 0.4,
+      val probe = NearDupStream.filterBatch(spark, s"$root/idx",
+        s"$root/docs", s"$root/out", "doc_id", "text", threshold = 0.4,
         pushBucketLimit = push)(batch, 0L)
-      spark.read.parquet(s"$root/out/b0")
+      val pushed = probe.queryExecution.sparkPlan.collect {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.toString
+              .endsWith("/idx/v0")) => s.dataFilters
+      }.flatten.exists {
+        case e @ (_: In | _: InSet) => e.references.exists(_.name == "bucket")
+        case _ => false
+      }
+      (spark.read.parquet(s"$root/out/b0")
         .select("id_a", "id_b", "batch").as[(Long, Long, Long)]
-        .collect().toSet
+        .collect().toSet, pushed)
     }
-    val ndPushed = ndPairs(1024)
-    assert(ndPushed === ndPairs(0), "bucket push must not change pairs")
+    val (ndPushed, pushedIn) = ndPairs(1024)
+    val (ndUnpushed, unpushedIn) = ndPairs(0)
+    assert(pushedIn, "at 1024 the standing band scan must carry bucket IN")
+    assert(!unpushedIn, "at 0 no bucket IN may reach the standing scan")
+    assert(ndPushed === ndUnpushed, "bucket push must not change pairs")
     assert(ndPushed.contains((1L, 10L, 0L)),
       s"the planted near-dup must survive the push: $ndPushed")
 
